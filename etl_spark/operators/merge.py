@@ -71,7 +71,9 @@ from etl_spark.table.table import HIDDEN_DELETED, LakeTable, TableCommitError
 # build job). Motivation: on back-to-back microbatch epochs the engine-side
 # floor is per-JOB scheduling overhead (~0.25-0.4 s each on the bench VM),
 # not data — 12 jobs/epoch was the round-3 ~3-4.5 s/epoch fixed cost;
-# 2 jobs/epoch is the floor this path targets (tools/bench_epoch.py).
+# 2 jobs/epoch is the floor this path holds, for direct merge_batch calls
+# and under the streaming tail's foreachBatch alike (the AQE-off scope lands
+# on the batch's own session; tests/test_plans.py pins both).
 FAST_PATH_MAX_KEYS = 50_000
 
 
@@ -100,14 +102,18 @@ def _sql_str(s: str) -> str:
 # (session, key) otherwise capture each other's "false" as prev and leave the
 # conf permanently flipped. The outermost enter records the true original and
 # sets; nested/concurrent enters just increment; the last exit restores.
+# Entries are keyed by id(session) and hold the session object itself: while
+# a scope is open its session cannot be collected, so its id() cannot be
+# recycled by another session wrapper (foreachBatch wraps every batch's
+# session in a fresh Python object) and alias the entry.
 _SCOPED_CONF_LOCK = threading.Lock()
-_SCOPED_CONF_STATE: dict[tuple, list] = {}  # (id(session), key) -> [depth, prev, value]
+_SCOPED_CONF_STATE: dict[tuple, list] = {}  # (id(session), key) -> [session, depth, prev, value]
 
 
 class _scoped_conf:
     """Set a session conf for the duration of a block, restoring on exit —
     re-entrant and concurrency-safe per (session, key); all concurrent scopes
-    on one key must request the same value (asserted).
+    on one key must request the same value (a conflict raises RuntimeError).
     Used to disable AQE around microbatch-sized actions: AQE's per-stage
     materialize-and-replan loop roughly doubles tiny-query latency (measured
     ~2x on a 2M-row scan+agg on the bench VM) and its benefits — runtime
@@ -123,42 +129,40 @@ class _scoped_conf:
             st = _SCOPED_CONF_STATE.get(sk)
             if st is None:
                 prev = self.spark.conf.get(self.key, None)
-                _SCOPED_CONF_STATE[sk] = [1, prev, self.value]
                 self.spark.conf.set(self.key, self.value)
-            else:
-                assert st[2] == self.value, (
-                    f"conflicting scoped values for {self.key}: {st[2]!r} vs {self.value!r}"
+                _SCOPED_CONF_STATE[sk] = [self.spark, 1, prev, self.value]
+            elif st[3] != self.value:
+                raise RuntimeError(
+                    f"conflicting scoped values for {self.key}: {st[3]!r} vs {self.value!r}"
                 )
-                st[0] += 1
+            else:
+                st[1] += 1
 
     def __exit__(self, *exc):
         sk = (id(self.spark), self.key)
         with _SCOPED_CONF_LOCK:
             st = _SCOPED_CONF_STATE[sk]
-            st[0] -= 1
-            if st[0] == 0:
+            st[1] -= 1
+            if st[1] == 0:
                 del _SCOPED_CONF_STATE[sk]
-                if st[1] is None:
+                if st[2] is None:
                     self.spark.conf.unset(self.key)
                 else:
-                    self.spark.conf.set(self.key, st[1])
+                    self.spark.conf.set(self.key, st[2])
 
 
 def _aqe_off(spark):
+    """Scope AQE off on the session that EXECUTES the action. A streaming
+    tail's foreachBatch hands merge_batch a DataFrame bound to the query's
+    cloned session, not the table's: the persist, the probe and the write
+    run there, so that is the session to scope."""
     return _scoped_conf(spark, "spark.sql.adaptive.enabled", "false")
 
 
-# Optional per-phase wall-clock instrumentation: set to a list and every
-# _merge_attempt appends {"phase": ..., "sec": ...} rows (plan / resolve-build
-# / write / stats / commit). Drives tools/bench_epoch.py --phases; never on in
-# production paths (None -> zero overhead beyond a truthiness check).
-PHASE_TIMINGS: list[dict] | None = None
-
-
-def _phase(name: str, t0: float) -> float:
+def _lap(phases: dict, name: str, t0: float) -> float:
+    """Record a phase's wall seconds (stored in the commit's summary)."""
     now = time.perf_counter()
-    if PHASE_TIMINGS is not None:
-        PHASE_TIMINGS.append({"phase": name, "sec": round(now - t0, 4)})
+    phases[name] = round(now - t0, 4)
     return now
 
 
@@ -268,6 +272,126 @@ def merge_batch(
     raise last_err
 
 
+# Plan fragments of the merge that do not depend on the batch — the keys
+# probe, the resolve's join condition, LWW predicate, per-key version
+# aggregate and output projections, the write chain's partition/sort key —
+# are immutable Column trees: built once per (table schema, layout, merge
+# mode) and rebound to every batch. Rebuilding them every epoch cost ~1,000
+# py4j round trips, most of a microbatch's driver time (Evolution of a
+# Compiling Query Engine, VLDB 2021: plan construction, not data, dominates
+# short queries). Only the batch-dependent parts — the IN-list and key
+# envelope, the touched-file list, the Observation name — are built per
+# epoch. Every resolve projection emits its columns in WRITE order — key,
+# payload, hidden LWW columns, then the lineage-metric columns the write
+# drops — so the write chain needs no re-projection.
+_METRIC_COLS = ("_applied", "_is_delete", "_was_live", "_existed", "_chg_lsn")
+_LAYOUT_FRAGMENTS_CACHE: OrderedDict = OrderedDict()
+_RESOLVE_FRAGMENTS_CACHE: OrderedDict = OrderedDict()
+
+
+def _layout_fragments(layout: dict) -> dict:
+    """Layout-dependent fragments: the key column, the bucket expression,
+    the keys-probe projection and the bulk-planning join conditions."""
+    is_bucket = layout.get("type") == "bucket"
+    n_buckets = int(layout["n_buckets"]) if is_bucket else 0
+
+    def _build() -> dict:
+        doc_id = F.col("doc_id")
+        bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int") if is_bucket else None
+        bkt = bucket.alias("_bkt") if is_bucket else None
+        # bucket layout ships (key, bucket) pairs: the bucket id is a JVM
+        # xxhash64 the driver cannot recompute
+        probe = F.struct(doc_id, bkt) if is_bucket else doc_id
+        return {
+            "doc_id": doc_id,
+            "bucket": bucket,
+            "bucket_col": F.col("_bucket"),
+            "probe": probe.alias("kb"),
+            "probe_agg": F.collect_list("kb").alias("ks"),
+            "count": F.count(F.lit(1)).alias("n"),
+            "bucket_as_bkt": bkt,
+            "bucket_hit": F.col("_bkt") == F.col("bucket"),
+            "range_hit": (doc_id >= F.col("min_key")) & (doc_id <= F.col("max_key")),
+        }
+
+    return expr_cache_get(_LAYOUT_FRAGMENTS_CACHE, (layout.get("type"), n_buckets), _build)
+
+
+def _resolve_fragments(schema: StructType, mode: str) -> dict:
+    """Resolve fragments of one merge mode over the table schema. ``mor``:
+    the per-key version argmax, the join condition, the LWW predicate and
+    the winners select. ``cow``: the join condition, the resolve select
+    (LWW predicate inlined) and the changes-only select for keys with no
+    target row."""
+    payload_names = [f.name for f in schema.fields if f.name != "doc_id"]
+
+    def _build() -> dict:
+        c_doc, t_doc = F.col("c.doc_id"), F.col("t.doc_id")
+        c_lsn, c_seq, c_op = F.col("c.commit_lsn"), F.col("c.op_seq"), F.col("c.op")
+        if mode == "mor":
+            # the target side is the per-key version argmax (doc_id, _v):
+            # its fields are read in place, with no unpacking projection
+            v_lsn, v_seq, v_del = (F.col(f"t._v.{h}") for h in (HIDDEN_LSN, HIDDEN_SEQ, HIDDEN_DELETED))
+            return {
+                "version_agg": F.max(F.struct(HIDDEN_LSN, HIDDEN_SEQ, HIDDEN_DELETED)).alias("_v"),
+                "join": c_doc == t_doc,
+                "change_wins": t_doc.isNull() | (c_lsn > v_lsn) | ((c_lsn == v_lsn) & (c_seq >= v_seq)),
+                "select": [
+                    c_doc.alias("doc_id"),
+                    *[F.col(f"c.{name}").alias(name) for name in payload_names],
+                    c_lsn.alias(HIDDEN_LSN),
+                    c_seq.alias(HIDDEN_SEQ),
+                    (c_op == "D").alias(HIDDEN_DELETED),
+                    F.lit(True).alias("_applied"),
+                    (c_op == "D").alias("_is_delete"),
+                    (~F.coalesce(v_del, F.lit(False))).alias("_was_live"),
+                    t_doc.isNotNull().alias("_existed"),
+                    c_lsn.alias("_chg_lsn"),
+                ],
+            }
+        t_lsn, t_seq, t_del = F.col(f"t.{HIDDEN_LSN}"), F.col(f"t.{HIDDEN_SEQ}"), F.col(f"t.{HIDDEN_DELETED}")
+        beats = (c_lsn > t_lsn) | ((c_lsn == t_lsn) & (c_seq >= t_seq))
+        change_wins = t_doc.isNull() | (c_lsn.isNotNull() & beats)
+        wins = c_doc.isNotNull() & change_wins
+        op = F.col("op")
+        return {
+            "join": t_doc == c_doc,
+            "select": [
+                F.coalesce(c_doc, t_doc).alias("doc_id"),
+                *[
+                    F.when(wins, F.col(f"c.{name}")).otherwise(F.col(f"t.{name}")).alias(name)
+                    for name in payload_names
+                ],
+                F.when(wins, c_lsn).otherwise(t_lsn).alias(HIDDEN_LSN),
+                F.when(wins, c_seq).otherwise(t_seq).alias(HIDDEN_SEQ),
+                F.when(wins, c_op == "D")
+                .otherwise(F.coalesce(F.col(HIDDEN_DELETED), F.lit(False)))
+                .alias(HIDDEN_DELETED),
+                wins.alias("_applied"),
+                (c_op == "D").alias("_is_delete"),
+                (~F.coalesce(t_del, F.lit(False))).alias("_was_live"),
+                t_doc.isNotNull().alias("_existed"),
+                c_lsn.alias("_chg_lsn"),
+            ],
+            # change rows with no target counterpart (new keys / empty
+            # table): the change always applies
+            "changes_only": [
+                F.col("doc_id"),
+                *[F.col(name) for name in payload_names],
+                F.col("commit_lsn").alias(HIDDEN_LSN),
+                F.col("op_seq").alias(HIDDEN_SEQ),
+                (op == "D").alias(HIDDEN_DELETED),
+                F.lit(True).alias("_applied"),
+                (op == "D").alias("_is_delete"),
+                F.lit(False).alias("_was_live"),
+                F.lit(False).alias("_existed"),
+                F.col("commit_lsn").alias("_chg_lsn"),
+            ],
+        }
+
+    return expr_cache_get(_RESOLVE_FRAGMENTS_CACHE, (schema.json(), mode), _build)
+
+
 def _merge_attempt(
     table: LakeTable,
     changes: DataFrame,
@@ -282,14 +406,17 @@ def _merge_attempt(
 ) -> MergeResult:
     if merge_mode not in ("auto", "cow", "mor"):
         raise ValueError(f"unknown merge_mode {merge_mode!r}; one of ['auto', 'cow', 'mor']")
+    phases: dict[str, float] = {}
     _t = time.perf_counter()
     spark = table.spark
+    # the session the batch is bound to runs the batch's actions — under a
+    # streaming tail that is the query's cloned session, not table.spark
+    batch_spark = changes.sparkSession
     # pin the whole attempt to one snapshot: plan, resolve, and commit all
     # see the same table state; commit(expect_parent=...) enforces it
     snap = table.snapshot()
     head0 = snap["snapshot_id"]
     schema = StructType.fromJson(snap["schema"])
-    payload_names = [f.name for f in schema.fields if f.name != "doc_id"]
 
     changes = _normalize_changes(schema, changes)
     dedup_fns = {"agg": lww_dedup, "salted": lww_dedup_salted, "fetch": lww_dedup_fetch}
@@ -303,17 +430,15 @@ def _merge_attempt(
     # shuffle as a separate materialization job on every epoch — one of the
     # per-job scheduling taxes the microbatch fast path exists to remove —
     # and buys nothing for an agg whose skew dies in the partial phase.
-    with _aqe_off(spark):
+    with _aqe_off(batch_spark):
         dedup = dedup.persist()
 
     # ---- plan: which files does this batch touch?
     files = snap["files"]
     layout = snap.get("layout") or {"type": "range"}
+    lf = _layout_fragments(layout)
     is_bucket = layout.get("type") == "bucket"
     n_buckets = int(layout["n_buckets"]) if is_bucket else 0
-    bucket_expr = (
-        F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int") if is_bucket else None
-    )
     # a staged layout migration (maintenance.migrate_layout_staged) marks
     # not-yet-rewritten files layout_stale: their bucket tags (if any) were
     # computed under a PREVIOUS layout's modulus and must never be used for
@@ -340,18 +465,12 @@ def _merge_attempt(
     # A bulk batch returns exactly CAP+1 rows and the driver discards them
     # — no unbounded collect; the probe's full-partition evaluation also
     # materializes the dedup cache the later jobs reuse.
-    if is_bucket:
-        # ship (key, bucket) pairs: the bucket id is a JVM xxhash64 the
-        # driver cannot recompute
-        probe_col = F.struct(F.col("doc_id"), bucket_expr.alias("_bkt")).alias("kb")
-    else:
-        probe_col = F.col("doc_id").alias("kb")
-    with _aqe_off(spark):
+    with _aqe_off(batch_spark):
         probe = (
-            dedup.select(probe_col)
+            dedup.select(lf["probe"])
             .limit(FAST_PATH_MAX_KEYS + 1)
             .groupBy()
-            .agg(F.collect_list("kb").alias("ks"))
+            .agg(lf["probe_agg"])
             .collect()
         )
     key_rows = probe[0]["ks"] if probe else []
@@ -401,9 +520,9 @@ def _merge_attempt(
             )
             obs_plan = Observation(f"plan-epoch-{epoch}")
             hits = (
-                dedup.observe(obs_plan, F.count(F.lit(1)).alias("n"))
-                .select(bucket_expr.alias("_bkt"))
-                .join(F.broadcast(stats_df), F.col("_bkt") == F.col("bucket"), "left_outer")
+                dedup.observe(obs_plan, lf["count"])
+                .select(lf["bucket_as_bkt"])
+                .join(F.broadcast(stats_df), lf["bucket_hit"], "left_outer")
                 .select("path")
                 .distinct()
                 .collect()
@@ -434,13 +553,9 @@ def _merge_attempt(
         # The null-path row keeps the output non-empty whenever the batch
         # is, so the metrics always survive.
         hits = (
-            dedup.observe(obs_plan, F.count(F.lit(1)).alias("n"))
-            .select("doc_id")
-            .join(
-                F.broadcast(stats_df),
-                (F.col("doc_id") >= F.col("min_key")) & (F.col("doc_id") <= F.col("max_key")),
-                "left_outer",
-            )
+            dedup.observe(obs_plan, lf["count"])
+            .select(lf["doc_id"])
+            .join(F.broadcast(stats_df), lf["range_hit"], "left_outer")
             .select("path")
             .distinct()
             .collect()
@@ -457,7 +572,7 @@ def _merge_attempt(
         # entries only (already all touched). One count sizes the write; it
         # reads from the cache the probe job just materialized.
         n_changes = dedup.count()
-    _t = _phase("plan", _t)
+    _t = _lap(phases, "plan", _t)
 
     if n_changes == 0:
         # empty deduped batch: nothing to resolve or write. Still fence the
@@ -468,7 +583,7 @@ def _merge_attempt(
             add_files=[],
             fences=[{"checkpoint_epoch": epoch, "partition_id": -1, "committed_at_snapshot": head0 + 1}],
             lineage=[],
-            summary={"rows_upserted": 0, "rows_deleted": 0, "epoch": epoch, "mode": "empty"},
+            summary={"rows_upserted": 0, "rows_deleted": 0, "epoch": epoch, "mode": "empty", "phase_s": phases},
             expect_parent=head0,
         )
         return MergeResult(new_sid, True, 0, 0, 0, 0, mode="empty")
@@ -488,45 +603,22 @@ def _merge_attempt(
             and touched_rows > mor_rewrite_ratio * max(n_changes, 1)
         )
     )
+    rf = _resolve_fragments(schema, "mor" if use_mor else "cow")
 
     # ---- resolve LWW against the touched slice of the table
     # rename-aware field-id reads (table.load_files): touched files may
     # predate a column rename/add/widen; includes tombstone rows. The full
     # (masked, payload-bearing) target is built ONLY on the CoW path — the
-    # MoR resolve reads its own narrow unmasked projection, and building
-    # the DataFrame here would eagerly run file listing for nothing.
+    # MoR resolve reads just the key and version columns
+    # (table.load_key_versions).
     touched_entries = [f for f in files if f["path"] in touched_paths] if touched_paths else []
-    target = None
-    if touched_entries and not use_mor:
-        target = table.load_files(touched_entries, snap)
-
-    def _changes_only_rows(df: DataFrame) -> DataFrame:
-        """Format change rows that have no target counterpart (new keys /
-        empty table): the change always applies."""
-        sel = [F.col("doc_id")]
-        for name in payload_names:
-            sel.append(F.col(name))
-        sel += [
-            F.col("commit_lsn").alias(HIDDEN_LSN),
-            F.col("op_seq").alias(HIDDEN_SEQ),
-            (F.col("op") == "D").alias(HIDDEN_DELETED),
-            F.lit(True).alias("_applied"),
-            (F.col("op") == "D").alias("_is_delete"),
-            F.lit(False).alias("_was_live"),
-            F.lit(False).alias("_existed"),
-            F.col("commit_lsn").alias("_chg_lsn"),
-        ]
-        return df.select(*sel)
-
-    if use_mor and touched_entries:
+    c = dedup.alias("c")
+    if use_mor:
         # MoR fast resolve: the winners file takes its payload from the
         # CHANGE rows, so the target is needed only to decide who wins —
         # a column-pruned scan of (doc_id, version columns), never the
-        # token payload. Both joins broadcast batch-sized sides: a semi-join
-        # filters the narrow target scan to batch keys, then the version
-        # compare joins change rows to their stored version. No table
-        # payload crosses the wire; write amplification AND read volume are
-        # batch-sized.
+        # token payload. No table payload crosses the wire; write
+        # amplification AND read volume are batch-sized.
         small_batch = n_changes is not None and n_changes <= max_broadcast_rows
         # UNMASKED narrow read + per-key version argmax, instead of the
         # file-level mask join: by the LWW invariant a change only lands by
@@ -535,70 +627,38 @@ def _merge_attempt(
         # drops the per-epoch mask scan + broadcast (which grow with the
         # mor backlog) from the hot path; the agg below runs over the
         # batch-keyed slice only (semi-join first), so it's batch-sized.
-        narrow = table.load_files(touched_entries, snap, apply_masks=False).select(
-            "doc_id", HIDDEN_LSN, HIDDEN_SEQ, HIDDEN_DELETED
-        )
+        narrow = table.load_key_versions(touched_entries)
         if batch_keys is not None:
             # fast path (module comment on FAST_PATH_MAX_KEYS): the key
             # envelope is a residual predicate PUSHED INTO the parquet scan
             # (row-group pruning for localized batches) and the batch-key
             # membership test is an InSet FILTER, not a join — no broadcast
             # build job, no shuffle; with the forced sort-merge resolve join
-            # below, the whole resolve+write is ONE job. The IN list goes
-            # through ONE sql-parser round-trip: Column.isin ships every
+            # below, the whole resolve+write is ONE job. Envelope and IN list
+            # go through ONE sql-parser round-trip: Column.isin ships every
             # element as its own py4j literal (~3.4 s at 5k keys, measured).
             # _sql_str emits parser-mode-immune literals, so this parse is
             # correct even if a caller enables the legacy
             # escapedStringLiterals mode (also pinned off in build_session)
             narrow = narrow.where(
-                F.col("doc_id").between(batch_keys[0], batch_keys[-1])
-            ).where(F.expr("doc_id IN (" + ",".join(_sql_str(k) for k in batch_keys) + ")"))
-        else:
-            keys = dedup.select("doc_id")
-            narrow = narrow.join(F.broadcast(keys) if small_batch else keys, "doc_id", "left_semi")
-        tgtv = (
-            narrow.groupBy("doc_id")
-            .agg(F.max(F.struct(HIDDEN_LSN, HIDDEN_SEQ, HIDDEN_DELETED)).alias("_v"))
-            .select(
-                "doc_id",
-                F.col(f"_v.{HIDDEN_LSN}").alias(HIDDEN_LSN),
-                F.col(f"_v.{HIDDEN_SEQ}").alias(HIDDEN_SEQ),
-                F.col(f"_v.{HIDDEN_DELETED}").alias(HIDDEN_DELETED),
+                F.expr(
+                    f"doc_id BETWEEN {_sql_str(batch_keys[0])} AND {_sql_str(batch_keys[-1])}"
+                    " AND doc_id IN (" + ",".join(_sql_str(k) for k in batch_keys) + ")"
+                )
             )
-        )
-        c = dedup.alias("c")
+        else:
+            keys = dedup.select(lf["doc_id"])
+            narrow = narrow.join(F.broadcast(keys) if small_batch else keys, "doc_id", "left_semi")
+        tgtv = narrow.groupBy(lf["doc_id"]).agg(rf["version_agg"])
         if batch_keys is not None:
             t = tgtv.hint("merge").alias("t")
-            joined = c.join(t, F.col("c.doc_id") == F.col("t.doc_id"), "left_outer")
         else:
-            t = tgtv.alias("t")
-            joined = c.join(
-                F.broadcast(t) if small_batch else t,
-                F.col("c.doc_id") == F.col("t.doc_id"),
-                "left_outer",
-            )
-        change_wins = F.col("t.doc_id").isNull() | (
-            (F.col("c.commit_lsn") > F.col(f"t.{HIDDEN_LSN}"))
-            | (
-                (F.col("c.commit_lsn") == F.col(f"t.{HIDDEN_LSN}"))
-                & (F.col("c.op_seq") >= F.col(f"t.{HIDDEN_SEQ}"))
-            )
-        )
-        sel = [F.col("c.doc_id").alias("doc_id")]
-        for name in payload_names:
-            sel.append(F.col(f"c.{name}").alias(name))
-        sel += [
-            F.col("c.commit_lsn").alias(HIDDEN_LSN),
-            F.col("c.op_seq").alias(HIDDEN_SEQ),
-            (F.col("c.op") == "D").alias(HIDDEN_DELETED),
-            F.lit(True).alias("_applied"),
-            (F.col("c.op") == "D").alias("_is_delete"),
-            (~F.coalesce(F.col(f"t.{HIDDEN_DELETED}"), F.lit(False))).alias("_was_live"),
-            F.col("t.doc_id").isNotNull().alias("_existed"),
-            F.col("c.commit_lsn").alias("_chg_lsn"),
-        ]
-        resolved = joined.where(change_wins).select(*sel)
-    elif target is not None:
+            t = F.broadcast(tgtv.alias("t")) if small_batch else tgtv.alias("t")
+        # every row the LWW predicate keeps is applied: the winners select
+        # is the write input as-is
+        resolved = c.join(t, rf["join"], "left_outer").where(rf["change_wins"]).select(rf["select"])
+    elif touched_entries:
+        target = table.load_files(touched_entries, snap)
         # Strategy: the full-outer SortMergeJoin shuffles the touched target
         # payload a second time (range write already shuffles it once). When
         # the deduped batch is small — the common microbatch case — the same
@@ -613,56 +673,19 @@ def _merge_attempt(
         use_broadcast = resolve_strategy == "broadcast" or (
             resolve_strategy == "auto" and n_changes is not None and n_changes <= max_broadcast_rows
         )
-        c = dedup.alias("c")
         t = target.alias("t")
         if use_broadcast:
-            joined = t.join(F.broadcast(c), on=F.col("t.doc_id") == F.col("c.doc_id"), how="left_outer")
+            joined = t.join(F.broadcast(c), rf["join"], "left_outer")
         else:
-            joined = t.join(c, on=F.col("t.doc_id") == F.col("c.doc_id"), how="full_outer")
-        change_wins = F.col("t.doc_id").isNull() | (
-            F.col("c.commit_lsn").isNotNull()
-            & (
-                (F.col("c.commit_lsn") > F.col(f"t.{HIDDEN_LSN}"))
-                | (
-                    (F.col("c.commit_lsn") == F.col(f"t.{HIDDEN_LSN}"))
-                    & (F.col("c.op_seq") >= F.col(f"t.{HIDDEN_SEQ}"))
-                )
-            )
-        )
-        has_change = F.col("c.doc_id").isNotNull()
-        sel = [F.coalesce(F.col("c.doc_id"), F.col("t.doc_id")).alias("doc_id")]
-        for name in payload_names:
-            sel.append(
-                F.when(has_change & change_wins, F.col(f"c.{name}"))
-                .otherwise(F.col(f"t.{name}"))
-                .alias(name)
-            )
-        sel.append(
-            F.when(has_change & change_wins, F.col("c.commit_lsn")).otherwise(F.col(f"t.{HIDDEN_LSN}")).alias(HIDDEN_LSN)
-        )
-        sel.append(
-            F.when(has_change & change_wins, F.col("c.op_seq")).otherwise(F.col(f"t.{HIDDEN_SEQ}")).alias(HIDDEN_SEQ)
-        )
-        sel.append(
-            F.when(has_change & change_wins, F.col("c.op") == "D")
-            .otherwise(F.coalesce(F.col(HIDDEN_DELETED), F.lit(False)))
-            .alias(HIDDEN_DELETED)
-        )
-        sel.append((has_change & change_wins).alias("_applied"))
-        sel.append((F.col("c.op") == "D").alias("_is_delete"))
-        sel.append(
-            (F.coalesce(F.col(f"t.{HIDDEN_DELETED}"), F.lit(False)) == False).alias("_was_live")  # noqa: E712
-        )
-        sel.append(F.col("t.doc_id").isNotNull().alias("_existed"))
-        sel.append(F.col("c.commit_lsn").alias("_chg_lsn"))
-        resolved = joined.select(*sel)
+            joined = t.join(c, rf["join"], "full_outer")
+        resolved = joined.select(rf["select"])
         if use_broadcast:
             # brand-new keys: anti-join against a keys-only (column-pruned)
             # scan of the touched files — narrow shuffle of keys, no payload
-            new_rows = dedup.join(target.select("doc_id"), on="doc_id", how="left_anti")
-            resolved = resolved.unionByName(_changes_only_rows(new_rows))
+            new_rows = dedup.join(target.select(lf["doc_id"]), on="doc_id", how="left_anti")
+            resolved = resolved.unionByName(new_rows.select(rf["changes_only"]))
     else:
-        resolved = _changes_only_rows(dedup)
+        resolved = dedup.select(rf["changes_only"])
 
     # ---- size the apply write (before the persist decision, which keys on
     # whether a boundary sampler will exist at all)
@@ -712,16 +735,11 @@ def _merge_attempt(
         # conditional aggregates over a stable key hash.
         from pyspark.sql import Observation
 
-        metric_exprs = list(_lineage_metric_exprs(lineage_partitions))
         obs = Observation(f"merge-epoch-{epoch}-{head0}")
 
         # ---- apply: range-partition on the merge key, write, collect stats
         sid_next = head0 + 1
         stage = table.stage_dir(sid_next)
-        if use_mor:
-            write_input = resolved.where(F.col("_applied"))
-        else:
-            write_input = resolved
         # manifest stats ride the SAME Observation as the lineage metrics:
         # after the range exchange, output partition i becomes file
         # part-{i:05d}, so per-partition (count, min, max) of doc_id ARE the
@@ -729,8 +747,6 @@ def _merge_attempt(
         # Iceberg-style, and the written data is never rescanned. Guarded to
         # a bounded file count (conditional-aggregate width grows with
         # n_files); beyond it the one distributed stats scan is the fallback.
-        out_cols = ["doc_id", *payload_names, HIDDEN_LSN, HIDDEN_SEQ, HIDDEN_DELETED]
-        metric_cols = ["_applied", "_is_delete", "_existed", "_was_live", "_chg_lsn"]
         # MoR winners on a bucket table are NOT bucket-partitioned: a
         # spread microbatch hashes into every bucket, so bucketing the
         # winners would fan one batch-sized write into n_buckets tiny files
@@ -746,16 +762,13 @@ def _merge_attempt(
             # its key's fixed bucket, per-bucket stats (count/min/max AND
             # the output partition the bucket landed in) ride the write
             obs_file_stats = n_buckets <= MAX_OBSERVED_STAT_FILES
-            if obs_file_stats:
-                metric_exprs += _bucket_stat_exprs(n_buckets)
-            writer = (
-                write_input.select(*out_cols, *metric_cols)
-                .withColumn("_bucket", bucket_expr)
-                .repartition(n_buckets, "_bucket")
-                .observe(obs, *metric_exprs)
-                .drop(*metric_cols, "_bucket")
-                .sortWithinPartitions("doc_id")
-                .write.mode("overwrite")
+            lp, metrics = _write_metrics(lineage_partitions, "bucket", n_buckets if obs_file_stats else 0)
+            out = (
+                resolved.withColumn("_bucket", lf["bucket"])
+                .repartition(n_buckets, lf["bucket_col"])
+                .withColumn("_lp", lp)
+                .observe(obs, *metrics)
+                .drop(*_METRIC_COLS, "_lp", "_bucket")
             )
         else:
             # bulk forced-MoR on a bucket table has no collected key set to
@@ -763,32 +776,31 @@ def _merge_attempt(
             obs_file_stats = n_files <= MAX_OBSERVED_STAT_FILES and not (
                 is_bucket and key_bucket is None
             )
-            if obs_file_stats:
-                metric_exprs += _file_stat_exprs(n_files)
-            writer = (
-                write_input.select(*out_cols, *metric_cols)
-                .repartitionByRange(n_files, "doc_id")
+            lp, metrics = _write_metrics(lineage_partitions, "file", n_files if obs_file_stats else 0)
+            out = (
+                resolved.repartitionByRange(n_files, lf["doc_id"])
                 # observe sits ABOVE the range exchange: the boundary-
                 # sampling job only executes the exchange's child, so the
                 # metrics are evaluated exactly once — in the write job (a
                 # CollectMetrics below the exchange would be executed by
                 # both passes and double-count; cdc_lineage_counts oracle)
-                .observe(obs, *metric_exprs)
-                .drop(*metric_cols)
-                .sortWithinPartitions("doc_id")
-                .write.mode("overwrite")
+                .withColumn("_lp", lp)
+                .observe(obs, *metrics)
+                .drop(*_METRIC_COLS, "_lp")
             )
-        _t = _phase("wbuild", _t)
+        writer = out.sortWithinPartitions(lf["doc_id"]).write.mode("overwrite")
+        _t = _lap(phases, "wbuild", _t)
         if batch_keys is not None and (use_mor or is_bucket or n_files == 1):
             # microbatch fast path: AQE's stage-replan loop costs more than
             # it could ever save on batch-sized shuffles; with it off the
             # resolve+write runs as one job (FAST_PATH_MAX_KEYS comment)
-            with _aqe_off(spark):
+            with _aqe_off(out.sparkSession):
                 writer.parquet(stage)
         else:
             writer.parquet(stage)
-        _t = _phase("write", _t)
+        _t = _lap(phases, "write", _t)
         m = obs.get
+        m.update(m.pop("m").asDict())
         lineage = []
         for p in range(lineage_partitions):
             if m[f"lsn_min_{p}"] is None:
@@ -828,7 +840,7 @@ def _merge_attempt(
             add_files = _collect_file_stats(
                 table, stage, snap["schema_version"], n_buckets=n_buckets if is_bucket else None
             )
-        _t = _phase("stats", _t)
+        _t = _lap(phases, "stats", _t)
         if use_mor:
             # the winners file doubles as the equality-delete mask: readers
             # drop same-key rows from older files (table.py docstring)
@@ -868,25 +880,23 @@ def _merge_attempt(
             if any(_overlaps(u, m) for u in untouched for m in removed_mor):
                 for f in add_files:
                     f["mor"] = True
-        try:
-            new_sid = table.commit(
-                add_files=add_files,
-                remove_paths=set() if use_mor else touched_paths,
-                fences=fences,
-                lineage=lineage,
-                summary={
-                    "rows_upserted": rows_upserted,
-                    "rows_deleted": rows_deleted,
-                    "epoch": epoch,
-                    "mode": "mor" if use_mor else "cow",
-                },
-                expect_parent=head0,
-            )
-        except TableCommitError:
-            # another writer advanced HEAD after we planned: this attempt's
-            # files are orphaned — drop them and let merge_batch replan
-            raise
-        _t = _phase("commit", _t)
+        # another writer advancing HEAD after we planned raises
+        # TableCommitError here: this attempt's files are orphaned — the
+        # finally below drops them and merge_batch replans
+        new_sid = table.commit(
+            add_files=add_files,
+            remove_paths=set() if use_mor else touched_paths,
+            fences=fences,
+            lineage=lineage,
+            summary={
+                "rows_upserted": rows_upserted,
+                "rows_deleted": rows_deleted,
+                "epoch": epoch,
+                "mode": "mor" if use_mor else "cow",
+                "phase_s": phases,
+            },
+            expect_parent=head0,
+        )
         committed = True
         return MergeResult(
             new_sid,
@@ -910,51 +920,60 @@ def _merge_attempt(
 
 MAX_OBSERVED_STAT_FILES = 256
 
-# Column objects are immutable plan fragments — reusable across queries and
-# epochs. Building the ~70 conditional lineage/file-stat aggregates costs
-# hundreds of py4j round-trips (~0.5-1 s/epoch of driver latency, measured
-# via tools/bench_epoch.py --phases), so they are built once per
-# (lineage_partitions | n_files) and reused for every epoch.
-_LINEAGE_EXPRS_CACHE: OrderedDict = OrderedDict()
-_FILE_STAT_EXPRS_CACHE: OrderedDict = OrderedDict()
+# The write's Observation — ~70 conditional lineage/file-stat aggregates —
+# costs hundreds of py4j round-trips to build, so it is built once per
+# (lineage_partitions, stats kind, file/bucket count) and reused for every
+# epoch; the builders below run only on a cache miss.
+_WRITE_METRICS_CACHE: OrderedDict = OrderedDict()
+
+
+def _write_metrics(lineage_partitions: int, kind: str, n: int) -> tuple:
+    """The write's Observation inputs: the per-row lineage partition ``_lp``
+    (the key hash computed ONCE per row, so the lineage aggregates compare
+    an int column instead of each re-hashing the key — cheaper to analyze,
+    plan and run) and the metrics: the lineage aggregates as ONE struct
+    column ``m``, plus per-file (``kind="file"``) or per-bucket
+    (``"bucket"``) stats for ``n`` files/buckets (0: none). A struct
+    crosses py4j as one handle where ~65 separate aggregates cost a round
+    trip each, every epoch; the stats stay top-level because they read the
+    non-deterministic ``spark_partition_id()``, which observed metrics only
+    allow directly under an aggregate."""
+
+    def _build():
+        lp = F.pmod(F.xxhash64("doc_id"), F.lit(lineage_partitions)).cast("int")
+        stats = _file_stat_exprs(n) if kind == "file" else _bucket_stat_exprs(n)
+        return lp, [F.struct(*_lineage_metric_exprs(lineage_partitions)).alias("m"), *stats]
+
+    return expr_cache_get(_WRITE_METRICS_CACHE, (lineage_partitions, kind, n), _build)
 
 
 def _lineage_metric_exprs(lineage_partitions: int) -> list:
-    def _build():
-        applied = F.col("_applied")
-        lp = F.pmod(F.xxhash64("doc_id"), F.lit(lineage_partitions)).cast("int")
-        cached = [F.count(F.lit(1)).alias("n_rows")]
-        for p in range(lineage_partitions):
-            inp = applied & (lp == p)
-            cached += [
-                F.min(F.when(inp, F.col("_chg_lsn"))).alias(f"lsn_min_{p}"),
-                F.max(F.when(inp, F.col("_chg_lsn"))).alias(f"lsn_max_{p}"),
-                F.sum(F.when(inp & ~F.col("_is_delete"), 1).otherwise(0)).alias(f"ups_{p}"),
-                F.sum(
-                    F.when(inp & F.col("_is_delete") & F.col("_existed") & F.col("_was_live"), 1).otherwise(0)
-                ).alias(f"del_{p}"),
-            ]
-        return cached
-
-    return expr_cache_get(_LINEAGE_EXPRS_CACHE, (lineage_partitions,), _build)
+    applied = F.col("_applied")
+    lp = F.col("_lp")
+    exprs = [F.count(F.lit(1)).alias("n_rows")]
+    for p in range(lineage_partitions):
+        inp = applied & (lp == p)
+        exprs += [
+            F.min(F.when(inp, F.col("_chg_lsn"))).alias(f"lsn_min_{p}"),
+            F.max(F.when(inp, F.col("_chg_lsn"))).alias(f"lsn_max_{p}"),
+            F.sum(F.when(inp & ~F.col("_is_delete"), 1).otherwise(0)).alias(f"ups_{p}"),
+            F.sum(
+                F.when(inp & F.col("_is_delete") & F.col("_existed") & F.col("_was_live"), 1).otherwise(0)
+            ).alias(f"del_{p}"),
+        ]
+    return exprs
 
 
 def _file_stat_exprs(n_files: int) -> list:
-    def _build():
-        pid = F.spark_partition_id()
-        cached = []
-        for i in range(n_files):
-            cached += [
-                F.min(F.when(pid == i, F.col("doc_id"))).alias(f"fmin_{i}"),
-                F.max(F.when(pid == i, F.col("doc_id"))).alias(f"fmax_{i}"),
-                F.sum(F.when(pid == i, 1).otherwise(0)).alias(f"fcnt_{i}"),
-            ]
-        return cached
-
-    return expr_cache_get(_FILE_STAT_EXPRS_CACHE, (n_files,), _build)
-
-
-_BUCKET_STAT_EXPRS_CACHE: OrderedDict = OrderedDict()
+    pid = F.spark_partition_id()
+    exprs = []
+    for i in range(n_files):
+        exprs += [
+            F.min(F.when(pid == i, F.col("doc_id"))).alias(f"fmin_{i}"),
+            F.max(F.when(pid == i, F.col("doc_id"))).alias(f"fmax_{i}"),
+            F.sum(F.when(pid == i, 1).otherwise(0)).alias(f"fcnt_{i}"),
+        ]
+    return exprs
 
 
 def _bucket_stat_exprs(n_buckets: int) -> list:
@@ -962,21 +981,17 @@ def _bucket_stat_exprs(n_buckets: int) -> list:
     partition the bucket landed in (a bucket's rows all share one partition
     of the hash exchange, so max(pid) IS that partition — and partition p
     becomes file part-{p:05d})."""
-
-    def _build():
-        pid = F.spark_partition_id()
-        cached = []
-        for b in range(n_buckets):
-            inb = F.col("_bucket") == b
-            cached += [
-                F.min(F.when(inb, F.col("doc_id"))).alias(f"bmin_{b}"),
-                F.max(F.when(inb, F.col("doc_id"))).alias(f"bmax_{b}"),
-                F.sum(F.when(inb, 1).otherwise(0)).alias(f"bcnt_{b}"),
-                F.max(F.when(inb, pid)).alias(f"bpart_{b}"),
-            ]
-        return cached
-
-    return expr_cache_get(_BUCKET_STAT_EXPRS_CACHE, (n_buckets,), _build)
+    pid = F.spark_partition_id()
+    exprs = []
+    for b in range(n_buckets):
+        inb = F.col("_bucket") == b
+        exprs += [
+            F.min(F.when(inb, F.col("doc_id"))).alias(f"bmin_{b}"),
+            F.max(F.when(inb, F.col("doc_id"))).alias(f"bmax_{b}"),
+            F.sum(F.when(inb, 1).otherwise(0)).alias(f"bcnt_{b}"),
+            F.max(F.when(inb, pid)).alias(f"bpart_{b}"),
+        ]
+    return exprs
 
 
 def _files_from_bucket_observation(

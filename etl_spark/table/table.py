@@ -62,6 +62,7 @@ import json
 import os
 import shutil
 import uuid
+from collections import OrderedDict
 from typing import Any
 
 import pyarrow.parquet as pq
@@ -70,8 +71,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from etl_spark.schema import HIDDEN_LSN, HIDDEN_SEQ, can_widen, relax_nullability
+from etl_spark.session import expr_cache_get
 
 HIDDEN_DELETED = "_deleted"
+KEY_VERSION_SCHEMA = f"doc_id string, {HIDDEN_LSN} long, {HIDDEN_SEQ} int, {HIDDEN_DELETED} boolean"
 
 # MoR mask side of the read join rides a FORCED broadcast up to this many
 # keys. Sized by the JVM broadcast hash-relation footprint (~100-150 B/row
@@ -86,6 +89,14 @@ MASK_BROADCAST_MAX_ROWS = 500_000
 # many file entries; above it the mapping broadcast-joins instead
 # (see _with_file_seq)
 MAX_LITERAL_SEQ_MAP = 2_048
+
+# Read-side plan fragments (bounded, gateway-scoped LRUs): the rename
+# projection per (written name -> current name) mapping and the versioned-
+# schema projection per (schema, input columns). Shared by every handle —
+# a streaming tail opens a fresh LakeTable per run — and rebuilt only when
+# the schema or a file group's written layout changes.
+_RENAME_COLS_CACHE: OrderedDict = OrderedDict()
+_PROJECT_COLS_CACHE: OrderedDict = OrderedDict()
 
 
 class TableCommitError(RuntimeError):
@@ -182,12 +193,9 @@ class LakeTable:
         # schema_version -> first snapshot id carrying it
         # (see _snapshot_at_version)
         self._version_snap_cache: dict[int, int] = {}
-        # schema_version -> physical StructType (immutable per version);
-        # and (schema json, input columns) -> projection Column list.
-        # Both are rebuilt per load_files call otherwise — tens of py4j
-        # round-trips per epoch on the microbatch hot path.
+        # schema_version -> physical StructType (immutable per version),
+        # rebuilt per load_files call otherwise
         self._phys_schema_cache: dict[int, StructType | None] = {}
-        self._project_cols_cache: dict[tuple, list] = {}
 
     # ------------------------------------------------------------------ DDL
 
@@ -421,23 +429,25 @@ class LakeTable:
 
     # ---------------------------------------------------------------- reads
 
-    def _project(self, df: DataFrame, schema: StructType) -> DataFrame:
-        """Pin a raw file read to the versioned schema + hidden columns:
-        missing (later-added) columns -> null, narrower written types cast up
-        (widen reconciliation). Projection Columns cached per layout."""
-        ck = (schema.json(), tuple(df.columns))
-        proj = self._project_cols_cache.get(ck)
-        if proj is None:
+    def _project(self, df: DataFrame, schema: StructType, columns: list[str]) -> DataFrame:
+        """Pin a raw file read (whose columns are ``columns``) to the
+        versioned schema + hidden columns: missing (later-added) columns ->
+        null, narrower written types cast up (widen reconciliation)."""
+
+        def _build():
             proj = []
             for f in schema.fields:
-                if f.name in df.columns:
+                if f.name in columns:
                     proj.append(F.col(f.name).cast(relax_nullability(f.dataType)).alias(f.name))
                 else:
                     proj.append(F.lit(None).cast(relax_nullability(f.dataType)).alias(f.name))
             for h, t in ((HIDDEN_LSN, "long"), (HIDDEN_SEQ, "int"), (HIDDEN_DELETED, "boolean")):
-                proj.append((F.col(h) if h in df.columns else F.lit(None)).cast(t).alias(h))
-            self._project_cols_cache[ck] = proj
-        return df.select(*proj)
+                proj.append((F.col(h) if h in columns else F.lit(None)).cast(t).alias(h))
+            return proj
+
+        return df.select(
+            expr_cache_get(_PROJECT_COLS_CACHE, (schema.json(), tuple(columns)), _build)
+        )
 
     def load_files(
         self,
@@ -474,7 +484,7 @@ class LakeTable:
             df = df.withColumn(HIDDEN_LSN, F.lit(None).cast("long"))
             df = df.withColumn(HIDDEN_SEQ, F.lit(None).cast("int"))
             df = df.withColumn(HIDDEN_DELETED, F.lit(None).cast("boolean"))
-            return self._project(df, schema)
+            return self._project(df, schema, df.columns)
         target_names = {fid: name for name, fid in self.field_ids(snap["snapshot_id"]).items()}
         groups: dict[int, list[str]] = {}
         for f in file_entries:
@@ -488,28 +498,53 @@ class LakeTable:
         for sv in sorted(groups):
             phys = self._physical_schema_at(sv)
             if phys is not None:
-                # explicit schema: no inference/mergeSchema footer job
+                # explicit schema: no inference/mergeSchema footer job, and
+                # the columns are known without asking the JVM
                 raw = self.spark.read.schema(phys).parquet(*sorted(groups[sv]))
+                columns = phys.fieldNames()
             else:
                 raw = self.spark.read.option("mergeSchema", "true").parquet(*sorted(groups[sv]))
+                columns = raw.columns
             writer_names = self._names_at_version(sv)
             if writer_names:
                 # ONE simultaneous select, not sequential withColumnRenamed:
                 # a rename chain may reuse a name another field held at
                 # write time (value->source after source->origin), and
-                # in-place renames would collide/duplicate mid-sequence
+                # in-place renames would collide/duplicate mid-sequence.
+                # Skipped when every written name is already current.
                 name_to_fid = {n: fid for fid, n in writer_names.items()}
-                sel = []
-                for cname in raw.columns:
-                    fid = name_to_fid.get(cname)
-                    tgt = target_names.get(fid, cname) if fid is not None else cname
-                    sel.append(F.col(f"`{cname}`").alias(tgt))
-                raw = raw.select(*sel)
-            parts.append(self._project(raw, schema))
+                renames = tuple(
+                    (cname, target_names.get(name_to_fid[cname], cname) if cname in name_to_fid else cname)
+                    for cname in columns
+                )
+                if any(cname != tgt for cname, tgt in renames):
+                    raw = raw.select(
+                        expr_cache_get(
+                            _RENAME_COLS_CACHE,
+                            renames,
+                            lambda: [F.col(f"`{cname}`").alias(tgt) for cname, tgt in renames],
+                        )
+                    )
+                    columns = [tgt for _, tgt in renames]
+            parts.append(self._project(raw, schema, columns))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return self._apply_mor_masks(out, file_entries, snap, key_range) if apply_masks else out
+
+    def load_key_versions(self, file_entries: list[dict]) -> DataFrame:
+        """``(doc_id, _commit_lsn, _op_seq, _deleted)`` of every physical
+        row in the given files, UNMASKED: like ``load_files(apply_masks=
+        False)``, a key may appear once per stored version, for callers that
+        reduce by version themselves (the merge-on-read resolve). The key
+        and the hidden LWW columns are never renamed or retyped — writers
+        pin their physical types — so one explicit-schema scan reads files
+        of every schema version alike (a column a file lacks reads null):
+        no per-version reconciliation or projection, and only these four
+        columns leave the scan."""
+        return self.spark.read.schema(KEY_VERSION_SCHEMA).parquet(
+            *sorted(f["path"] for f in file_entries)
+        )
 
     def _with_file_seq(self, df: DataFrame, entries: list[dict], col: str) -> DataFrame:
         """Tag each row with its file's commit order: basename(input_file) ->

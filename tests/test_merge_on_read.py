@@ -104,6 +104,23 @@ def test_auto_mode_picks_mor_for_microbatch_and_cow_for_bulk(spark, tmp_table_di
     assert table.read().count() == 2000
 
 
+def test_merge_commits_record_phase_seconds(spark, tmp_table_dir):
+    """Every merge commit carries the wall seconds of its phases in its
+    summary (tools/bench_epoch.py reads them back from the table), in both
+    modes."""
+    table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA)
+    r0 = merge_batch(table, _bulk(spark, 2000), epoch=0)
+    r1 = merge_batch(
+        table, _batch(spark, [("k00001", 99999, 0, "U", 1, "s")]), epoch=1, merge_mode="mor"
+    )
+    assert (r0.mode, r1.mode) == ("cow", "mor")
+    for r in (r0, r1):
+        summary = table.snapshot(r.snapshot_id)["summary"]
+        assert summary["mode"] == r.mode
+        assert set(summary["phase_s"]) == {"plan", "wbuild", "write", "stats"}
+        assert all(isinstance(v, float) and v >= 0 for v in summary["phase_s"].values())
+
+
 def test_mor_stale_update_against_masked_tombstone(spark, tmp_table_dir):
     """Cross-batch out-of-order under MoR: a stale update arriving AFTER a
     MoR tombstone must lose to the tombstone row (which lives in the

@@ -170,11 +170,67 @@ def test_microbatch_mor_epoch_runs_exactly_two_jobs(spark, tmp_table_dir):
     assert n1 - n0 == 2, f"MoR microbatch epoch launched {n1 - n0} jobs, expected 2"
 
 
+def test_stream_tail_mor_epochs_run_exactly_two_jobs(spark, tmp_table_dir, monkeypatch):
+    """The same 2-job floor under the streaming tail. foreachBatch hands
+    merge_batch a DataFrame bound to the query's CLONED session, where the
+    persist, the probe and the write execute — so the fast path's AQE-off
+    scope must land on that session, not on table.spark (scoped on the
+    wrong session, every epoch ran 7 jobs). Jobs are counted in the
+    stream's job group, which the foreachBatch callback thread carries."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    from etl_spark.schema import TARGET_SCHEMA
+    from etl_spark.streaming import tail
+    from etl_spark.table import LakeTable
+
+    table = LakeTable.create_if_absent(spark, os.path.join(tmp_table_dir, "table"), TARGET_SCHEMA)
+    feed_cols = [
+        F.col("id").alias("commit_lsn"),
+        F.lit(0).alias("op_seq"),
+        F.lit("U").alias("op"),
+        F.format_string("doc_%07d", F.col("id") % 60_000).alias("doc_id"),
+        F.sequence(F.lit(1), F.lit(4)).cast("array<int>").alias("tokens"),
+        F.lit(4).alias("n_tok"),
+        F.lit("s").alias("source"),
+    ]
+    tail.merge_batch(table, spark.range(60_000).select(feed_cols), epoch=1_000, target_rows_per_file=10_000)
+    binlog = os.path.join(tmp_table_dir, "binlog")
+    for i in range(3):
+        # one file per trigger, spread over the keyspace: auto picks MoR
+        ids = spark.range(500).select(((F.col("id") * 120 + i) + 100_000 * (i + 1)).alias("id"))
+        ids.select(feed_cols).coalesce(1).write.parquet(os.path.join(binlog, f"lsn_bucket={i}"))
+
+    jobs, modes = [], []
+    merge_batch = tail.merge_batch
+
+    def counted(table, changes, epoch, **kw):
+        sc = changes.sparkSession.sparkContext
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        tracker = sc._jsc.sc().statusTracker()
+        n0 = len(tracker.getJobIdsForGroup(group))
+        res = merge_batch(table, changes, epoch, **kw)
+        jobs.append(len(tracker.getJobIdsForGroup(group)) - n0)
+        modes.append(res.mode)
+        return res
+
+    monkeypatch.setattr(tail, "merge_batch", counted)
+    report = tail.run_stream_replay(
+        spark, binlog, table.root, os.path.join(tmp_table_dir, "ckpt"), max_files_per_trigger=1
+    )
+    assert len(report.batches) == 3 and modes == ["mor"] * 3, modes
+    assert jobs == [2, 2, 2], f"streamed MoR epochs launched {jobs} jobs, expected 2 each"
+    # the scope is restored on the stream's session and untouched on ours
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
 def test_mor_resolve_target_scan_prunes_payload(spark, tmp_table_dir):
     """The merge-on-read resolve reads the touched target ONLY for
     (doc_id, version columns) — the token payload must never reach the scan
-    (winners carry their payload from the change rows). Guarded here on the
-    exact projection the resolve builds over the explicit-schema loader."""
+    (winners carry their payload from the change rows). Guarded on the
+    narrow projection over the explicit-schema loader and on the key/version
+    scan the resolve actually builds (load_key_versions)."""
     import pyspark.sql.functions as F
 
     from etl_spark.operators.merge import merge_batch
@@ -200,3 +256,5 @@ def test_mor_resolve_target_scan_prunes_payload(spark, tmp_table_dir):
     plan = _plan(narrow)
     read_schema = plan.split("ReadSchema")[1][:500]
     assert "tokens" not in read_schema and "doc_id" in read_schema
+    read_schema = _plan(table.load_key_versions(snap["files"])).split("ReadSchema")[1][:500]
+    assert "tokens" not in read_schema and "doc_id" in read_schema and HIDDEN_SEQ in read_schema

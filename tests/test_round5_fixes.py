@@ -11,9 +11,12 @@
 
 from __future__ import annotations
 
+import gc
 import threading
+import weakref
 from collections import OrderedDict
 
+import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from etl_spark.operators import merge as merge_mod
@@ -102,6 +105,63 @@ def test_scoped_conf_concurrent_interleave_restores_original(spark):
     assert spark.conf.get(key) == orig
 
 
+def test_scoped_conf_conflicting_values_raise(spark):
+    """A concurrent scope asking for a DIFFERENT value on the same
+    (session, key) is refused with an error, never silently merged — and
+    the refused enter leaves the open scope and the conf untouched."""
+    key = "spark.sql.adaptive.enabled"
+    orig = spark.conf.get(key)
+    with _scoped_conf(spark, key, "false"):
+        with pytest.raises(RuntimeError, match="conflicting scoped values"):
+            with _scoped_conf(spark, key, "true"):
+                pass
+        assert spark.conf.get(key) == "false"
+    assert spark.conf.get(key) == orig
+    assert not any(k[1] == key for k in merge_mod._SCOPED_CONF_STATE)
+
+
+class _Conf(dict):
+    def get(self, key, default=None):
+        return super().get(key, default)
+
+    def set(self, key, value):
+        self[key] = value
+
+    def unset(self, key):
+        self.pop(key, None)
+
+
+class _Session:
+    """Just the ``conf`` surface _scoped_conf uses. Unlike a SparkSession
+    wrapper, nothing else references it, so CPython can reuse its id()."""
+
+    def __init__(self):
+        self.conf = _Conf()
+
+
+def test_scoped_conf_entry_cannot_alias_a_recycled_session_id():
+    """Scopes are keyed by id(session), and a streaming tail wraps every
+    batch's session in a fresh Python object. An entry left open (here by
+    an abandoned scope) must pin its session: once a session is collected,
+    a new one may be allocated at its id() and be served the dead session's
+    entry — which would skip setting its conf, or refuse it as a conflict."""
+    key = "spark.sql.adaptive.enabled"
+    abandoned = _Session()
+    abandoned_id, ref = id(abandoned), weakref.ref(abandoned)
+    _scoped_conf(abandoned, key, "false").__enter__()  # never exited
+    del abandoned
+    gc.collect()
+    try:
+        assert ref() is not None, "an open scope entry let its session be collected"
+        session = _Session()
+        with _scoped_conf(session, key, "true"):
+            assert session.conf.get(key) == "true"
+        assert session.conf.get(key) is None
+    finally:
+        with merge_mod._SCOPED_CONF_LOCK:
+            merge_mod._SCOPED_CONF_STATE.pop((abandoned_id, key), None)
+
+
 def test_expr_cache_is_bounded_lru(spark):
     cache: OrderedDict = OrderedDict()
     for i in range(EXPR_CACHE_MAX + 40):
@@ -117,9 +177,9 @@ def test_expr_cache_is_bounded_lru(spark):
 
 def test_merge_expr_caches_are_bounded(spark, tmp_table_dir):
     """The production caches route through expr_cache_get (spot-check one)."""
-    before = len(merge_mod._FILE_STAT_EXPRS_CACHE)
-    merge_mod._file_stat_exprs(3)
-    merge_mod._file_stat_exprs(3)
-    after = len(merge_mod._FILE_STAT_EXPRS_CACHE)
+    before = len(merge_mod._WRITE_METRICS_CACHE)
+    merge_mod._write_metrics(16, "file", 3)
+    merge_mod._write_metrics(16, "file", 3)
+    after = len(merge_mod._WRITE_METRICS_CACHE)
     assert after <= max(before + 1, EXPR_CACHE_MAX)
-    assert isinstance(merge_mod._FILE_STAT_EXPRS_CACHE, OrderedDict)
+    assert isinstance(merge_mod._WRITE_METRICS_CACHE, OrderedDict)

@@ -3,6 +3,7 @@ mid-replay, old snapshots stay readable, token dtype must NOT silently widen."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
@@ -76,3 +77,95 @@ def test_narrowing_rejected(spark, tmp_table_dir):
     table.update_schema(widen={"n_tok": "bigint"})
     with pytest.raises(TableCommitError, match="illegal widen"):
         table.update_schema(widen={"n_tok": "int"})
+
+
+def _mor_feed(rng, lsns, n_keys, cols):
+    """One change event per lsn on a random key: ~10% deletes (null
+    payload); keys repeat, so lsns drawn out of order across epochs make
+    stale and duplicate arrivals."""
+    events = []
+    for lsn in map(int, lsns):
+        op = "D" if rng.random() < 0.1 else "U"
+        payload = {
+            "tokens": [lsn % 7, lsn % 11],
+            "n_tok": 2,
+            "source": f"s{lsn % 3}",
+            "origin": f"s{lsn % 3}",
+            "lang": f"l{lsn % 2}",
+            "value_cents": lsn * 10,
+        }
+        events.append(
+            {"doc_id": f"k{rng.integers(n_keys):03d}", "commit_lsn": lsn, "op_seq": 0, "op": op}
+            | {c: payload[c] if op == "U" else None for c in cols}
+        )
+    return events
+
+
+def test_mor_epochs_across_schemas_and_evolution_match_fold(spark, tmp_path):
+    """The merge builds its plan fragments once per (schema, layout, mode)
+    and reuses them across epochs and tables — a stale fragment would
+    resolve or write one schema's columns under another's. Two tables with
+    different payload schemas take interleaved forced-MoR epochs in one
+    session; one of them evolves mid-replay (add + widen, then a rename).
+    Every final state equals the LWW fold of its feed."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    other_schema = StructType(
+        [
+            StructField("doc_id", StringType(), False),
+            StructField("value_cents", LongType(), True),
+            StructField("source", StringType(), True),
+        ]
+    )
+    evolving = LakeTable.create_if_absent(spark, str(tmp_path / "evolving"), TARGET_SCHEMA)
+    other = LakeTable.create_if_absent(spark, str(tmp_path / "other"), other_schema)
+    types = {
+        "tokens": "array<int>",
+        "n_tok": "int",
+        "source": "string",
+        "origin": "string",
+        "lang": "string",
+        "value_cents": "bigint",
+    }
+    feeds: dict[str, list[dict]] = {"evolving": [], "other": []}
+
+    def run(table, name, epoch, events, cols, mode):
+        feeds[name] += events
+        ddl = ", ".join(["doc_id string, commit_lsn bigint, op_seq int, op string"] + [f"{c} {types[c]}" for c in cols])
+        rows = [tuple(ev[c] for c in ["doc_id", "commit_lsn", "op_seq", "op", *cols]) for ev in events]
+        res = merge_batch(table, spark.createDataFrame(rows, ddl), epoch=epoch, merge_mode=mode)
+        assert res.applied and res.mode == mode, (name, epoch, res.mode)
+
+    n_keys, per_epoch, n_epochs = 60, 12, 9
+    seed = [{"doc_id": f"k{i:03d}", "commit_lsn": i + 1, "op_seq": 0, "op": "U"} for i in range(n_keys)]
+    run(evolving, "evolving", 0, [ev | {"tokens": [1], "n_tok": 1, "source": "seed"} for ev in seed],
+        ["tokens", "n_tok", "source"], "cow")
+    run(other, "other", 0, [ev | {"value_cents": 1, "source": "seed"} for ev in seed], ["value_cents", "source"], "cow")
+    # the tail's lsns are a permutation spread over the epochs: events
+    # arrive out of order ACROSS epochs, so some lose to stored versions
+    rng = np.random.default_rng(7)
+    lsns = rng.permutation(np.arange(1_000, 1_000 + per_epoch * n_epochs)).reshape(n_epochs, per_epoch)
+    cols = ["tokens", "n_tok", "source"]
+    for e in range(n_epochs):
+        if e == 3:
+            evolving.update_schema(add_columns=[("lang", "string")], widen={"n_tok": "bigint"})
+            types["n_tok"] = "bigint"
+            cols = ["tokens", "n_tok", "source", "lang"]
+        if e == 6:
+            evolving.rename_column("source", "origin")
+            cols = ["tokens", "n_tok", "origin", "lang"]
+        run(evolving, "evolving", e + 1, _mor_feed(rng, lsns[e], n_keys, cols), cols, "mor")
+        run(other, "other", e + 1, _mor_feed(rng, lsns[e], n_keys, ["value_cents", "source"]),
+            ["value_cents", "source"], "mor")
+
+    final = ["tokens", "n_tok", "origin", "lang"]
+    evolved = pd.DataFrame(
+        [{**ev, "origin": ev.get("origin", ev.get("source")), "lang": ev.get("lang")} for ev in feeds["evolving"]]
+    ).astype({"lang": object})
+    expected = replay_oracle(evolved, payload_cols=final)
+    expected["lang"] = [v if isinstance(v, str) else None for v in expected["lang"]]
+    assert_state_equal(evolving.read(include_hidden=True).toPandas(), expected)
+    assert dict(evolving.read().dtypes)["n_tok"] == "bigint"
+
+    expected = replay_oracle(pd.DataFrame(feeds["other"]), payload_cols=["value_cents", "source"])
+    assert_state_equal(other.read(include_hidden=True).toPandas(), expected)

@@ -44,7 +44,6 @@ def main() -> None:
 
     spark = build_session(app_name="bench-epoch", cores=args.cores, shuffle_partitions=args.cores)
     spark.sparkContext.setLogLevel("ERROR")
-    tracker = spark.sparkContext.statusTracker()
 
     root = tempfile.mkdtemp(prefix="bench_epoch_")
     n_keys = max(1000, args.table_events // 4)
@@ -69,28 +68,23 @@ def main() -> None:
         table = LakeTable.create_if_absent(spark, tdir, TARGET_SCHEMA, layout=layout)
         merge_batch(table, spark.read.parquet(bulk_dir), epoch=0)
 
-        import etl_spark.operators.merge as merge_mod
-
         walls, jobs = [], []
         phase_acc: dict[str, list[float]] = {}
         for e, d in enumerate(micro_dirs):
             batch = spark.read.parquet(d)
-            j0 = max(tracker.getJobIdsForGroup() or [-1])
             # count ALL jobs since start: job ids are global and monotone
-            all0 = spark.sparkContext._jsc.sc().statusTracker().getJobIdsForGroup(None)
-            n0 = len(all0)
-            merge_mod.PHASE_TIMINGS = phases = []
+            n0 = len(spark.sparkContext._jsc.sc().statusTracker().getJobIdsForGroup(None))
             t0 = time.time()
             r = merge_batch(table, batch, epoch=e + 1, merge_mode=args.merge_mode)
             w = time.time() - t0
-            merge_mod.PHASE_TIMINGS = None
-            for ph in phases:
-                phase_acc.setdefault(ph["phase"], []).append(ph["sec"])
+            # the merge records its phase seconds in the commit it made
+            phases = table.snapshot(r.snapshot_id)["summary"].get("phase_s", {})
+            for name, sec in phases.items():
+                phase_acc.setdefault(name, []).append(sec)
             n1 = len(spark.sparkContext._jsc.sc().statusTracker().getJobIdsForGroup(None))
             walls.append(round(w, 3))
             jobs.append(n1 - n0)
-            _ = j0
-            ptxt = " ".join(f"{p['phase']}={p['sec']:.2f}" for p in phases)
+            ptxt = " ".join(f"{name}={sec:.2f}" for name, sec in phases.items())
             print(f"epoch {e+1}: {w:.2f}s jobs={n1-n0} mode={r.mode} [{ptxt}]", file=sys.stderr)
 
         walls_s = sorted(walls)
