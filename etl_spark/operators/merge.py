@@ -289,32 +289,29 @@ _LAYOUT_FRAGMENTS_CACHE: OrderedDict = OrderedDict()
 _RESOLVE_FRAGMENTS_CACHE: OrderedDict = OrderedDict()
 
 
-def _layout_fragments(layout: dict) -> dict:
-    """Layout-dependent fragments: the key column, the bucket expression,
-    the keys-probe projection and the bulk-planning join conditions."""
-    is_bucket = layout.get("type") == "bucket"
-    n_buckets = int(layout["n_buckets"]) if is_bucket else 0
+def _layout_fragments(n_buckets: int) -> dict:
+    """Layout-dependent fragments (``n_buckets`` 0 = range layout): the
+    keys-probe projection and aggregate, the bucket expression and the
+    bulk-planning join conditions."""
 
     def _build() -> dict:
         doc_id = F.col("doc_id")
-        bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int") if is_bucket else None
-        bkt = bucket.alias("_bkt") if is_bucket else None
-        # bucket layout ships (key, bucket) pairs: the bucket id is a JVM
-        # xxhash64 the driver cannot recompute
-        probe = F.struct(doc_id, bkt) if is_bucket else doc_id
-        return {
-            "doc_id": doc_id,
-            "bucket": bucket,
-            "bucket_col": F.col("_bucket"),
-            "probe": probe.alias("kb"),
+        frags = {
+            "probe": doc_id.alias("kb"),
             "probe_agg": F.collect_list("kb").alias("ks"),
-            "count": F.count(F.lit(1)).alias("n"),
-            "bucket_as_bkt": bkt,
-            "bucket_hit": F.col("_bkt") == F.col("bucket"),
             "range_hit": (doc_id >= F.col("min_key")) & (doc_id <= F.col("max_key")),
         }
+        if n_buckets:
+            bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+            # bucket layout ships (key, bucket) pairs: the bucket id is a
+            # JVM xxhash64 the driver cannot recompute
+            frags["probe"] = F.struct(doc_id, bucket.alias("_bkt")).alias("kb")
+            frags["bucket"] = bucket
+            frags["bucket_as_bkt"] = bucket.alias("_bkt")
+            frags["bucket_hit"] = F.col("_bkt") == F.col("bucket")
+        return frags
 
-    return expr_cache_get(_LAYOUT_FRAGMENTS_CACHE, (layout.get("type"), n_buckets), _build)
+    return expr_cache_get(_LAYOUT_FRAGMENTS_CACHE, (n_buckets,), _build)
 
 
 def _resolve_fragments(schema: StructType, mode: str) -> dict:
@@ -436,9 +433,9 @@ def _merge_attempt(
     # ---- plan: which files does this batch touch?
     files = snap["files"]
     layout = snap.get("layout") or {"type": "range"}
-    lf = _layout_fragments(layout)
     is_bucket = layout.get("type") == "bucket"
     n_buckets = int(layout["n_buckets"]) if is_bucket else 0
+    lf = _layout_fragments(n_buckets)
     # a staged layout migration (maintenance.migrate_layout_staged) marks
     # not-yet-rewritten files layout_stale: their bucket tags (if any) were
     # computed under a PREVIOUS layout's modulus and must never be used for
@@ -520,7 +517,7 @@ def _merge_attempt(
             )
             obs_plan = Observation(f"plan-epoch-{epoch}")
             hits = (
-                dedup.observe(obs_plan, lf["count"])
+                dedup.observe(obs_plan, F.count(F.lit(1)).alias("n"))
                 .select(lf["bucket_as_bkt"])
                 .join(F.broadcast(stats_df), lf["bucket_hit"], "left_outer")
                 .select("path")
@@ -553,8 +550,8 @@ def _merge_attempt(
         # The null-path row keeps the output non-empty whenever the batch
         # is, so the metrics always survive.
         hits = (
-            dedup.observe(obs_plan, lf["count"])
-            .select(lf["doc_id"])
+            dedup.observe(obs_plan, F.count(F.lit(1)).alias("n"))
+            .select("doc_id")
             .join(F.broadcast(stats_df), lf["range_hit"], "left_outer")
             .select("path")
             .distinct()
@@ -647,9 +644,9 @@ def _merge_attempt(
                 )
             )
         else:
-            keys = dedup.select(lf["doc_id"])
+            keys = dedup.select("doc_id")
             narrow = narrow.join(F.broadcast(keys) if small_batch else keys, "doc_id", "left_semi")
-        tgtv = narrow.groupBy(lf["doc_id"]).agg(rf["version_agg"])
+        tgtv = narrow.groupBy("doc_id").agg(rf["version_agg"])
         if batch_keys is not None:
             t = tgtv.hint("merge").alias("t")
         else:
@@ -682,7 +679,7 @@ def _merge_attempt(
         if use_broadcast:
             # brand-new keys: anti-join against a keys-only (column-pruned)
             # scan of the touched files — narrow shuffle of keys, no payload
-            new_rows = dedup.join(target.select(lf["doc_id"]), on="doc_id", how="left_anti")
+            new_rows = dedup.join(target.select("doc_id"), on="doc_id", how="left_anti")
             resolved = resolved.unionByName(new_rows.select(rf["changes_only"]))
     else:
         resolved = dedup.select(rf["changes_only"])
@@ -765,7 +762,7 @@ def _merge_attempt(
             lp, metrics = _write_metrics(lineage_partitions, "bucket", n_buckets if obs_file_stats else 0)
             out = (
                 resolved.withColumn("_bucket", lf["bucket"])
-                .repartition(n_buckets, lf["bucket_col"])
+                .repartition(n_buckets, "_bucket")
                 .withColumn("_lp", lp)
                 .observe(obs, *metrics)
                 .drop(*_METRIC_COLS, "_lp", "_bucket")
@@ -778,7 +775,7 @@ def _merge_attempt(
             )
             lp, metrics = _write_metrics(lineage_partitions, "file", n_files if obs_file_stats else 0)
             out = (
-                resolved.repartitionByRange(n_files, lf["doc_id"])
+                resolved.repartitionByRange(n_files, "doc_id")
                 # observe sits ABOVE the range exchange: the boundary-
                 # sampling job only executes the exchange's child, so the
                 # metrics are evaluated exactly once — in the write job (a
@@ -788,7 +785,7 @@ def _merge_attempt(
                 .observe(obs, *metrics)
                 .drop(*_METRIC_COLS, "_lp")
             )
-        writer = out.sortWithinPartitions(lf["doc_id"]).write.mode("overwrite")
+        writer = out.sortWithinPartitions("doc_id").write.mode("overwrite")
         _t = _lap(phases, "wbuild", _t)
         if batch_keys is not None and (use_mor or is_bucket or n_files == 1):
             # microbatch fast path: AQE's stage-replan loop costs more than

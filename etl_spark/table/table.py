@@ -453,7 +453,6 @@ class LakeTable:
         self,
         file_entries: list[dict],
         snap: dict,
-        apply_masks: bool = True,
         key_range: tuple[str | None, str | None] | None = None,
     ) -> DataFrame:
         """Read a set of file entries reconciled to ``snap``'s schema,
@@ -470,14 +469,7 @@ class LakeTable:
         discard every returned row with doc_id outside [lo, hi] (read_range's
         residual predicate). Under that promise the MoR mask is pruned to
         winners files overlapping the range — unmasked out-of-range rows
-        can never surface.
-
-        ``apply_masks=False`` skips the MoR superseded-row masking and may
-        return MULTIPLE version rows per key. Only for callers that reduce
-        by version themselves (the merge resolve takes the per-key max
-        ``(_commit_lsn, _op_seq)``, which is the current state by the LWW
-        invariant — a change only ever lands by beating the stored
-        version, so version order and commit order agree per key)."""
+        can never surface."""
         schema = StructType.fromJson(snap["schema"])
         if not file_entries:
             df = self.spark.createDataFrame([], StructType(list(schema.fields)))
@@ -530,13 +522,16 @@ class LakeTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        return self._apply_mor_masks(out, file_entries, snap, key_range) if apply_masks else out
+        return self._apply_mor_masks(out, file_entries, snap, key_range)
 
     def load_key_versions(self, file_entries: list[dict]) -> DataFrame:
         """``(doc_id, _commit_lsn, _op_seq, _deleted)`` of every physical
-        row in the given files, UNMASKED: like ``load_files(apply_masks=
-        False)``, a key may appear once per stored version, for callers that
-        reduce by version themselves (the merge-on-read resolve). The key
+        row in the given files, UNMASKED: a key may appear once per stored
+        version, for callers that reduce by version themselves (the
+        merge-on-read resolve takes the per-key max ``(_commit_lsn,
+        _op_seq)``, which is the current state by the LWW invariant — a
+        change only ever lands by beating the stored version, so version
+        order and commit order agree per key). The key
         and the hidden LWW columns are never renamed or retyped — writers
         pin their physical types — so one explicit-schema scan reads files
         of every schema version alike (a column a file lacks reads null):

@@ -229,14 +229,12 @@ def test_mor_resolve_target_scan_prunes_payload(spark, tmp_table_dir):
     """The merge-on-read resolve reads the touched target ONLY for
     (doc_id, version columns) — the token payload must never reach the scan
     (winners carry their payload from the change rows). Guarded on the
-    narrow projection over the explicit-schema loader and on the key/version
-    scan the resolve actually builds (load_key_versions)."""
+    key/version scan the resolve builds (load_key_versions)."""
     import pyspark.sql.functions as F
 
     from etl_spark.operators.merge import merge_batch
-    from etl_spark.schema import HIDDEN_LSN, HIDDEN_SEQ, TARGET_SCHEMA
+    from etl_spark.schema import HIDDEN_SEQ, TARGET_SCHEMA
     from etl_spark.table import LakeTable
-    from etl_spark.table.table import HIDDEN_DELETED
 
     table = LakeTable.create_if_absent(spark, tmp_table_dir, TARGET_SCHEMA)
     feed = spark.range(500).select(
@@ -250,11 +248,5 @@ def test_mor_resolve_target_scan_prunes_payload(spark, tmp_table_dir):
     )
     merge_batch(table, feed, epoch=0)
     snap = table.snapshot()
-    narrow = table.load_files(snap["files"], snap, apply_masks=False).select(
-        "doc_id", HIDDEN_LSN, HIDDEN_SEQ, HIDDEN_DELETED
-    )
-    plan = _plan(narrow)
-    read_schema = plan.split("ReadSchema")[1][:500]
-    assert "tokens" not in read_schema and "doc_id" in read_schema
     read_schema = _plan(table.load_key_versions(snap["files"])).split("ReadSchema")[1][:500]
     assert "tokens" not in read_schema and "doc_id" in read_schema and HIDDEN_SEQ in read_schema
