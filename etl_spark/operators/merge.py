@@ -65,8 +65,8 @@ from etl_spark.table.table import HIDDEN_DELETED, LakeTable, TableCommitError
 # planning job also ships the key list to the driver (bounded by a LIMIT — a
 # bulk batch returns CAP+1 rows and the driver discards them, so no unbounded
 # collect can ever happen) and the MoR resolve+write then runs as ONE Spark
-# job: the batch keys broadcast from a driver-local relation (LocalTableScan
-# broadcasts never launch a job) and the resolve join is forced to sort-merge
+# job: the batch keys filter the target's key/version scan as one IN list
+# (no join, so no build job) and the resolve join is forced to sort-merge
 # (both sides are batch-sized; a broadcast hint would spawn a separate
 # build job). Motivation: on back-to-back microbatch epochs the engine-side
 # floor is per-JOB scheduling overhead (~0.25-0.4 s each on the bench VM),
@@ -274,7 +274,7 @@ def merge_batch(
 
 # Plan fragments of the merge that do not depend on the batch — the keys
 # probe, the resolve's join condition, LWW predicate, per-key version
-# aggregate and output projections, the write chain's partition/sort key —
+# aggregate and output projections, the write's lineage Observation —
 # are immutable Column trees: built once per (table schema, layout, merge
 # mode) and rebound to every batch. Rebuilding them every epoch cost ~1,000
 # py4j round trips, most of a microbatch's driver time (Evolution of a
@@ -297,18 +297,19 @@ def _layout_fragments(n_buckets: int) -> dict:
     def _build() -> dict:
         doc_id = F.col("doc_id")
         frags = {
-            "probe": doc_id.alias("kb"),
             "probe_agg": F.collect_list("kb").alias("ks"),
             "range_hit": (doc_id >= F.col("min_key")) & (doc_id <= F.col("max_key")),
         }
-        if n_buckets:
-            bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-            # bucket layout ships (key, bucket) pairs: the bucket id is a
-            # JVM xxhash64 the driver cannot recompute
-            frags["probe"] = F.struct(doc_id, bucket.alias("_bkt")).alias("kb")
-            frags["bucket"] = bucket
-            frags["bucket_as_bkt"] = bucket.alias("_bkt")
-            frags["bucket_hit"] = F.col("_bkt") == F.col("bucket")
+        if not n_buckets:
+            frags["probe"] = doc_id.alias("kb")
+            return frags
+        bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+        # bucket layout ships (key, bucket) pairs: the bucket id is a JVM
+        # xxhash64 the driver cannot recompute
+        frags["probe"] = F.struct(doc_id, bucket.alias("_bkt")).alias("kb")
+        frags["bucket"] = bucket
+        frags["bucket_as_bkt"] = bucket.alias("_bkt")
+        frags["bucket_hit"] = F.col("_bkt") == F.col("bucket")
         return frags
 
     return expr_cache_get(_LAYOUT_FRAGMENTS_CACHE, (n_buckets,), _build)
