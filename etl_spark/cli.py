@@ -14,8 +14,8 @@ Subcommands:
   stream   Structured-Streaming tail (AvailableNow) with checkpoint resume
   compact  small-file compaction on a table (--mor: targeted winners-file
            debt compaction that sheds the merge-on-read masks)
-  migrate-layout  rewrite every live file under a different physical layout
-           (range <-> bucket) and flip the descriptor atomically
+  migrate-layout  flip the physical layout descriptor (range <-> bucket),
+           then rewrite every live file in resumable stage commits
   evolve   metadata-only schema evolution: add / widen / rename columns
   lineage  print the table's lineage ledger + exactly-once coverage report
 """
@@ -100,11 +100,11 @@ def main(argv: list[str] | None = None) -> int:
     ml.add_argument("--layout", choices=["range", "bucket"], required=True)
     ml.add_argument("--n-buckets", type=int, default=64)
     ml.add_argument(
-        "--staged",
-        action="store_true",
-        help="migrate as a sequence of bounded commits (resumable; readers stay correct mid-migration)",
+        "--files-per-stage",
+        type=int,
+        default=None,
+        help="stale files rewritten per stage commit (default: unset = every file in a single stage)",
     )
-    ml.add_argument("--files-per-stage", type=int, default=8)
     ml.add_argument("--max-stages", type=int, default=None, help="bound this invocation (resume later)")
 
     ev = sub.add_parser("evolve")
@@ -113,7 +113,14 @@ def main(argv: list[str] | None = None) -> int:
     ev.add_argument("--widen", action="append", default=[], metavar="NAME:TYPE")
     ev.add_argument("--rename", action="append", default=[], metavar="OLD:NEW")
 
-    li = sub.add_parser("lineage")
+    li = sub.add_parser(
+        "lineage",
+        description=(
+            "Output is line-oriented JSON: one line per epoch (or per ledger row with "
+            "--per-partition), in epoch order; the LAST line is always the coverage verdict "
+            "{epochs, lsn_lo, lsn_hi, rows_upserted, rows_deleted, exactly_once_ok}."
+        ),
+    )
     li.add_argument("--table", required=True)
     li.add_argument(
         "--per-partition",
@@ -212,7 +219,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "migrate-layout":
-        from etl_spark.table.maintenance import migrate_layout, migrate_layout_staged
+        from etl_spark.table.maintenance import migrate_layout_staged
 
         table = LakeTable(spark, args.table)
         new_layout = (
@@ -220,17 +227,13 @@ def main(argv: list[str] | None = None) -> int:
             if args.layout == "bucket"
             else {"type": "range"}
         )
-        if args.staged:
-            rep = migrate_layout_staged(
-                table,
-                new_layout,
-                max_files_per_stage=args.files_per_stage,
-                max_stages=args.max_stages,
-            )
-            print(json.dumps({**rep, "layout": table.layout()}))
-        else:
-            sid = migrate_layout(table, new_layout)
-            print(json.dumps({"snapshot": sid, "layout": table.layout()}))
+        rep = migrate_layout_staged(
+            table,
+            new_layout,
+            max_files_per_stage=args.files_per_stage,
+            max_stages=args.max_stages,
+        )
+        print(json.dumps({**rep, "layout": table.layout()}))
         return 0
 
     if args.cmd == "evolve":

@@ -8,7 +8,7 @@ the expensive stage* pattern (10x downsample before polygonize,
 is exactly why dedup runs BEFORE the MERGE join: shrink the change set so the
 join touches minimal data (SURVEY.md §4.1).
 
-Three physical strategies, same logical result:
+Two physical strategies, same logical result:
 
 1. ``lww_dedup`` (default): ``max_by(struct(payload), struct(lsn, seq))``
    aggregate. This is the scale winner: partial (map-side) aggregation
@@ -17,23 +17,15 @@ Three physical strategies, same logical result:
    SortAggregate — the array-payload buffer is immutable, ruling out the
    hash variant — but the partial/final split, which is what kills skew,
    is preserved; asserted in tests/test_plans.py.)
-2. ``lww_dedup_window``: window + ``row_number() = 1``. Requires a full
-   sort-shuffle of all events per key; kept for plan comparison and because
-   it generalizes to top-k.
-3. ``lww_dedup_salted``: explicit two-phase salted aggregate per the north
-   rule ("salted-key repartition path for hot doc_id skew") — partial LWW per
-   (doc_id, salt), then final LWW per doc_id. LWW is a max over a total
+2. ``lww_dedup_salted``: explicit two-phase salted aggregate — partial LWW
+   per (doc_id, salt), then final LWW per doc_id. LWW is a max over a total
    order, hence associative + commutative, so the two-phase split is exact
-   (tested against strategy 1). Useful when the engine must also guard the
-   window variant or a non-combinable aggregate against skew.
-4. ``lww_dedup_fetch``: winner-id hash aggregate over narrow (key, ord)
-   rows + payload fetch join. The token payload never rides the aggregate
-   shuffle — measured 31% faster than strategy 1 at low parallelism
-   (bandwidth-bound regime, the 100 TB-relevant case: 8.4M events, 2 cores:
-   25.7s vs 37.2s; parity at 8 cores), at the cost of scanning the input
-   twice (column-pruned to 3 columns on the first pass).
+   (tested against strategy 1). Strategy 1's partial aggregation already
+   removes hot-key skew; this path is kept as the engine's one hot-key path
+   because BASELINE.json's north star names "a salted-key repartition path
+   for hot doc_id skew" (``merge_batch(use_salted_dedup=True)``).
 
-All strategies are pure Catalyst (whole-stage codegen, no Python).
+Both strategies are pure Catalyst (whole-stage codegen, no Python).
 """
 
 from __future__ import annotations
@@ -41,7 +33,7 @@ from __future__ import annotations
 from collections import OrderedDict
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from etl_spark.session import expr_cache_get
 
@@ -77,74 +69,6 @@ def lww_dedup(df: DataFrame, key: str = "doc_id") -> DataFrame:
     """One winning event per key via max_by hash aggregate (partial+final)."""
     win, unpack = _lww_exprs(key, _payload_cols(df, key))
     return df.groupBy(key).agg(win).select(key, *unpack)
-
-
-def lww_dedup_window(df: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Window + row_number variant (full sort shuffle; reference plan shape)."""
-    w = Window.partitionBy(key).orderBy(*[F.desc(c) for c in ORDER_COLS])
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-        .select(key, *ORDER_COLS, *_payload_cols(df, key))
-    )
-
-
-def lww_dedup_fetch(df: DataFrame, key: str = "doc_id", seq_bits: int = 20) -> DataFrame:
-    """Winner-id aggregation + payload fetch join.
-
-    Phase 1 shuffles ONLY (key, ord) — ord = commit_lsn·2^seq_bits + op_seq
-    packs the order into one long, so the winner selection is a plain
-    ``max`` hash aggregate over 16-byte rows instead of a sort aggregate
-    dragging the token payload through the shuffle. Phase 2 fetches the
-    winner rows by joining the original (narrow-scanned-then-projected)
-    input on (key, ord); when the winner set fits the broadcast threshold
-    the payload never shuffles at all. Exact duplicate deliveries of the
-    winner event are collapsed by a final per-key max_by over the (tiny)
-    fetched set.
-
-    Requires 0 <= op_seq < 2^seq_bits and 0 <= commit_lsn < 2^(63-seq_bits);
-    the precondition is CHECKED at runtime (a violating row would silently
-    pack an overlapping/overflowing ord and pick a wrong winner): the packing
-    expression folds in an ``assert_true`` guard — a codegen'd per-row
-    compare, no extra job — that fails the stage on the first bad row.
-    Same result as lww_dedup — tested for equivalence.
-    """
-    payload = _payload_cols(df, key)
-    valid = (
-        (F.col("op_seq") >= 0)
-        & (F.col("op_seq") < (1 << seq_bits))
-        & (F.col("commit_lsn") >= 0)
-        & (F.col("commit_lsn") < (1 << (63 - seq_bits)))
-    )
-    # assert_true returns NULL when the predicate holds; adding the
-    # coalesced 0 keeps the guard inside the ord expression so Catalyst
-    # cannot prune it away
-    guard = F.coalesce(
-        F.assert_true(
-            valid,
-            F.format_string(
-                f"lww_dedup_fetch precondition violated (seq_bits={seq_bits}): "
-                "commit_lsn=%s op_seq=%s", F.col("commit_lsn"), F.col("op_seq"),
-            ),
-        ).cast("long"),
-        F.lit(0),
-    )
-    ord_col = (F.col("commit_lsn") * (1 << seq_bits) + F.col("op_seq") + guard).alias("_ord")
-    winners = (
-        df.select(F.col(key), ord_col)
-        .groupBy(key)
-        .agg(F.max("_ord").alias("_ord"))
-    )
-    fetched = df.withColumn("_ord", F.col("commit_lsn") * (1 << seq_bits) + F.col("op_seq")).join(
-        winners, on=[key, "_ord"]
-    )
-    win = F.max_by(
-        F.struct(*[F.col(c) for c in (*ORDER_COLS, *payload)]),
-        F.struct(*[F.col(c) for c in ORDER_COLS]),
-    ).alias("_w")
-    out = fetched.drop("_ord").groupBy(key).agg(win)
-    return out.select(key, *[F.col(f"_w.{c}").alias(c) for c in (*ORDER_COLS, *payload)])
 
 
 def lww_dedup_salted(df: DataFrame, key: str = "doc_id", salt_buckets: int = 32) -> DataFrame:

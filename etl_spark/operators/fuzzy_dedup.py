@@ -99,12 +99,18 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("a.sid").alias("id_a"), F.col("b.sid").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
+    # the size table grows with the corpus (one row per doc), so it carries
+    # no broadcast hint: the planner picks these joins' strategy
     sa = sizes.select(F.col("sid").alias("id_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("sid").alias("id_b"), F.col("n_sh").alias("n_b"))
+    return _jaccard_at_least(inter.join(sa, "id_a").join(sb, "id_b"), threshold_milli)
+
+
+def _jaccard_at_least(inter: DataFrame, threshold_milli: int) -> DataFrame:
+    """(id_a, id_b, jaccard_milli) rows of pairs at or above the threshold,
+    from per-pair intersection counts and both set sizes."""
     return (
-        inter.join(F.broadcast(sa), "id_a")
-        .join(F.broadcast(sb), "id_b")
-        .withColumn(
+        inter.withColumn(
             "jaccard_milli",
             F.expr("CAST(1000 * n_inter AS BIGINT) div (n_a + n_b - n_inter)"),
         )
@@ -114,16 +120,17 @@ def ngram_jaccard_pairs(
 
 
 def _signatures_from_shingles(sh: DataFrame, id_col: str, k: int = MINHASH_K) -> DataFrame:
-    """k permuted min-aggregates over a distinct (sid, shingle) set — the
-    single home of the signature formula (minhash_signatures and
-    minhash_lsh_pairs both call it; keeping one copy is what preserves the
-    'LSH pairs are a recalled subset of exact Jaccard' relationship)."""
+    """k permuted min-aggregates over a distinct (sid, shingle) set, plus the
+    set size ``n_sh`` from the same aggregate — the single home of the
+    signature formula (minhash_signatures and minhash_lsh_pairs both call
+    it; keeping one copy is what preserves the 'LSH pairs are a recalled
+    subset of exact Jaccard' relationship)."""
     hashed = sh.withColumn("h", md5_int(F.col("shingle"), 7))
     aggs = [
         F.min(F.pmod(F.col("h") * MINHASH_A[i] + MINHASH_B[i], F.lit(MINHASH_P))).alias(f"mh{i}")
         for i in range(k)
     ]
-    return hashed.groupBy(F.col("sid").alias(id_col)).agg(*aggs)
+    return hashed.groupBy(F.col("sid").alias(id_col)).agg(*aggs, F.count(F.lit(1)).alias("n_sh"))
 
 
 def minhash_signatures(
@@ -132,7 +139,7 @@ def minhash_signatures(
     """Per-doc MinHash signature: k min-aggregates over permuted shingle
     hashes. One shuffle (partial agg combines map-side); signature columns
     mh0..mh{k-1}. Base hash is 28-bit md5-derived so A[i]*h+B[i] < 2^58."""
-    return _signatures_from_shingles(doc_shingles(docs, text_col, id_col, n), id_col, k)
+    return _signatures_from_shingles(doc_shingles(docs, text_col, id_col, n), id_col, k).drop("n_sh")
 
 
 def minhash_lsh_pairs(
@@ -153,8 +160,10 @@ def minhash_lsh_pairs(
     jaccard_milli >= threshold, id_a < id_b — a subset of ngram_jaccard_pairs
     recalled through LSH (b=4, r=4 => ~50% recall at J=0.5, >98% at J=0.9).
 
-    The distinct (id, shingle) set feeds THREE consumers (signatures, set
-    sizes, verify join); ``cache_shingles`` persists it (MEMORY_AND_DISK)
+    Each doc's shingle-set size comes out of the signature aggregate and
+    rides the band rows into the candidates, so no per-doc size table is
+    joined back. The distinct (id, shingle) set feeds the signatures and
+    both verify joins; ``cache_shingles`` persists it (MEMORY_AND_DISK)
     so the tokenize+explode+distinct shuffle runs once, not per consumer —
     measured 1.6x on the sf0.1 corpus. Disable when the shingle set exceeds
     cluster cache capacity (it then recomputes from the scan, still one
@@ -174,6 +183,7 @@ def minhash_lsh_pairs(
                 F.col(id_col).alias("sid"),
                 F.lit(j).alias("band_id"),
                 F.concat_ws("_", *cols).alias("band_key"),
+                "n_sh",
             )
         )
     banded = band_rows[0]
@@ -184,7 +194,12 @@ def minhash_lsh_pairs(
     cand = (
         a.join(b, on=["band_id", "band_key"])
         .where(F.col("a.sid") < F.col("b.sid"))
-        .select(F.col("a.sid").alias("id_a"), F.col("b.sid").alias("id_b"))
+        .select(
+            F.col("a.sid").alias("id_a"),
+            F.col("b.sid").alias("id_b"),
+            F.col("a.n_sh").alias("n_a"),
+            F.col("b.n_sh").alias("n_b"),
+        )
         .distinct()
     )
     # exact-Jaccard verify restricted to candidate pairs. The second shingle
@@ -193,25 +208,13 @@ def minhash_lsh_pairs(
     # alone and post-filtering shingle equality would materialize the
     # |sh_a| x |sh_b| cross product per candidate pair: two 5k-shingle docs
     # -> 25M intermediate rows for one pair.)
-    sizes = sh.groupBy("sid").agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (
         cand.join(sh.select(F.col("sid").alias("id_a"), "shingle"), "id_a")
         .join(sh.select(F.col("sid").alias("id_b"), "shingle"), on=["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
+        .groupBy("id_a", "id_b", "n_a", "n_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    sa = sizes.select(F.col("sid").alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("sid").alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(F.broadcast(sa), "id_a")
-        .join(F.broadcast(sb), "id_b")
-        .withColumn(
-            "jaccard_milli",
-            F.expr("CAST(1000 * n_inter AS BIGINT) div (n_a + n_b - n_inter)"),
-        )
-        .where(F.col("jaccard_milli") >= threshold_milli)
-        .select("id_a", "id_b", "jaccard_milli")
-    )
+    return _jaccard_at_least(inter, threshold_milli)
 
 
 SIMHASH_BITS = 60

@@ -55,7 +55,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
-from etl_spark.operators.dedup import lww_dedup, lww_dedup_fetch, lww_dedup_salted
+from etl_spark.operators.dedup import lww_dedup, lww_dedup_salted
 from etl_spark.schema import HIDDEN_LSN, HIDDEN_SEQ, relax_nullability
 from etl_spark.session import expr_cache_get
 from etl_spark.table.table import HIDDEN_DELETED, LakeTable, TableCommitError
@@ -75,6 +75,20 @@ from etl_spark.table.table import HIDDEN_DELETED, LakeTable, TableCommitError
 # and under the streaming tail's foreachBatch alike (the AQE-off scope lands
 # on the batch's own session; tests/test_plans.py pins both).
 FAST_PATH_MAX_KEYS = 50_000
+
+# CoW resolve: a deduped batch of at most this many rows is broadcast into a
+# left-outer join against the touched target (plus a keys-only anti-join for
+# new keys); larger batches take the sort-merge full-outer join. A MoR
+# resolve above FAST_PATH_MAX_KEYS broadcasts its batch keys and per-key
+# versions under the same bound.
+# Measured on 400k-row deduped batches (~220 MB with token payloads): the
+# broadcast build/probe costs MORE than the sort-merge shuffle (8.4M-event
+# replay: 41 s vs 25-30 s at 8 cores), so the bound stays at microbatch scale.
+MAX_BROADCAST_ROWS = 100_000
+
+# merge_mode="auto" picks MoR when the touched slice holds more than this
+# many rows per deduped batch row: CoW would rewrite that many rows per change.
+MOR_REWRITE_RATIO = 8.0
 
 
 def _sql_str(s: str) -> str:
@@ -217,37 +231,26 @@ def merge_batch(
     lineage_partitions: int = 16,
     target_rows_per_file: int = 1_000_000,
     use_salted_dedup: bool = False,
-    resolve_strategy: str = "auto",
-    max_broadcast_rows: int = 100_000,
     max_commit_retries: int = 3,
-    dedup_strategy: str = "agg",
     merge_mode: str = "auto",
-    mor_rewrite_ratio: float = 8.0,
 ) -> MergeResult:
     """Apply one change batch exactly-once. Returns a no-op result if the
     epoch is already fenced (idempotent replay); on a concurrent-writer
     commit conflict the attempt is discarded and the merge replans against
     the new head (up to ``max_commit_retries`` times).
 
-    ``resolve_strategy``: 'auto' (broadcast the deduped batch into the
-    resolve join when it has <= max_broadcast_rows rows, else sort-merge
-    full-outer), 'broadcast', or 'smj'.
-
     ``merge_mode``: 'cow' (copy-on-write — rewrite every touched file),
     'mor' (merge-on-read — write ONE batch-sized winners file flagged as an
     equality-delete mask, rewrite nothing; table.py docstring), or 'auto'
-    (MoR when the touched slice is > ``mor_rewrite_ratio`` x the deduped
+    (MoR when the touched slice is > ``MOR_REWRITE_RATIO`` x the deduped
     batch — the microbatch-against-big-table regime where CoW's write
     amplification dominates; CoW otherwise, so bulk batches keep the
-    one-version-per-key layout and reads stay mask-free).
+    one-version-per-key layout and reads stay mask-free). The resolve join
+    is picked from the deduped batch size (``MAX_BROADCAST_ROWS``).
 
-    ``dedup_strategy``: 'agg' (max_by aggregate — the default), 'fetch'
-    (winner-id aggregation + payload fetch join: only (key, ord) rides the
-    winner shuffle — measured 31% faster on payload-heavy bulk batches in
-    the bandwidth-bound low-parallelism regime, at the cost of scanning the
-    batch input twice), or 'salted' (two-phase hot-key path; also selected
-    by the legacy ``use_salted_dedup`` flag). All three produce the
-    identical LWW winner set (operators/dedup.py)."""
+    ``use_salted_dedup``: dedup through the two-phase salted aggregate (the
+    hot-key path) instead of the plain ``max_by`` aggregate; both produce
+    the identical LWW winner set (operators/dedup.py)."""
     last_err: TableCommitError | None = None
     for _attempt in range(max_commit_retries + 1):
         # re-check the fence each attempt: the conflicting writer may have
@@ -261,11 +264,8 @@ def merge_batch(
                 epoch,
                 lineage_partitions,
                 target_rows_per_file,
-                "salted" if use_salted_dedup else dedup_strategy,
-                resolve_strategy,
-                max_broadcast_rows,
+                use_salted_dedup,
                 merge_mode,
-                mor_rewrite_ratio,
             )
         except TableCommitError as e:
             last_err = e
@@ -396,11 +396,8 @@ def _merge_attempt(
     epoch: int,
     lineage_partitions: int,
     target_rows_per_file: int,
-    dedup_strategy: str,
-    resolve_strategy: str,
-    max_broadcast_rows: int,
+    use_salted_dedup: bool,
     merge_mode: str,
-    mor_rewrite_ratio: float,
 ) -> MergeResult:
     if merge_mode not in ("auto", "cow", "mor"):
         raise ValueError(f"unknown merge_mode {merge_mode!r}; one of ['auto', 'cow', 'mor']")
@@ -417,10 +414,7 @@ def _merge_attempt(
     schema = StructType.fromJson(snap["schema"])
 
     changes = _normalize_changes(schema, changes)
-    dedup_fns = {"agg": lww_dedup, "salted": lww_dedup_salted, "fetch": lww_dedup_fetch}
-    if dedup_strategy not in dedup_fns:
-        raise ValueError(f"unknown dedup_strategy {dedup_strategy!r}; one of {sorted(dedup_fns)}")
-    dedup = dedup_fns[dedup_strategy](changes)
+    dedup = lww_dedup_salted(changes) if use_salted_dedup else lww_dedup(changes)
     # dedup feeds both the file-touch planning and the resolve join; persist
     # so the feed scan + dedup shuffle run once per batch, not twice. The
     # cached plan is COMPILED here (CacheManager pins the physical plan at
@@ -454,7 +448,7 @@ def _merge_attempt(
         range_plannable = []
         unplannable = [f for f in files if f["min_key"] is None]  # no stats -> always touched
     touched_paths: set[str] = {f["path"] for f in unplannable}
-    n_changes: int | None = None
+    n_changes: int
 
     # ---- keys probe: ONE bounded job that decides fast vs bulk planning.
     # LocalLimit caps every partition at CAP+1 rows, the groupBy().agg
@@ -594,12 +588,7 @@ def _merge_attempt(
     # compaction. Bulk batches stay CoW: their write is ~batch-sized either
     # way, and CoW keeps reads mask-free.
     use_mor = bool(touched_paths) and (
-        merge_mode == "mor"
-        or (
-            merge_mode == "auto"
-            and n_changes is not None
-            and touched_rows > mor_rewrite_ratio * max(n_changes, 1)
-        )
+        merge_mode == "mor" or (merge_mode == "auto" and touched_rows > MOR_REWRITE_RATIO * n_changes)
     )
     rf = _resolve_fragments(schema, "mor" if use_mor else "cow")
 
@@ -617,7 +606,7 @@ def _merge_attempt(
         # a column-pruned scan of (doc_id, version columns), never the
         # token payload. No table payload crosses the wire; write
         # amplification AND read volume are batch-sized.
-        small_batch = n_changes is not None and n_changes <= max_broadcast_rows
+        small_batch = n_changes <= MAX_BROADCAST_ROWS
         # UNMASKED narrow read + per-key version argmax, instead of the
         # file-level mask join: by the LWW invariant a change only lands by
         # beating the stored version, so the max (_commit_lsn, _op_seq) row
@@ -657,20 +646,14 @@ def _merge_attempt(
         resolved = c.join(t, rf["join"], "left_outer").where(rf["change_wins"]).select(rf["select"])
     elif touched_entries:
         target = table.load_files(touched_entries, snap)
-        # Strategy: the full-outer SortMergeJoin shuffles the touched target
-        # payload a second time (range write already shuffles it once). When
-        # the deduped batch is small — the common microbatch case — the same
+        # The full-outer SortMergeJoin shuffles the touched target payload a
+        # second time (range write already shuffles it once). When the
+        # deduped batch is small — the common microbatch case — the same
         # result decomposes into (a) target LEFT OUTER broadcast(changes):
         # target payload never crosses the wire for the join, and (b) a
-        # keys-only anti-join supplying brand-new keys. Fallback to the SMJ
-        # full-outer for bulk batches above the broadcast budget: measured on
-        # 400k-row deduped batches (~220 MB with token payloads) the
-        # broadcast build/probe costs MORE than the SMJ shuffle (8.4M-event
-        # replay: 41s vs 25-30s at 8 cores), so the auto threshold stays at
-        # true-microbatch scale.
-        use_broadcast = resolve_strategy == "broadcast" or (
-            resolve_strategy == "auto" and n_changes is not None and n_changes <= max_broadcast_rows
-        )
+        # keys-only anti-join supplying brand-new keys. Bulk batches above
+        # MAX_BROADCAST_ROWS keep the SMJ full-outer.
+        use_broadcast = n_changes <= MAX_BROADCAST_ROWS
         t = target.alias("t")
         if use_broadcast:
             joined = t.join(F.broadcast(c), rf["join"], "left_outer")
@@ -693,8 +676,7 @@ def _merge_attempt(
         # parallelism floor — a microbatch must not fragment into `par`
         # near-empty files every epoch (that debt is exactly what MoR
         # avoids); forced-mor bulk batches still fan out by size.
-        est_rows = n_changes if n_changes is not None else target_rows_per_file // 10
-        n_files = max(1, (est_rows // target_rows_per_file) + 1)
+        n_files = max(1, (n_changes // target_rows_per_file) + 1)
     else:
         # file count: ~target_rows_per_file rows each. Bulk batches floor at
         # cluster parallelism so the apply write always uses every core — a
@@ -706,7 +688,7 @@ def _merge_attempt(
         # boundary-sampler pass entirely. Sized from what this write
         # actually contains — the touched slice plus the batch — NOT the
         # whole table's row count.
-        est_rows = touched_rows + (n_changes if n_changes is not None else target_rows_per_file // 10)
+        est_rows = touched_rows + n_changes
         if batch_keys is not None:
             n_files = max(1, min(par, est_rows // 100_000), (est_rows // target_rows_per_file) + 1)
         else:

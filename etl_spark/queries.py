@@ -264,14 +264,15 @@ def q_cdc_replay_merge_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("cdc_layout_migration", _REPLAY_ORACLE)
 def q_cdc_layout_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replay split across a LIVE layout migration: two CoW epochs into a
-    range table, an atomic range->bucket migration (maintenance.
-    migrate_layout — full rewrite + descriptor flip in one commit), then the
-    final epoch applied under bucket planning. Final state must equal the
-    single-shot SQL LWW apply — the migration is invisible to readers."""
+    """Replay split across a LIVE layout migration: a CoW epoch into a
+    range table, an unbounded range->bucket migration (maintenance.
+    migrate_layout_staged with no per-stage file cap — a metadata-only begin
+    commit flips the descriptor, then ONE stage rewrites every file), then
+    the final epoch applied under bucket planning. Final state must equal
+    the single-shot SQL LWW apply — the migration is invisible to readers."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    from etl_spark.table.maintenance import migrate_layout
+    from etl_spark.table.maintenance import migrate_layout_staged
 
     feed = _feed(spark, sf_dir)
     schema = StructType(
@@ -289,7 +290,7 @@ def q_cdc_layout_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # can never cost this green row (the three-epoch variant measured ~25 s
     # in the checker; this shape exercises the same pre/post-flip planning)
     merge_batch(table, feed.where(F.col("commit_lsn") <= cut), epoch=0)
-    migrate_layout(table, {"type": "bucket", "n_buckets": 8})
+    migrate_layout_staged(table, {"type": "bucket", "n_buckets": 8}, max_files_per_stage=None)
     merge_batch(table, feed.where(F.col("commit_lsn") > cut), epoch=1)
     return table.read().select("doc_id", "value_cents", "source")
 
@@ -321,12 +322,13 @@ def q_cdc_layout_migration_staged(spark: SparkSession, sf_dir: str) -> DataFrame
     # epoch 0 into a multi-file range table; begin + ONE bounded stage;
     # epoch 1 merges into the half-migrated table; remaining stages finish
     merge_batch(table, feed.where(F.col("commit_lsn") <= cut), epoch=0, target_rows_per_file=20_000)
-    rep = migrate_layout_staged(
+    migrate_layout_staged(
         table, {"type": "bucket", "n_buckets": 8}, max_files_per_stage=1, max_stages=1
     )
     merge_batch(table, feed.where(F.col("commit_lsn") > cut), epoch=1)
     migrate_layout_staged(table, {"type": "bucket", "n_buckets": 8}, max_files_per_stage=8)
-    assert not any(f.get("layout_stale") for f in table.files())
+    if any(f.get("layout_stale") for f in table.files()):
+        raise RuntimeError("staged layout migration finished with layout_stale files left")
     return table.read().select("doc_id", "value_cents", "source")
 
 

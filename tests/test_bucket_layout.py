@@ -203,10 +203,11 @@ def test_bucket_mor_then_cow_does_not_resurrect(spark, tmp_table_dir):
 
 
 def test_migrate_layout_round_trip(spark, tmp_table_dir):
-    """range -> bucket -> range migration: one atomic rewrite each way,
-    state identical throughout, MoR debt applied+shed by the migration, and
-    post-migration merges plan under the NEW layout."""
-    from etl_spark.table.maintenance import migrate_layout
+    """range -> bucket -> range migration with no per-stage file cap: a
+    begin commit plus ONE stage each way, state identical throughout, MoR
+    debt applied+shed by the migration, and post-migration merges plan
+    under the NEW layout."""
+    from etl_spark.table.maintenance import migrate_layout_staged
 
     table = LakeTable.create_if_absent(spark, tmp_table_dir, TARGET_SCHEMA)
     feed = spark.range(3000).select(
@@ -231,14 +232,17 @@ def test_migrate_layout_round_trip(spark, tmp_table_dir):
     # small target_rows_per_file: bucket rewrites size output files by the
     # DATA (round-5 fix), so a multi-file layout must be requested here for
     # the point-merge pruning assertion below to have something to prune
-    sid = migrate_layout(table, {"type": "bucket", "n_buckets": 8}, target_rows_per_file=500)
-    assert sid is not None
+    rep = migrate_layout_staged(
+        table, {"type": "bucket", "n_buckets": 8}, max_files_per_stage=None, target_rows_per_file=500
+    )
+    assert rep["begin"] is not None and len(rep["stages"]) == 1 and rep["done"]
     assert table.layout() == {"type": "bucket", "n_buckets": 8}
     assert all(f.get("buckets") for f in table.files())
     assert not any(f.get("mor") for f in table.files())  # debt shed
     assert {r["doc_id"]: list(r["tokens"]) for r in table.read().collect()} == before
     # idempotent: same layout -> no-op
-    assert migrate_layout(table, {"type": "bucket", "n_buckets": 8}) is None
+    rep = migrate_layout_staged(table, {"type": "bucket", "n_buckets": 8}, max_files_per_stage=None)
+    assert (rep["begin"], rep["stages"]) == (None, [])
 
     # a merge after migration plans by bucket (only same-bucket files touched)
     files0 = {f["path"] for f in table.files()}
@@ -250,8 +254,9 @@ def test_migrate_layout_round_trip(spark, tmp_table_dir):
     assert r.files_rewritten < len(files0)
 
     # back to range: files carry tight key ranges again, no bucket tags
-    sid2 = migrate_layout(table, {"type": "range"})
-    assert sid2 is not None and table.layout() == {"type": "range"}
+    rep = migrate_layout_staged(table, {"type": "range"}, max_files_per_stage=None)
+    assert rep["begin"] is not None and len(rep["stages"]) == 1 and rep["done"]
+    assert table.layout() == {"type": "range"}
     assert all(f.get("min_key") is not None and not f.get("buckets") for f in table.files())
     got = {r["doc_id"]: list(r["tokens"]) for r in table.read().collect()}
     assert got["k00100"] == [5]

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from etl_spark.cli import main
 
 
@@ -76,3 +78,12 @@ def test_cli_debezium_gen_and_stream(spark, tmp_path, capsys):
 
     verdict = _run(capsys, ["lineage", "--table", table])[-1]
     assert verdict["exactly_once_ok"] is True
+
+
+def test_cli_help_states_output_and_stage_contracts(capsys):
+    """`lineage --help` documents the line contract (last line = verdict);
+    `migrate-layout --help` says an unset --files-per-stage is one stage."""
+    for cmd, phrase in (("lineage", "LAST line is always the coverage verdict"), ("migrate-layout", "single stage")):
+        with pytest.raises(SystemExit):
+            main([cmd, "--help"])
+        assert phrase in " ".join(capsys.readouterr().out.split())

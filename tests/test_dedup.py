@@ -1,4 +1,4 @@
-"""LWW dedup: all three physical strategies agree with the pandas oracle
+"""LWW dedup: both physical strategies agree with the pandas oracle
 (SURVEY.md §5 item 2)."""
 
 from __future__ import annotations
@@ -7,12 +7,7 @@ import pandas as pd
 import pytest
 
 from etl_spark.datagen import BinlogSpec, generate_binlog
-from etl_spark.operators.dedup import (
-    lww_dedup,
-    lww_dedup_fetch,
-    lww_dedup_salted,
-    lww_dedup_window,
-)
+from etl_spark.operators.dedup import lww_dedup, lww_dedup_salted
 
 SPEC = BinlogSpec(n_events=4000, n_keys=300, seed=7, skew=2.5)
 
@@ -30,7 +25,7 @@ def feed(spark):
     return df
 
 
-@pytest.mark.parametrize("strategy", [lww_dedup, lww_dedup_window, lww_dedup_salted, lww_dedup_fetch])
+@pytest.mark.parametrize("strategy", [lww_dedup, lww_dedup_salted])
 def test_dedup_matches_oracle(spark, feed, strategy):
     got = strategy(feed).toPandas().sort_values("doc_id").reset_index(drop=True)
     exp = _oracle_winners(feed.toPandas())

@@ -250,3 +250,19 @@ def test_mor_resolve_target_scan_prunes_payload(spark, tmp_table_dir):
     snap = table.snapshot()
     read_schema = _plan(table.load_key_versions(snap["files"])).split("ReadSchema")[1][:500]
     assert "tokens" not in read_schema and "doc_id" in read_schema and HIDDEN_SEQ in read_schema
+
+
+def test_fuzzy_dedup_pairs_carry_no_broadcast_hint(spark):
+    """The per-doc shingle-set sizes grow with the corpus, so neither pair
+    operator may force them into a broadcast: MinHash-LSH carries each
+    doc's size through its band rows, and exact n-gram Jaccard leaves the
+    size joins to the planner."""
+    from etl_spark.operators import fuzzy_dedup as FD
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "the quick brown fox leaps"), (3, "lorem ipsum dolor sit")],
+        "doc_id long, text string",
+    )
+    for df in (FD.minhash_lsh_pairs(docs, cache_shingles=False), FD.ngram_jaccard_pairs(docs)):
+        analyzed = df._jdf.queryExecution().analyzed().toString()
+        assert "ResolvedHint" not in analyzed and "broadcast" not in analyzed.lower()

@@ -49,19 +49,24 @@ def test_final_state_invariant_to_epoch_partitioning(spark, tmp_path):
     feed.unpersist()
 
 
-def test_final_state_invariant_to_resolve_strategy(spark, tmp_path):
+def test_final_state_invariant_to_resolve_strategy(spark, tmp_path, monkeypatch):
     """Broadcast-decomposed resolve (left-outer + keys-only anti) must equal
-    the full-outer SMJ resolve exactly, across multiple epochs."""
+    the full-outer SMJ resolve exactly, across multiple epochs. Every batch
+    here is under MAX_BROADCAST_ROWS, so the sort-merge arm is forced by
+    patching the bound to 0."""
+    from etl_spark.operators import merge
+
     spec = BinlogSpec(n_events=3000, n_keys=250, seed=29, tombstone_frac=0.12)
     feed = generate_binlog(spark, spec).drop("lsn_bucket").cache()
     hi_pos = feed.agg(F.max("delivery_pos")).collect()[0][0]
     span = hi_pos // 3 + 1
     expected = replay_oracle(feed.drop("delivery_pos").toPandas())
-    for strategy in ("smj", "broadcast"):
+    for strategy, bound in (("smj", 0), ("broadcast", merge.MAX_BROADCAST_ROWS)):
+        monkeypatch.setattr(merge, "MAX_BROADCAST_ROWS", bound)
         table = LakeTable.create_if_absent(spark, str(tmp_path / strategy), TARGET_SCHEMA)
         for e in range(3):
             batch = feed.where((F.col("delivery_pos") / span).cast("int") == e).drop("delivery_pos")
-            merge_batch(table, batch, epoch=e, resolve_strategy=strategy)
+            merge_batch(table, batch, epoch=e)
         assert_state_equal(table.read(include_hidden=True).toPandas(), expected)
     feed.unpersist()
 

@@ -1,7 +1,7 @@
 """Round-2 hardening: commit-conflict retry, CDC-diff tombstone-expiry
 suppression, distributed pack_sequences, Catalyst chunker parity,
-lww_dedup_fetch precondition guard, connected-components convergence guard,
-and the batch-proportional merge file-count estimate."""
+connected-components convergence guard, and the batch-proportional merge
+file-count estimate."""
 
 from __future__ import annotations
 
@@ -260,28 +260,6 @@ def test_rename_then_readd_old_name(spark, tmp_table_dir):
 # --------------------------------------------------------- runtime guards
 
 
-def test_lww_dedup_fetch_guard_raises_on_violation(spark):
-    from etl_spark.operators.dedup import lww_dedup_fetch
-
-    bad = spark.createDataFrame(
-        [("a", 5, 1 << 21, "x")], "doc_id string, commit_lsn long, op_seq int, payload string"
-    )
-    with pytest.raises(Exception, match="precondition"):
-        lww_dedup_fetch(bad, seq_bits=20).collect()
-
-
-def test_lww_dedup_fetch_guard_passes_valid(spark):
-    from etl_spark.operators.dedup import lww_dedup, lww_dedup_fetch
-
-    df = spark.createDataFrame(
-        [("a", 5, 1, "x"), ("a", 5, 2, "y"), ("b", 9, 0, "z")],
-        "doc_id string, commit_lsn long, op_seq int, payload string",
-    )
-    got = {r["doc_id"]: r["payload"] for r in lww_dedup_fetch(df).collect()}
-    want = {r["doc_id"]: r["payload"] for r in lww_dedup(df).collect()}
-    assert got == want == {"a": "y", "b": "z"}
-
-
 def test_connected_components_rejects_zero_rounds(spark):
     from etl_spark.operators.components import connected_components
 
@@ -299,30 +277,6 @@ def test_connected_components_raises_when_unconverged(spark):
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(vertices, edges, max_rounds=2)
-
-
-def test_merge_dedup_strategies_agree(spark, tmp_path):
-    """merge_batch with the narrow winner-fetch dedup (payload never rides
-    the winner shuffle) must land the identical final state as the default
-    max_by aggregate, including tombstones and out-of-order events."""
-    from etl_spark.datagen import BinlogSpec, generate_binlog
-
-    feed = generate_binlog(spark, BinlogSpec(n_events=3000, n_keys=250, seed=11)).drop(
-        "lsn_bucket", "delivery_pos"
-    )
-    states = {}
-    for strat in ("agg", "fetch"):
-        from etl_spark.schema import TARGET_SCHEMA
-
-        table = LakeTable.create_if_absent(spark, str(tmp_path / strat), TARGET_SCHEMA)
-        cut = 1500
-        merge_batch(table, feed.where(F.col("commit_lsn") <= cut), epoch=0, dedup_strategy=strat)
-        merge_batch(table, feed.where(F.col("commit_lsn") > cut), epoch=1, dedup_strategy=strat)
-        states[strat] = {
-            r["doc_id"]: (tuple(r["tokens"] or []), r["n_tok"], r["source"])
-            for r in table.read().collect()
-        }
-    assert states["agg"] == states["fetch"] and states["agg"]
 
 
 # ---------------------------------------------------- multi-table ANN LSH
