@@ -76,62 +76,24 @@ def replay_binlog(spark, binlog_dir: str, epochs: int, n_events: int) -> dict:
 
 
 def run_mor_ab(spark, table_events: int = 500_000, micro_epochs: int = 8, micro_events: int = 5_000) -> dict:
-    """Scaled-down CoW-vs-MoR microbatch A/B for the per-round record (the
-    full protocol lives in tools/bench_mor.py): one bulk-seeded table per
-    arm, interleaved micro epochs, identical final states asserted."""
-    import pyspark.sql.functions as F  # noqa: F401
+    """Scaled-down CoW-vs-MoR microbatch A/B for the per-round record,
+    through the A/B of tools/bench_mor.py (the full protocol)."""
+    from tools.bench_mor import run_ab
 
-    from etl_spark.datagen import BinlogSpec, generate_binlog
-    from etl_spark.operators.merge import merge_batch
-    from etl_spark.schema import TARGET_SCHEMA
-    from etl_spark.table import LakeTable
-
-    root = tempfile.mkdtemp(prefix="bench_mor_ab_")
-    n_keys = max(1000, table_events // 4)
-    try:
-        bulk_dir = os.path.join(root, "bulk")
-        generate_binlog(spark, BinlogSpec(n_events=table_events, n_keys=n_keys, seed=7)).drop(
-            "delivery_pos", "lsn_bucket"
-        ).write.mode("overwrite").parquet(bulk_dir)
-        micro_dirs = []
-        for e in range(micro_epochs):
-            d = os.path.join(root, f"m{e}")
-            generate_binlog(
-                spark,
-                BinlogSpec(n_events=micro_events, n_keys=n_keys, seed=100 + e, lsn_offset=table_events * (e + 1)),
-            ).drop("delivery_pos", "lsn_bucket").write.mode("overwrite").parquet(d)
-            micro_dirs.append(d)
-        walls = {}
-        tables = {}
-        for arm in ("cow", "mor"):
-            t = LakeTable.create_if_absent(spark, os.path.join(root, f"t_{arm}"), TARGET_SCHEMA)
-            merge_batch(t, spark.read.parquet(bulk_dir), epoch=0)
-            tables[arm] = t
-            walls[arm] = 0.0
-        for e, d in enumerate(micro_dirs):
-            for arm in ("cow", "mor"):
-                batch = spark.read.parquet(d)
-                t0 = time.time()
-                merge_batch(tables[arm], batch, epoch=e + 1, merge_mode=arm)
-                walls[arm] += time.time() - t0
-        a = tables["cow"].read().select("doc_id", "tokens", "n_tok", "source")
-        b = tables["mor"].read().select("doc_id", "tokens", "n_tok", "source")
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-        return {
-            # NOT the official protocol number: this inline A/B runs 8x5k
-            # micro epochs against a 500k-row table; the official measurement
-            # is tools/bench_mor.py (16x5k against 2M rows, interleaved arms)
-            "protocol": "small-inline",
-            "official_protocol": "tools/bench_mor.py 16x5k vs 2M rows",
-            "table_events": table_events,
-            "micro_epochs": micro_epochs,
-            "micro_events": micro_events,
-            "cow_wall_sec": round(walls["cow"], 2),
-            "mor_wall_sec": round(walls["mor"], 2),
-            "mor_speedup": round(walls["cow"] / max(walls["mor"], 1e-9), 2),
-        }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    ab = run_ab(spark, table_events, micro_epochs, micro_events)
+    return {
+        # NOT the official protocol number: this inline A/B runs 8x5k
+        # micro epochs against a 500k-row table; the official measurement
+        # is tools/bench_mor.py (16x5k against 2M rows, interleaved arms)
+        "protocol": "small-inline",
+        "official_protocol": "tools/bench_mor.py 16x5k vs 2M rows",
+        "table_events": table_events,
+        "micro_epochs": micro_epochs,
+        "micro_events": micro_events,
+        "cow_wall_sec": ab["cow_wall_sec"],
+        "mor_wall_sec": ab["mor_wall_sec"],
+        "mor_speedup": ab["speedup_excl_compact"],
+    }
 
 
 def run_replay_bench(spark, n_events: int, n_keys: int, epochs: int) -> dict:

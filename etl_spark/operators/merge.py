@@ -23,9 +23,10 @@ SURVEY.md §4.2):
    ``(_commit_lsn, _op_seq)`` — stale/out-of-order events become no-ops.
    Winning deletes become persisted tombstone rows (see table.py docstring on
    why tombstones must be kept for cross-batch ordering).
-4. **Apply** — ``repartitionByRange(n, doc_id)`` + ``sortWithinPartitions``
-   -> Parquet; per-file stats (collected by a distributed column-pruned scan
-   of the written files) feed the next merge's planning.
+4. **Apply** — the table's stage writer (``LakeTable.write_stage``):
+   range- or bucket-partition, ``sortWithinPartitions`` -> Parquet; the
+   per-file stats it observes in the write job itself (rows, min/max,
+   bucket sets) become the manifest entries the next merge plans against.
 5. **Commit** — single atomic snapshot swap carrying fence records
    ``(checkpoint_epoch, partition_id)`` and per-partition lineage (lsn ranges,
    rows upserted/deleted). A replayed epoch is detected via the fence ledger
@@ -42,12 +43,10 @@ see operators/dedup.py).
 
 from __future__ import annotations
 
-import os
-import re
+import contextlib
 import shutil
 import threading
 import time
-import urllib.parse
 from collections import OrderedDict
 from dataclasses import dataclass
 
@@ -58,7 +57,7 @@ from pyspark.sql.types import StructType
 from etl_spark.operators.dedup import lww_dedup, lww_dedup_salted
 from etl_spark.schema import HIDDEN_LSN, HIDDEN_SEQ, relax_nullability
 from etl_spark.session import expr_cache_get
-from etl_spark.table.table import HIDDEN_DELETED, LakeTable, TableCommitError
+from etl_spark.table.table import HIDDEN_DELETED, LakeTable, TableCommitError, bucket_col
 
 
 # Microbatch fast path: when the deduped batch fits under this many keys, the
@@ -280,7 +279,7 @@ def merge_batch(
 # py4j round trips, most of a microbatch's driver time (Evolution of a
 # Compiling Query Engine, VLDB 2021: plan construction, not data, dominates
 # short queries). Only the batch-dependent parts — the IN-list and key
-# envelope, the touched-file list, the Observation name — are built per
+# envelope, the touched-file list, the Observations — are built per
 # epoch. Every resolve projection emits its columns in WRITE order — key,
 # payload, hidden LWW columns, then the lineage-metric columns the write
 # drops — so the write chain needs no re-projection.
@@ -291,25 +290,25 @@ _RESOLVE_FRAGMENTS_CACHE: OrderedDict = OrderedDict()
 
 def _layout_fragments(n_buckets: int) -> dict:
     """Layout-dependent fragments (``n_buckets`` 0 = range layout): the
-    keys-probe projection and aggregate, the bucket expression and the
-    bulk-planning join conditions."""
+    keys-probe projection and aggregate, and the bulk-planning join's batch
+    column, hit predicate and file-stats schema."""
 
     def _build() -> dict:
         doc_id = F.col("doc_id")
-        frags = {
-            "probe_agg": F.collect_list("kb").alias("ks"),
-            "range_hit": (doc_id >= F.col("min_key")) & (doc_id <= F.col("max_key")),
-        }
+        frags = {"probe_agg": F.collect_list("kb").alias("ks")}
         if not n_buckets:
             frags["probe"] = doc_id.alias("kb")
+            frags["plan_key"] = doc_id
+            frags["plan_hit"] = (doc_id >= F.col("min_key")) & (doc_id <= F.col("max_key"))
+            frags["plan_schema"] = "path string, min_key string, max_key string"
             return frags
-        bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+        bucket = bucket_col(n_buckets).alias("_bkt")
         # bucket layout ships (key, bucket) pairs: the bucket id is a JVM
         # xxhash64 the driver cannot recompute
-        frags["probe"] = F.struct(doc_id, bucket.alias("_bkt")).alias("kb")
-        frags["bucket"] = bucket
-        frags["bucket_as_bkt"] = bucket.alias("_bkt")
-        frags["bucket_hit"] = F.col("_bkt") == F.col("bucket")
+        frags["probe"] = F.struct(doc_id, bucket).alias("kb")
+        frags["plan_key"] = bucket
+        frags["plan_hit"] = F.col("_bkt") == F.col("bucket")
+        frags["plan_schema"] = "path string, bucket int"
         return frags
 
     return expr_cache_get(_LAYOUT_FRAGMENTS_CACHE, (n_buckets,), _build)
@@ -467,8 +466,6 @@ def _merge_attempt(
         )
     key_rows = probe[0]["ks"] if probe else []
     batch_keys: list[str] | None = None
-    batch_buckets: set[int] | None = None
-    key_bucket: dict[str, int] | None = None
     if len(key_rows) <= FAST_PATH_MAX_KEYS:
         import bisect
 
@@ -494,76 +491,51 @@ def _merge_attempt(
             batch_keys = sorted(key_rows)
             _range_touch(plannable, batch_keys)
         n_changes = len(batch_keys)
-    elif is_bucket:
-        # mid-migration stale files count as touched under BULK planning: a
-        # >FAST_PATH_MAX_KEYS batch of hash-scattered keys intersects a
-        # wide-range file with near certainty, so an exact range join would
-        # almost never prune one — and touching them progresses the
-        # migration (the CoW rewrite emits them in the current layout)
-        touched_paths |= {f["path"] for f in range_plannable}
+    else:
+        # bulk planning: the batch keys join the plannable files' stats
+        # (key ranges, or exact (path, bucket) pairs on bucket tables),
+        # broadcast
+        if is_bucket:
+            # mid-migration stale files count as touched: a
+            # >FAST_PATH_MAX_KEYS batch of hash-scattered keys intersects a
+            # wide-range file with near certainty, so an exact range join
+            # would almost never prune one — and touching them progresses
+            # the migration (the CoW rewrite emits them in the current layout)
+            touched_paths |= {f["path"] for f in range_plannable}
         if plannable:
             from pyspark.sql import Observation
 
-            # bulk planning, bucket layout: exact bucket-membership join —
-            # (path, bucket) pairs broadcast, equality join (no range condition)
             stats_df = spark.createDataFrame(
-                [(f["path"], b) for f in plannable for b in f["buckets"]],
-                "path string, bucket int",
+                [(f["path"], b) for f in plannable for b in f["buckets"]]
+                if is_bucket
+                else [(f["path"], f["min_key"], f["max_key"]) for f in plannable],
+                lf["plan_schema"],
             )
+            # the batch-size signal for the resolve-strategy choice rides the
+            # planning job as an Observation — no extra action (a dedup.count()
+            # here would recompute the whole dedup before the cache exists)
             obs_plan = Observation(f"plan-epoch-{epoch}")
+            # LEFT outer, not inner: when a batch touches NO file (all-new
+            # keys) an inner join's output is empty and AQE re-plans the
+            # query as an empty relation, dropping the CollectMetrics
+            # accumulators. The null-path rows keep the output as large as
+            # the batch — never empty here, since a bulk batch holds more
+            # than FAST_PATH_MAX_KEYS keys — so the metrics always survive.
             hits = (
                 dedup.observe(obs_plan, F.count(F.lit(1)).alias("n"))
-                .select(lf["bucket_as_bkt"])
-                .join(F.broadcast(stats_df), lf["bucket_hit"], "left_outer")
+                .select(lf["plan_key"])
+                .join(F.broadcast(stats_df), lf["plan_hit"], "left_outer")
                 .select("path")
                 .distinct()
                 .collect()
             )
             touched_paths |= {r["path"] for r in hits if r["path"] is not None}
-            try:
-                n_changes = obs_plan.get["n"]
-            except Exception:
-                n_changes = dedup.count()
-        else:
-            n_changes = dedup.count()
-    elif plannable:
-        from pyspark.sql import Observation
-
-        stats_df = spark.createDataFrame(
-            [(f["path"], f["min_key"], f["max_key"]) for f in plannable],
-            "path string, min_key string, max_key string",
-        )
-        # the batch-size signal for the resolve-strategy choice rides the
-        # planning job as an Observation — no extra action (a dedup.count()
-        # here would recompute the whole dedup before the cache exists)
-        obs_plan = Observation(f"plan-epoch-{epoch}")
-        # LEFT outer, not inner: when a batch touches NO file (all-new keys)
-        # an inner join's output is empty and AQE re-plans the query as an
-        # empty relation, dropping the CollectMetrics accumulators — the
-        # observation then raises on .get (observed empirically; latent in
-        # round 2, where every test batch happened to intersect a file).
-        # The null-path row keeps the output non-empty whenever the batch
-        # is, so the metrics always survive.
-        hits = (
-            dedup.observe(obs_plan, F.count(F.lit(1)).alias("n"))
-            .select("doc_id")
-            .join(F.broadcast(stats_df), lf["range_hit"], "left_outer")
-            .select("path")
-            .distinct()
-            .collect()
-        )
-        touched_paths |= {r["path"] for r in hits if r["path"] is not None}
-        try:
             n_changes = obs_plan.get["n"]
-        except Exception:
-            # an EMPTY batch still yields an empty plan output; the count
-            # reuses the dedup cache the planning job just materialized
+        else:
+            # no plannable files: initial load, or stale / stats-less entries
+            # only (already all touched). One count sizes the write; it reads
+            # from the cache the probe job just materialized.
             n_changes = dedup.count()
-    else:
-        # bulk batch with no plannable files: initial load, or stats-less
-        # entries only (already all touched). One count sizes the write; it
-        # reads from the cache the probe job just materialized.
-        n_changes = dedup.count()
     _t = _lap(phases, "plan", _t)
 
     if n_changes == 0:
@@ -689,7 +661,11 @@ def _merge_attempt(
         # actually contains — the touched slice plus the batch — NOT the
         # whole table's row count.
         est_rows = touched_rows + n_changes
-        if batch_keys is not None:
+        if is_bucket:
+            # one output partition per bucket: a plain hash exchange, no
+            # boundary sampler
+            n_files = n_buckets
+        elif batch_keys is not None:
             n_files = max(1, min(par, est_rows // 100_000), (est_rows // target_rows_per_file) + 1)
         else:
             n_files = max(par, (est_rows // target_rows_per_file) + 1)
@@ -709,78 +685,37 @@ def _merge_attempt(
     stage: str | None = None
     committed = False
     try:
-        # ---- lineage metrics ride the apply pass itself (CollectMetrics /
-        # Observation): no separate aggregation job scans the resolved
-        # relation. Per-lineage-partition min/max/sums are expressed as
-        # conditional aggregates over a stable key hash.
-        from pyspark.sql import Observation
-
-        obs = Observation(f"merge-epoch-{epoch}-{head0}")
-
-        # ---- apply: range-partition on the merge key, write, collect stats
+        # ---- apply: the table's stage writer partitions, sorts and writes
+        # the rows and returns their manifest entries from the write job's
+        # own per-file stats. The lineage metrics ride the same Observation
+        # (per-lineage-partition min/max/sums as conditional aggregates over
+        # a stable key hash), so no separate job scans the resolved
+        # relation. MoR winners on a bucket table are sized by the batch
+        # like any winners file (a spread microbatch hashes into every
+        # bucket, so n_buckets partitions would fan one batch-sized write
+        # into n_buckets tiny files per epoch, measured 2.5x the epoch
+        # wall); their entries still carry bucket SETS, so bucket pruning
+        # and the bucket-local compaction closure stay exact.
         sid_next = head0 + 1
         stage = table.stage_dir(sid_next)
-        # manifest stats ride the SAME Observation as the lineage metrics:
-        # after the range exchange, output partition i becomes file
-        # part-{i:05d}, so per-partition (count, min, max) of doc_id ARE the
-        # per-file manifest entries — the write tasks ship the stats back,
-        # Iceberg-style, and the written data is never rescanned. Guarded to
-        # a bounded file count (conditional-aggregate width grows with
-        # n_files); beyond it the one distributed stats scan is the fallback.
-        # MoR winners on a bucket table are NOT bucket-partitioned: a
-        # spread microbatch hashes into every bucket, so bucketing the
-        # winners would fan one batch-sized write into n_buckets tiny files
-        # per epoch (measured 2.5x the epoch wall). Winners take the
-        # compact size-driven write; their manifest entries still carry the
-        # bucket SET (from the collected key->bucket pairs, or the stats
-        # scan for bulk forced-MoR), so bucket pruning and the bucket-local
-        # compaction closure stay exact. Compaction then re-buckets them.
-        write_bucketed = is_bucket and not use_mor
-        if write_bucketed:
-            # bucket layout: plain hash exchange on the bucket id — no
-            # boundary sampler, no double evaluation; every row lands in
-            # its key's fixed bucket, per-bucket stats (count/min/max AND
-            # the output partition the bucket landed in) ride the write
-            obs_file_stats = n_buckets <= MAX_OBSERVED_STAT_FILES
-            lp, metrics = _write_metrics(lineage_partitions, "bucket", n_buckets if obs_file_stats else 0)
-            out = (
-                resolved.withColumn("_bucket", lf["bucket"])
-                .repartition(n_buckets, "_bucket")
-                .withColumn("_lp", lp)
-                .observe(obs, *metrics)
-                .drop(*_METRIC_COLS, "_lp", "_bucket")
-            )
-        else:
-            # bulk forced-MoR on a bucket table has no collected key set to
-            # derive bucket tags from — only the stats scan can supply them
-            obs_file_stats = n_files <= MAX_OBSERVED_STAT_FILES and not (
-                is_bucket and key_bucket is None
-            )
-            lp, metrics = _write_metrics(lineage_partitions, "file", n_files if obs_file_stats else 0)
-            out = (
-                resolved.repartitionByRange(n_files, "doc_id")
-                # observe sits ABOVE the range exchange: the boundary-
-                # sampling job only executes the exchange's child, so the
-                # metrics are evaluated exactly once — in the write job (a
-                # CollectMetrics below the exchange would be executed by
-                # both passes and double-count; cdc_lineage_counts oracle)
-                .withColumn("_lp", lp)
-                .observe(obs, *metrics)
-                .drop(*_METRIC_COLS, "_lp")
-            )
-        writer = out.sortWithinPartitions("doc_id").write.mode("overwrite")
+        lp, lineage_metrics = _lineage_metrics(lineage_partitions)
         _t = _lap(phases, "wbuild", _t)
-        if batch_keys is not None and (use_mor or is_bucket or n_files == 1):
-            # microbatch fast path: AQE's stage-replan loop costs more than
-            # it could ever save on batch-sized shuffles; with it off the
-            # resolve+write runs as one job (FAST_PATH_MAX_KEYS comment)
-            with _aqe_off(out.sparkSession):
-                writer.parquet(stage)
-        else:
-            writer.parquet(stage)
-        _t = _lap(phases, "write", _t)
-        m = obs.get
-        m.update(m.pop("m").asDict())
+        # microbatch fast path: AQE's stage-replan loop costs more than it
+        # could ever save on batch-sized shuffles; with it off the
+        # resolve+write runs as one job (FAST_PATH_MAX_KEYS comment)
+        fast = batch_keys is not None and (use_mor or is_bucket or n_files == 1)
+        with _aqe_off(resolved.sparkSession) if fast else contextlib.nullcontext():
+            add_files, m = table.write_stage(
+                resolved,
+                stage,
+                n_files,
+                snap,
+                row_cols=(lp,),
+                metrics=(lineage_metrics,),
+                drop=(*_METRIC_COLS, "_lp"),
+                phases=phases,
+            )
+        m = m["m"].asDict()
         lineage = []
         for p in range(lineage_partitions):
             if m[f"lsn_min_{p}"] is None:
@@ -801,26 +736,6 @@ def _merge_attempt(
         ] or [{"checkpoint_epoch": epoch, "partition_id": -1, "committed_at_snapshot": sid_next}]
         rows_upserted = sum(r["rows_upserted"] for r in lineage)
         rows_deleted = sum(r["rows_deleted"] for r in lineage)
-        add_files = None
-        if obs_file_stats and write_bucketed:
-            add_files = _files_from_bucket_observation(m, stage, n_buckets, snap["schema_version"])
-        elif obs_file_stats:
-            add_files = _files_from_observation(m, stage, n_files, snap["schema_version"])
-            if add_files is not None and is_bucket and key_bucket is not None:
-                # MoR winners under bucket layout: tag each (range-written,
-                # min/max-tight) file with the bucket set of the batch keys
-                # inside its range — exact, winners keys ⊆ collected keys
-                import bisect
-
-                for f in add_files:
-                    i = bisect.bisect_left(batch_keys, f["min_key"])
-                    j = bisect.bisect_right(batch_keys, f["max_key"])
-                    f["buckets"] = sorted({key_bucket[k] for k in batch_keys[i:j]})
-        if add_files is None:
-            add_files = _collect_file_stats(
-                table, stage, snap["schema_version"], n_buckets=n_buckets if is_bucket else None
-            )
-        _t = _lap(phases, "stats", _t)
         if use_mor:
             # the winners file doubles as the equality-delete mask: readers
             # drop same-key rows from older files (table.py docstring)
@@ -898,33 +813,25 @@ def _merge_attempt(
         dedup.unpersist()
 
 
-MAX_OBSERVED_STAT_FILES = 256
-
-# The write's Observation — ~70 conditional lineage/file-stat aggregates —
-# costs hundreds of py4j round-trips to build, so it is built once per
-# (lineage_partitions, stats kind, file/bucket count) and reused for every
-# epoch; the builders below run only on a cache miss.
-_WRITE_METRICS_CACHE: OrderedDict = OrderedDict()
+# The lineage Observation — ~65 conditional aggregates — costs hundreds of
+# py4j round-trips to build, so it is built once per lineage_partitions and
+# reused for every epoch.
+_LINEAGE_METRICS_CACHE: OrderedDict = OrderedDict()
 
 
-def _write_metrics(lineage_partitions: int, kind: str, n: int) -> tuple:
-    """The write's Observation inputs: the per-row lineage partition ``_lp``
-    (the key hash computed ONCE per row, so the lineage aggregates compare
-    an int column instead of each re-hashing the key — cheaper to analyze,
-    plan and run) and the metrics: the lineage aggregates as ONE struct
-    column ``m``, plus per-file (``kind="file"``) or per-bucket
-    (``"bucket"``) stats for ``n`` files/buckets (0: none). A struct
-    crosses py4j as one handle where ~65 separate aggregates cost a round
-    trip each, every epoch; the stats stay top-level because they read the
-    non-deterministic ``spark_partition_id()``, which observed metrics only
-    allow directly under an aggregate."""
+def _lineage_metrics(lineage_partitions: int) -> tuple:
+    """The write's lineage inputs: the per-row lineage partition ``_lp``
+    (the key hash computed ONCE per row, so the aggregates compare an int
+    column instead of each re-hashing the key — cheaper to analyze, plan
+    and run) and the lineage aggregates as ONE struct column ``m``: a
+    struct crosses py4j as one handle where ~65 separate aggregates cost a
+    round trip each, every epoch."""
 
     def _build():
-        lp = F.pmod(F.xxhash64("doc_id"), F.lit(lineage_partitions)).cast("int")
-        stats = _file_stat_exprs(n) if kind == "file" else _bucket_stat_exprs(n)
-        return lp, [F.struct(*_lineage_metric_exprs(lineage_partitions)).alias("m"), *stats]
+        lp = F.pmod(F.xxhash64("doc_id"), F.lit(lineage_partitions)).cast("int").alias("_lp")
+        return lp, F.struct(*_lineage_metric_exprs(lineage_partitions)).alias("m")
 
-    return expr_cache_get(_WRITE_METRICS_CACHE, (lineage_partitions, kind, n), _build)
+    return expr_cache_get(_LINEAGE_METRICS_CACHE, (lineage_partitions,), _build)
 
 
 def _lineage_metric_exprs(lineage_partitions: int) -> list:
@@ -942,187 +849,3 @@ def _lineage_metric_exprs(lineage_partitions: int) -> list:
             ).alias(f"del_{p}"),
         ]
     return exprs
-
-
-def _file_stat_exprs(n_files: int) -> list:
-    pid = F.spark_partition_id()
-    exprs = []
-    for i in range(n_files):
-        exprs += [
-            F.min(F.when(pid == i, F.col("doc_id"))).alias(f"fmin_{i}"),
-            F.max(F.when(pid == i, F.col("doc_id"))).alias(f"fmax_{i}"),
-            F.sum(F.when(pid == i, 1).otherwise(0)).alias(f"fcnt_{i}"),
-        ]
-    return exprs
-
-
-def _bucket_stat_exprs(n_buckets: int) -> list:
-    """Per-BUCKET write stats: count/min/max of doc_id plus the output
-    partition the bucket landed in (a bucket's rows all share one partition
-    of the hash exchange, so max(pid) IS that partition — and partition p
-    becomes file part-{p:05d})."""
-    pid = F.spark_partition_id()
-    exprs = []
-    for b in range(n_buckets):
-        inb = F.col("_bucket") == b
-        exprs += [
-            F.min(F.when(inb, F.col("doc_id"))).alias(f"bmin_{b}"),
-            F.max(F.when(inb, F.col("doc_id"))).alias(f"bmax_{b}"),
-            F.sum(F.when(inb, 1).otherwise(0)).alias(f"bcnt_{b}"),
-            F.max(F.when(inb, pid)).alias(f"bpart_{b}"),
-        ]
-    return exprs
-
-
-def _files_from_bucket_observation(
-    metrics: dict, stage: str, n_buckets: int, schema_version: int
-) -> list[dict] | None:
-    """Manifest entries for a bucket-layout write from the write job's own
-    per-bucket metrics: buckets are grouped by the output partition they
-    landed in (hash collisions may co-locate several buckets in one file);
-    each partition p with rows maps to file part-{p:05d}. Returns None if
-    the on-disk files don't reconcile (caller falls back to the scan)."""
-    by_index: dict[int, str] = {}
-    for fn in os.listdir(stage):
-        mm = _PART_RE.match(fn)
-        if mm:
-            idx = int(mm.group(1))
-            if idx in by_index:
-                return None  # index->file bijection broken (maxRecordsPerFile)
-            by_index[idx] = fn
-    part_buckets: dict[int, list[int]] = {}
-    for b in range(n_buckets):
-        if metrics.get(f"bcnt_{b}"):
-            p = metrics[f"bpart_{b}"]
-            part_buckets.setdefault(p, []).append(b)
-    add_files = []
-    for p, bs in sorted(part_buckets.items()):
-        fn = by_index.pop(p, None)
-        if fn is None:
-            return None  # rows observed but no file — reconcile via scan
-        add_files.append(
-            {
-                "path": os.path.abspath(os.path.join(stage, fn)),
-                "rows": sum(metrics[f"bcnt_{b}"] for b in bs),
-                "min_key": min(metrics[f"bmin_{b}"] for b in bs),
-                "max_key": max(metrics[f"bmax_{b}"] for b in bs),
-                "buckets": bs,
-                "schema_version": schema_version,
-            }
-        )
-    for idx, fn in by_index.items():
-        # empty partition: Spark normally writes no file; remove schema-only
-        # stragglers — but NEVER a file that holds rows the metrics missed
-        # (that would silently commit data away; reconcile via scan instead)
-        import pyarrow.parquet as pq
-
-        full = os.path.join(stage, fn)
-        if pq.read_metadata(full).num_rows != 0:
-            return None
-        os.remove(full)
-    return add_files
-
-
-_PART_RE = re.compile(r"^part-(\d{5})-.*\.parquet$")
-
-
-def _files_from_observation(
-    metrics: dict, stage: str, n_files: int, schema_version: int
-) -> list[dict] | None:
-    """Build manifest entries from the write job's own per-partition metrics
-    (partition i -> file part-{i:05d}) — zero extra jobs. Returns None if
-    the on-disk files don't reconcile with the metrics (e.g. an unexpected
-    writer layout), in which case the caller falls back to the scan."""
-    by_index: dict[int, str] = {}
-    for fn in os.listdir(stage):
-        mm = _PART_RE.match(fn)
-        if mm:
-            idx = int(mm.group(1))
-            if idx in by_index:
-                # a write task emitted >1 file for one partition (e.g. the
-                # user session sets spark.sql.files.maxRecordsPerFile ->
-                # part-00000-...-c000 AND -c001). The index->file bijection
-                # the metrics rely on is broken; silently keeping either
-                # file would commit the other's rows away. Reconcile via
-                # the distributed scan instead.
-                return None
-            by_index[idx] = fn
-    add_files = []
-    for i in range(n_files):
-        cnt = metrics.get(f"fcnt_{i}")
-        fn = by_index.pop(i, None)
-        if not cnt:
-            # empty partition: Spark writes no file (the rare all-empty
-            # write creates one schema-only file — remove it as untracked)
-            if fn is not None:
-                os.remove(os.path.join(stage, fn))
-            continue
-        if fn is None:
-            return None  # rows observed but no file — reconcile via scan
-        add_files.append(
-            {
-                "path": os.path.abspath(os.path.join(stage, fn)),
-                "rows": cnt,
-                "min_key": metrics[f"fmin_{i}"],
-                "max_key": metrics[f"fmax_{i}"],
-                "schema_version": schema_version,
-            }
-        )
-    if by_index:
-        return None  # files beyond the expected partition range
-    return add_files
-
-
-def _collect_file_stats(
-    table: LakeTable, stage: str, schema_version: int, n_buckets: int | None = None
-) -> list[dict]:
-    """Per-file (rows, min/max doc_id) for every file the apply wrote — the
-    manifest entries that drive the next merge's copy-on-write pruning.
-
-    FALLBACK path (the primary is ``_files_from_observation``: stats ride
-    the write job's CollectMetrics, zero extra jobs): ONE distributed
-    column-pruned Spark scan of the written files grouped by
-    ``input_file_name`` — still never a driver-side footer loop, which was
-    the round-1 per-epoch serial fraction. Files are tagged with the
-    schema_version they were written under so rename-aware reads can
-    resolve their column names by field id."""
-    aggs = [
-        F.count(F.lit(1)).alias("rows"),
-        F.min("doc_id").alias("min_key"),
-        F.max("doc_id").alias("max_key"),
-    ]
-    if n_buckets is not None:
-        aggs.append(
-            F.sort_array(
-                F.collect_set(F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
-            ).alias("buckets")
-        )
-    rows = (
-        table.spark.read.parquet(stage)
-        .groupBy(F.input_file_name().alias("uri"))
-        .agg(*aggs)
-        .collect()
-    )
-    add_files = []
-    for r in rows:
-        path = urllib.parse.unquote(urllib.parse.urlparse(r["uri"]).path)
-        entry = {
-            "path": path,
-            "rows": r["rows"],
-            "min_key": r["min_key"],
-            "max_key": r["max_key"],
-            "schema_version": schema_version,
-        }
-        if n_buckets is not None:
-            entry["buckets"] = list(r["buckets"])
-        add_files.append(entry)
-    add_files.sort(key=lambda d: d["path"])
-    # a partition that received no rows writes no file; any zero-row parquet
-    # Spark still creates (the all-empty-write case) is untracked — remove it
-    # so the staging dir never accumulates orphans
-    tracked = {f["path"] for f in add_files}
-    for fn in os.listdir(stage):
-        full = os.path.abspath(os.path.join(stage, fn))
-        if fn.endswith(".parquet") and full not in tracked:
-            os.remove(full)
-    return add_files

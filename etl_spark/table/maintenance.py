@@ -32,10 +32,11 @@ filter/join work.
 Both run as ordinary snapshot commits, so time travel to the pre-maintenance
 snapshot still works until ``expire_snapshots``.
 
-Manifest stats for rewritten files come from ONE distributed column-pruned
-scan (`operators/merge._collect_file_stats`) — never a driver-side
-per-file footer loop (the round-1 per-epoch serial fraction; round-2 kept
-it here, flagged by the round-2 verdict as the last such loop).
+Rewrites write through the table's stage writer (``LakeTable.write_stage``),
+the same one the merge uses: the manifest entries of the rewritten files
+ride the write job's own stats, and the output is sized from the input
+entries' manifest row counts, so a rewrite runs no count and no re-scan of
+what it wrote.
 """
 
 from __future__ import annotations
@@ -52,73 +53,48 @@ from etl_spark.table.table import HIDDEN_DELETED, LakeTable, TableCommitError
 def _rewrite(
     table: LakeTable,
     df,
-    remove_paths: set[str],
+    entries: list[dict],
     target_rows_per_file: int,
     summary: dict,
     mor_flag: bool = False,
     expect_parent: int | None = None,
 ) -> int:
-    """Stage + commit a maintenance rewrite, pinned to the snapshot it
-    planned against: without ``expect_parent``, a MERGE landing between the
-    planning read and this commit would have its output silently undone —
-    the rewrite re-adds rows it copied from files the merge just replaced
-    (the classic compaction-vs-writer conflict Iceberg validates against).
-    On conflict the staged files are removed and TableCommitError surfaces;
-    maintenance is re-runnable, so callers simply retry against the new
-    head. Any other failure after staging also cleans its debris (gc_orphans
-    covers only hard crashes)."""
-    import shutil as _shutil
-
-    import pyspark.sql.functions as F
-
-    from etl_spark.operators.merge import _collect_file_stats
-
-    spark = table.spark
-    n_rows = df.count()
-    sid_next = table.head_id() + 1
-    stage = table.stage_dir(sid_next)
+    """Stage + commit a maintenance rewrite of the file ``entries`` (read as
+    ``df``), pinned to the snapshot it planned against: without
+    ``expect_parent``, a MERGE landing between the planning read and this
+    commit would have its output silently undone — the rewrite re-adds rows
+    it copied from files the merge just replaced (the classic
+    compaction-vs-writer conflict Iceberg validates against). On conflict
+    the staged files are removed and TableCommitError surfaces; maintenance
+    is re-runnable, so callers simply retry against the new head. Any other
+    failure after staging also cleans its debris (gc_orphans covers only
+    hard crashes)."""
+    snap = table.snapshot(expect_parent)
+    layout = snap.get("layout") or {"type": "range"}
+    # output files: ~target_rows_per_file rows each, sized from the inputs'
+    # manifest row counts — an upper bound on the rows written (masked and
+    # expired rows drop out), known without running a job. Capped at the
+    # cluster parallelism, or on bucket tables at the bucket count: bucket
+    # ids hash into the n_out partitions, so every bucket stays wholly
+    # inside one file (files carry bucket SETS, so membership pruning stays
+    # exact) while a small rewrite — one staged-migration stage, a two-file
+    # compaction — emits a few files instead of n_buckets near-empty ones.
+    if layout.get("type") == "bucket":
+        cap = int(layout["n_buckets"])
+    else:
+        cap = table.spark.sparkContext.defaultParallelism
+    n_rows = sum(f["rows"] for f in entries)
+    n_out = max(1, min(cap, (n_rows // target_rows_per_file) + 1))
+    stage = table.stage_dir(table.head_id() + 1)
     committed = False
-    layout = table.layout(expect_parent)
     try:
-        if layout.get("type") == "bucket":
-            # preserve the table's bucket layout: rewrite through the same
-            # hash exchange the merge apply uses (no sampler, rows stay in
-            # their key's fixed bucket). Output FILE count is sized by the
-            # data, not the bucket count: hashing bucket ids into n_out
-            # partitions keeps every bucket wholly inside one file (files
-            # carry bucket SETS in the manifest, so membership pruning stays
-            # exact) while a small rewrite — one staged-migration stage, a
-            # two-file compaction — emits a few files instead of n_buckets
-            # near-empty ones (a 1000-file -> bucket(64) staged migration
-            # would otherwise multiply file count ~8x, review finding r5).
-            n_buckets = int(layout["n_buckets"])
-            n_out = max(1, min(n_buckets, (n_rows // target_rows_per_file) + 1))
-            (
-                df.withColumn("_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
-                .repartition(n_out, "_bucket")
-                .drop("_bucket")
-                .sortWithinPartitions("doc_id")
-                .write.mode("overwrite")
-                .parquet(stage)
-            )
-            add_files = _collect_file_stats(
-                table, stage, table.snapshot(expect_parent)["schema_version"], n_buckets=n_buckets
-            )
-        else:
-            n_files = max(1, min(spark.sparkContext.defaultParallelism, (n_rows // target_rows_per_file) + 1))
-            (
-                df.repartitionByRange(n_files, "doc_id")
-                .sortWithinPartitions("doc_id")
-                .write.mode("overwrite")
-                .parquet(stage)
-            )
-            add_files = _collect_file_stats(table, stage, table.snapshot(expect_parent)["schema_version"])
+        add_files, _ = table.write_stage(df, stage, n_out, snap)
         if mor_flag:
             for f in add_files:
                 f["mor"] = True
         sid = table.commit(
             add_files=add_files,
-            remove_paths=remove_paths,
+            remove_paths={f["path"] for f in entries},
             summary=summary,
             expect_parent=expect_parent,
         )
@@ -126,7 +102,7 @@ def _rewrite(
         return sid
     finally:
         if not committed:
-            _shutil.rmtree(stage, ignore_errors=True)
+            shutil.rmtree(stage, ignore_errors=True)
 
 
 def compact(table: LakeTable, small_file_rows: int = 100_000, target_rows_per_file: int = 1_000_000) -> int | None:
@@ -140,7 +116,6 @@ def compact(table: LakeTable, small_file_rows: int = 100_000, target_rows_per_fi
     small = [f for f in snap["files"] if f["rows"] < small_file_rows]
     if len(small) < 2:
         return None
-    paths = {f["path"] for f in small}
     df = table.load_files(small, snap)
     # the output must keep masking older copies of its keys unless this
     # compaction covered EVERY live file (then no older copy survives)
@@ -149,7 +124,7 @@ def compact(table: LakeTable, small_file_rows: int = 100_000, target_rows_per_fi
     return _rewrite(
         table,
         df,
-        remove_paths=paths,
+        entries=small,
         target_rows_per_file=target_rows_per_file,
         summary={"maintenance": "compact", "files_in": len(small)},
         mor_flag=mor_flag,
@@ -203,7 +178,7 @@ def compact_mor(table: LakeTable, target_rows_per_file: int = 1_000_000) -> int 
     return _rewrite(
         table,
         df,
-        remove_paths=touched,
+        entries=entries,
         target_rows_per_file=target_rows_per_file,
         summary={"maintenance": "compact_mor", "files_in": len(entries)},
         mor_flag=False,
@@ -241,7 +216,7 @@ def rewrite_table(table: LakeTable, target_rows_per_file: int = 1_000_000) -> in
     return _rewrite(
         table,
         df,
-        remove_paths={f["path"] for f in snap["files"]},
+        entries=snap["files"],
         target_rows_per_file=target_rows_per_file,
         summary={"maintenance": "rewrite_table", "files_in": len(snap["files"])},
         mor_flag=False,
@@ -349,7 +324,7 @@ def migrate_layout_staged(
             sid = _rewrite(
                 table,
                 table.load_files(picked, snap),
-                remove_paths={f["path"] for f in picked},
+                entries=picked,
                 target_rows_per_file=target_rows_per_file,
                 summary={
                     "maintenance": "migrate_layout_staged",
@@ -474,7 +449,7 @@ def expire_tombstones(table: LakeTable, low_watermark_lsn: int, target_rows_per_
     return _rewrite(
         table,
         df,
-        remove_paths=touched,
+        entries=touched_entries,
         target_rows_per_file=target_rows_per_file,
         summary={"maintenance": "expire_tombstones", "low_watermark": low_watermark_lsn},
         mor_flag=mor_flag,

@@ -20,8 +20,11 @@ Layout::
     <root>/metadata/HEAD                        # atomic pointer to latest n
 
 Commit record: parent pointer, schema + schema_version, live file list with
-per-file stats (rows, min/max doc_id), fence records added this commit
-(``(checkpoint_epoch, partition_id)``), lineage records, summary counters.
+per-file stats (rows, min/max doc_id, bucket set on bucket tables — observed
+by ``LakeTable.write_stage`` in the job that writes the files, the one
+writer every merge and maintenance commit uses), fence records added this
+commit (``(checkpoint_epoch, partition_id)``), lineage records, summary
+counters.
 
 Atomicity & concurrency: the commit-file CREATE is the CAS — temp-write +
 fsync + ``os.link`` (create-exclusive), so exactly one writer claims each
@@ -60,14 +63,17 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
+import time
+import urllib.parse
 import uuid
 from collections import OrderedDict
-from typing import Any
 
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql.types import StructType
 
 from etl_spark.schema import HIDDEN_LSN, HIDDEN_SEQ, can_widen, relax_nullability
@@ -140,31 +146,137 @@ def _atomic_write_text(path: str, text: str) -> None:
     os.rename(tmp, path)
 
 
-def file_stats(path: str, key: str = "doc_id") -> dict[str, Any]:
-    """Per-file stats from the Parquet footer (no data read) — the analog of
-    Iceberg's manifest-entry column bounds used for merge planning. Driver-side
-    here; at cluster scale this runs in the write tasks and ships back with
-    the task result."""
-    md = pq.read_metadata(path)
-    rows = md.num_rows
-    kmin = kmax = None
-    idx = None
-    for i in range(md.num_columns if hasattr(md, "num_columns") else md.schema.num_columns):
-        if md.schema.column(i).name == key:
-            idx = i
-            break
-    if idx is not None:
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                kmin = kmax = None
-                break
-            mn, mx = st.min, st.max
-            if isinstance(mn, bytes):
-                mn, mx = mn.decode(), mx.decode()
-            kmin = mn if kmin is None else min(kmin, mn)
-            kmax = mx if kmax is None else max(kmax, mx)
-    return {"path": path, "rows": rows, "min_key": kmin, "max_key": kmax}
+# The stage write observes per-file stats for up to this many output
+# partitions (the conditional-aggregate width grows with the count); wider
+# writes take the one distributed stats scan.
+MAX_OBSERVED_STAT_FILES = 256
+
+_PART_RE = re.compile(r"^part-(\d{5})-.*\.parquet$")
+
+# Per-output-partition stat aggregates of the stage write, built once per
+# (output partitions, bucket count) and reused by every write
+_STAGE_STATS_CACHE: OrderedDict = OrderedDict()
+
+
+def bucket_col(n_buckets: int) -> Column:
+    """The bucket layout's hash: a row's bucket id under ``n_buckets``."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+
+
+def _stage_stats(n_out: int, n_buckets: int) -> tuple:
+    """The stage write's per-row partition column ``_pid`` and the bucket
+    column (bucket tables only), plus ONE struct aggregate ``f`` over them
+    (None for ``n_out`` 0): per output partition i, the row count, min/max
+    doc_id and, on bucket tables, the set of bucket ids. The aggregates
+    read the projected ``_pid`` column, not ``spark_partition_id()``
+    itself: an observed ``collect_set`` over the raw expression fails at
+    run time (the nondeterministic expression is never initialized), and
+    only deterministic inputs let one struct carry every aggregate across
+    py4j as a single handle."""
+
+    def _build():
+        pid, doc_id = F.col("_pid"), F.col("doc_id")
+        exprs = []
+        for i in range(n_out):
+            hit = pid == i
+            exprs += [
+                F.sum(F.when(hit, 1).otherwise(0)).alias(f"fcnt_{i}"),
+                F.min(F.when(hit, doc_id)).alias(f"fmin_{i}"),
+                F.max(F.when(hit, doc_id)).alias(f"fmax_{i}"),
+            ]
+            if n_buckets:
+                exprs.append(F.collect_set(F.when(hit, F.col("_bucket"))).alias(f"fbkt_{i}"))
+        bucket = bucket_col(n_buckets) if n_buckets else None
+        return F.spark_partition_id().alias("_pid"), bucket, F.struct(*exprs).alias("f") if exprs else None
+
+    return expr_cache_get(_STAGE_STATS_CACHE, (n_out, n_buckets), _build)
+
+
+def _files_from_stats(
+    stats: dict | None, stage: str, n_out: int, schema_version: int, bucketed: bool
+) -> list[dict] | None:
+    """Manifest entries from the stage write's own per-partition stats:
+    output partition i is file part-{i:05d}, so no written file is read
+    back. Returns None when the files do not reconcile with the stats (the
+    caller then scans them)."""
+    if stats is None:
+        return None
+    by_index: dict[int, str] = {}
+    for fn in os.listdir(stage):
+        mm = _PART_RE.match(fn)
+        if mm:
+            idx = int(mm.group(1))
+            if idx in by_index:
+                # a write task emitted >1 file for one partition (e.g. the
+                # session sets spark.sql.files.maxRecordsPerFile ->
+                # part-00000-...-c000 AND -c001): the index->file bijection
+                # the stats rely on is broken
+                return None
+            by_index[idx] = fn
+    add_files = []
+    for i in range(n_out):
+        if not stats[f"fcnt_{i}"]:
+            continue
+        fn = by_index.pop(i, None)
+        if fn is None:
+            return None  # rows observed but no file
+        entry = {
+            "path": os.path.abspath(os.path.join(stage, fn)),
+            "rows": stats[f"fcnt_{i}"],
+            "min_key": stats[f"fmin_{i}"],
+            "max_key": stats[f"fmax_{i}"],
+            "schema_version": schema_version,
+        }
+        if bucketed:
+            entry["buckets"] = sorted(stats[f"fbkt_{i}"])
+        add_files.append(entry)
+    for fn in by_index.values():
+        # a partition the stats saw empty: Spark writes no file for it,
+        # except the one schema-only file of an all-empty write, which is
+        # removed as untracked — but NEVER a file holding rows the stats
+        # missed (that would silently commit data away)
+        full = os.path.join(stage, fn)
+        if pq.read_metadata(full).num_rows != 0:
+            return None
+        os.remove(full)
+    return add_files
+
+
+def _collect_file_stats(spark: SparkSession, stage: str, schema_version: int, n_buckets: int) -> list[dict]:
+    """Manifest entries for every file in ``stage`` from ONE distributed
+    column-pruned scan grouped by ``input_file_name`` — the fallback of
+    ``LakeTable.write_stage`` when the written files do not reconcile with
+    its stats, and never a driver-side footer loop. Zero-row files are
+    removed as untracked."""
+    if not any(fn.endswith(".parquet") for fn in os.listdir(stage)):
+        return []  # nothing written: no schema to scan
+    aggs = [
+        F.count(F.lit(1)).alias("rows"),
+        F.min("doc_id").alias("min_key"),
+        F.max("doc_id").alias("max_key"),
+    ]
+    if n_buckets:
+        aggs.append(F.sort_array(F.collect_set(bucket_col(n_buckets))).alias("buckets"))
+    rows = spark.read.parquet(stage).groupBy(F.input_file_name().alias("uri")).agg(*aggs).collect()
+    add_files = []
+    for r in rows:
+        entry = {
+            "path": urllib.parse.unquote(urllib.parse.urlparse(r["uri"]).path),
+            "rows": r["rows"],
+            "min_key": r["min_key"],
+            "max_key": r["max_key"],
+            "schema_version": schema_version,
+        }
+        if n_buckets:
+            entry["buckets"] = list(r["buckets"])
+        add_files.append(entry)
+    add_files.sort(key=lambda d: d["path"])
+    tracked = {f["path"] for f in add_files}
+    for fn in os.listdir(stage):
+        full = os.path.abspath(os.path.join(stage, fn))
+        if fn.endswith(".parquet") and full not in tracked:
+            os.remove(full)
+    return add_files
 
 
 class LakeTable:
@@ -751,6 +863,70 @@ class LakeTable:
 
     def stage_dir(self, sid: int) -> str:
         return os.path.join(self.data_dir, f"s{sid:010d}-{uuid.uuid4().hex[:8]}")
+
+    def write_stage(
+        self,
+        df: DataFrame,
+        stage: str,
+        n_out: int,
+        snap: dict,
+        row_cols: tuple = (),
+        metrics: tuple = (),
+        drop: tuple = (),
+        phases: dict | None = None,
+    ) -> tuple[list[dict], dict]:
+        """Write ``df`` into ``stage`` as at most ``n_out`` doc_id-sorted
+        files in ``snap``'s layout and return their manifest entries (rows,
+        min/max doc_id, the bucket set on bucket tables, schema_version)
+        plus the observed metrics.
+
+        Range tables range-partition on doc_id; bucket tables hash-exchange
+        on the bucket id, so every bucket lands wholly inside one file while
+        the file count follows the data. The entries ride the write job
+        itself (Iceberg-style, the written data is never rescanned): a
+        ``_pid`` column projected above the exchange keys per-partition
+        aggregates observed beside the caller's ``metrics`` (aggregates over
+        the per-row ``row_cols`` projected with it; ``drop`` names the
+        columns observed but not written). Only files that do not reconcile
+        with the stats — more than ``MAX_OBSERVED_STAT_FILES`` partitions,
+        ``maxRecordsPerFile`` splits, or no metrics at all because AQE
+        folded an empty output away — take one distributed stats scan.
+        ``phases`` receives the write and stats seconds."""
+        layout = snap.get("layout") or {"type": "range"}
+        n_buckets = int(layout["n_buckets"]) if layout.get("type") == "bucket" else 0
+        pid, bucket, stats = _stage_stats(n_out if n_out <= MAX_OBSERVED_STAT_FILES else 0, n_buckets)
+        if n_buckets:
+            out = df.withColumn("_bucket", bucket).repartition(n_out, "_bucket")
+        else:
+            out = df.repartitionByRange(n_out, "doc_id")
+        # observe sits ABOVE the exchange: a range exchange's boundary-
+        # sampling job executes only the exchange's child, so the metrics
+        # are evaluated exactly once — in the write job (below it, both
+        # passes would run them and double-count)
+        out = out.select("*", *row_cols, pid)
+        exprs = [*metrics, stats] if stats is not None else list(metrics)
+        obs = Observation()
+        if exprs:
+            out = out.observe(obs, *exprs)
+        t0 = time.perf_counter()
+        out.drop("_pid", "_bucket", *drop).sortWithinPartitions("doc_id").write.mode("overwrite").parquet(stage)
+        t1 = time.perf_counter()
+        m: dict = {}
+        if exprs:
+            try:
+                m = obs.get
+            except Py4JJavaError:
+                pass  # AQE replaced an empty output, metrics and all
+        f = m.get("f")
+        add_files = _files_from_stats(
+            f.asDict() if f is not None else None, stage, n_out, snap["schema_version"], bool(n_buckets)
+        )
+        if add_files is None:
+            add_files = _collect_file_stats(self.spark, stage, snap["schema_version"], n_buckets)
+        if phases is not None:
+            phases["write"] = round(t1 - t0, 4)
+            phases["stats"] = round(time.perf_counter() - t1, 4)
+        return add_files, m
 
     def _recover_head(self) -> int:
         """Roll HEAD forward over fully-written commit files left by a

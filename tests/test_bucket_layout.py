@@ -335,3 +335,49 @@ def test_bucket_schema_evolution(spark, tmp_table_dir):
     got = {r["doc_id"]: (r["origin"], r["lang"]) for r in table.read().collect()}
     assert got["d003"] == ("t", "en")
     assert got["d010"] == ("s", None)
+
+
+def test_bucket_stage_entries_match_a_file_scan(spark, tmp_table_dir):
+    """A bulk (> FAST_PATH_MAX_KEYS) forced-MoR merge and a compact_mor on a
+    bucket table take their manifest entries from the write job's own
+    stats. Those entries must equal a distributed scan of the very files
+    they describe: rows, min/max doc_id and bucket sets."""
+    import os
+
+    from etl_spark.operators.merge import FAST_PATH_MAX_KEYS
+    from etl_spark.table.table import _collect_file_stats
+
+    def rows(n, lsn0, source):
+        return spark.range(n).select(
+            F.format_string("doc_%07d", F.col("id") * 3).alias("doc_id"),
+            (F.col("id") + lsn0).alias("commit_lsn"),
+            F.lit(0).alias("op_seq"),
+            F.lit("U").alias("op"),
+            F.sequence(F.lit(1), F.lit(4)).cast("array<int>").alias("tokens"),
+            F.lit(4).alias("n_tok"),
+            F.lit(source).alias("source"),
+        )
+
+    def assert_entries_match_scan(entries):
+        keys = ("path", "rows", "min_key", "max_key", "buckets", "schema_version")
+        got = sorted(({k: f[k] for k in keys} for f in entries), key=lambda f: f["path"])
+        scanned = []
+        for stage in sorted({os.path.dirname(f["path"]) for f in entries}):
+            scanned += _collect_file_stats(spark, stage, entries[0]["schema_version"], BUCKET["n_buckets"])
+        assert got == sorted(scanned, key=lambda f: f["path"])
+
+    table = LakeTable.create_if_absent(spark, tmp_table_dir, TARGET_SCHEMA, layout=BUCKET)
+    n_bulk = FAST_PATH_MAX_KEYS + 2_000
+    merge_batch(table, rows(n_bulk, 0, "seed"), epoch=0)
+    r = merge_batch(table, rows(n_bulk, 1_000_000, "bulk"), epoch=1, merge_mode="mor", target_rows_per_file=20_000)
+    assert r.mode == "mor" and r.files_added > 1
+    winners = [f for f in table.files() if f.get("mor")]
+    assert len(winners) == r.files_added
+    assert {b for f in winners for b in f["buckets"]} == set(range(BUCKET["n_buckets"]))
+    assert_entries_match_scan(winners)
+
+    sid = compact_mor(table, target_rows_per_file=40_000)
+    compacted = [f for f in table.files() if f.get("added_at") == sid]
+    assert len(compacted) > 1 and not any(f.get("mor") for f in table.files())
+    assert_entries_match_scan(compacted)
+    assert sum(f["rows"] for f in table.files()) == n_bulk

@@ -134,3 +134,26 @@ def test_lineage_coverage_and_fence_uniqueness(spark, tmp_path):
         "checkpoint_epoch", "partition_id", "lsn_min", "lsn_max", "rows_upserted", "rows_deleted",
     }
     feed.unpersist()
+
+
+def test_expire_tombstones_that_empty_every_touched_file(spark, tmp_path):
+    """A tombstone expiry whose rewrite keeps no row still commits — with
+    no added files — and leaves no staged file behind."""
+    import os
+
+    cols = "doc_id string, commit_lsn long, op_seq int, op string, tokens array<int>, n_tok int, source string"
+    table = LakeTable.create_if_absent(spark, str(tmp_path / "tbl"), TARGET_SCHEMA)
+    merge_batch(table, spark.createDataFrame([(f"k{i:03d}", i, 0, "U", [1], 1, "s") for i in range(50)], cols), epoch=0)
+    merge_batch(
+        table, spark.createDataFrame([(f"k{i:03d}", 100 + i, 0, "D", None, None, None) for i in range(50)], cols), epoch=1
+    )
+    assert table.read().count() == 0 and table.files()
+    head = table.head_id()
+    sid = expire_tombstones(table, low_watermark_lsn=1_000)
+    assert sid == head + 1
+    assert table.files() == [] and table.snapshot(sid)["summary"]["maintenance"] == "expire_tombstones"
+    referenced = {f["path"] for s in table.snapshots() for f in s["files"]}
+    on_disk = {
+        os.path.join(d, fn) for d, _, fns in os.walk(table.data_dir) for fn in fns if fn.endswith(".parquet")
+    }
+    assert on_disk <= referenced, sorted(on_disk - referenced)

@@ -15,6 +15,8 @@ import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
 
+COMPACT_MOR_JOBS = 4
+
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -223,6 +225,47 @@ def test_stream_tail_mor_epochs_run_exactly_two_jobs(spark, tmp_table_dir, monke
     assert jobs == [2, 2, 2], f"streamed MoR epochs launched {jobs} jobs, expected 2 each"
     # the scope is restored on the stream's session and untouched on ours
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+@pytest.mark.parametrize("layout", [None, {"type": "bucket", "n_buckets": 8}], ids=["range", "bucket"])
+def test_compact_mor_job_count(spark, tmp_table_dir, layout):
+    """compact_mor sizes its output from the input entries' manifest row
+    counts and takes the new manifest entries from the write job's own
+    stats: no count job, no re-scan of the files it wrote. On a seeded
+    table with three MoR winners files it runs COMPACT_MOR_JOBS jobs, on
+    either layout (the count-and-rescan rewrite ran 11)."""
+    import pyspark.sql.functions as F
+
+    from etl_spark.operators.merge import merge_batch
+    from etl_spark.schema import TARGET_SCHEMA
+    from etl_spark.table import LakeTable
+    from etl_spark.table.maintenance import compact_mor
+
+    def feed(n, stride, lsn0):
+        return spark.range(n).select(
+            F.format_string("doc_%07d", F.col("id") * stride).alias("doc_id"),
+            (F.col("id") + lsn0).alias("commit_lsn"),
+            F.lit(0).alias("op_seq"),
+            F.lit("U").alias("op"),
+            F.sequence(F.lit(1), F.lit(4)).cast("array<int>").alias("tokens"),
+            F.lit(4).alias("n_tok"),
+            F.lit("s").alias("source"),
+        )
+
+    table = LakeTable.create_if_absent(spark, tmp_table_dir, TARGET_SCHEMA, layout=layout)
+    merge_batch(table, feed(16_000, 1, 0), epoch=0, target_rows_per_file=4_000)
+    for e in range(1, 4):
+        assert merge_batch(table, feed(200, 80, 100_000 * e), epoch=e, merge_mode="mor").mode == "mor"
+    assert len([f for f in table.files() if f.get("mor")]) == 3
+
+    # count job ids above the last one seen: the tracker evicts its oldest
+    # jobs past spark.ui.retainedJobs, so list lengths are not comparable
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    last = max(tracker.getJobIdsForGroup(None), default=-1)
+    assert compact_mor(table) is not None
+    n_jobs = sum(1 for j in tracker.getJobIdsForGroup(None) if j > last)
+    assert not any(f.get("mor") for f in table.files())
+    assert n_jobs == COMPACT_MOR_JOBS, f"compact_mor launched {n_jobs} jobs, expected {COMPACT_MOR_JOBS}"
 
 
 def test_mor_resolve_target_scan_prunes_payload(spark, tmp_table_dir):

@@ -334,7 +334,7 @@ def test_merge_stats_fallback_above_observed_width(spark, tmp_table_dir):
     """When the planned file count exceeds the bounded conditional-aggregate
     width, manifest stats come from the distributed scan fallback — and the
     next merge still plans/prunes correctly from them."""
-    from etl_spark.operators import merge as M
+    from etl_spark.table import table as T
 
     table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA)
     bulk = spark.range(3000).select(
@@ -355,7 +355,7 @@ def test_merge_stats_fallback_above_observed_width(spark, tmp_table_dir):
         epoch=1,
         target_rows_per_file=10,
     )
-    assert r.files_added > M.MAX_OBSERVED_STAT_FILES  # fallback path exercised
+    assert r.files_added > T.MAX_OBSERVED_STAT_FILES  # fallback path exercised
     files = table.files()
     assert sum(f["rows"] for f in files) == 3000
     assert all(f["min_key"] is not None and f["max_key"] is not None for f in files)

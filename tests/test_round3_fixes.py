@@ -88,7 +88,7 @@ def test_files_from_observation_bails_on_index_collision(tmp_path):
     part-00000-...-c000 and -c001). The index->file bijection is then
     broken; the builder must return None (fall back to the distributed
     stats scan) instead of silently committing only one of the files."""
-    from etl_spark.operators.merge import _files_from_observation
+    from etl_spark.table.table import _files_from_stats
 
     stage = str(tmp_path)
     for fn in (
@@ -101,7 +101,7 @@ def test_files_from_observation_bails_on_index_collision(tmp_path):
         "fcnt_0": 10, "fmin_0": "a", "fmax_0": "b",
         "fcnt_1": 5, "fmin_1": "c", "fmax_1": "d",
     }
-    assert _files_from_observation(metrics, stage, 2, schema_version=0) is None
+    assert _files_from_stats(metrics, stage, 2, schema_version=0, bucketed=False) is None
     # and nothing was deleted while bailing out
     assert len(os.listdir(stage)) == 3
 

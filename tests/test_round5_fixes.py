@@ -177,9 +177,9 @@ def test_expr_cache_is_bounded_lru(spark):
 
 def test_merge_expr_caches_are_bounded(spark, tmp_table_dir):
     """The production caches route through expr_cache_get (spot-check one)."""
-    before = len(merge_mod._WRITE_METRICS_CACHE)
-    merge_mod._write_metrics(16, "file", 3)
-    merge_mod._write_metrics(16, "file", 3)
-    after = len(merge_mod._WRITE_METRICS_CACHE)
+    before = len(merge_mod._LINEAGE_METRICS_CACHE)
+    merge_mod._lineage_metrics(16)
+    merge_mod._lineage_metrics(16)
+    after = len(merge_mod._LINEAGE_METRICS_CACHE)
     assert after <= max(before + 1, EXPR_CACHE_MAX)
-    assert isinstance(merge_mod._WRITE_METRICS_CACHE, OrderedDict)
+    assert isinstance(merge_mod._LINEAGE_METRICS_CACHE, OrderedDict)

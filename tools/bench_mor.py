@@ -12,6 +12,7 @@ asserted identical.
 Usage: python tools/bench_mor.py [--table-events N] [--micro-epochs N]
        [--micro-events N] [--cores N]
 Prints one JSON line with per-arm wall/per-epoch times + compaction cost.
+bench.py runs the same A/B (``run_ab``) at a smaller size.
 """
 
 from __future__ import annotations
@@ -27,44 +28,34 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--table-events", type=int, default=2_000_000)
-    ap.add_argument("--micro-epochs", type=int, default=16)
-    ap.add_argument("--micro-events", type=int, default=5_000)
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    args = ap.parse_args()
-
-    import pyspark.sql.functions as F
-
+def run_ab(spark, table_events: int, micro_epochs: int, micro_events: int) -> dict:
+    """Run the A/B on ``spark``: one bulk-seeded table per arm, interleaved
+    micro epochs, one full compaction of the MoR table, identical final
+    states asserted. Returns per-arm walls, per-epoch times and the
+    compaction cost; feed generation is excluded from every timing."""
     from etl_spark.datagen import BinlogSpec, generate_binlog
     from etl_spark.operators.merge import merge_batch
     from etl_spark.schema import TARGET_SCHEMA
-    from etl_spark.session import build_session
     from etl_spark.table import LakeTable
     from etl_spark.table.maintenance import compact
 
-    spark = build_session(app_name="bench-mor", cores=args.cores, shuffle_partitions=args.cores)
-    spark.sparkContext.setLogLevel("ERROR")
-
     root = tempfile.mkdtemp(prefix="bench_mor_")
-    n_keys = max(1000, args.table_events // 4)
+    n_keys = max(1000, table_events // 4)
     try:
-        # bulk feed + micro feeds materialized up front (generation excluded)
         bulk_dir = os.path.join(root, "bulk")
-        generate_binlog(spark, BinlogSpec(n_events=args.table_events, n_keys=n_keys, seed=7)).drop(
+        generate_binlog(spark, BinlogSpec(n_events=table_events, n_keys=n_keys, seed=7)).drop(
             "delivery_pos", "lsn_bucket"
         ).write.mode("overwrite").parquet(bulk_dir)
         micro_dirs = []
-        for e in range(args.micro_epochs):
+        for e in range(micro_epochs):
             d = os.path.join(root, f"micro{e}")
             generate_binlog(
                 spark,
                 BinlogSpec(
-                    n_events=args.micro_events,
+                    n_events=micro_events,
                     n_keys=n_keys,
                     seed=100 + e,
-                    lsn_offset=args.table_events * (e + 1),
+                    lsn_offset=table_events * (e + 1),
                 ),
             ).drop("delivery_pos", "lsn_bucket").write.mode("overwrite").parquet(d)
             micro_dirs.append(d)
@@ -83,7 +74,8 @@ def main() -> None:
                 t0 = time.time()
                 r = merge_batch(tables[arm], batch, epoch=e + 1, merge_mode=arm)
                 per_epoch[arm].append(round(time.time() - t0, 3))
-                assert r.applied and r.mode == arm, (arm, e, r)
+                if not (r.applied and r.mode == arm):
+                    raise RuntimeError(f"{arm} epoch {e + 1} did not apply as {arm}: {r}")
 
         t0 = time.time()
         compact(tables["mor"], small_file_rows=1 << 60)  # full: sheds every mask
@@ -93,29 +85,43 @@ def main() -> None:
         a = tables["cow"].read().select("doc_id", "tokens", "n_tok", "source")
         b = tables["mor"].read().select("doc_id", "tokens", "n_tok", "source")
         n_a = a.count()
-        assert n_a == b.count(), "row counts diverge"
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, "states diverge"
+        if n_a != b.count():
+            raise RuntimeError("row counts diverge")
+        if a.exceptAll(b).count() or b.exceptAll(a).count():
+            raise RuntimeError("states diverge")
 
-        out = {
-            "metric": "mor_vs_cow_microbatch_replay",
-            "table_events": args.table_events,
-            "micro_epochs": args.micro_epochs,
-            "micro_events": args.micro_events,
-            "cores": args.cores,
+        cow_sec, mor_sec = sum(per_epoch["cow"]), sum(per_epoch["mor"])
+        return {
+            "table_events": table_events,
+            "micro_epochs": micro_epochs,
+            "micro_events": micro_events,
             "final_rows": n_a,
-            "cow_wall_sec": round(sum(per_epoch["cow"]), 2),
-            "mor_wall_sec": round(sum(per_epoch["mor"]), 2),
+            "cow_wall_sec": round(cow_sec, 2),
+            "mor_wall_sec": round(mor_sec, 2),
             "mor_compact_sec": compact_sec,
             "cow_per_epoch": per_epoch["cow"],
             "mor_per_epoch": per_epoch["mor"],
-            "speedup_excl_compact": round(sum(per_epoch["cow"]) / max(sum(per_epoch["mor"]), 1e-9), 2),
-            "speedup_incl_compact": round(
-                sum(per_epoch["cow"]) / max(sum(per_epoch["mor"]) + compact_sec, 1e-9), 2
-            ),
+            "speedup_excl_compact": round(cow_sec / max(mor_sec, 1e-9), 2),
+            "speedup_incl_compact": round(cow_sec / max(mor_sec + compact_sec, 1e-9), 2),
         }
-        print(json.dumps(out))
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--table-events", type=int, default=2_000_000)
+    ap.add_argument("--micro-epochs", type=int, default=16)
+    ap.add_argument("--micro-events", type=int, default=5_000)
+    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    args = ap.parse_args()
+
+    from etl_spark.session import build_session
+
+    spark = build_session(app_name="bench-mor", cores=args.cores, shuffle_partitions=args.cores)
+    spark.sparkContext.setLogLevel("ERROR")
+    out = run_ab(spark, args.table_events, args.micro_epochs, args.micro_events)
+    print(json.dumps({"metric": "mor_vs_cow_microbatch_replay", "cores": args.cores, **out}))
 
 
 if __name__ == "__main__":
