@@ -110,7 +110,9 @@ def run_replay_bench(spark, n_events: int, n_keys: int, epochs: int) -> dict:
         gen_binlog(spark, os.path.join(root, "binlog"), n_events, n_keys, epochs)
         cold = replay_binlog(spark, os.path.join(root, "binlog"), epochs, n_events)
         reps = [replay_binlog(spark, os.path.join(root, "binlog"), epochs, n_events) for _ in range(2)]
-        assert all(r["final_rows"] == cold["final_rows"] for r in reps)
+        warm_rows = [r["final_rows"] for r in reps]
+        if any(n != cold["final_rows"] for n in warm_rows):
+            raise RuntimeError(f"warm replay row counts {warm_rows} differ from the cold run's {cold['final_rows']}")
         out = dict(reps[0])
         out["wall_sec"] = round(sum(r["wall_sec"] for r in reps) / 2, 2)  # mean of 2 warm reps
         out["events_per_sec"] = round(n_events / out["wall_sec"], 1)
@@ -121,6 +123,10 @@ def run_replay_bench(spark, n_events: int, n_keys: int, epochs: int) -> dict:
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
+
+# console progress bars would fill the captured tail of the output, where the
+# one JSON line must survive
+NO_PROGRESS_BARS = {"spark.ui.showConsoleProgress": "false"}
 
 QUERY_SUBSET = [
     "cdc_lww_dedup",
@@ -158,7 +164,12 @@ def main() -> None:
 
     if len(sys.argv) >= 2 and sys.argv[1] == "--replay-only":
         binlog_dir, epochs, cores = sys.argv[2], int(sys.argv[3]), int(sys.argv[4])
-        spark = build_session(app_name=f"bench-replay-{cores}", cores=cores, shuffle_partitions=cores)
+        spark = build_session(
+            app_name=f"bench-replay-{cores}",
+            cores=cores,
+            shuffle_partitions=cores,
+            extra_conf=NO_PROGRESS_BARS,
+        )
         spark.sparkContext.setLogLevel("ERROR")
         n_events = _count_events(binlog_dir)
         out = replay_binlog(spark, binlog_dir, epochs, n_events)
@@ -175,7 +186,7 @@ def main() -> None:
     except ValueError:
         sf = 0.1
 
-    spark = build_session(app_name="bench", cores=cpus, shuffle_partitions=cpus)
+    spark = build_session(app_name="bench", cores=cpus, shuffle_partitions=cpus, extra_conf=NO_PROGRESS_BARS)
     spark.sparkContext.setLogLevel("ERROR")
 
     replay = run_replay_bench(spark, n_events=n_events, n_keys=max(1000, n_events // 20), epochs=epochs)
@@ -221,7 +232,6 @@ def main() -> None:
                 # flat name -> median seconds (the stable cross-round shape;
                 # round-4 ADVICE: keep `queries` flat for consumers)
                 "queries": {k: v["median"] for k, v in qstats.items()},
-                "queries_median": {k: v["median"] for k, v in qstats.items()},
                 "queries_stats": qstats,
                 "sf": sf,
                 "cpus": cpus,

@@ -57,7 +57,15 @@ from pyspark.sql.types import StructType
 from etl_spark.operators.dedup import lww_dedup, lww_dedup_salted
 from etl_spark.schema import HIDDEN_LSN, HIDDEN_SEQ, relax_nullability
 from etl_spark.session import expr_cache_get
-from etl_spark.table.table import HIDDEN_DELETED, LakeTable, TableCommitError, bucket_col
+from etl_spark.table.table import (
+    HIDDEN_DELETED,
+    LakeTable,
+    TableCommitError,
+    bucket_col,
+    current_buckets,
+    keeps_mask,
+    layout_buckets,
+)
 
 
 # Microbatch fast path: when the deduped batch fits under this many keys, the
@@ -426,20 +434,17 @@ def _merge_attempt(
 
     # ---- plan: which files does this batch touch?
     files = snap["files"]
-    layout = snap.get("layout") or {"type": "range"}
-    is_bucket = layout.get("type") == "bucket"
-    n_buckets = int(layout["n_buckets"]) if is_bucket else 0
+    n_buckets = layout_buckets(snap)
+    is_bucket = n_buckets > 0
     lf = _layout_fragments(n_buckets)
-    # a staged layout migration (maintenance.migrate_layout_staged) marks
-    # not-yet-rewritten files layout_stale: their bucket tags (if any) were
-    # computed under a PREVIOUS layout's modulus and must never be used for
-    # exact bucket pruning — stale files plan by key RANGE instead (their
-    # min/max stats are layout-independent), which is sound for any file
     if is_bucket:
-        # bucket layout: a file is plannable iff it carries its bucket set —
-        # pruning is EXACT membership, not a range test
-        plannable = [f for f in files if f.get("buckets") and not f.get("layout_stale")]
-        rest = [f for f in files if not f.get("buckets") or f.get("layout_stale")]
+        # bucket layout: a file with current bucket tags plans by EXACT
+        # membership, not a range test. Files without them — among them the
+        # ones a staged layout migration has not rewritten yet, whose tags
+        # may be under an older modulus — plan by key RANGE (min/max stats
+        # are layout-independent), which is sound for any file
+        plannable = [f for f in files if current_buckets(f)]
+        rest = [f for f in files if not current_buckets(f)]
         range_plannable = [f for f in rest if f["min_key"] is not None]
         unplannable = [f for f in rest if f["min_key"] is None]
     else:
@@ -736,45 +741,19 @@ def _merge_attempt(
         ] or [{"checkpoint_epoch": epoch, "partition_id": -1, "committed_at_snapshot": sid_next}]
         rows_upserted = sum(r["rows_upserted"] for r in lineage)
         rows_deleted = sum(r["rows_deleted"] for r in lineage)
-        if use_mor:
-            # the winners file doubles as the equality-delete mask: readers
-            # drop same-key rows from older files (table.py docstring)
+        # the MoR winners file doubles as the equality-delete mask: readers
+        # drop same-key rows from older files (table.py docstring). A CoW
+        # rewrite that REMOVES a winners file kills its mask, while the
+        # copies it masked may live in files this batch did NOT touch (the
+        # winners file spans every key its MoR epoch applied; this batch
+        # intersects part of it) and would resurrect as duplicate keys
+        # (interleaved mor-then-cow, tests/test_merge_on_read.py). So the
+        # output inherits the flag under the table layer's rule that every
+        # maintenance rewrite also applies (table.keeps_mask); compact_mor
+        # sheds the debt.
+        if use_mor or keeps_mask(touched_entries, files):
             for f in add_files:
                 f["mor"] = True
-        elif any(f.get("mor") for f in files if f["path"] in touched_paths):
-            # CoW rewrite that REMOVES a mor winners file: the mask dies with
-            # it, but the stale copies it masked may live in files this batch
-            # did NOT touch (the winners file's key range spans every key its
-            # MoR epoch applied; this batch only intersects part of it).
-            # Without a new mask those copies resurrect as duplicate keys
-            # (interleaved mor-then-cow, tests/test_merge_on_read.py). The
-            # output IS the current state for every key it holds (resolved
-            # through the masked loader), so it can safely inherit the mor
-            # flag — the same keep-the-flag rule maintenance.compact uses —
-            # unless no untouched file overlaps a removed winners file (then
-            # no masked copy survives anywhere). compact_mor sheds the debt.
-            removed_mor = [f for f in files if f["path"] in touched_paths and f.get("mor")]
-            untouched = [f for f in files if f["path"] not in touched_paths]
-
-            def _overlaps(a: dict, b: dict) -> bool:
-                if (
-                    a.get("buckets")
-                    and b.get("buckets")
-                    and not a.get("layout_stale")
-                    and not b.get("layout_stale")
-                ):
-                    # bucket layout: copies of a key live only in same-bucket
-                    # files — disjoint bucket sets cannot share a key.
-                    # layout_stale tags may be under an older modulus, so
-                    # stale entries fall back to the range test
-                    return not set(a["buckets"]).isdisjoint(b["buckets"])
-                if a["min_key"] is None or b["min_key"] is None:
-                    return True  # no stats -> cannot prove disjoint
-                return a["max_key"] >= b["min_key"] and a["min_key"] <= b["max_key"]
-
-            if any(_overlaps(u, m) for u in untouched for m in removed_mor):
-                for f in add_files:
-                    f["mor"] = True
         # another writer advancing HEAD after we planned raises
         # TableCommitError here: this attempt's files are orphaned — the
         # finally below drops them and merge_batch replans

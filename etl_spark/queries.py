@@ -26,6 +26,7 @@ from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 from etl_spark.functions import text as T
 from etl_spark.operators import events as EV
@@ -93,15 +94,47 @@ def _feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "cdc_lww_dedup",
-    f"""
+# the replay target's shape, and the feed's shape as the streaming replays
+# re-serialize it
+_REPLAY_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType(), False),
+        StructField("value_cents", LongType(), True),
+        StructField("source", StringType(), True),
+    ]
+)
+_FEED_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType(), False),
+        StructField("commit_lsn", LongType(), False),
+        StructField("op_seq", IntegerType(), False),
+        StructField("op", StringType(), False),
+        StructField("value_cents", LongType(), True),
+        StructField("source", StringType(), True),
+    ]
+)
+
+
+def _replay_table(
+    spark: SparkSession, feed: DataFrame, prefix: str, layout: dict | None = None
+) -> tuple[LakeTable, int]:
+    """A fresh replay target in a new temp dir, and the feed's commit_lsn
+    midpoint (where the two-epoch replays cut the feed)."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    table = LakeTable.create_if_absent(spark, root, _REPLAY_SCHEMA, layout=layout)
+    hi = feed.agg(F.max("commit_lsn")).collect()[0][0] or 0
+    return table, hi // 2
+
+
+_LWW_ORACLE = f"""
     WITH feed AS ({_FEED_SQL}),
     r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY commit_lsn DESC, op_seq DESC) AS rn
           FROM feed)
     SELECT doc_id, commit_lsn, value_cents, source FROM r WHERE rn = 1
-    """,
-)
+    """
+
+
+@register("cdc_lww_dedup", _LWW_ORACLE)
 def q_cdc_lww_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LWW dedup per doc_id on (commit_lsn, op_seq) — max_by hash aggregate
     (operators/dedup.py strategy 1: partial agg kills skew, no sort)."""
@@ -109,16 +142,7 @@ def q_cdc_lww_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "commit_lsn", "value_cents", "source")
 
 
-@register(
-    "cdc_lww_dedup_salted",
-    QUERIES.get("cdc_lww_dedup", (None, None))[1]
-    or f"""
-    WITH feed AS ({_FEED_SQL}),
-    r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY commit_lsn DESC, op_seq DESC) AS rn
-          FROM feed)
-    SELECT doc_id, commit_lsn, value_cents, source FROM r WHERE rn = 1
-    """,
-)
+@register("cdc_lww_dedup_salted", _LWW_ORACLE)
 def q_cdc_lww_dedup_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase salted LWW (hot-key path) — must equal the unsalted result
     exactly (LWW is a max over a total order: associative + commutative)."""
@@ -140,18 +164,8 @@ def q_cdc_replay_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the copy-on-write MERGE into a fresh LakeTable (epoch fences, hidden LWW
     columns, tombstones), with epoch 0 re-applied to prove idempotence. The
     final table state must equal the single-shot SQL LWW apply."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     feed = _feed(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("value_cents", LongType(), True),
-            StructField("source", StringType(), True),
-        ]
-    )
-    root = tempfile.mkdtemp(prefix="etl_spark_q_replay_")
-    table = LakeTable.create_if_absent(spark, root, schema)
+    table = LakeTable.create_if_absent(spark, tempfile.mkdtemp(prefix="etl_spark_q_replay_"), _REPLAY_SCHEMA)
     hi = feed.agg(F.max("commit_lsn")).collect()[0][0] or 0
     cut1, cut2 = hi // 3, 2 * hi // 3
     epochs = [
@@ -178,22 +192,10 @@ def q_cdc_replay_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-3 three-epoch/full-compact variant exercised at ~44 s in the
     checker, slimmed (round-3 verdict item 7) so a driver-side timeout can
     never cost a green row."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from etl_spark.table.maintenance import compact_mor
 
     feed = _feed(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("value_cents", LongType(), True),
-            StructField("source", StringType(), True),
-        ]
-    )
-    root = tempfile.mkdtemp(prefix="etl_spark_q_replay_mor_")
-    table = LakeTable.create_if_absent(spark, root, schema)
-    hi = feed.agg(F.max("commit_lsn")).collect()[0][0] or 0
-    cut = hi // 2
+    table, cut = _replay_table(spark, feed, "etl_spark_q_replay_mor_")
     epochs = [
         feed.where(F.col("commit_lsn") <= cut),
         feed.where(F.col("commit_lsn") > cut),
@@ -209,20 +211,8 @@ def q_cdc_replay_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cdc_replay_merge_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same replay through the salted hot-key dedup path (north rule's skew
     path) — must produce the identical final state."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     feed = _feed(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("value_cents", LongType(), True),
-            StructField("source", StringType(), True),
-        ]
-    )
-    root = tempfile.mkdtemp(prefix="etl_spark_q_replay_salted_")
-    table = LakeTable.create_if_absent(spark, root, schema)
-    hi = feed.agg(F.max("commit_lsn")).collect()[0][0] or 0
-    cut = hi // 2
+    table, cut = _replay_table(spark, feed, "etl_spark_q_replay_salted_")
     merge_batch(table, feed.where(F.col("commit_lsn") <= cut), epoch=0, use_salted_dedup=True)
     merge_batch(table, feed.where(F.col("commit_lsn") > cut), epoch=1, use_salted_dedup=True)
     return table.read().select("doc_id", "value_cents", "source")
@@ -236,22 +226,10 @@ def q_cdc_replay_merge_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary-sampler pass, MoR compaction closes bucket-locally). One epoch
     runs forced-MoR so winners-file bucket tagging and the masked read are
     on the attested path; final state must equal the SQL LWW apply."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     feed = _feed(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("value_cents", LongType(), True),
-            StructField("source", StringType(), True),
-        ]
+    table, cut = _replay_table(
+        spark, feed, "etl_spark_q_replay_bucket_", layout={"type": "bucket", "n_buckets": 8}
     )
-    root = tempfile.mkdtemp(prefix="etl_spark_q_replay_bucket_")
-    table = LakeTable.create_if_absent(
-        spark, root, schema, layout={"type": "bucket", "n_buckets": 8}
-    )
-    hi = feed.agg(F.max("commit_lsn")).collect()[0][0] or 0
-    cut = hi // 2
     # two epochs — CoW bulk then forced-MoR (winners bucket-tagging + masked
     # read on the attested path) — plus the fenced re-apply; kept lean so a
     # driver-side timeout can never cost this green row (the three-epoch
@@ -270,22 +248,10 @@ def q_cdc_layout_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit flips the descriptor, then ONE stage rewrites every file), then
     the final epoch applied under bucket planning. Final state must equal
     the single-shot SQL LWW apply — the migration is invisible to readers."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from etl_spark.table.maintenance import migrate_layout_staged
 
     feed = _feed(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("value_cents", LongType(), True),
-            StructField("source", StringType(), True),
-        ]
-    )
-    root = tempfile.mkdtemp(prefix="etl_spark_q_migrate_")
-    table = LakeTable.create_if_absent(spark, root, schema)
-    hi = feed.agg(F.max("commit_lsn")).collect()[0][0] or 0
-    cut = hi // 2
+    table, cut = _replay_table(spark, feed, "etl_spark_q_migrate_")
     # two epochs around the migration — kept lean so a driver-side timeout
     # can never cost this green row (the three-epoch variant measured ~25 s
     # in the checker; this shape exercises the same pre/post-flip planning)
@@ -303,22 +269,10 @@ def q_cdc_layout_migration_staged(spark: SparkSession, sf_dir: str) -> DataFrame
     a few files each; merges land BETWEEN stages and read the mixed-layout
     table. Final state must equal the single-shot SQL LWW apply — every
     intermediate snapshot served correct reads and plans."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from etl_spark.table.maintenance import migrate_layout_staged
 
     feed = _feed(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("value_cents", LongType(), True),
-            StructField("source", StringType(), True),
-        ]
-    )
-    root = tempfile.mkdtemp(prefix="etl_spark_q_migrate_staged_")
-    table = LakeTable.create_if_absent(spark, root, schema)
-    hi = feed.agg(F.max("commit_lsn")).collect()[0][0] or 0
-    cut = hi // 2
+    table, cut = _replay_table(spark, feed, "etl_spark_q_migrate_staged_")
     # epoch 0 into a multi-file range table; begin + ONE bounded stage;
     # epoch 1 merges into the half-migrated table; remaining stages finish
     merge_batch(table, feed.where(F.col("commit_lsn") <= cut), epoch=0, target_rows_per_file=20_000)
@@ -339,8 +293,6 @@ def q_cdc_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tailed with the file source under Trigger.AvailableNow, and applied in
     epoch-fenced microbatches. Final state is batching-invariant, so the
     single-shot SQL LWW oracle still applies."""
-    from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
-
     from etl_spark.streaming.tail import run_stream_replay
 
     feed = _feed(spark, sf_dir)
@@ -353,30 +305,13 @@ def q_cdc_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("lsn_bucket")
         .parquet(binlog)
     )
-    feed_schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("commit_lsn", LongType(), False),
-            StructField("op_seq", IntegerType(), False),
-            StructField("op", StringType(), False),
-            StructField("value_cents", LongType(), True),
-            StructField("source", StringType(), True),
-        ]
-    )
-    target_schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("value_cents", LongType(), True),
-            StructField("source", StringType(), True),
-        ]
-    )
     run_stream_replay(
         spark,
         binlog_dir=binlog,
         table_root=f"{root}/table",
         checkpoint_dir=f"{root}/ckpt",
-        feed_schema=feed_schema,
-        target_schema=target_schema,
+        feed_schema=_FEED_SCHEMA,
+        target_schema=_REPLAY_SCHEMA,
         max_files_per_trigger=2,
     )
     table = LakeTable(spark, f"{root}/table")
@@ -392,34 +327,15 @@ def q_cdc_stream_replay_debezium(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-Catalyst from_json projection before the identical epoch-fenced
     apply. Wire format must be invisible to the final state, so the same
     single-shot SQL LWW oracle applies."""
-    from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
-
     from etl_spark.streaming.formats import debezium_value_col
     from etl_spark.streaming.tail import run_stream_replay
 
     feed = _feed(spark, sf_dir)
-    feed_schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("commit_lsn", LongType(), False),
-            StructField("op_seq", IntegerType(), False),
-            StructField("op", StringType(), False),
-            StructField("value_cents", LongType(), True),
-            StructField("source", StringType(), True),
-        ]
-    )
-    target_schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("value_cents", LongType(), True),
-            StructField("source", StringType(), True),
-        ]
-    )
     root = tempfile.mkdtemp(prefix="etl_spark_q_stream_dbz_")
     binlog = f"{root}/binlog"
     (
         feed.withColumn("lsn_bucket", F.pmod(F.col("commit_lsn"), F.lit(4)).cast("int"))
-        .withColumn("value", debezium_value_col(feed_schema))
+        .withColumn("value", debezium_value_col(_FEED_SCHEMA))
         .repartition(4, "lsn_bucket")
         .select("value", "lsn_bucket")
         .write.mode("overwrite")
@@ -431,8 +347,8 @@ def q_cdc_stream_replay_debezium(spark: SparkSession, sf_dir: str) -> DataFrame:
         binlog_dir=binlog,
         table_root=f"{root}/table",
         checkpoint_dir=f"{root}/ckpt",
-        feed_schema=feed_schema,
-        target_schema=target_schema,
+        feed_schema=_FEED_SCHEMA,
+        target_schema=_REPLAY_SCHEMA,
         max_files_per_trigger=2,
         feed_format="debezium-json",
     )
@@ -487,8 +403,6 @@ def q_cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     evolved shape. Keys whose winner predates the evolution read back NULL
     `source` and their int values reconciled to bigint at read time — the
     Iceberg add-column / type-promotion semantics."""
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
     feed = _feed(spark, sf_dir)
     schema = StructType(
         [
@@ -524,20 +438,8 @@ def q_cdc_schema_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     name. The final read must present epoch-0 files (written with the old
     name) under the new name with data intact — the single-shot LWW fold of
     the whole feed, aliased."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     feed = _feed(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("value_cents", LongType(), True),
-            StructField("source", StringType(), True),
-        ]
-    )
-    root = tempfile.mkdtemp(prefix="etl_spark_q_rename_")
-    table = LakeTable.create_if_absent(spark, root, schema)
-    hi = feed.agg(F.max("commit_lsn")).collect()[0][0] or 0
-    cut = hi // 2
+    table, cut = _replay_table(spark, feed, "etl_spark_q_rename_")
     merge_batch(table, feed.where(F.col("commit_lsn") <= cut), epoch=0)
     table.rename_column("value_cents", "amount_cents")
     merge_batch(
@@ -562,20 +464,8 @@ def q_cdc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot isolation / time travel: replay two epochs, then read the
     table AT the snapshot committed by epoch 0 — must equal the LWW fold of
     only the first half of the feed (later commits invisible)."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     feed = _feed(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("value_cents", LongType(), True),
-            StructField("source", StringType(), True),
-        ]
-    )
-    root = tempfile.mkdtemp(prefix="etl_spark_q_tt_")
-    table = LakeTable.create_if_absent(spark, root, schema)
-    hi = feed.agg(F.max("commit_lsn")).collect()[0][0] or 0
-    cut = hi // 2
+    table, cut = _replay_table(spark, feed, "etl_spark_q_tt_")
     merge_batch(table, feed.where(F.col("commit_lsn") <= cut), epoch=0)
     snap_after_e0 = table.head_id()
     merge_batch(table, feed.where(F.col("commit_lsn") > cut), epoch=1)
@@ -603,20 +493,8 @@ def q_cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     be exactly the second half's LWW winners — upserts as 'U' rows with
     payload, deletes as 'D' tombstone notices — and must NOT include rows
     merely rewritten by copy-on-write."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     feed = _feed(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("value_cents", LongType(), True),
-            StructField("source", StringType(), True),
-        ]
-    )
-    root = tempfile.mkdtemp(prefix="etl_spark_q_diff_")
-    table = LakeTable.create_if_absent(spark, root, schema)
-    hi = feed.agg(F.max("commit_lsn")).collect()[0][0] or 0
-    cut = hi // 2
+    table, cut = _replay_table(spark, feed, "etl_spark_q_diff_")
     merge_batch(table, feed.where(F.col("commit_lsn") <= cut), epoch=0)
     s1 = table.head_id()
     merge_batch(table, feed.where(F.col("commit_lsn") > cut), epoch=1)
@@ -651,22 +529,10 @@ def q_cdc_lineage_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconcile with the SQL-derived expected counts (epoch-0 winners insert;
     epoch-1 winners always beat epoch-0 state; deletes count only when the
     key was live)."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from etl_spark.lineage import lineage_df
 
     feed = _feed(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("value_cents", LongType(), True),
-            StructField("source", StringType(), True),
-        ]
-    )
-    root = tempfile.mkdtemp(prefix="etl_spark_q_lin_")
-    table = LakeTable.create_if_absent(spark, root, schema)
-    hi = feed.agg(F.max("commit_lsn")).collect()[0][0] or 0
-    cut = hi // 2
+    table, cut = _replay_table(spark, feed, "etl_spark_q_lin_")
     merge_batch(table, feed.where(F.col("commit_lsn") <= cut), epoch=0)
     merge_batch(table, feed.where(F.col("commit_lsn") > cut), epoch=1)
     return (

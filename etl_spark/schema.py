@@ -25,10 +25,6 @@ from pyspark.sql.types import (
 
 # --- change feed (binlog/WAL events), FIXTURES.md §1 -------------------------
 
-OP_INSERT = "I"
-OP_UPDATE = "U"
-OP_DELETE = "D"
-
 BINLOG_SCHEMA = StructType(
     [
         StructField("commit_lsn", LongType(), nullable=False),
@@ -39,20 +35,6 @@ BINLOG_SCHEMA = StructType(
         StructField("tokens", ArrayType(IntegerType(), containsNull=False), nullable=True),
         StructField("n_tok", IntegerType(), nullable=True),
         StructField("source", StringType(), nullable=True),
-    ]
-)
-
-# v2 feed after schema evolution: adds nullable `lang`, widens n_tok -> long
-BINLOG_SCHEMA_V2 = StructType(
-    [
-        StructField("commit_lsn", LongType(), nullable=False),
-        StructField("op_seq", IntegerType(), nullable=False),
-        StructField("op", StringType(), nullable=False),
-        StructField("doc_id", StringType(), nullable=False),
-        StructField("tokens", ArrayType(IntegerType(), containsNull=False), nullable=True),
-        StructField("n_tok", LongType(), nullable=True),
-        StructField("source", StringType(), nullable=True),
-        StructField("lang", StringType(), nullable=True),
     ]
 )
 
@@ -71,15 +53,6 @@ TARGET_SCHEMA = StructType(
 # (SURVEY.md §7.3 "cross-batch out-of-order").
 HIDDEN_LSN = "_commit_lsn"
 HIDDEN_SEQ = "_op_seq"
-
-HIDDEN_FIELDS = [
-    StructField(HIDDEN_LSN, LongType(), nullable=False),
-    StructField(HIDDEN_SEQ, IntegerType(), nullable=False),
-]
-
-
-def target_schema_with_hidden(target: StructType = TARGET_SCHEMA) -> StructType:
-    return StructType(list(target.fields) + HIDDEN_FIELDS)
 
 
 # --- schema evolution rules --------------------------------------------------
@@ -109,11 +82,3 @@ def relax_nullability(dt):
 
 def can_widen(from_type: str, to_type: str) -> bool:
     return _WIDENINGS.get((from_type, to_type), False) or from_type == to_type
-
-
-def schema_to_json(schema: StructType) -> str:
-    return schema.json()
-
-
-def schema_from_json(js: str) -> StructType:
-    return StructType.fromJson(__import__("json").loads(js))

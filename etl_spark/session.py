@@ -101,7 +101,3 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def get_or_create(spark: SparkSession | None = None) -> SparkSession:
-    return spark if spark is not None else build_session()

@@ -12,9 +12,9 @@ filter/join work.
 - ``compact``: bin-packs live data files below a size threshold into
   range-partitioned files of the target row count. Reads through the
   mask-applying loader, so the output is current state; the ``mor`` flag is
-  kept iff any input carried it (the output's keys must keep masking their
-  older copies in files NOT part of this compaction) and shed when the
-  compaction covered every live file.
+  kept iff a compacted ``mor`` file may share a key with a live file outside
+  the compaction (the output's keys must keep masking those older copies):
+  ``table.keeps_mask``, the rule the merge and every rewrite here share.
 - ``rewrite_table``: full rewrite of every live file — the guaranteed
   mask-shedding point (output is one clean range-partitioned, one-version-
   per-key layout with no ``mor`` flags).
@@ -47,7 +47,15 @@ import shutil
 import pyspark.sql.functions as F
 
 from etl_spark.schema import HIDDEN_LSN
-from etl_spark.table.table import HIDDEN_DELETED, LakeTable, TableCommitError
+from etl_spark.table.table import (
+    HIDDEN_DELETED,
+    LakeTable,
+    TableCommitError,
+    keeps_mask,
+    layout_buckets,
+    may_share_keys,
+    validate_layout,
+)
 
 
 def _rewrite(
@@ -56,7 +64,6 @@ def _rewrite(
     entries: list[dict],
     target_rows_per_file: int,
     summary: dict,
-    mor_flag: bool = False,
     expect_parent: int | None = None,
 ) -> int:
     """Stage + commit a maintenance rewrite of the file ``entries`` (read as
@@ -68,9 +75,10 @@ def _rewrite(
     the staged files are removed and TableCommitError surfaces; maintenance
     is re-runnable, so callers simply retry against the new head. Any other
     failure after staging also cleans its debris (gc_orphans covers only
-    hard crashes)."""
+    hard crashes). The output carries the ``mor`` flag iff
+    ``table.keeps_mask`` says a masked copy may survive outside the
+    rewrite."""
     snap = table.snapshot(expect_parent)
-    layout = snap.get("layout") or {"type": "range"}
     # output files: ~target_rows_per_file rows each, sized from the inputs'
     # manifest row counts — an upper bound on the rows written (masked and
     # expired rows drop out), known without running a job. Capped at the
@@ -79,17 +87,14 @@ def _rewrite(
     # inside one file (files carry bucket SETS, so membership pruning stays
     # exact) while a small rewrite — one staged-migration stage, a two-file
     # compaction — emits a few files instead of n_buckets near-empty ones.
-    if layout.get("type") == "bucket":
-        cap = int(layout["n_buckets"])
-    else:
-        cap = table.spark.sparkContext.defaultParallelism
+    cap = layout_buckets(snap) or table.spark.sparkContext.defaultParallelism
     n_rows = sum(f["rows"] for f in entries)
     n_out = max(1, min(cap, (n_rows // target_rows_per_file) + 1))
     stage = table.stage_dir(table.head_id() + 1)
     committed = False
     try:
         add_files, _ = table.write_stage(df, stage, n_out, snap)
-        if mor_flag:
+        if keeps_mask(entries, snap["files"]):
             for f in add_files:
                 f["mor"] = True
         sid = table.commit(
@@ -116,72 +121,37 @@ def compact(table: LakeTable, small_file_rows: int = 100_000, target_rows_per_fi
     small = [f for f in snap["files"] if f["rows"] < small_file_rows]
     if len(small) < 2:
         return None
-    df = table.load_files(small, snap)
-    # the output must keep masking older copies of its keys unless this
-    # compaction covered EVERY live file (then no older copy survives)
-    covers_all = len(small) == len(snap["files"])
-    mor_flag = any(f.get("mor") for f in small) and not covers_all
     return _rewrite(
         table,
-        df,
+        table.load_files(small, snap),
         entries=small,
         target_rows_per_file=target_rows_per_file,
         summary={"maintenance": "compact", "files_in": len(small)},
-        mor_flag=mor_flag,
         expect_parent=snap["snapshot_id"],
     )
 
 
 def compact_mor(table: LakeTable, target_rows_per_file: int = 1_000_000) -> int | None:
     """Targeted MoR-debt compaction: rewrite the winners (mask) files PLUS
-    every file whose key range overlaps one of them, through the masked
-    loader, into clean non-mor files. The closure guarantees the rewrite
-    set holds every older copy of every masked key (a file containing key
-    X has a range covering X, and so does the winners file masking X — the
-    ranges intersect), so the output can shed the mor flag without touching
-    the rest of the table: O(mask-affected data), not O(table). Returns the
-    new snapshot id, or None if no mor files exist."""
+    every file that may share a key with one of them
+    (``table.may_share_keys``: bucket-local on bucket tables, by key range
+    otherwise), through the masked loader, into clean non-mor files. The
+    closure holds every older copy of every masked key, so no file outside
+    it can keep a mask alive and the output sheds the mor flag without
+    touching the rest of the table: O(mask-affected data), not O(table).
+    Returns the new snapshot id, or None if no mor files exist."""
     snap = table.snapshot()
     files = snap["files"]
     mor = [f for f in files if f.get("mor")]
     if not mor:
         return None
-    touched = {f["path"] for f in mor}
-    is_bucket = table.layout(snap["snapshot_id"]).get("type") == "bucket"
-    mor_buckets = set()
-    # layout_stale entries (mid staged migration) may carry bucket tags
-    # under an older modulus — bucket-local closure only when every party's
-    # tags are current; stale files fall to the range test below
-    if is_bucket and all(m.get("buckets") and not m.get("layout_stale") for m in mor):
-        for m in mor:
-            mor_buckets.update(m["buckets"])
-    for f in files:
-        if f["path"] in touched:
-            continue
-        if mor_buckets and f.get("buckets") and not f.get("layout_stale"):
-            # bucket layout: a masked key's older copies live only in files
-            # sharing its bucket — the closure is BUCKET-LOCAL, so debt in
-            # one bucket never rewrites the others
-            if not mor_buckets.isdisjoint(f["buckets"]):
-                touched.add(f["path"])
-            continue
-        if f["min_key"] is None:
-            touched.add(f["path"])  # no stats -> cannot prune
-            continue
-        if any(
-            m["min_key"] is None or (f["max_key"] >= m["min_key"] and f["min_key"] <= m["max_key"])
-            for m in mor
-        ):
-            touched.add(f["path"])
-    entries = [f for f in files if f["path"] in touched]
-    df = table.load_files(entries, snap)
+    entries = [f for f in files if f.get("mor") or any(may_share_keys(f, m) for m in mor)]
     return _rewrite(
         table,
-        df,
+        table.load_files(entries, snap),
         entries=entries,
         target_rows_per_file=target_rows_per_file,
         summary={"maintenance": "compact_mor", "files_in": len(entries)},
-        mor_flag=False,
         expect_parent=snap["snapshot_id"],
     )
 
@@ -212,14 +182,12 @@ def rewrite_table(table: LakeTable, target_rows_per_file: int = 1_000_000) -> in
     snap = table.snapshot()
     if not snap["files"]:
         return None
-    df = table.load_files(snap["files"], snap)
     return _rewrite(
         table,
-        df,
+        table.load_files(snap["files"], snap),
         entries=snap["files"],
         target_rows_per_file=target_rows_per_file,
         summary={"maintenance": "rewrite_table", "files_in": len(snap["files"])},
-        mor_flag=False,
         expect_parent=snap["snapshot_id"],
     )
 
@@ -240,7 +208,8 @@ def migrate_layout_staged(
     ``max_files_per_stage=None`` rewrites every stale file in ONE stage (a
     small table's whole migration is then a metadata-only begin commit plus
     one rewrite commit). Every stage reads through the masked loader, so MoR
-    debt is applied; a stage covering every live file sheds it.
+    debt is applied; a stage sheds it when no live file outside the stage
+    may hold a masked copy (``table.keeps_mask``).
 
     Protocol (resumable by construction — progress lives in the manifest,
     no side state):
@@ -250,14 +219,16 @@ def migrate_layout_staged(
        this commit on, every writer emits NEW-layout files; stale files are
        planned by key RANGE everywhere (their min/max stats are layout-
        independent), and their bucket tags — possibly under an older
-       modulus — are never used for exact pruning (merge planning, MoR mask
-       pruning, compaction closure all check the tag).
+       modulus — are never used for exact pruning (``table.current_buckets``
+       drops them for merge planning, MoR mask pruning and compaction
+       closure alike).
     2. **stage** commits: rewrite up to ``max_files_per_stage`` stale files
-       through the masked loader into the new layout (mor flag inherited
-       under the same keep-the-mask rule as ``compact``). Each stage is
-       pinned to the snapshot it planned (``expect_parent``) and retries on
-       concurrent-writer conflicts; a crash between stages loses at most
-       one stage of work.
+       through the masked loader into the new layout (the output keeps the
+       mor flag iff a rewritten mor file may share a key with a live file
+       outside the stage, ``table.keeps_mask``, as for every rewrite). Each
+       stage is pinned to the snapshot it planned (``expect_parent``) and
+       retries on concurrent-writer conflicts; a crash between stages loses
+       at most one stage of work.
     3. done when no ``layout_stale`` entry remains — there is no final
        flip: the descriptor flipped at begin, and conformance is derivable
        from the manifest (re-invoking resumes / no-ops).
@@ -270,10 +241,7 @@ def migrate_layout_staged(
     Returns ``{"begin": sid | None, "stages": [sid, ...], "done": bool,
     "stale_remaining": int}``.
     """
-    if new_layout.get("type") not in ("range", "bucket"):
-        raise ValueError(f"unknown layout type {new_layout!r}")
-    if new_layout["type"] == "bucket" and not (1 <= int(new_layout.get("n_buckets", 0))):
-        raise ValueError("bucket layout needs n_buckets >= 1")
+    validate_layout(new_layout)
 
     begin_sid: int | None = None
     retries_left = max_retries  # PER-COMMIT budget, reset after each success
@@ -318,8 +286,6 @@ def migrate_layout_staged(
                 "stale_remaining": len(stale),
             }
         picked = stale[:max_files_per_stage]
-        covers_all = len(picked) == len(snap["files"])
-        mor_flag = any(f.get("mor") for f in picked) and not covers_all
         try:
             sid = _rewrite(
                 table,
@@ -332,7 +298,6 @@ def migrate_layout_staged(
                     "files_in": len(picked),
                     "to": new_layout,
                 },
-                mor_flag=mor_flag,
                 expect_parent=snap["snapshot_id"],
             )
         except TableCommitError:
@@ -441,17 +406,11 @@ def expire_tombstones(table: LakeTable, low_watermark_lsn: int, target_rows_per_
     if not touched:
         return None
     touched_entries = [f for f in files if f["path"] in touched]
-    df = table.load_files(touched_entries, snap).where(~expirable)
-    # the output's keys must keep masking copies in files OUTSIDE the
-    # rewrite set (possible when a mor file also holds non-expired keys)
-    covers_all = len(touched_entries) == len(files)
-    mor_flag = any(f.get("mor") for f in touched_entries) and not covers_all
     return _rewrite(
         table,
-        df,
+        table.load_files(touched_entries, snap).where(~expirable),
         entries=touched_entries,
         target_rows_per_file=target_rows_per_file,
         summary={"maintenance": "expire_tombstones", "low_watermark": low_watermark_lsn},
-        mor_flag=mor_flag,
         expect_parent=snap["snapshot_id"],
     )

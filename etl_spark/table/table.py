@@ -163,6 +163,57 @@ def bucket_col(n_buckets: int) -> Column:
     return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
 
 
+def validate_layout(layout: dict) -> None:
+    """Reject a layout descriptor that names no known layout."""
+    if layout.get("type") not in ("range", "bucket"):
+        raise ValueError(f"unknown layout type {layout!r}")
+    if layout["type"] == "bucket" and not (1 <= int(layout.get("n_buckets", 0))):
+        raise ValueError("bucket layout needs n_buckets >= 1")
+
+
+def layout_buckets(snap: dict) -> int:
+    """The bucket count of a snapshot's layout; 0 for the range layout
+    (pre-layout snapshots read as range)."""
+    layout = snap.get("layout") or {"type": "range"}
+    return int(layout["n_buckets"]) if layout.get("type") == "bucket" else 0
+
+
+def current_buckets(f: dict) -> list[int] | None:
+    """A file entry's bucket tags under the table's current layout, or None:
+    range-layout entries carry none, and an entry tagged ``layout_stale``
+    (written before a staged layout migration's begin commit) may carry tags
+    under an older modulus, so they never prove anything."""
+    if f.get("layout_stale"):
+        return None
+    return f.get("buckets") or None
+
+
+def may_share_keys(a: dict, b: dict) -> bool:
+    """Whether two file entries can hold copies of the same key. When both
+    carry current bucket tags the bucket sets decide (a key's copies live
+    only in files holding its bucket); otherwise the ``[min_key, max_key]``
+    ranges do, and an entry with no stats can hold any key."""
+    ba, bb = current_buckets(a), current_buckets(b)
+    if ba and bb:
+        return not set(ba).isdisjoint(bb)
+    if a["min_key"] is None or b["min_key"] is None:
+        return True
+    return a["max_key"] >= b["min_key"] and a["min_key"] <= b["max_key"]
+
+
+def keeps_mask(rewritten: list[dict], files: list[dict]) -> bool:
+    """Whether the output of a rewrite that removes the ``rewritten``
+    entries from the live ``files`` must carry the ``mor`` flag: true iff a
+    removed ``mor`` entry may share a key with a live entry outside the
+    rewrite. The output holds the current state of every key it holds (it
+    is read through the masked loader), so flagging it keeps masking any
+    older copy left outside; when no outside entry may hold such a copy,
+    the mask dies with the removed entries."""
+    paths = {f["path"] for f in rewritten}
+    outside = [f for f in files if f["path"] not in paths]
+    return any(may_share_keys(m, f) for m in rewritten if m.get("mor") for f in outside)
+
+
 def _stage_stats(n_out: int, n_buckets: int) -> tuple:
     """The stage write's per-row partition column ``_pid`` and the bucket
     column (bucket tables only), plus ONE struct aggregate ``f`` over them
@@ -337,10 +388,7 @@ class LakeTable:
         if t.exists():
             return t
         if layout is not None:
-            if layout.get("type") not in ("range", "bucket"):
-                raise ValueError(f"unknown layout type {layout!r}")
-            if layout["type"] == "bucket" and not (1 <= int(layout.get("n_buckets", 0))):
-                raise ValueError("bucket layout needs n_buckets >= 1")
+            validate_layout(layout)
         os.makedirs(t.meta_dir, exist_ok=True)
         os.makedirs(t.data_dir, exist_ok=True)
         commit = {
@@ -696,22 +744,19 @@ class LakeTable:
         if not mor:
             return out
         # bucket layout: a loaded row's superseding winner can only live in
-        # a file sharing one of the loaded buckets — exact set pruning.
-        # layout_stale entries (mid staged migration) may carry tags under
-        # an older modulus: a stale loaded file disables bucket pruning
-        # entirely (its bucket membership is unknown under the current
-        # layout), and a stale winners file is never pruned by bucket
+        # a file sharing one of the loaded buckets — exact set pruning. A
+        # loaded file without current tags (current_buckets) disables bucket
+        # pruning entirely, and a winners file without them is never pruned
+        # by bucket
         loaded_buckets: set[int] = set()
-        if all(f.get("buckets") and not f.get("layout_stale") for f in file_entries):
+        if all(current_buckets(f) for f in file_entries):
             for f in file_entries:
                 loaded_buckets.update(f["buckets"])
         if loaded_buckets:
             mor = [
                 f
                 for f in mor
-                if not f.get("buckets")
-                or f.get("layout_stale")
-                or not loaded_buckets.isdisjoint(f["buckets"])
+                if not current_buckets(f) or not loaded_buckets.isdisjoint(f["buckets"])
             ]
             if not mor:
                 return out
@@ -892,8 +937,7 @@ class LakeTable:
         ``maxRecordsPerFile`` splits, or no metrics at all because AQE
         folded an empty output away — take one distributed stats scan.
         ``phases`` receives the write and stats seconds."""
-        layout = snap.get("layout") or {"type": "range"}
-        n_buckets = int(layout["n_buckets"]) if layout.get("type") == "bucket" else 0
+        n_buckets = layout_buckets(snap)
         pid, bucket, stats = _stage_stats(n_out if n_out <= MAX_OBSERVED_STAT_FILES else 0, n_buckets)
         if n_buckets:
             out = df.withColumn("_bucket", bucket).repartition(n_out, "_bucket")

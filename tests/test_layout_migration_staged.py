@@ -28,7 +28,7 @@ from etl_spark.operators.merge import merge_batch
 from etl_spark.oracle import assert_state_equal, replay_oracle
 from etl_spark.schema import TARGET_SCHEMA
 from etl_spark.table import LakeTable
-from etl_spark.table.maintenance import migrate_layout_staged
+from etl_spark.table.maintenance import compact_mor, migrate_layout_staged
 
 BUCKET4 = {"type": "bucket", "n_buckets": 4}
 BUCKET8 = {"type": "bucket", "n_buckets": 8}
@@ -313,6 +313,34 @@ def test_expire_after_migration_reclaims_old_layout_files(spark, tmp_path):
     expected = replay_oracle(full.toPandas())
     assert_state_equal(_state(table), expected)
     assert all(_os.path.exists(f["path"]) for f in table.files())
+
+
+def test_compact_mor_on_half_migrated_table_with_stale_winners(spark, tmp_path):
+    """compact_mor over a half-migrated bucket table whose MoR debt spans
+    both a stale winners file (written under the range layout) and a
+    current one: the closure prunes current-tagged files by bucket and
+    stale parties by key range, and the result equals the LWW fold."""
+    feed = generate_binlog(spark, BinlogSpec(n_events=4000, n_keys=300, seed=7))
+    feed.cache().count()
+    batches = _batches(feed, 3)
+    expected = replay_oracle(feed.drop("delivery_pos", "lsn_bucket").toPandas())
+    table = LakeTable.create_if_absent(spark, str(tmp_path / "t"), TARGET_SCHEMA)
+    merge_batch(table, batches[0], epoch=0, target_rows_per_file=150)
+    merge_batch(table, batches[1], epoch=1, merge_mode="mor")
+    rep = migrate_layout_staged(table, BUCKET4, max_files_per_stage=1, max_stages=1)
+    assert not rep["done"]
+    merge_batch(table, batches[2], epoch=2, merge_mode="mor")
+    files = table.files()
+    assert [f for f in files if f.get("mor") and f.get("layout_stale")], "needs a stale winners file"
+    assert [f for f in files if f.get("mor") and not f.get("layout_stale") and f.get("buckets")]
+    assert_state_equal(_state(table), expected)
+
+    assert compact_mor(table) is not None
+    assert not any(f.get("mor") for f in table.files())
+    assert_state_equal(_state(table), expected)
+    migrate_layout_staged(table, BUCKET4, max_files_per_stage=8)
+    assert not _stale(table)
+    assert_state_equal(_state(table), expected)
 
 
 def test_stage_retries_after_concurrent_writer_conflict(spark, tmp_path):

@@ -17,6 +17,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from etl_spark.operators.merge import merge_batch
 from etl_spark.table import LakeTable
 from etl_spark.table.maintenance import compact, expire_tombstones, rewrite_table
+from etl_spark.table.table import current_buckets, keeps_mask, may_share_keys
 
 SCHEMA = StructType(
     [
@@ -159,6 +160,80 @@ def test_compact_does_not_unmask_victims(spark, tmp_table_dir):
     rewrite_table(table, target_rows_per_file=1000)
     assert not any(f.get("mor") for f in table.files())
     assert _state(table) == before
+
+
+def test_compact_sheds_flag_when_no_outside_file_shares_a_key(spark, tmp_table_dir):
+    """Compacting a winners file together with every file that may hold an
+    older copy of its keys leaves no masked copy outside the rewrite, so the
+    output sheds the mor flag even though other live files stay outside."""
+    table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA)
+    merge_batch(table, _batch(spark, [("a1", 1, 0, "U", 1, "s"), ("a2", 2, 0, "U", 2, "s")]), epoch=0)
+    merge_batch(table, _bulk(spark, 3000), epoch=1)  # big k* files so compact skips them
+    merge_batch(table, _batch(spark, [("a1", 100, 0, "U", 11, "s")]), epoch=2, merge_mode="mor")
+    before = _state(table)
+    assert before["a1"] == (11, "s")
+    outside = {f["path"] for f in table.files() if f["rows"] >= 100}
+    assert outside and all(f["min_key"] >= "k" for f in table.files() if f["path"] in outside)
+    sid = compact(table, small_file_rows=100, target_rows_per_file=1000)
+    assert sid is not None
+    assert outside <= {f["path"] for f in table.files()}  # the bulk files stayed outside
+    assert not any(f.get("mor") for f in table.files())
+    assert _state(table) == before
+    assert table.read().where("doc_id = 'a1'").count() == 1
+
+
+def _entry(path, lo, hi, buckets=None, stale=False, mor=False):
+    f = {"path": path, "rows": 1, "min_key": lo, "max_key": hi}
+    if buckets is not None:
+        f["buckets"] = buckets
+    if stale:
+        f["layout_stale"] = True
+    if mor:
+        f["mor"] = True
+    return f
+
+
+def test_current_buckets_ignores_stale_and_missing_tags():
+    assert current_buckets(_entry("p", "a", "b", buckets=[1, 3])) == [1, 3]
+    assert current_buckets(_entry("p", "a", "b", buckets=[1, 3], stale=True)) is None
+    assert current_buckets(_entry("p", "a", "b")) is None
+    assert current_buckets(_entry("p", "a", "b", buckets=[])) is None
+
+
+def test_may_share_keys_cases():
+    # disjoint current buckets: no shared key, however the ranges overlap
+    assert not may_share_keys(_entry("x", "a", "z", buckets=[0, 1]), _entry("y", "a", "z", buckets=[2]))
+    assert may_share_keys(_entry("x", "a", "z", buckets=[0, 1]), _entry("y", "a", "z", buckets=[1, 2]))
+    # a stale tag proves nothing: the ranges decide
+    assert may_share_keys(_entry("x", "a", "m", buckets=[0], stale=True), _entry("y", "k", "z", buckets=[2]))
+    assert not may_share_keys(_entry("x", "a", "c", buckets=[2], stale=True), _entry("y", "k", "z", buckets=[2]))
+    # an entry without stats can hold any key
+    assert may_share_keys(_entry("x", None, None), _entry("y", "k", "z"))
+    assert may_share_keys(_entry("x", "a", "c", buckets=[0]), _entry("y", None, None, buckets=[1], stale=True))
+    # untagged entries: range overlap, touching ends included
+    assert may_share_keys(_entry("x", "a", "k"), _entry("y", "k", "z"))
+    assert not may_share_keys(_entry("x", "a", "j"), _entry("y", "k", "z"))
+    # one side tagged, the other not: ranges decide
+    assert not may_share_keys(_entry("x", "a", "j", buckets=[1]), _entry("y", "k", "z"))
+
+
+def test_keeps_mask_cases():
+    winners = _entry("w", "c", "f", mor=True)
+    near = _entry("n", "e", "h")
+    far = _entry("f", "p", "z")
+    files = [winners, near, far]
+    # a masked copy may survive in `near`, left outside
+    assert keeps_mask([winners], files)
+    # every file that may share a key is rewritten
+    assert not keeps_mask([winners, near], files)
+    assert not keeps_mask(files, files)
+    # no mor entry rewritten: nothing to keep masking
+    assert not keeps_mask([near], files)
+    # bucket tags prune the outside entries exactly
+    bw = _entry("bw", "a", "z", buckets=[1], mor=True)
+    assert not keeps_mask([bw], [bw, _entry("b0", "a", "z", buckets=[0])])
+    assert keeps_mask([bw], [bw, _entry("b1", "a", "z", buckets=[0, 1])])
+    assert keeps_mask([bw], [bw, _entry("s0", "a", "z", buckets=[0], stale=True)])
 
 
 def test_compact_small_old_file_under_newer_mor_versions(spark, tmp_table_dir):

@@ -36,30 +36,20 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=64)
     args = ap.parse_args()
 
-    from etl_spark.datagen import BinlogSpec, generate_binlog
     from etl_spark.operators.merge import merge_batch
     from etl_spark.schema import TARGET_SCHEMA
     from etl_spark.session import build_session
     from etl_spark.table import LakeTable
+    from tools.bench_mor import write_feeds
 
     spark = build_session(app_name="bench-epoch", cores=args.cores, shuffle_partitions=args.cores)
     spark.sparkContext.setLogLevel("ERROR")
 
     root = tempfile.mkdtemp(prefix="bench_epoch_")
-    n_keys = max(1000, args.table_events // 4)
     try:
-        bulk_dir = os.path.join(root, "bulk")
-        generate_binlog(spark, BinlogSpec(n_events=args.table_events, n_keys=n_keys, seed=7)).drop(
-            "delivery_pos", "lsn_bucket"
-        ).write.mode("overwrite").parquet(bulk_dir)
-        micro_dirs = []
-        for e in range(args.micro_epochs):
-            d = os.path.join(root, f"micro{e}")
-            generate_binlog(
-                spark,
-                BinlogSpec(n_events=args.micro_events, n_keys=n_keys, seed=100 + e, lsn_offset=args.table_events * (e + 1)),
-            ).drop("delivery_pos", "lsn_bucket").write.mode("overwrite").parquet(d)
-            micro_dirs.append(d)
+        bulk_dir, micro_dirs = write_feeds(
+            spark, root, args.table_events, args.micro_epochs, args.micro_events
+        )
 
         tdir = os.path.join(root, "table")
         layout = (

@@ -28,37 +28,45 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def write_feeds(
+    spark, root: str, table_events: int, micro_epochs: int, micro_events: int
+) -> tuple[str, list[str]]:
+    """Write the bulk feed (``table_events`` events over ``table_events // 4``
+    keys, at least 1,000) and ``micro_epochs`` microbatch feeds of
+    ``micro_events`` events over the same keys, each above every earlier
+    feed's lsns, as parquet under ``root``. Returns the bulk dir and the
+    micro dirs in epoch order."""
+    from etl_spark.datagen import BinlogSpec, generate_binlog
+
+    n_keys = max(1000, table_events // 4)
+    bulk_dir = os.path.join(root, "bulk")
+    generate_binlog(spark, BinlogSpec(n_events=table_events, n_keys=n_keys, seed=7)).drop(
+        "delivery_pos", "lsn_bucket"
+    ).write.mode("overwrite").parquet(bulk_dir)
+    micro_dirs = []
+    for e in range(micro_epochs):
+        d = os.path.join(root, f"micro{e}")
+        generate_binlog(
+            spark,
+            BinlogSpec(n_events=micro_events, n_keys=n_keys, seed=100 + e, lsn_offset=table_events * (e + 1)),
+        ).drop("delivery_pos", "lsn_bucket").write.mode("overwrite").parquet(d)
+        micro_dirs.append(d)
+    return bulk_dir, micro_dirs
+
+
 def run_ab(spark, table_events: int, micro_epochs: int, micro_events: int) -> dict:
     """Run the A/B on ``spark``: one bulk-seeded table per arm, interleaved
     micro epochs, one full compaction of the MoR table, identical final
     states asserted. Returns per-arm walls, per-epoch times and the
     compaction cost; feed generation is excluded from every timing."""
-    from etl_spark.datagen import BinlogSpec, generate_binlog
     from etl_spark.operators.merge import merge_batch
     from etl_spark.schema import TARGET_SCHEMA
     from etl_spark.table import LakeTable
     from etl_spark.table.maintenance import compact
 
     root = tempfile.mkdtemp(prefix="bench_mor_")
-    n_keys = max(1000, table_events // 4)
     try:
-        bulk_dir = os.path.join(root, "bulk")
-        generate_binlog(spark, BinlogSpec(n_events=table_events, n_keys=n_keys, seed=7)).drop(
-            "delivery_pos", "lsn_bucket"
-        ).write.mode("overwrite").parquet(bulk_dir)
-        micro_dirs = []
-        for e in range(micro_epochs):
-            d = os.path.join(root, f"micro{e}")
-            generate_binlog(
-                spark,
-                BinlogSpec(
-                    n_events=micro_events,
-                    n_keys=n_keys,
-                    seed=100 + e,
-                    lsn_offset=table_events * (e + 1),
-                ),
-            ).drop("delivery_pos", "lsn_bucket").write.mode("overwrite").parquet(d)
-            micro_dirs.append(d)
+        bulk_dir, micro_dirs = write_feeds(spark, root, table_events, micro_epochs, micro_events)
 
         tables = {}
         for arm in ("cow", "mor"):
