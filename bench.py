@@ -5,10 +5,13 @@ the epoch-fenced MERGE path on a deterministic synthetic binlog (datagen.py;
 the 10^10-event design point scaled to the local tier). Secondary: wall time
 of representative operators at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
+Prints ONE JSON line of at most ~1.5k characters:
   {"metric": "cdc_replay_wall_sec", "value": <sec>, "unit": "sec",
-   "queries": {...per-query sec...}, "sf": <sf>,
-   "replay": {"n_events": N, "events_per_sec": X, ...}}
+   "sf": <sf>, "cpus": <n>, "events_per_sec": X,
+   "queries": {...per-query median sec...},
+   "phase_s": {...the headline replay's merge phase seconds...}}
+and writes the full record (per-query stats, the whole replay record and
+the MoR A/B) to BENCH/bench_last.json.
 
 Worker mode (used by tools/run_scaling.py for the N-vs-4N-cores scaling
 evidence): ``python bench.py --replay-only BINLOG_DIR EPOCHS CORES`` replays a
@@ -60,9 +63,13 @@ def replay_binlog(spark, binlog_dir: str, epochs: int, n_events: int) -> dict:
     table_root = tempfile.mkdtemp(prefix="bench_table_")
     table = LakeTable.create_if_absent(spark, table_root, TARGET_SCHEMA)
     t0 = time.time()
+    phases: dict[str, float] = {}
     for e in range(epochs):
         batch = spark.read.parquet(f"{binlog_dir}/epoch={e}")
-        merge_batch(table, batch, epoch=e)
+        r = merge_batch(table, batch, epoch=e)
+        # the merge records its phase seconds in the commit it made
+        for name, sec in table.snapshot(r.snapshot_id)["summary"].get("phase_s", {}).items():
+            phases[name] = round(phases.get(name, 0.0) + sec, 3)
     wall = time.time() - t0
     final_rows = table.read().count()
     shutil.rmtree(table_root, ignore_errors=True)
@@ -72,6 +79,7 @@ def replay_binlog(spark, binlog_dir: str, epochs: int, n_events: int) -> dict:
         "wall_sec": round(wall, 2),
         "events_per_sec": round(n_events / wall, 1),
         "final_rows": final_rows,
+        "phase_s": phases,
     }
 
 
@@ -223,23 +231,26 @@ def main() -> None:
             "warmup": warmup,
         }
 
-    print(
-        json.dumps(
-            {
-                "metric": "cdc_replay_wall_sec",
-                "value": replay["wall_sec"],
-                "unit": "sec",
-                # flat name -> median seconds (the stable cross-round shape;
-                # round-4 ADVICE: keep `queries` flat for consumers)
-                "queries": {k: v["median"] for k, v in qstats.items()},
-                "queries_stats": qstats,
-                "sf": sf,
-                "cpus": cpus,
-                "replay": replay,
-                "mor_ab": mor_ab,
-            }
-        )
-    )
+    record = {
+        "metric": "cdc_replay_wall_sec",
+        "value": replay["wall_sec"],
+        "unit": "sec",
+        "sf": sf,
+        "cpus": cpus,
+        "events_per_sec": replay["events_per_sec"],
+        # flat name -> median seconds (the stable cross-round shape;
+        # round-4 ADVICE: keep `queries` flat for consumers)
+        "queries": {k: v["median"] for k, v in qstats.items()},
+        "phase_s": replay["phase_s"],
+    }
+    # the captured tail of stdout keeps the last 2,000 characters: the line
+    # carries the headline only, and the full record goes to a file
+    full = dict(record, queries_stats=qstats, replay=replay, mor_ab=mor_ab)
+    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
+    os.makedirs(out_dir, exist_ok=True)
+    with open(os.path.join(out_dir, "bench_last.json"), "w") as f:
+        json.dump(full, f, indent=1)
+    print(json.dumps(record))
 
 
 if __name__ == "__main__":

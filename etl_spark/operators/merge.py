@@ -4,29 +4,38 @@ North-rule core: "applied as key-partitioned MERGE upserts ... explicit
 repartitionByRange on the merge key before apply ... exactly-once enforced by
 idempotent epoch-fenced commits keyed on (checkpoint_epoch, partition_id)".
 
-Physical strategy (all built-in Spark ops; the planner lives above Catalyst,
-SURVEY.md §4.2):
+Physical strategy (built-in Spark ops, plus pyarrow on the driver for
+microbatch merge-on-read; the planner lives above Catalyst, SURVEY.md §4.2):
 
 1. **Dedup first** — LWW-reduce the batch so the join touches one row per key
    (the reference's shrink-before-expensive-stage move,
    ``GlobalAiHistoricalTransformationService.scala:45``).
-2. **Plan touched files** — broadcast the snapshot's per-file ``doc_id``
-   min/max stats against the batch keys; only files whose key range contains
-   a batch key are rewritten, everything else is carried forward untouched
-   (Iceberg copy-on-write with manifest pruning). Because apply writes with
-   ``repartitionByRange(doc_id)`` + ``sortWithinPartitions``, files are tight,
-   non-overlapping key ranges, so a batch touching k% of the keyspace rewrites
-   ~k% of files — at 100 TB this is the difference between a merge and a full
-   table rewrite.
-3. **Resolve** — full-outer join (touched-target x batch) on ``doc_id``; a
-   change wins iff ``(commit_lsn, op_seq)`` beats the row's stored hidden
-   ``(_commit_lsn, _op_seq)`` — stale/out-of-order events become no-ops.
-   Winning deletes become persisted tombstone rows (see table.py docstring on
-   why tombstones must be kept for cross-batch ordering).
-4. **Apply** — the table's stage writer (``LakeTable.write_stage``):
-   range- or bucket-partition, ``sortWithinPartitions`` -> Parquet; the
-   per-file stats it observes in the write job itself (rows, min/max,
-   bucket sets) become the manifest entries the next merge plans against.
+2. **Probe and plan** — ONE bounded job ships the deduped batch to the
+   driver as Arrow (payload plus the JVM-computed lineage partition and, on
+   bucket tables, bucket id) under a LIMIT of ``FAST_PATH_MAX_KEYS + 1``
+   rows. A batch under the cap plans on the driver: one bisect per file
+   entry against the sorted keys, or exact bucket-set intersection; only
+   touched files are rewritten, everything else is carried forward
+   (Iceberg copy-on-write with manifest pruning). A bulk batch plans by a
+   broadcast join of the batch keys against the per-file stats instead.
+   Because apply writes with ``repartitionByRange(doc_id)`` +
+   ``sortWithinPartitions``, files are tight, non-overlapping key ranges, so
+   a batch touching k% of the keyspace rewrites ~k% of files.
+3. **Resolve** — a change wins iff ``(commit_lsn, op_seq)`` beats the
+   key's stored hidden ``(_commit_lsn, _op_seq)``: stale/out-of-order
+   events become no-ops, and winning deletes become persisted tombstone
+   rows (see table.py docstring on why tombstones must be kept for
+   cross-batch ordering). Copy-on-write joins the touched target with the
+   batch in Spark. Merge-on-read compares against the per-key max stored
+   version only: a microbatch whose touched files hold at most
+   ``DRIVER_MAX_TOUCHED_ROWS`` rows resolves on the driver with pyarrow
+   (no second job); a larger one runs a Spark semi-join and aggregate.
+4. **Apply** — the table's stage writers: ``LakeTable.write_stage`` range-
+   or bucket-partitions and sorts in Spark, observing per-file stats in the
+   write job itself; ``LakeTable.write_stage_local`` writes a driver-
+   resolved winners table with pyarrow under the same file contract. The
+   per-file stats (rows, min/max, bucket sets) become the manifest entries
+   the next merge plans against.
 5. **Commit** — single atomic snapshot swap carrying fence records
    ``(checkpoint_epoch, partition_id)`` and per-partition lineage (lsn ranges,
    rows upserted/deleted). A replayed epoch is detected via the fence ledger
@@ -50,6 +59,8 @@ import time
 from collections import OrderedDict
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
@@ -68,26 +79,32 @@ from etl_spark.table.table import (
 )
 
 
-# Microbatch fast path: when the deduped batch fits under this many keys, the
-# planning job also ships the key list to the driver (bounded by a LIMIT — a
-# bulk batch returns CAP+1 rows and the driver discards them, so no unbounded
-# collect can ever happen) and the MoR resolve+write then runs as ONE Spark
-# job: the batch keys filter the target's key/version scan as one IN list
-# (no join, so no build job) and the resolve join is forced to sort-merge
-# (both sides are batch-sized; a broadcast hint would spawn a separate
-# build job). Motivation: on back-to-back microbatch epochs the engine-side
-# floor is per-JOB scheduling overhead (~0.25-0.4 s each on the bench VM),
-# not data — 12 jobs/epoch was the round-3 ~3-4.5 s/epoch fixed cost;
-# 2 jobs/epoch is the floor this path holds, for direct merge_batch calls
-# and under the streaming tail's foreachBatch alike (the AQE-off scope lands
-# on the batch's own session; tests/test_plans.py pins both).
+# The keys probe ships the deduped batch to the driver as Arrow under a LIMIT
+# of this many rows + 1: a bulk batch returns CAP+1 rows and the driver
+# discards them, so no unbounded collect can ever happen. A batch under the
+# cap plans its touched files on the driver, and a merge-on-read epoch under
+# DRIVER_MAX_TOUCHED_ROWS then resolves and writes there too, so the probe is
+# the epoch's ONLY Spark job — for direct merge_batch calls and under the
+# streaming tail's foreachBatch alike (the AQE-off scope lands on the batch's
+# own session; tests/test_plans.py pins both). On back-to-back microbatch
+# epochs the engine-side floor is per-job planning and scheduling, not data
+# (Evolution of a Compiling Query Engine, VLDB 2021: short queries are
+# interpreted because compile latency would dominate them).
 FAST_PATH_MAX_KEYS = 50_000
+
+# A merge-on-read epoch under FAST_PATH_MAX_KEYS resolves on the driver when
+# the manifest row total of its touched files is at most this: pyarrow reads
+# their key and version columns (filtered to the batch keys), so the bound
+# keeps that read under the cost of the Spark resolve+write job it replaces
+# (~0.5 s on a 4-core box; sizing run in CHANGES.md). Above it the epoch
+# takes the Spark semi-join arm.
+DRIVER_MAX_TOUCHED_ROWS = 8_000_000
 
 # CoW resolve: a deduped batch of at most this many rows is broadcast into a
 # left-outer join against the touched target (plus a keys-only anti-join for
-# new keys); larger batches take the sort-merge full-outer join. A MoR
-# resolve above FAST_PATH_MAX_KEYS broadcasts its batch keys and per-key
-# versions under the same bound.
+# new keys); larger batches take the sort-merge full-outer join. A Spark MoR
+# resolve broadcasts its batch keys and per-key versions under the same
+# bound.
 # Measured on 400k-row deduped batches (~220 MB with token payloads): the
 # broadcast build/probe costs MORE than the sort-merge shuffle (8.4M-event
 # replay: 41 s vs 25-30 s at 8 cores), so the bound stays at microbatch scale.
@@ -96,25 +113,6 @@ MAX_BROADCAST_ROWS = 100_000
 # merge_mode="auto" picks MoR when the touched slice holds more than this
 # many rows per deduped batch row: CoW would rewrite that many rows per change.
 MOR_REWRITE_RATIO = 8.0
-
-
-def _sql_str(s: str) -> str:
-    """A Spark-SQL string literal for an arbitrary key value, immune to
-    ``spark.sql.parser.escapedStringLiterals`` (round-4 ADVICE). The conf is
-    read lazily at ANALYSIS time (measured: the same F.expr Column evaluates
-    differently depending on the conf when ``.where`` attaches it), so no
-    construction-time conf scope can pin the semantics. Instead the literal
-    itself is made mode-independent: keys free of quotes and backslashes emit
-    as plain single-quoted literals (both parser modes treat them
-    identically); hostile keys emit as UTF-8 hex binary literals CAST to
-    string, which have no escape processing in either mode. Constant folding
-    collapses the casts before OptimizeIn, so the IN-list still becomes an
-    InSet with parquet pushdown either way (plan-probed: PushedFilters
-    ``[In(doc_id, ...)]``), and the common all-plain-keys batch pays zero
-    extra parse cost."""
-    if "'" not in s and "\\" not in s:
-        return "'" + s + "'"
-    return "CAST(X'" + s.encode("utf-8").hex() + "' AS STRING)"
 
 
 # Session confs are process-global per SparkSession, and the engine supports
@@ -280,17 +278,17 @@ def merge_batch(
 
 
 # Plan fragments of the merge that do not depend on the batch — the keys
-# probe, the resolve's join condition, LWW predicate, per-key version
+# probe's extra columns, the resolve's join condition, LWW predicate, per-key version
 # aggregate and output projections, the write's lineage Observation —
 # are immutable Column trees: built once per (table schema, layout, merge
 # mode) and rebound to every batch. Rebuilding them every epoch cost ~1,000
 # py4j round trips, most of a microbatch's driver time (Evolution of a
 # Compiling Query Engine, VLDB 2021: plan construction, not data, dominates
-# short queries). Only the batch-dependent parts — the IN-list and key
-# envelope, the touched-file list, the Observations — are built per
-# epoch. Every resolve projection emits its columns in WRITE order — key,
-# payload, hidden LWW columns, then the lineage-metric columns the write
-# drops — so the write chain needs no re-projection.
+# short queries). Only the batch-dependent parts — the touched-file list
+# and the Observations — are built per epoch. Every resolve projection
+# emits its columns in WRITE order — key, payload, hidden LWW columns, then
+# the lineage-metric columns the write drops — so the write chain needs no
+# re-projection.
 _METRIC_COLS = ("_applied", "_is_delete", "_was_live", "_existed", "_chg_lsn")
 _LAYOUT_FRAGMENTS_CACHE: OrderedDict = OrderedDict()
 _RESOLVE_FRAGMENTS_CACHE: OrderedDict = OrderedDict()
@@ -298,22 +296,22 @@ _RESOLVE_FRAGMENTS_CACHE: OrderedDict = OrderedDict()
 
 def _layout_fragments(n_buckets: int) -> dict:
     """Layout-dependent fragments (``n_buckets`` 0 = range layout): the
-    keys-probe projection and aggregate, and the bulk-planning join's batch
-    column, hit predicate and file-stats schema."""
+    keys probe's layout columns, and the bulk-planning join's batch column,
+    hit predicate and file-stats schema."""
 
     def _build() -> dict:
         doc_id = F.col("doc_id")
-        frags = {"probe_agg": F.collect_list("kb").alias("ks")}
+        frags = {}
         if not n_buckets:
-            frags["probe"] = doc_id.alias("kb")
+            frags["probe"] = ()
             frags["plan_key"] = doc_id
             frags["plan_hit"] = (doc_id >= F.col("min_key")) & (doc_id <= F.col("max_key"))
             frags["plan_schema"] = "path string, min_key string, max_key string"
             return frags
         bucket = bucket_col(n_buckets).alias("_bkt")
-        # bucket layout ships (key, bucket) pairs: the bucket id is a JVM
-        # xxhash64 the driver cannot recompute
-        frags["probe"] = F.struct(doc_id, bucket).alias("kb")
+        # bucket layout ships each key's bucket id: a JVM xxhash64 the
+        # driver cannot recompute
+        frags["probe"] = (bucket,)
         frags["plan_key"] = bucket
         frags["plan_hit"] = F.col("_bkt") == F.col("bucket")
         frags["plan_schema"] = "path string, bucket int"
@@ -454,24 +452,20 @@ def _merge_attempt(
     touched_paths: set[str] = {f["path"] for f in unplannable}
     n_changes: int
 
-    # ---- keys probe: ONE bounded job that decides fast vs bulk planning.
-    # LocalLimit caps every partition at CAP+1 rows, the groupBy().agg
-    # root avoids CollectLimit's incremental scale-up jobs, and because
-    # dedup is one row per key, len(keys) IS n_changes when under the cap.
-    # A bulk batch returns exactly CAP+1 rows and the driver discards them
-    # — no unbounded collect; the probe's full-partition evaluation also
+    # ---- keys probe: ONE bounded job that ships the deduped batch to the
+    # driver as Arrow — payload, lineage partition and (bucket tables)
+    # bucket id — and decides driver vs bulk planning. Because dedup is one
+    # row per key, the row count IS n_changes when under the cap. A bulk
+    # batch returns exactly CAP+1 rows and the driver discards them — no
+    # unbounded collect; the probe's full-partition evaluation also
     # materializes the dedup cache the later jobs reuse.
     with _aqe_off(batch_spark):
-        probe = (
-            dedup.select(lf["probe"])
+        batch = (
+            dedup.select("*", _lineage_metrics(lineage_partitions)[0], *lf["probe"])
             .limit(FAST_PATH_MAX_KEYS + 1)
-            .groupBy()
-            .agg(lf["probe_agg"])
-            .collect()
+            .toArrow()
         )
-    key_rows = probe[0]["ks"] if probe else []
-    batch_keys: list[str] | None = None
-    if len(key_rows) <= FAST_PATH_MAX_KEYS:
+    if batch.num_rows <= FAST_PATH_MAX_KEYS:
         import bisect
 
         def _range_touch(entries: list[dict], keys: list[str]) -> None:
@@ -484,19 +478,18 @@ def _merge_attempt(
                 if i < len(keys) and keys[i] <= f["max_key"]:
                     touched_paths.add(f["path"])
 
+        batch_keys = sorted(batch.column("doc_id").to_pylist())
         if is_bucket:
-            key_bucket = {r["doc_id"]: r["_bkt"] for r in key_rows}
-            batch_buckets = set(key_bucket.values())
-            batch_keys = sorted(key_bucket)
+            batch_buckets = set(batch.column("_bkt").to_pylist())
             for f in plannable:
                 if not batch_buckets.isdisjoint(f["buckets"]):
                     touched_paths.add(f["path"])
             _range_touch(range_plannable, batch_keys)
         else:
-            batch_keys = sorted(key_rows)
             _range_touch(plannable, batch_keys)
         n_changes = len(batch_keys)
     else:
+        batch = None
         # bulk planning: the batch keys join the plannable files' stats
         # (key ranges, or exact (path, bucket) pairs on bucket tables),
         # broadcast
@@ -574,15 +567,20 @@ def _merge_attempt(
     # predate a column rename/add/widen; includes tombstone rows. The full
     # (masked, payload-bearing) target is built ONLY on the CoW path — the
     # MoR resolve reads just the key and version columns
-    # (table.load_key_versions).
+    # (table.load_key_versions, or read_key_versions_local on the driver).
     touched_entries = [f for f in files if f["path"] in touched_paths] if touched_paths else []
+    # a merge-on-read microbatch over a bounded touched slice resolves and
+    # writes on the driver: the probe stays the epoch's only job
+    local = use_mor and batch is not None and touched_rows <= DRIVER_MAX_TOUCHED_ROWS
     c = dedup.alias("c")
-    if use_mor:
-        # MoR fast resolve: the winners file takes its payload from the
-        # CHANGE rows, so the target is needed only to decide who wins —
-        # a column-pruned scan of (doc_id, version columns), never the
-        # token payload. No table payload crosses the wire; write
-        # amplification AND read volume are batch-sized.
+    if local:
+        resolved = None  # resolved and written on the driver below
+    elif use_mor:
+        # MoR resolve: the winners file takes its payload from the CHANGE
+        # rows, so the target is needed only to decide who wins — a
+        # column-pruned scan of (doc_id, version columns), never the token
+        # payload. No table payload crosses the wire; write amplification
+        # AND read volume are batch-sized.
         small_batch = n_changes <= MAX_BROADCAST_ROWS
         # UNMASKED narrow read + per-key version argmax, instead of the
         # file-level mask join: by the LWW invariant a change only lands by
@@ -591,33 +589,12 @@ def _merge_attempt(
         # drops the per-epoch mask scan + broadcast (which grow with the
         # mor backlog) from the hot path; the agg below runs over the
         # batch-keyed slice only (semi-join first), so it's batch-sized.
-        narrow = table.load_key_versions(touched_entries)
-        if batch_keys is not None:
-            # fast path (module comment on FAST_PATH_MAX_KEYS): the key
-            # envelope is a residual predicate PUSHED INTO the parquet scan
-            # (row-group pruning for localized batches) and the batch-key
-            # membership test is an InSet FILTER, not a join — no broadcast
-            # build job, no shuffle; with the forced sort-merge resolve join
-            # below, the whole resolve+write is ONE job. Envelope and IN list
-            # go through ONE sql-parser round-trip: Column.isin ships every
-            # element as its own py4j literal (~3.4 s at 5k keys, measured).
-            # _sql_str emits parser-mode-immune literals, so this parse is
-            # correct even if a caller enables the legacy
-            # escapedStringLiterals mode (also pinned off in build_session)
-            narrow = narrow.where(
-                F.expr(
-                    f"doc_id BETWEEN {_sql_str(batch_keys[0])} AND {_sql_str(batch_keys[-1])}"
-                    " AND doc_id IN (" + ",".join(_sql_str(k) for k in batch_keys) + ")"
-                )
-            )
-        else:
-            keys = dedup.select("doc_id")
-            narrow = narrow.join(F.broadcast(keys) if small_batch else keys, "doc_id", "left_semi")
+        keys = dedup.select("doc_id")
+        narrow = table.load_key_versions(touched_entries).join(
+            F.broadcast(keys) if small_batch else keys, "doc_id", "left_semi"
+        )
         tgtv = narrow.groupBy("doc_id").agg(rf["version_agg"])
-        if batch_keys is not None:
-            t = tgtv.hint("merge").alias("t")
-        else:
-            t = F.broadcast(tgtv.alias("t")) if small_batch else tgtv.alias("t")
+        t = F.broadcast(tgtv.alias("t")) if small_batch else tgtv.alias("t")
         # every row the LWW predicate keeps is applied: the winners select
         # is the write input as-is
         resolved = c.join(t, rf["join"], "left_outer").where(rf["change_wins"]).select(rf["select"])
@@ -658,7 +635,7 @@ def _merge_attempt(
         # file count: ~target_rows_per_file rows each. Bulk batches floor at
         # cluster parallelism so the apply write always uses every core — a
         # single write partition is a serial fraction that caps scaling
-        # (Amdahl). MICRObatches (batch_keys collected) drop the floor: a
+        # (Amdahl). MICRObatches (probed under the cap) drop the floor: a
         # small touched slice must not fragment into `par` near-empty files
         # per epoch — >=~100k rows per file up to `par`, and a genuinely
         # tiny slice writes ONE file, which also removes the range
@@ -670,7 +647,7 @@ def _merge_attempt(
             # one output partition per bucket: a plain hash exchange, no
             # boundary sampler
             n_files = n_buckets
-        elif batch_keys is not None:
+        elif batch is not None:
             n_files = max(1, min(par, est_rows // 100_000), (est_rows // target_rows_per_file) + 1)
         else:
             n_files = max(par, (est_rows // target_rows_per_file) + 1)
@@ -695,35 +672,42 @@ def _merge_attempt(
         # own per-file stats. The lineage metrics ride the same Observation
         # (per-lineage-partition min/max/sums as conditional aggregates over
         # a stable key hash), so no separate job scans the resolved
-        # relation. MoR winners on a bucket table are sized by the batch
-        # like any winners file (a spread microbatch hashes into every
-        # bucket, so n_buckets partitions would fan one batch-sized write
-        # into n_buckets tiny files per epoch, measured 2.5x the epoch
-        # wall); their entries still carry bucket SETS, so bucket pruning
-        # and the bucket-local compaction closure stay exact.
+        # relation. A driver-resolved epoch computes the same metrics in
+        # its pyarrow resolve and writes through write_stage_local. MoR
+        # winners on a bucket table are sized by the batch like any winners
+        # file (a spread microbatch hashes into every bucket, so n_buckets
+        # partitions would fan one batch-sized write into n_buckets tiny
+        # files per epoch, measured 2.5x the epoch wall); their entries
+        # still carry bucket SETS, so bucket pruning and the bucket-local
+        # compaction closure stay exact.
         sid_next = head0 + 1
         stage = table.stage_dir(sid_next)
-        lp, lineage_metrics = _lineage_metrics(lineage_partitions)
-        _t = _lap(phases, "wbuild", _t)
-        # microbatch fast path: AQE's stage-replan loop costs more than it
-        # could ever save on batch-sized shuffles; with it off the
-        # resolve+write runs as one job (FAST_PATH_MAX_KEYS comment)
-        fast = batch_keys is not None and (use_mor or is_bucket or n_files == 1)
-        with _aqe_off(resolved.sparkSession) if fast else contextlib.nullcontext():
-            add_files, m = table.write_stage(
-                resolved,
-                stage,
-                n_files,
-                snap,
-                row_cols=(lp,),
-                metrics=(lineage_metrics,),
-                drop=(*_METRIC_COLS, "_lp"),
-                phases=phases,
-            )
-        m = m["m"].asDict()
+        if local:
+            winners, m = _resolve_local(table, batch, touched_entries)
+            _t = _lap(phases, "resolve", _t)
+            add_files = table.write_stage_local(winners, stage, n_files, snap)
+            _lap(phases, "write", _t)
+        else:
+            lp, lineage_metrics = _lineage_metrics(lineage_partitions)
+            _t = _lap(phases, "wbuild", _t)
+            # microbatches: AQE's stage-replan loop costs more than it could
+            # ever save on batch-sized shuffles
+            fast = batch is not None and (use_mor or is_bucket or n_files == 1)
+            with _aqe_off(resolved.sparkSession) if fast else contextlib.nullcontext():
+                add_files, m = table.write_stage(
+                    resolved,
+                    stage,
+                    n_files,
+                    snap,
+                    row_cols=(lp,),
+                    metrics=(lineage_metrics,),
+                    drop=(*_METRIC_COLS, "_lp"),
+                    phases=phases,
+                )
+            m = m["m"].asDict()
         lineage = []
         for p in range(lineage_partitions):
-            if m[f"lsn_min_{p}"] is None:
+            if m.get(f"lsn_min_{p}") is None:
                 continue
             lineage.append(
                 {
@@ -790,6 +774,64 @@ def _merge_attempt(
         if persisted:
             resolved.unpersist()
         dedup.unpersist()
+
+
+def _resolve_local(table: LakeTable, batch: pa.Table, touched_entries: list[dict]) -> tuple:
+    """The merge-on-read resolve of a probed batch on the driver, with
+    pyarrow. Returns the winners (the probe's columns plus the hidden LWW
+    columns, for ``LakeTable.write_stage_local``) and the lineage metrics
+    keyed like the Spark arm's Observation. Same
+    semantics as the Spark arm: the per-key max stored ``(_commit_lsn,
+    _op_seq, _deleted)`` over an UNMASKED read with nulls lowest (Spark's
+    struct max), the ``change_wins`` predicate of ``_resolve_fragments``
+    under SQL's three-valued logic (a null compare drops the change), and
+    the per-``_lp`` metrics of ``_lineage_metric_exprs``."""
+    version_cols = [HIDDEN_LSN, HIDDEN_SEQ, HIDDEN_DELETED]
+    tv = table.read_key_versions_local(touched_entries, batch.column("doc_id"))
+    tv = tv.sort_by([(k, "ascending") for k in ("doc_id", *version_cols)], null_placement="at_start")
+    if tv.num_rows:
+        # the last row of each key's run is its max version
+        doc = tv.column("doc_id").combine_chunks()
+        last = pa.concat_arrays([pc.not_equal(doc[1:], doc[:-1]), pa.array([True])])
+        tv = tv.take(pc.indices_nonzero(last))
+    pos = pc.index_in(batch.column("doc_id"), value_set=tv.column("doc_id").combine_chunks())
+    v = tv.take(pos)  # a null position (new key) takes a null version
+    existed = pc.is_valid(pos)
+    c_lsn, c_seq = batch.column("commit_lsn"), batch.column("op_seq")
+    v_lsn, v_seq = v.column(HIDDEN_LSN), v.column(HIDDEN_SEQ)
+    wins = pc.or_kleene(
+        pc.or_kleene(pc.invert(existed), pc.greater(c_lsn, v_lsn)),
+        pc.and_kleene(pc.equal(c_lsn, v_lsn), pc.greater_equal(c_seq, v_seq)),
+    )
+    w = batch.append_column("_existed", existed).append_column("_v_del", v.column(HIDDEN_DELETED)).filter(wins)
+    is_delete = pc.equal(w.column("op"), "D")
+    winners = (
+        w.append_column(HIDDEN_LSN, w.column("commit_lsn"))
+        .append_column(HIDDEN_SEQ, w.column("op_seq"))
+        .append_column(HIDDEN_DELETED, is_delete)
+    )
+    was_live = pc.invert(pc.fill_null(w.column("_v_del"), False))
+    dels = pc.and_kleene(pc.and_kleene(is_delete, w.column("_existed")), was_live)
+    per_lp = pa.table(
+        {
+            "_lp": w.column("_lp"),
+            "lsn": w.column("commit_lsn"),
+            "ups": pc.cast(pc.fill_null(pc.equal(is_delete, False), False), pa.int64()),
+            "del": pc.cast(pc.fill_null(dels, False), pa.int64()),
+        }
+    ).group_by("_lp").aggregate([("lsn", "min"), ("lsn", "max"), ("ups", "sum"), ("del", "sum")])
+    m = {}
+    for r in per_lp.to_pylist():
+        p = r["_lp"]
+        m.update(
+            {
+                f"lsn_min_{p}": r["lsn_min"],
+                f"lsn_max_{p}": r["lsn_max"],
+                f"ups_{p}": r["ups_sum"],
+                f"del_{p}": r["del_sum"],
+            }
+        )
+    return winners, m
 
 
 # The lineage Observation — ~65 conditional aggregates — costs hundreds of

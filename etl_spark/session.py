@@ -27,7 +27,9 @@ from pyspark.sql import SparkSession
 # schema/column layouts and hold py4j handles that outlive the SparkSession —
 # a restarted in-process gateway would serve stale JVM references. Keys are
 # prefixed with the live gateway's identity so a gateway restart naturally
-# orphans (and soon evicts) the old entries; the cap keeps the worst case at
+# orphans (and soon evicts) the old entries; each entry holds its gateway
+# object, so a stopped gateway's id() cannot be recycled by a new gateway
+# while an entry still names it. The cap keeps the worst case at
 # EXPR_CACHE_MAX plan fragments per cache.
 EXPR_CACHE_MAX = 64
 _EXPR_CACHE_LOCK = threading.Lock()
@@ -36,16 +38,16 @@ _EXPR_CACHE_LOCK = threading.Lock()
 def expr_cache_get(cache: "OrderedDict", key: tuple, build: Callable):
     from pyspark import SparkContext
 
-    gw = id(SparkContext._gateway) if SparkContext._gateway is not None else 0
-    k = (gw,) + key
+    gateway = SparkContext._gateway
+    k = (id(gateway),) + key
     with _EXPR_CACHE_LOCK:
-        val = cache.get(k)
-        if val is not None:
+        hit = cache.get(k)
+        if hit is not None and hit[0] is gateway:
             cache.move_to_end(k)
-            return val
+            return hit[1]
     val = build()
     with _EXPR_CACHE_LOCK:
-        cache[k] = val
+        cache[k] = (gateway, val)
         while len(cache) > EXPR_CACHE_MAX:
             cache.popitem(last=False)
     return val
@@ -92,10 +94,9 @@ def build_session(
         # paths (only plausible for whole-table bulk reads on object
         # stores) the parallel listing takes over again
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "2048")
-        # the merge fast path builds its IN-list via F.expr; legacy
-        # escapedStringLiterals would change string-literal semantics, so pin
-        # it off here (defense in depth — merge._sql_str also emits
-        # parser-mode-immune literals, so correctness never depends on this)
+        # legacy escapedStringLiterals would change the semantics of every
+        # string literal in SQL text; pin it off (the merge itself passes no
+        # key through the SQL parser)
         .config("spark.sql.parser.escapedStringLiterals", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -70,6 +70,9 @@ import urllib.parse
 import uuid
 from collections import OrderedDict
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from py4j.protocol import Py4JJavaError
@@ -81,6 +84,9 @@ from etl_spark.session import expr_cache_get
 
 HIDDEN_DELETED = "_deleted"
 KEY_VERSION_SCHEMA = f"doc_id string, {HIDDEN_LSN} long, {HIDDEN_SEQ} int, {HIDDEN_DELETED} boolean"
+KEY_VERSION_ARROW_SCHEMA = pa.schema(
+    [("doc_id", pa.string()), (HIDDEN_LSN, pa.int64()), (HIDDEN_SEQ, pa.int32()), (HIDDEN_DELETED, pa.bool_())]
+)
 
 # MoR mask side of the read join rides a FORCED broadcast up to this many
 # keys. Sized by the JVM broadcast hash-relation footprint (~100-150 B/row
@@ -701,6 +707,16 @@ class LakeTable:
             *sorted(f["path"] for f in file_entries)
         )
 
+    def read_key_versions_local(self, file_entries: list[dict], keys) -> pa.Table:
+        """``load_key_versions`` on the driver, restricted to ``keys``: the
+        same four columns of every physical row of the given files whose
+        doc_id is in ``keys``, read with pyarrow (a column a file lacks
+        reads null)."""
+        dataset = pads.dataset(
+            sorted(f["path"] for f in file_entries), schema=KEY_VERSION_ARROW_SCHEMA, format="parquet"
+        )
+        return dataset.to_table(filter=pads.field("doc_id").isin(keys))
+
     def _with_file_seq(self, df: DataFrame, entries: list[dict], col: str) -> DataFrame:
         """Tag each row with its file's commit order: basename(input_file) ->
         added_at. Below MAX_LITERAL_SEQ_MAP entries the mapping is a literal
@@ -971,6 +987,52 @@ class LakeTable:
             phases["write"] = round(t1 - t0, 4)
             phases["stats"] = round(time.perf_counter() - t1, 4)
         return add_files, m
+
+    def write_stage_local(self, tbl: pa.Table, stage: str, n_out: int, snap: dict) -> list[dict]:
+        """``write_stage`` for rows already on the driver: write ``tbl`` into
+        ``stage`` with pyarrow as at most ``n_out`` doc_id-sorted snappy
+        files and return their manifest entries, under the same file
+        contract — ``_physical_schema_at`` column names and types, the
+        snapshot's schema_version, and per-file rows, min/max doc_id and, on
+        bucket tables, the sorted bucket set. The bucket ids come from
+        ``tbl``'s ``_bkt`` column (the JVM hash, computed by the caller's
+        Spark job). Range tables split the sorted rows into contiguous
+        slices; bucket tables put bucket b in file ``b % n_out``, so every
+        bucket lands wholly inside one file. An empty ``tbl`` writes
+        nothing. The Arrow schema is not embedded in the files: Spark reads
+        them by name through the explicit physical schema."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        version = snap["schema_version"]
+        schema = to_arrow_schema(self._physical_schema_at(version))
+        n_buckets = layout_buckets(snap)
+        tbl = tbl.sort_by("doc_id")
+        if n_buckets:
+            file_of = pa.array(tbl.column("_bkt").to_numpy() % n_out)
+            parts = [tbl.filter(pc.equal(file_of, i)) for i in range(n_out)]
+        else:
+            step = -(-tbl.num_rows // n_out)
+            parts = [tbl.slice(i * step, step) for i in range(n_out)]
+        tag = uuid.uuid4()
+        add_files = []
+        for i, part in enumerate(parts):
+            if not part.num_rows:
+                continue
+            os.makedirs(stage, exist_ok=True)
+            path = os.path.abspath(os.path.join(stage, f"part-{i:05d}-{tag}-c000.snappy.parquet"))
+            pq.write_table(part.select(schema.names).cast(schema), path, compression="snappy", store_schema=False)
+            doc = part.column("doc_id")
+            entry = {
+                "path": path,
+                "rows": part.num_rows,
+                "min_key": doc[0].as_py(),
+                "max_key": doc[-1].as_py(),
+                "schema_version": version,
+            }
+            if n_buckets:
+                entry["buckets"] = sorted(set(part.column("_bkt").to_pylist()))
+            add_files.append(entry)
+        return add_files
 
     def _recover_head(self) -> int:
         """Roll HEAD forward over fully-written commit files left by a

@@ -4,14 +4,18 @@ Real CDC feeds arrive as JSON envelopes, not clean parquet. Pinned here:
 
 - exact round-trip: canonical feed -> Debezium envelopes -> normalize ==
   original rows (token arrays included);
-- the streaming tail over a JSONL binlog (both envelope shapes) produces a
-  final state equal to the pandas oracle, exactly-once fences intact, and
-  a rerun no-ops on the checkpoint;
+- the streaming tail over a JSONL binlog (both envelope shapes, and the
+  Debezium files gzipped) produces a final state equal to the pandas
+  oracle, exactly-once fences intact, and a rerun no-ops on the checkpoint;
 - malformed lines are dropped, never crash the stream;
 - the normalizers are pure Catalyst — no Python in the row path.
 """
 
 from __future__ import annotations
+
+import gzip
+import os
+import shutil
 
 import pyspark.sql.functions as F
 
@@ -73,9 +77,26 @@ def test_normalizers_are_pure_catalyst(spark):
     assert_vectorized_plan(normalize_flat_json(flat))
 
 
-def _stream_replay_matches_oracle(spark, tmp_path, envelope, feed_format):
+def _gzip_feed_files(binlog: str) -> None:
+    """Replace every feed file under ``binlog`` with its ``.gz`` copy (the
+    text source decompresses by extension) and drop the checksum files."""
+    for d, _, names in os.walk(binlog):
+        for name in names:
+            path = os.path.join(d, name)
+            if name.endswith(".crc"):
+                os.remove(path)
+            elif name.endswith(".txt"):
+                with open(path, "rb") as src, gzip.open(path + ".gz", "wb") as dst:
+                    shutil.copyfileobj(src, dst)
+                os.remove(path)
+
+
+def _stream_replay_matches_oracle(spark, tmp_path, envelope, feed_format, gzipped=False):
     binlog = str(tmp_path / "binlog")
     write_binlog_json(spark, SPEC, binlog, envelope=envelope)
+    if gzipped:
+        _gzip_feed_files(binlog)
+        assert any(n.endswith(".txt.gz") for _, _, names in os.walk(binlog) for n in names)
     root, ckpt = str(tmp_path / "table"), str(tmp_path / "ckpt")
     report = run_stream_replay(
         spark,
@@ -108,6 +129,10 @@ def _stream_replay_matches_oracle(spark, tmp_path, envelope, feed_format):
 
 def test_stream_replay_from_debezium_jsonl(spark, tmp_path):
     _stream_replay_matches_oracle(spark, tmp_path, "debezium", "debezium-json")
+
+
+def test_stream_replay_from_gzipped_debezium_jsonl(spark, tmp_path):
+    _stream_replay_matches_oracle(spark, tmp_path, "debezium", "debezium-json", gzipped=True)
 
 
 def test_stream_replay_from_flat_jsonl(spark, tmp_path):

@@ -108,7 +108,9 @@ def test_auto_mode_picks_mor_for_microbatch_and_cow_for_bulk(spark, tmp_table_di
 def test_merge_commits_record_phase_seconds(spark, tmp_table_dir):
     """Every merge commit carries the wall seconds of its phases in its
     summary (tools/bench_epoch.py reads them back from the table), in both
-    modes."""
+    modes: a Spark-written commit records plan, wbuild, write and stats; a
+    microbatch MoR commit, resolved and written on the driver, records
+    plan, resolve and write."""
     table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA)
     r0 = merge_batch(table, _bulk(spark, 2000), epoch=0)
     r1 = merge_batch(
@@ -118,7 +120,8 @@ def test_merge_commits_record_phase_seconds(spark, tmp_table_dir):
     for r in (r0, r1):
         summary = table.snapshot(r.snapshot_id)["summary"]
         assert summary["mode"] == r.mode
-        assert set(summary["phase_s"]) == {"plan", "wbuild", "write", "stats"}
+        phases = {"cow": {"plan", "wbuild", "write", "stats"}, "mor": {"plan", "resolve", "write"}}
+        assert set(summary["phase_s"]) == phases[r.mode]
         assert all(isinstance(v, float) and v >= 0 for v in summary["phase_s"].values())
 
 
@@ -392,3 +395,165 @@ def test_mor_schema_evolution_and_rename(spark, tmp_table_dir):
     table.rename_column("value_cents", "amount_cents")
     got = {r["doc_id"]: (r["amount_cents"], r["extra"]) for r in table.read().where("doc_id in ('k00007','k00008')").collect()}
     assert got == {"k00007": (1, 42), "k00008": (80, None)}
+
+
+def _equivalence_steps(seed: int) -> list:
+    """Random epochs for the driver/Spark MoR equivalence test: ("batch",
+    columns, rows) merges and ("schema", kwargs) evolution steps. A model of
+    the stored (lsn, seq) per key shapes the events: fresh updates, deletes,
+    deletes of absent keys, re-inserts after a delete, stale events (a lower
+    lsn; an equal lsn with a lower, the same or a higher seq) and one
+    all-stale batch."""
+    import random
+
+    rng = random.Random(seed)
+    keys = [f"k{i:03d}" for i in range(40)]
+    stored: dict[str, tuple[int, int]] = {}
+    deleted: set[str] = set()
+    cols = ["value_cents", "source"]
+    lsn = 1_000
+    steps = []
+
+    def fresh(k, op="U"):
+        nonlocal lsn
+        lsn += rng.randint(1, 5)
+        return (k, lsn, rng.randint(0, 2), op)
+
+    def stale(k):
+        s_lsn, s_seq = stored[k]
+        kind = rng.choice(["lower_lsn", "lower_seq", "same_version", "higher_seq"])
+        if kind == "lower_lsn":
+            return (k, s_lsn - rng.randint(1, 3), rng.randint(0, 5), "U")
+        if kind == "lower_seq" and s_seq > 0:
+            return (k, s_lsn, s_seq - 1, "U")
+        if kind == "same_version":
+            return (k, s_lsn, s_seq, "U")  # a replayed version: wins (>=)
+        return (k, s_lsn, s_seq + 1, rng.choice(["U", "D"]))  # equal lsn, higher seq: wins
+
+    for e in range(9):
+        if e == 3:
+            steps.append(("schema", {"add_columns": [("score", "int")]}))
+            cols = cols + ["score"]
+        elif e == 5:
+            steps.append(("schema", {"widen": {"score": "bigint"}}))
+        elif e == 6:
+            steps.append(("schema", {"renames": {"source": "origin"}}))
+            cols = ["value_cents", "origin", "score"]
+        known = sorted(stored)
+        if e == 0:
+            events = [fresh(k) for k in keys[:24]]
+        elif e == 7:
+            events = [(k, stored[k][0] - 1, 0, "U") for k in rng.sample(known, 6)]  # all stale
+        else:
+            events = [fresh(k) for k in rng.sample(keys, 5)]
+            events += [fresh(k, "D") for k in rng.sample(known, 2)]
+            events += [fresh(f"x{e:02d}", "D")]  # delete of an absent key
+            events += [fresh(k) for k in sorted(deleted)[:2]]  # re-insert after a delete
+            events += [stale(k) for k in rng.sample(known, 4)]
+        by_key: dict[str, tuple] = {}
+        for ev in events:
+            if ev[0] not in by_key or ev[1:3] > by_key[ev[0]][1:3]:
+                by_key[ev[0]] = ev
+        rows = []
+        for k, ev_lsn, seq, op in by_key.values():
+            payload = {"value_cents": None, "source": None, "origin": None, "score": None}
+            if op == "U":
+                payload = {"value_cents": ev_lsn * 10, "source": f"s{e}", "origin": f"o{e}", "score": seq}
+            rows.append((k, ev_lsn, seq, op, *(payload[c] for c in cols)))
+            if k not in stored or (ev_lsn, seq) >= stored[k]:
+                stored[k] = (ev_lsn, seq)
+                (deleted.add if op == "D" else deleted.discard)(k)
+        steps.append(("batch", list(cols), rows))
+    return steps
+
+
+_EQUIV_TYPES = {"value_cents": "long", "source": "string", "origin": "string", "score": "int"}
+
+
+def _equivalence_run(spark, root: str, layout: str, steps: list) -> dict:
+    """Apply ``steps`` to a fresh table; return every MergeResult, every
+    commit's entries (paths aside), lineage and fences, and the final rows
+    with hidden columns and tombstones."""
+    from etl_spark.table.maintenance import migrate_layout_staged
+
+    bucket4 = {"type": "bucket", "n_buckets": 4}
+    table = LakeTable.create_if_absent(spark, root, SCHEMA, layout=bucket4 if layout == "bucket" else None)
+    results = []
+    epoch = 0
+    for step in steps:
+        if step[0] == "schema":
+            table.update_schema(**step[1])
+            continue
+        _, cols, rows = step
+        types = dict(_EQUIV_TYPES, score="bigint" if "origin" in cols else "int")
+        ddl = ", ".join(["doc_id string, commit_lsn long, op_seq int, op string"] + [f"{c} {types[c]}" for c in cols])
+        results.append(merge_batch(table, spark.createDataFrame(rows, ddl), epoch=epoch, merge_mode="mor"))
+        epoch += 1
+        if layout == "half_migrated" and epoch == 2:
+            # two range files and a winners file; rewrite one into buckets
+            migrate_layout_staged(table, bucket4, max_files_per_stage=1, max_stages=1)
+    if layout == "half_migrated":
+        assert any(f.get("layout_stale") for f in table.files())
+    commits = [
+        (
+            [{k: v for k, v in f.items() if k != "path"} for f in s["files"]],
+            s["lineage"],
+            s["fences"],
+            s["summary"].get("mode"),
+        )
+        for s in table.snapshots()
+    ]
+    rows = sorted(map(tuple, table.read(include_hidden=True, include_deleted=True).collect()), key=repr)
+    modes = [set(s["summary"].get("phase_s", {})) for s in table.snapshots() if s["summary"].get("mode") == "mor"]
+    return {"results": results, "commits": commits, "rows": rows, "mor_phases": modes}
+
+
+@pytest.mark.parametrize("layout,seed", [("range", 7), ("bucket", 8), ("half_migrated", 9)])
+def test_driver_mor_resolve_matches_spark_arm(spark, tmp_table_dir, monkeypatch, layout, seed):
+    """Random epochs commit the same rows, manifest entries (paths aside),
+    lineage, fences and MergeResults through the driver-side MoR resolve
+    and write as through the Spark MoR arm, which a touched-rows bound of 0
+    forces."""
+    import etl_spark.operators.merge as merge
+
+    steps = _equivalence_steps(seed)
+    driver = _equivalence_run(spark, f"{tmp_table_dir}/driver", layout, steps)
+    with monkeypatch.context() as mp:
+        mp.setattr(merge, "DRIVER_MAX_TOUCHED_ROWS", 0)
+        spark_arm = _equivalence_run(spark, f"{tmp_table_dir}/spark", layout, steps)
+    assert driver["mor_phases"] and all(p == {"plan", "resolve", "write"} for p in driver["mor_phases"])
+    assert spark_arm["mor_phases"] and all("wbuild" in p for p in spark_arm["mor_phases"])
+    assert driver["results"] == spark_arm["results"]
+    for i, (a, b) in enumerate(zip(driver["commits"], spark_arm["commits"])):
+        assert a == b, f"commit {i} differs"
+    assert len(driver["commits"]) == len(spark_arm["commits"])
+    assert driver["rows"] == spark_arm["rows"]
+    # the all-stale epoch applied nothing and fenced partition -1
+    stale = driver["results"][7]
+    assert (stale.rows_upserted, stale.rows_deleted, stale.files_added) == (0, 0, 0)
+    assert [f["partition_id"] for f in driver["commits"][stale.snapshot_id][2]] == [-1]
+
+
+@pytest.mark.parametrize("layout", [None, {"type": "bucket", "n_buckets": 4}], ids=["range", "bucket"])
+def test_driver_winners_write_splits_files_by_target_rows(spark, tmp_table_dir, layout):
+    """A driver-written winners set larger than ``target_rows_per_file``
+    splits into ``n_changes // target_rows_per_file + 1`` files at most, each
+    entry's rows, key range and bucket set matching the file it names, and
+    every bucket wholly inside one file."""
+    import pyarrow.parquet as pq
+
+    table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA, layout=layout)
+    merge_batch(table, _bulk(spark, 200), epoch=0)
+    upd = _batch(spark, [(f"k{i:05d}", 1_000 + i, 0, "U", -i, "u") for i in range(0, 200, 8)])
+    r = merge_batch(table, upd, epoch=1, merge_mode="mor", target_rows_per_file=10)
+    snap = table.snapshot(r.snapshot_id)
+    assert r.mode == "mor" and "resolve" in snap["summary"]["phase_s"]
+    added = [f for f in snap["files"] if f["added_at"] == r.snapshot_id]
+    assert 1 < len(added) <= 25 // 10 + 1 and sum(f["rows"] for f in added) == 25
+    seen_buckets: list[int] = []
+    for f in added:
+        keys = pq.read_table(f["path"], columns=["doc_id"]).column("doc_id").to_pylist()
+        assert keys == sorted(keys) and (len(keys), keys[0], keys[-1]) == (f["rows"], f["min_key"], f["max_key"])
+        seen_buckets += f.get("buckets", [])
+    assert len(seen_buckets) == len(set(seen_buckets))
+    assert _state(table)["k00008"] == (-8, "u") and table.read().count() == 200

@@ -130,11 +130,12 @@ def test_tokens_transforms_stay_codegen(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_microbatch_mor_epoch_runs_exactly_two_jobs(spark, tmp_table_dir):
+def test_microbatch_mor_epoch_runs_exactly_one_job(spark, tmp_table_dir):
     """The microbatch fast path's defining property, asserted mechanically:
-    a MoR microbatch epoch launches exactly 2 Spark jobs — the bounded keys
-    probe and the fused resolve+write — independent of table size. Every
-    extra job is per-epoch scheduling tax (~0.25-0.4 s each on this class of
+    a MoR microbatch epoch launches exactly 1 Spark job — the bounded probe
+    that ships the deduped batch to the driver, where the resolve and the
+    winners write run with pyarrow — independent of table size. Every extra
+    job is per-epoch scheduling tax (~0.25-0.4 s each on this class of
     hardware); 12 jobs/epoch was the round-3 fixed-cost floor."""
     import pyspark.sql.functions as F
 
@@ -169,16 +170,16 @@ def test_microbatch_mor_epoch_runs_exactly_two_jobs(spark, tmp_table_dir):
     r = merge_batch(table, micro, epoch=1, merge_mode="mor")
     n1 = len(tracker.getJobIdsForGroup(None))
     assert r.mode == "mor"
-    assert n1 - n0 == 2, f"MoR microbatch epoch launched {n1 - n0} jobs, expected 2"
+    assert n1 - n0 == 1, f"MoR microbatch epoch launched {n1 - n0} jobs, expected 1"
 
 
-def test_stream_tail_mor_epochs_run_exactly_two_jobs(spark, tmp_table_dir, monkeypatch):
-    """The same 2-job floor under the streaming tail. foreachBatch hands
+def test_stream_tail_mor_epochs_run_exactly_one_job(spark, tmp_table_dir, monkeypatch):
+    """The same 1-job floor under the streaming tail. foreachBatch hands
     merge_batch a DataFrame bound to the query's CLONED session, where the
-    persist, the probe and the write execute — so the fast path's AQE-off
-    scope must land on that session, not on table.spark (scoped on the
-    wrong session, every epoch ran 7 jobs). Jobs are counted in the
-    stream's job group, which the foreachBatch callback thread carries."""
+    persist and the probe execute — so the fast path's AQE-off scope must
+    land on that session, not on table.spark (scoped on the wrong session,
+    every epoch ran 7 jobs). Jobs are counted in the stream's job group,
+    which the foreachBatch callback thread carries."""
     import os
 
     import pyspark.sql.functions as F
@@ -222,7 +223,7 @@ def test_stream_tail_mor_epochs_run_exactly_two_jobs(spark, tmp_table_dir, monke
         spark, binlog, table.root, os.path.join(tmp_table_dir, "ckpt"), max_files_per_trigger=1
     )
     assert len(report.batches) == 3 and modes == ["mor"] * 3, modes
-    assert jobs == [2, 2, 2], f"streamed MoR epochs launched {jobs} jobs, expected 2 each"
+    assert jobs == [1, 1, 1], f"streamed MoR epochs launched {jobs} jobs, expected 1 each"
     # the scope is restored on the stream's session and untouched on ours
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 

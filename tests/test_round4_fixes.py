@@ -177,25 +177,29 @@ def test_mor_backlog_100_epochs_read_cost_stays_bounded(spark, tmp_table_dir):
 
 
 def test_fast_path_survives_hostile_doc_ids(spark, tmp_table_dir):
-    """The microbatch fast path ships batch keys through ONE SQL-parser
-    round-trip (F.expr IN-list) — keys containing quotes, backslashes,
-    commas, or non-ASCII must round-trip exactly (merge._sql_str)."""
+    """The microbatch fast path ships batch keys to the driver as Arrow and
+    matches them against the target's keys with pyarrow — keys containing
+    quotes, backslashes, commas, or non-ASCII must round-trip exactly, on
+    either layout (the bucket layout also ships each key's JVM bucket id)."""
     hostile = ["k'quote", 'k"dquote', "k\\back\\slash", "k,comma", "kümlaut中", "k%like_"]
-    table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA)
-    seed = _batch(
-        spark, [(k, i, 0, "U", 100 + i, "s") for i, k in enumerate(hostile)] + [("plain", 50, 0, "U", 1, "s")]
-    )
-    merge_batch(table, seed, epoch=0)
-    # forced-MoR microbatch over the hostile keys exercises the InSet
-    # fast-path scan filter end-to-end
-    upd = _batch(spark, [(k, 1000 + i, 0, "U", 900 + i, "m") for i, k in enumerate(hostile)])
-    r = merge_batch(table, upd, epoch=1, merge_mode="mor")
-    assert r.mode == "mor" and r.rows_upserted == len(hostile)
-    st = _state(table)
-    for i, k in enumerate(hostile):
-        assert st[k] == 900 + i, f"key {k!r} lost through the fast path"
-    assert st["plain"] == 1
-    assert len(st) == len(hostile) + 1
+    for layout in (None, {"type": "bucket", "n_buckets": 4}):
+        root = f"{tmp_table_dir}/{'bucket' if layout else 'range'}"
+        table = LakeTable.create_if_absent(spark, root, SCHEMA, layout=layout)
+        seed = _batch(
+            spark,
+            [(k, i, 0, "U", 100 + i, "s") for i, k in enumerate(hostile)] + [("plain", 50, 0, "U", 1, "s")],
+        )
+        merge_batch(table, seed, epoch=0)
+        # forced-MoR microbatch over the hostile keys exercises the driver
+        # resolve's key match end-to-end
+        upd = _batch(spark, [(k, 1000 + i, 0, "U", 900 + i, "m") for i, k in enumerate(hostile)])
+        r = merge_batch(table, upd, epoch=1, merge_mode="mor")
+        assert r.mode == "mor" and r.rows_upserted == len(hostile)
+        st = _state(table)
+        for i, k in enumerate(hostile):
+            assert st[k] == 900 + i, f"key {k!r} lost through the fast path ({layout})"
+        assert st["plain"] == 1
+        assert len(st) == len(hostile) + 1
 
 
 def test_cow_removing_last_mor_file_sheds_flag_when_nothing_overlaps(spark, tmp_table_dir):

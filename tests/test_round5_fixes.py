@@ -41,13 +41,13 @@ def _batch(spark, rows):
 
 def test_fast_path_immune_to_escaped_string_literals_conf(spark, tmp_table_dir):
     """ADVICE r4 (merge.py fast path): with legacy escapedStringLiterals=true
-    the old C-style escaping in _sql_str silently mis-matched backslash/quote
-    keys — a missed key is treated as absent from the target, so a STALE
-    event (lower lsn than the stored row) incorrectly WINS as a fresh insert
-    (reproduced pre-fix: MoR path returned 777 for both hostile keys). The
-    conf is read lazily at analysis time, so the fix makes the literals
-    themselves parser-mode-immune (plain quoting for clean keys, hex binary
-    CAST for hostile ones)."""
+    a fast path that built its key filter as SQL text with C-style escaping
+    silently mis-matched backslash/quote keys — a missed key is treated as
+    absent from the target, so a STALE event (lower lsn than the stored row)
+    incorrectly WINS as a fresh insert (reproduced then: the MoR path
+    returned 777 for both hostile keys). The fast path now matches keys on
+    the driver with pyarrow, so no key ever passes through the SQL parser;
+    the conf must not change the outcome in either mode."""
     hostile = ["k'quote", "k\\back\\slash", "k\\'both", "plain"]
     for mode in ("cow", "mor"):
         root = tmp_table_dir + "_" + mode
