@@ -43,9 +43,9 @@ ORDER_COLS = ("commit_lsn", "op_seq")
 # the max_by aggregate + unpack projection are built once per column layout
 # and reused across epochs — a long microbatch replay otherwise pays the
 # ~50 py4j round-trips of rebuilding them on every merge (driver serial
-# fraction, tools/bench_epoch.py --phases). Bounded gateway-scoped LRU
-# (round-4 ADVICE) so schema churn can't grow it and a gateway restart
-# orphans stale handles.
+# fraction, part of the "plan" seconds in each merge commit's
+# summary["phase_s"]). Bounded gateway-scoped LRU (round-4 ADVICE) so
+# schema churn can't grow it and a gateway restart orphans stale handles.
 _LWW_EXPRS_CACHE: OrderedDict = OrderedDict()
 
 

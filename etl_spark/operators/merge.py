@@ -4,46 +4,38 @@ North-rule core: "applied as key-partitioned MERGE upserts ... explicit
 repartitionByRange on the merge key before apply ... exactly-once enforced by
 idempotent epoch-fenced commits keyed on (checkpoint_epoch, partition_id)".
 
-Physical strategy (built-in Spark ops, plus pyarrow on the driver for
-microbatch merge-on-read; the planner lives above Catalyst, SURVEY.md §4.2):
+One epoch runs three stages, retried as a whole on a commit conflict:
 
-1. **Dedup first** — LWW-reduce the batch so the join touches one row per key
-   (the reference's shrink-before-expensive-stage move,
-   ``GlobalAiHistoricalTransformationService.scala:45``).
-2. **Probe and plan** — ONE bounded job ships the deduped batch to the
-   driver as Arrow (payload plus the JVM-computed lineage partition and, on
-   bucket tables, bucket id) under a LIMIT of ``FAST_PATH_MAX_KEYS + 1``
-   rows. A batch under the cap plans on the driver: one bisect per file
-   entry against the sorted keys, or exact bucket-set intersection; only
-   touched files are rewritten, everything else is carried forward
-   (Iceberg copy-on-write with manifest pruning). A bulk batch plans by a
-   broadcast join of the batch keys against the per-file stats instead.
-   Because apply writes with ``repartitionByRange(doc_id)`` +
-   ``sortWithinPartitions``, files are tight, non-overlapping key ranges, so
-   a batch touching k% of the keyspace rewrites ~k% of files.
-3. **Resolve** — a change wins iff ``(commit_lsn, op_seq)`` beats the
-   key's stored hidden ``(_commit_lsn, _op_seq)``: stale/out-of-order
-   events become no-ops, and winning deletes become persisted tombstone
-   rows (see table.py docstring on why tombstones must be kept for
-   cross-batch ordering). Copy-on-write joins the touched target with the
-   batch in Spark. Merge-on-read compares against the per-key max stored
-   version only: a microbatch whose touched files hold at most
-   ``DRIVER_MAX_TOUCHED_ROWS`` rows resolves on the driver with pyarrow
-   (no second job); a larger one runs a Spark semi-join and aggregate.
-4. **Apply** — the table's stage writers: ``LakeTable.write_stage`` range-
-   or bucket-partitions and sorts in Spark, observing per-file stats in the
-   write job itself; ``LakeTable.write_stage_local`` writes a driver-
-   resolved winners table with pyarrow under the same file contract. The
-   per-file stats (rows, min/max, bucket sets) become the manifest entries
-   the next merge plans against.
-5. **Commit** — single atomic snapshot swap carrying fence records
-   ``(checkpoint_epoch, partition_id)`` and per-partition lineage (lsn ranges,
-   rows upserted/deleted). A replayed epoch is detected via the fence ledger
-   and no-ops (forced double-apply test). The whole attempt is pinned to the
-   snapshot it planned against (``expect_parent``); if a concurrent writer
-   advanced HEAD in between, the commit refuses and the merge REPLANS against
-   the new head and retries — the optimistic-concurrency loop every real lake
-   writer (Iceberg/Delta) runs.
+1. **Plan** (``_plan``) — LWW-dedup the batch first, so the join touches
+   one row per key (the reference's shrink-before-expensive-stage move,
+   ``GlobalAiHistoricalTransformationService.scala:45``), and persist it.
+   ONE bounded job ships the deduped batch to the driver as Arrow under a
+   LIMIT of ``FAST_PATH_MAX_KEYS + 1`` rows. A batch under the cap plans on
+   the driver (one bisect per file entry against the sorted keys, or exact
+   bucket-set intersection); a bulk batch plans by a broadcast join of its
+   keys against the per-file stats. Only touched files are rewritten, the
+   rest carried forward (Iceberg copy-on-write with manifest pruning); as
+   writes are range-partitioned and sorted on doc_id, a batch touching k%
+   of the keyspace rewrites ~k% of files. The plan then picks copy-on-write
+   or merge-on-read and sizes the write.
+2. **Apply** — a change wins iff ``(commit_lsn, op_seq)`` beats the key's
+   stored hidden ``(_commit_lsn, _op_seq)``: stale/out-of-order events
+   become no-ops, and winning deletes become persisted tombstone rows
+   (table.py docstring). ``_apply_local`` resolves a merge-on-read
+   microbatch over at most ``DRIVER_MAX_TOUCHED_ROWS`` touched rows with
+   pyarrow and writes with ``LakeTable.write_stage_local`` (no second job).
+   ``_apply_spark`` joins the touched target with the batch (copy-on-write)
+   or semi-joins the key versions (a larger merge-on-read epoch) and writes
+   with ``LakeTable.write_stage``, which observes the per-file stats and
+   the lineage metrics in the write job itself. The per-file stats become
+   the manifest entries the next merge plans against.
+3. **Commit** (``_commit``) — one atomic snapshot swap carrying fence
+   records ``(checkpoint_epoch, partition_id)`` and per-partition lineage;
+   an epoch that applied nothing still fences itself. A replayed epoch is
+   detected via the fence ledger and no-ops. The attempt is pinned to the
+   snapshot it planned against (``expect_parent``): if a concurrent writer
+   advanced HEAD, the commit refuses and the merge REPLANS against the new
+   head — the optimistic-concurrency loop of Iceberg/Delta writers.
 
 AQE's skew-join handling covers hot-key skew in the resolve join; the dedup
 stage is skew-proof by construction (partial aggregation / salted two-phase,
@@ -52,6 +44,7 @@ see operators/dedup.py).
 
 from __future__ import annotations
 
+import bisect
 import contextlib
 import shutil
 import threading
@@ -62,7 +55,7 @@ from dataclasses import dataclass
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql.types import StructType
 
 from etl_spark.operators.dedup import lww_dedup, lww_dedup_salted
@@ -262,16 +255,33 @@ def merge_batch(
         # been a replay of THIS epoch
         if table.is_fenced(epoch):
             return MergeResult(table.head_id(), False, 0, 0, 0, 0)
+        phases: dict[str, float] = {}
         try:
-            return _merge_attempt(
-                table,
-                changes,
-                epoch,
-                lineage_partitions,
-                target_rows_per_file,
-                use_salted_dedup,
-                merge_mode,
-            )
+            # one cleanup scope from the dedup persist on: ANY failure (a
+            # probe or planning job, a missing file, the write, a commit
+            # conflict) unpersists the batch and drops the staged files;
+            # gc_orphans covers only hard crashes that skip this frame
+            with contextlib.ExitStack() as cleanup:
+                plan = _plan(
+                    table,
+                    changes,
+                    epoch,
+                    lineage_partitions,
+                    target_rows_per_file,
+                    use_salted_dedup,
+                    merge_mode,
+                    cleanup,
+                    phases,
+                )
+                add_files, lineage = [], []
+                if plan.mode != "empty":
+                    stage = table.stage_dir(plan.snap["snapshot_id"] + 1)
+                    # exit callback: drops the stage iff the block raised
+                    # (its None/False return never swallows the error)
+                    cleanup.push(lambda exc_type, *_: exc_type and shutil.rmtree(stage, ignore_errors=True))
+                    apply = _apply_local if plan.local else _apply_spark
+                    add_files, lineage = apply(table, plan, stage, phases)
+                return _commit(table, plan, add_files, lineage, phases)
         except TableCommitError as e:
             last_err = e
     raise last_err
@@ -395,7 +405,26 @@ def _resolve_fragments(schema: StructType, mode: str) -> dict:
     return expr_cache_get(_RESOLVE_FRAGMENTS_CACHE, (schema.json(), mode), _build)
 
 
-def _merge_attempt(
+@dataclass
+class EpochPlan:
+    """What ``_plan`` decided for one merge attempt; the apply arms and
+    ``_commit`` read it and nothing else of the batch."""
+
+    epoch: int
+    snap: dict  # the snapshot the whole attempt is pinned to
+    schema: StructType
+    n_buckets: int  # 0 = range layout
+    dedup: DataFrame  # the persisted LWW-deduped batch
+    batch: pa.Table | None  # the probed batch on the driver; None for a bulk batch
+    touched: list[dict]  # the manifest entries the batch may hit
+    n_changes: int
+    mode: str  # 'empty', 'cow' or 'mor'
+    local: bool  # resolve and write on the driver (_apply_local)
+    n_files: int  # the apply write's file count
+    lineage_partitions: int
+
+
+def _plan(
     table: LakeTable,
     changes: DataFrame,
     epoch: int,
@@ -403,20 +432,22 @@ def _merge_attempt(
     target_rows_per_file: int,
     use_salted_dedup: bool,
     merge_mode: str,
-) -> MergeResult:
+    cleanup: contextlib.ExitStack,
+    phases: dict,
+) -> EpochPlan:
+    """Dedup and persist the batch, probe it, pick the touched files, the
+    merge mode and the apply arm, and size the write."""
     if merge_mode not in ("auto", "cow", "mor"):
         raise ValueError(f"unknown merge_mode {merge_mode!r}; one of ['auto', 'cow', 'mor']")
-    phases: dict[str, float] = {}
-    _t = time.perf_counter()
-    spark = table.spark
+    t0 = time.perf_counter()
     # the session the batch is bound to runs the batch's actions — under a
     # streaming tail that is the query's cloned session, not table.spark
     batch_spark = changes.sparkSession
     # pin the whole attempt to one snapshot: plan, resolve, and commit all
     # see the same table state; commit(expect_parent=...) enforces it
     snap = table.snapshot()
-    head0 = snap["snapshot_id"]
     schema = StructType.fromJson(snap["schema"])
+    files, n_buckets = snap["files"], layout_buckets(snap)
 
     changes = _normalize_changes(schema, changes)
     dedup = lww_dedup_salted(changes) if use_salted_dedup else lww_dedup(changes)
@@ -429,28 +460,7 @@ def _merge_attempt(
     # and buys nothing for an agg whose skew dies in the partial phase.
     with _aqe_off(batch_spark):
         dedup = dedup.persist()
-
-    # ---- plan: which files does this batch touch?
-    files = snap["files"]
-    n_buckets = layout_buckets(snap)
-    is_bucket = n_buckets > 0
-    lf = _layout_fragments(n_buckets)
-    if is_bucket:
-        # bucket layout: a file with current bucket tags plans by EXACT
-        # membership, not a range test. Files without them — among them the
-        # ones a staged layout migration has not rewritten yet, whose tags
-        # may be under an older modulus — plan by key RANGE (min/max stats
-        # are layout-independent), which is sound for any file
-        plannable = [f for f in files if current_buckets(f)]
-        rest = [f for f in files if not current_buckets(f)]
-        range_plannable = [f for f in rest if f["min_key"] is not None]
-        unplannable = [f for f in rest if f["min_key"] is None]
-    else:
-        plannable = [f for f in files if f["min_key"] is not None]
-        range_plannable = []
-        unplannable = [f for f in files if f["min_key"] is None]  # no stats -> always touched
-    touched_paths: set[str] = {f["path"] for f in unplannable}
-    n_changes: int
+    cleanup.callback(dedup.unpersist)
 
     # ---- keys probe: ONE bounded job that ships the deduped batch to the
     # driver as Arrow — payload, lineage partition and (bucket tables)
@@ -461,333 +471,164 @@ def _merge_attempt(
     # materializes the dedup cache the later jobs reuse.
     with _aqe_off(batch_spark):
         batch = (
-            dedup.select("*", _lineage_metrics(lineage_partitions)[0], *lf["probe"])
+            dedup.select("*", _lineage_metrics(lineage_partitions)[0], *_layout_fragments(n_buckets)["probe"])
             .limit(FAST_PATH_MAX_KEYS + 1)
             .toArrow()
         )
     if batch.num_rows <= FAST_PATH_MAX_KEYS:
-        import bisect
-
-        def _range_touch(entries: list[dict], keys: list[str]) -> None:
-            # driver-side file-touch planning: files are range-tight (range-
-            # partitioned writes), keys are sorted — one bisect per file
-            # entry, O(F log K) on the driver, zero Spark jobs. Exactly the
-            # join predicate doc_id BETWEEN min_key AND max_key, locally.
-            for f in entries:
-                i = bisect.bisect_left(keys, f["min_key"])
-                if i < len(keys) and keys[i] <= f["max_key"]:
-                    touched_paths.add(f["path"])
-
-        batch_keys = sorted(batch.column("doc_id").to_pylist())
-        if is_bucket:
-            batch_buckets = set(batch.column("_bkt").to_pylist())
-            for f in plannable:
-                if not batch_buckets.isdisjoint(f["buckets"]):
-                    touched_paths.add(f["path"])
-            _range_touch(range_plannable, batch_keys)
-        else:
-            _range_touch(plannable, batch_keys)
-        n_changes = len(batch_keys)
+        touched, n_changes = _touched_local(files, batch, n_buckets), batch.num_rows
     else:
         batch = None
-        # bulk planning: the batch keys join the plannable files' stats
-        # (key ranges, or exact (path, bucket) pairs on bucket tables),
-        # broadcast
-        if is_bucket:
-            # mid-migration stale files count as touched: a
-            # >FAST_PATH_MAX_KEYS batch of hash-scattered keys intersects a
-            # wide-range file with near certainty, so an exact range join
-            # would almost never prune one — and touching them progresses
-            # the migration (the CoW rewrite emits them in the current layout)
-            touched_paths |= {f["path"] for f in range_plannable}
-        if plannable:
-            from pyspark.sql import Observation
+        touched, n_changes = _touched_bulk(table.spark, dedup, files, n_buckets, epoch)
+    touched_rows = sum(f["rows"] for f in touched)
 
-            stats_df = spark.createDataFrame(
-                [(f["path"], b) for f in plannable for b in f["buckets"]]
-                if is_bucket
-                else [(f["path"], f["min_key"], f["max_key"]) for f in plannable],
-                lf["plan_schema"],
-            )
-            # the batch-size signal for the resolve-strategy choice rides the
-            # planning job as an Observation — no extra action (a dedup.count()
-            # here would recompute the whole dedup before the cache exists)
-            obs_plan = Observation(f"plan-epoch-{epoch}")
-            # LEFT outer, not inner: when a batch touches NO file (all-new
-            # keys) an inner join's output is empty and AQE re-plans the
-            # query as an empty relation, dropping the CollectMetrics
-            # accumulators. The null-path rows keep the output as large as
-            # the batch — never empty here, since a bulk batch holds more
-            # than FAST_PATH_MAX_KEYS keys — so the metrics always survive.
-            hits = (
-                dedup.observe(obs_plan, F.count(F.lit(1)).alias("n"))
-                .select(lf["plan_key"])
-                .join(F.broadcast(stats_df), lf["plan_hit"], "left_outer")
-                .select("path")
-                .distinct()
-                .collect()
-            )
-            touched_paths |= {r["path"] for r in hits if r["path"] is not None}
-            n_changes = obs_plan.get["n"]
-        else:
-            # no plannable files: initial load, or stale / stats-less entries
-            # only (already all touched). One count sizes the write; it reads
-            # from the cache the probe job just materialized.
-            n_changes = dedup.count()
-    _t = _lap(phases, "plan", _t)
-
-    if n_changes == 0:
-        # empty deduped batch: nothing to resolve or write. Still fence the
-        # epoch — streaming tails deliver empty microbatches and resume must
-        # stay monotone — via a files-unchanged commit.
-        dedup.unpersist()
-        new_sid = table.commit(
-            add_files=[],
-            fences=[{"checkpoint_epoch": epoch, "partition_id": -1, "committed_at_snapshot": head0 + 1}],
-            lineage=[],
-            summary={"rows_upserted": 0, "rows_deleted": 0, "epoch": epoch, "mode": "empty", "phase_s": phases},
-            expect_parent=head0,
-        )
-        return MergeResult(new_sid, True, 0, 0, 0, 0, mode="empty")
-
-    touched_rows = sum(f["rows"] for f in files if f["path"] in touched_paths)
     # Merge-on-read decision: when a microbatch touches a slice far larger
     # than itself, CoW pays touched_rows of write amplification for
     # n_changes of actual change. MoR writes ONLY the winners (plus masks,
     # which are free — table.py docstring) and defers the rewrite to
     # compaction. Bulk batches stay CoW: their write is ~batch-sized either
     # way, and CoW keeps reads mask-free.
-    use_mor = bool(touched_paths) and (
+    use_mor = bool(touched) and (
         merge_mode == "mor" or (merge_mode == "auto" and touched_rows > MOR_REWRITE_RATIO * n_changes)
     )
-    rf = _resolve_fragments(schema, "mor" if use_mor else "cow")
-
-    # ---- resolve LWW against the touched slice of the table
-    # rename-aware field-id reads (table.load_files): touched files may
-    # predate a column rename/add/widen; includes tombstone rows. The full
-    # (masked, payload-bearing) target is built ONLY on the CoW path — the
-    # MoR resolve reads just the key and version columns
-    # (table.load_key_versions, or read_key_versions_local on the driver).
-    touched_entries = [f for f in files if f["path"] in touched_paths] if touched_paths else []
-    # a merge-on-read microbatch over a bounded touched slice resolves and
-    # writes on the driver: the probe stays the epoch's only job
-    local = use_mor and batch is not None and touched_rows <= DRIVER_MAX_TOUCHED_ROWS
-    c = dedup.alias("c")
-    if local:
-        resolved = None  # resolved and written on the driver below
-    elif use_mor:
-        # MoR resolve: the winners file takes its payload from the CHANGE
-        # rows, so the target is needed only to decide who wins — a
-        # column-pruned scan of (doc_id, version columns), never the token
-        # payload. No table payload crosses the wire; write amplification
-        # AND read volume are batch-sized.
-        small_batch = n_changes <= MAX_BROADCAST_ROWS
-        # UNMASKED narrow read + per-key version argmax, instead of the
-        # file-level mask join: by the LWW invariant a change only lands by
-        # beating the stored version, so the max (_commit_lsn, _op_seq) row
-        # per key IS the current state. Skipping _apply_mor_masks here
-        # drops the per-epoch mask scan + broadcast (which grow with the
-        # mor backlog) from the hot path; the agg below runs over the
-        # batch-keyed slice only (semi-join first), so it's batch-sized.
-        keys = dedup.select("doc_id")
-        narrow = table.load_key_versions(touched_entries).join(
-            F.broadcast(keys) if small_batch else keys, "doc_id", "left_semi"
-        )
-        tgtv = narrow.groupBy("doc_id").agg(rf["version_agg"])
-        t = F.broadcast(tgtv.alias("t")) if small_batch else tgtv.alias("t")
-        # every row the LWW predicate keeps is applied: the winners select
-        # is the write input as-is
-        resolved = c.join(t, rf["join"], "left_outer").where(rf["change_wins"]).select(rf["select"])
-    elif touched_entries:
-        target = table.load_files(touched_entries, snap)
-        # The full-outer SortMergeJoin shuffles the touched target payload a
-        # second time (range write already shuffles it once). When the
-        # deduped batch is small — the common microbatch case — the same
-        # result decomposes into (a) target LEFT OUTER broadcast(changes):
-        # target payload never crosses the wire for the join, and (b) a
-        # keys-only anti-join supplying brand-new keys. Bulk batches above
-        # MAX_BROADCAST_ROWS keep the SMJ full-outer.
-        use_broadcast = n_changes <= MAX_BROADCAST_ROWS
-        t = target.alias("t")
-        if use_broadcast:
-            joined = t.join(F.broadcast(c), rf["join"], "left_outer")
-        else:
-            joined = t.join(c, rf["join"], "full_outer")
-        resolved = joined.select(rf["select"])
-        if use_broadcast:
-            # brand-new keys: anti-join against a keys-only (column-pruned)
-            # scan of the touched files — narrow shuffle of keys, no payload
-            new_rows = dedup.join(target.select("doc_id"), on="doc_id", how="left_anti")
-            resolved = resolved.unionByName(new_rows.select(rf["changes_only"]))
-    else:
-        resolved = dedup.select(rf["changes_only"])
-
-    # ---- size the apply write (before the persist decision, which keys on
-    # whether a boundary sampler will exist at all)
-    par = spark.sparkContext.defaultParallelism
     if use_mor:
-        # batch-sized winners-only write: sized by n_changes with NO
-        # parallelism floor — a microbatch must not fragment into `par`
-        # near-empty files every epoch (that debt is exactly what MoR
-        # avoids); forced-mor bulk batches still fan out by size.
+        # batch-sized winners-only write with NO parallelism floor: a
+        # microbatch must not fragment into `par` near-empty files every
+        # epoch (the debt MoR avoids). Bucket tables too — n_buckets files
+        # per spread microbatch measured 2.5x the epoch wall — and their
+        # entries still carry bucket SETS, so pruning stays exact.
         n_files = max(1, (n_changes // target_rows_per_file) + 1)
+    elif n_buckets:
+        n_files = n_buckets  # one partition per bucket: a hash exchange, no sampler
     else:
-        # file count: ~target_rows_per_file rows each. Bulk batches floor at
-        # cluster parallelism so the apply write always uses every core — a
-        # single write partition is a serial fraction that caps scaling
-        # (Amdahl). MICRObatches (probed under the cap) drop the floor: a
-        # small touched slice must not fragment into `par` near-empty files
-        # per epoch — >=~100k rows per file up to `par`, and a genuinely
-        # tiny slice writes ONE file, which also removes the range
-        # boundary-sampler pass entirely. Sized from what this write
-        # actually contains — the touched slice plus the batch — NOT the
-        # whole table's row count.
+        # ~target_rows_per_file rows each, from what this write holds (the
+        # touched slice plus the batch, NOT the whole table). Bulk batches
+        # floor at cluster parallelism so the write uses every core (a
+        # single write partition is a serial fraction that caps scaling);
+        # microbatches drop the floor (>=~100k rows per file up to `par`),
+        # and a tiny slice writes ONE file, which also drops the range
+        # boundary-sampler pass.
         est_rows = touched_rows + n_changes
-        if is_bucket:
-            # one output partition per bucket: a plain hash exchange, no
-            # boundary sampler
-            n_files = n_buckets
-        elif batch is not None:
+        par = table.spark.sparkContext.defaultParallelism
+        if batch is not None:
             n_files = max(1, min(par, est_rows // 100_000), (est_rows // target_rows_per_file) + 1)
         else:
             n_files = max(par, (est_rows // target_rows_per_file) + 1)
+    _lap(phases, "plan", t0)
+    return EpochPlan(
+        epoch=epoch,
+        snap=snap,
+        schema=schema,
+        n_buckets=n_buckets,
+        dedup=dedup,
+        batch=batch,
+        touched=touched,
+        n_changes=n_changes,
+        mode="empty" if not n_changes else "mor" if use_mor else "cow",
+        # a merge-on-read microbatch over a bounded touched slice resolves
+        # and writes on the driver: the probe stays the epoch's only job
+        local=use_mor and batch is not None and touched_rows <= DRIVER_MAX_TOUCHED_ROWS,
+        n_files=n_files,
+        lineage_partitions=lineage_partitions,
+    )
 
-    # Although only one ACTION consumes resolved, the range write evaluates
-    # it TWICE when n_files > 1 — repartitionByRange's boundary-sampling
-    # pass executes the exchange child before the write tasks do — so the
-    # CoW path (payload-heavy resolve join) persists it and the sampler
-    # materializes the cache for the write. The MoR path skips the cache:
-    # its resolve is a pair of batch-sized broadcast joins, cheaper to
-    # recompute than to serialize through the block store. Bucket layout
-    # also skips it (hash exchange, no sampling pass), as does a
-    # single-file write (repartitionByRange(1) plans no sampler).
-    persisted = not use_mor and not is_bucket and n_files > 1
-    if persisted:
-        resolved = resolved.persist()
-    stage: str | None = None
-    committed = False
-    try:
-        # ---- apply: the table's stage writer partitions, sorts and writes
-        # the rows and returns their manifest entries from the write job's
-        # own per-file stats. The lineage metrics ride the same Observation
-        # (per-lineage-partition min/max/sums as conditional aggregates over
-        # a stable key hash), so no separate job scans the resolved
-        # relation. A driver-resolved epoch computes the same metrics in
-        # its pyarrow resolve and writes through write_stage_local. MoR
-        # winners on a bucket table are sized by the batch like any winners
-        # file (a spread microbatch hashes into every bucket, so n_buckets
-        # partitions would fan one batch-sized write into n_buckets tiny
-        # files per epoch, measured 2.5x the epoch wall); their entries
-        # still carry bucket SETS, so bucket pruning and the bucket-local
-        # compaction closure stay exact.
-        sid_next = head0 + 1
-        stage = table.stage_dir(sid_next)
-        if local:
-            winners, m = _resolve_local(table, batch, touched_entries)
-            _t = _lap(phases, "resolve", _t)
-            add_files = table.write_stage_local(winners, stage, n_files, snap)
-            _lap(phases, "write", _t)
-        else:
-            lp, lineage_metrics = _lineage_metrics(lineage_partitions)
-            _t = _lap(phases, "wbuild", _t)
-            # microbatches: AQE's stage-replan loop costs more than it could
-            # ever save on batch-sized shuffles
-            fast = batch is not None and (use_mor or is_bucket or n_files == 1)
-            with _aqe_off(resolved.sparkSession) if fast else contextlib.nullcontext():
-                add_files, m = table.write_stage(
-                    resolved,
-                    stage,
-                    n_files,
-                    snap,
-                    row_cols=(lp,),
-                    metrics=(lineage_metrics,),
-                    drop=(*_METRIC_COLS, "_lp"),
-                    phases=phases,
-                )
-            m = m["m"].asDict()
-        lineage = []
-        for p in range(lineage_partitions):
-            if m.get(f"lsn_min_{p}") is None:
-                continue
-            lineage.append(
-                {
-                    "checkpoint_epoch": epoch,
-                    "partition_id": p,
-                    "lsn_min": m[f"lsn_min_{p}"],
-                    "lsn_max": m[f"lsn_max_{p}"],
-                    "rows_upserted": m[f"ups_{p}"],
-                    "rows_deleted": m[f"del_{p}"],
-                }
-            )
-        fences = [
-            {"checkpoint_epoch": epoch, "partition_id": r["partition_id"], "committed_at_snapshot": sid_next}
-            for r in lineage
-        ] or [{"checkpoint_epoch": epoch, "partition_id": -1, "committed_at_snapshot": sid_next}]
-        rows_upserted = sum(r["rows_upserted"] for r in lineage)
-        rows_deleted = sum(r["rows_deleted"] for r in lineage)
-        # the MoR winners file doubles as the equality-delete mask: readers
-        # drop same-key rows from older files (table.py docstring). A CoW
-        # rewrite that REMOVES a winners file kills its mask, while the
-        # copies it masked may live in files this batch did NOT touch (the
-        # winners file spans every key its MoR epoch applied; this batch
-        # intersects part of it) and would resurrect as duplicate keys
-        # (interleaved mor-then-cow, tests/test_merge_on_read.py). So the
-        # output inherits the flag under the table layer's rule that every
-        # maintenance rewrite also applies (table.keeps_mask); compact_mor
-        # sheds the debt.
-        if use_mor or keeps_mask(touched_entries, files):
-            for f in add_files:
-                f["mor"] = True
-        # another writer advancing HEAD after we planned raises
-        # TableCommitError here: this attempt's files are orphaned — the
-        # finally below drops them and merge_batch replans
-        new_sid = table.commit(
-            add_files=add_files,
-            remove_paths=set() if use_mor else touched_paths,
-            fences=fences,
-            lineage=lineage,
-            summary={
-                "rows_upserted": rows_upserted,
-                "rows_deleted": rows_deleted,
-                "epoch": epoch,
-                "mode": "mor" if use_mor else "cow",
-                "phase_s": phases,
-            },
-            expect_parent=head0,
+
+def _touched_local(files: list[dict], batch: pa.Table, n_buckets: int) -> list[dict]:
+    """Driver file-touch planning, zero Spark jobs. On a bucket table an
+    entry with current bucket tags is touched iff it holds a batch bucket
+    (EXACT membership). Any other entry — a range table's, or one a staged
+    layout migration has not rewritten yet, whose tags may be under an older
+    modulus — is touched iff a batch key lies in its ``[min_key, max_key]``
+    (layout-independent, so sound for any file; files are range-tight and
+    the keys sorted, so one bisect per entry), and always if it has no
+    stats."""
+    keys = sorted(batch.column("doc_id").to_pylist())
+    buckets = set(batch.column("_bkt").to_pylist()) if n_buckets else set()
+
+    def hit(f: dict) -> bool:
+        tags = current_buckets(f) if n_buckets else None
+        if tags:
+            return not buckets.isdisjoint(tags)
+        if f["min_key"] is None:
+            return True
+        i = bisect.bisect_left(keys, f["min_key"])
+        return i < len(keys) and keys[i] <= f["max_key"]
+
+    return [f for f in files if hit(f)]
+
+
+def _touched_bulk(spark, dedup: DataFrame, files: list[dict], n_buckets: int, epoch: int) -> tuple:
+    """Bulk planning: the batch keys join the joinable entries' stats — key
+    ranges, or exact (path, bucket) pairs of the entries with current tags
+    on a bucket table — broadcast. Every other entry is touched: one
+    without stats always, and on a bucket table a mid-migration stale one
+    too — a >FAST_PATH_MAX_KEYS batch of hash-scattered keys intersects a
+    wide-range file with near certainty, so a range join would almost never
+    prune one, and touching them progresses the migration (the CoW rewrite
+    emits them in the current layout). Returns the touched entries and the
+    deduped batch size."""
+    lf = _layout_fragments(n_buckets)
+    joinable = [f for f in files if (current_buckets(f) if n_buckets else f["min_key"] is not None)]
+    paths = {f["path"] for f in files} - {f["path"] for f in joinable}
+    if joinable:
+        stats_df = spark.createDataFrame(
+            [(f["path"], b) for f in joinable for b in f["buckets"]]
+            if n_buckets
+            else [(f["path"], f["min_key"], f["max_key"]) for f in joinable],
+            lf["plan_schema"],
         )
-        committed = True
-        return MergeResult(
-            new_sid,
-            True,
-            rows_upserted,
-            rows_deleted,
-            0 if use_mor else len(touched_paths),
-            len(add_files),
-            mode="mor" if use_mor else "cow",
+        # the batch-size signal rides the planning job as an Observation —
+        # no extra action (a dedup.count() here would recompute the whole
+        # dedup before the cache exists)
+        obs_plan = Observation(f"plan-epoch-{epoch}")
+        # LEFT outer, not inner: when a batch touches NO file (all-new
+        # keys) an inner join's output is empty and AQE re-plans the
+        # query as an empty relation, dropping the CollectMetrics
+        # accumulators. The null-path rows keep the output as large as
+        # the batch — never empty here, since a bulk batch holds more
+        # than FAST_PATH_MAX_KEYS keys — so the metrics always survive.
+        hits = (
+            dedup.observe(obs_plan, F.count(F.lit(1)).alias("n"))
+            .select(lf["plan_key"])
+            .join(F.broadcast(stats_df), lf["plan_hit"], "left_outer")
+            .select("path")
+            .distinct()
+            .collect()
         )
-    finally:
-        if not committed and stage is not None:
-            # ANY failure after staging (write error, metrics, commit
-            # conflict) leaves orphaned files — remove them; gc_orphans
-            # covers only hard crashes that skip this frame entirely
-            shutil.rmtree(stage, ignore_errors=True)
-        if persisted:
-            resolved.unpersist()
-        dedup.unpersist()
+        paths |= {r["path"] for r in hits if r["path"] is not None}
+        n_changes = obs_plan.get["n"]
+    else:
+        # no joinable files: initial load, or stale / stats-less entries
+        # only (already all touched). One count sizes the write; it reads
+        # from the cache the probe job just materialized.
+        n_changes = dedup.count()
+    return [f for f in files if f["path"] in paths], n_changes
 
 
-def _resolve_local(table: LakeTable, batch: pa.Table, touched_entries: list[dict]) -> tuple:
+def _apply_local(table: LakeTable, plan: EpochPlan, stage: str, phases: dict) -> tuple[list[dict], list[dict]]:
+    """Resolve a merge-on-read microbatch on the driver and write its
+    winners into ``stage`` with pyarrow: no Spark job."""
+    t0 = time.perf_counter()
+    winners, lineage = _resolve_local(table, plan)
+    t0 = _lap(phases, "resolve", t0)
+    add_files = table.write_stage_local(winners, stage, plan.n_files, plan.snap)
+    _lap(phases, "write", t0)
+    return add_files, lineage
+
+
+def _resolve_local(table: LakeTable, plan: EpochPlan) -> tuple[pa.Table, list[dict]]:
     """The merge-on-read resolve of a probed batch on the driver, with
     pyarrow. Returns the winners (the probe's columns plus the hidden LWW
-    columns, for ``LakeTable.write_stage_local``) and the lineage metrics
-    keyed like the Spark arm's Observation. Same
-    semantics as the Spark arm: the per-key max stored ``(_commit_lsn,
-    _op_seq, _deleted)`` over an UNMASKED read with nulls lowest (Spark's
-    struct max), the ``change_wins`` predicate of ``_resolve_fragments``
-    under SQL's three-valued logic (a null compare drops the change), and
-    the per-``_lp`` metrics of ``_lineage_metric_exprs``."""
+    columns, for ``LakeTable.write_stage_local``) and the epoch's lineage
+    records. Same semantics as the Spark arm: the per-key max stored
+    ``(_commit_lsn, _op_seq, _deleted)`` over an UNMASKED read with nulls
+    lowest (Spark's struct max), the ``change_wins`` predicate of
+    ``_resolve_fragments`` under SQL's three-valued logic (a null compare
+    drops the change), and the per-``_lp`` metrics of
+    ``_lineage_metric_exprs``."""
+    batch = plan.batch
     version_cols = [HIDDEN_LSN, HIDDEN_SEQ, HIDDEN_DELETED]
-    tv = table.read_key_versions_local(touched_entries, batch.column("doc_id"))
+    tv = table.read_key_versions_local(plan.touched, batch.column("doc_id"))
     tv = tv.sort_by([(k, "ascending") for k in ("doc_id", *version_cols)], null_placement="at_start")
     if tv.num_rows:
         # the last row of each key's run is its max version
@@ -820,18 +661,155 @@ def _resolve_local(table: LakeTable, batch: pa.Table, touched_entries: list[dict
             "del": pc.cast(pc.fill_null(dels, False), pa.int64()),
         }
     ).group_by("_lp").aggregate([("lsn", "min"), ("lsn", "max"), ("ups", "sum"), ("del", "sum")])
-    m = {}
-    for r in per_lp.to_pylist():
-        p = r["_lp"]
-        m.update(
-            {
-                f"lsn_min_{p}": r["lsn_min"],
-                f"lsn_max_{p}": r["lsn_max"],
-                f"ups_{p}": r["ups_sum"],
-                f"del_{p}": r["del_sum"],
-            }
+    per_lp = per_lp.sort_by("_lp")
+    rows = zip(*(per_lp.column(c).to_pylist() for c in ("_lp", "lsn_min", "lsn_max", "ups_sum", "del_sum")))
+    return winners, _lineage_records(plan.epoch, rows)
+
+
+def _apply_spark(table: LakeTable, plan: EpochPlan, stage: str, phases: dict) -> tuple[list[dict], list[dict]]:
+    """Resolve in Spark and write through ``LakeTable.write_stage``, which
+    returns the manifest entries from the write job's own per-file stats.
+    The lineage metrics ride the same Observation (per-lineage-partition
+    min/max/sums as conditional aggregates over a stable key hash), so no
+    separate job scans the resolved relation."""
+    t0 = time.perf_counter()
+    resolved = _resolve_spark(table, plan)
+    # Although only one ACTION consumes resolved, the range write evaluates
+    # it TWICE when n_files > 1 — repartitionByRange's boundary-sampling
+    # pass executes the exchange child before the write tasks do — so the
+    # CoW path (payload-heavy resolve join) persists it and the sampler
+    # materializes the cache for the write. The MoR path skips the cache:
+    # its resolve is a pair of batch-sized broadcast joins, cheaper to
+    # recompute than to serialize through the block store. Bucket layout
+    # also skips it (hash exchange, no sampling pass), as does a
+    # single-file write (repartitionByRange(1) plans no sampler).
+    persisted = plan.mode == "cow" and not plan.n_buckets and plan.n_files > 1
+    if persisted:
+        resolved = resolved.persist()
+    lp, lineage_metrics = _lineage_metrics(plan.lineage_partitions)
+    _lap(phases, "wbuild", t0)
+    # microbatches: AQE's stage-replan loop costs more than it could ever
+    # save on batch-sized shuffles
+    fast = plan.batch is not None and (plan.mode == "mor" or plan.n_buckets or plan.n_files == 1)
+    try:
+        with _aqe_off(resolved.sparkSession) if fast else contextlib.nullcontext():
+            add_files, m = table.write_stage(
+                resolved,
+                stage,
+                plan.n_files,
+                plan.snap,
+                row_cols=(lp,),
+                metrics=(lineage_metrics,),
+                drop=(*_METRIC_COLS, "_lp"),
+                phases=phases,
+            )
+    finally:
+        if persisted:
+            resolved.unpersist()
+    m = m["m"].asDict()
+    keys = ("lsn_min", "lsn_max", "ups", "del")
+    rows = ((p, *(m[f"{k}_{p}"] for k in keys)) for p in range(plan.lineage_partitions))
+    return add_files, _lineage_records(plan.epoch, rows)
+
+
+def _resolve_spark(table: LakeTable, plan: EpochPlan) -> DataFrame:
+    """LWW-resolve the batch against the touched slice of the table.
+    Touched files may predate a column rename/add/widen, so the CoW target
+    is read rename-aware (``table.load_files``, tombstones included); the
+    MoR resolve reads just the key and version columns."""
+    dedup = plan.dedup
+    rf = _resolve_fragments(plan.schema, plan.mode)
+    c = dedup.alias("c")
+    small_batch = plan.n_changes <= MAX_BROADCAST_ROWS
+    if plan.mode == "mor":
+        # the winners file takes its payload from the CHANGE rows, so the
+        # target is needed only to decide who wins. UNMASKED narrow read +
+        # per-key version argmax, instead of the file-level mask join: by
+        # the LWW invariant a change only lands by beating the stored
+        # version, so the max (_commit_lsn, _op_seq) row per key IS the
+        # current state; the agg runs over the batch-keyed slice only
+        # (semi-join first), so it is batch-sized.
+        keys = dedup.select("doc_id")
+        narrow = table.load_key_versions(plan.touched).join(
+            F.broadcast(keys) if small_batch else keys, "doc_id", "left_semi"
         )
-    return winners, m
+        tgtv = narrow.groupBy("doc_id").agg(rf["version_agg"])
+        t = F.broadcast(tgtv.alias("t")) if small_batch else tgtv.alias("t")
+        # every row the LWW predicate keeps is applied: the winners select
+        # is the write input as-is
+        return c.join(t, rf["join"], "left_outer").where(rf["change_wins"]).select(rf["select"])
+    if not plan.touched:
+        return dedup.select(rf["changes_only"])
+    target = table.load_files(plan.touched, plan.snap)
+    t = target.alias("t")
+    if not small_batch:
+        return t.join(c, rf["join"], "full_outer").select(rf["select"])
+    # The full-outer SortMergeJoin shuffles the touched target payload a
+    # second time (the range write already shuffles it once). A small
+    # deduped batch decomposes the same result into (a) target LEFT OUTER
+    # broadcast(changes) — target payload never crosses the wire for the
+    # join — and (b) a keys-only anti-join against a column-pruned scan of
+    # the touched files supplying brand-new keys.
+    resolved = t.join(F.broadcast(c), rf["join"], "left_outer").select(rf["select"])
+    new_rows = dedup.join(target.select("doc_id"), on="doc_id", how="left_anti")
+    return resolved.unionByName(new_rows.select(rf["changes_only"]))
+
+
+def _commit(
+    table: LakeTable, plan: EpochPlan, add_files: list[dict], lineage: list[dict], phases: dict
+) -> MergeResult:
+    """Commit the attempt's files, fences and lineage on the snapshot it
+    planned against. An epoch that applied nothing (an empty batch, or
+    only stale events) still fences itself under partition -1: streaming
+    tails deliver empty microbatches and resume must stay monotone."""
+    head0 = plan.snap["snapshot_id"]
+    fences = [
+        {"checkpoint_epoch": plan.epoch, "partition_id": p, "committed_at_snapshot": head0 + 1}
+        for p in [r["partition_id"] for r in lineage] or [-1]
+    ]
+    rows_upserted = sum(r["rows_upserted"] for r in lineage)
+    rows_deleted = sum(r["rows_deleted"] for r in lineage)
+    cow = plan.mode == "cow"
+    # the MoR winners file doubles as the equality-delete mask: readers
+    # drop same-key rows from older files (table.py docstring). A CoW
+    # rewrite that REMOVES a winners file kills its mask, while the copies
+    # it masked may live in files this batch did NOT touch (the winners
+    # file spans every key its MoR epoch applied; this batch intersects
+    # part of it) and would resurrect as duplicate keys (interleaved
+    # mor-then-cow, tests/test_merge_on_read.py). So the output inherits
+    # the flag under the table layer's rule that every maintenance rewrite
+    # also applies (table.keeps_mask); compact_mor sheds the debt.
+    if add_files and (plan.mode == "mor" or keeps_mask(plan.touched, plan.snap["files"])):
+        for f in add_files:
+            f["mor"] = True
+    # another writer advancing HEAD after we planned raises
+    # TableCommitError here: merge_batch drops the staged files and replans
+    new_sid = table.commit(
+        add_files=add_files,
+        remove_paths={f["path"] for f in plan.touched} if cow else set(),
+        fences=fences,
+        lineage=lineage,
+        summary={
+            "rows_upserted": rows_upserted,
+            "rows_deleted": rows_deleted,
+            "epoch": plan.epoch,
+            "mode": plan.mode,
+            "phase_s": phases,
+        },
+        expect_parent=head0,
+    )
+    n_removed = len(plan.touched) if cow else 0
+    return MergeResult(new_sid, True, rows_upserted, rows_deleted, n_removed, len(add_files), mode=plan.mode)
+
+
+_LINEAGE_FIELDS = ("partition_id", "lsn_min", "lsn_max", "rows_upserted", "rows_deleted")
+
+
+def _lineage_records(epoch: int, rows) -> list[dict]:
+    """The commit's lineage records from ``(partition, lsn_min, lsn_max,
+    rows upserted, rows deleted)`` rows in partition order. A partition
+    with no applied change (null ``lsn_min``) gets no record."""
+    return [{"checkpoint_epoch": epoch, **dict(zip(_LINEAGE_FIELDS, r))} for r in rows if r[1] is not None]
 
 
 # The lineage Observation — ~65 conditional aggregates — costs hundreds of

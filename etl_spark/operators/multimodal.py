@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -178,15 +179,12 @@ def decode_pixels(payload: bytes) -> tuple[int, int, list[int]] | None:
         row_stride = (w * nch + 3) & ~3
         if pix_off + row_stride * h > len(payload):
             return None
-        out: list[int] = []
-        rows = range(h - 1, -1, -1) if bottom_up else range(h)
-        for r in rows:
-            base = pix_off + r * row_stride
-            row = payload[base : base + w * nch]
-            for c in range(w):
-                b, g, rr = row[c * nch], row[c * nch + 1], row[c * nch + 2]
-                out += [rr, g, b]  # BMP stores BGR(A); emit RGB
-        return (w, h, out)
+        rows = np.frombuffer(payload, np.uint8, row_stride * h, pix_off).reshape(h, row_stride)
+        if bottom_up:
+            rows = rows[::-1]
+        # drop the row padding, then BGR(A) -> RGB per pixel
+        rgb = rows[:, : w * nch].reshape(h, w, nch)[:, :, 2::-1]
+        return (w, h, rgb.ravel().tolist())
     if payload[:2] in (b"P5", b"P6"):
         # header: magic, width, height, maxval — tokens separated by
         # whitespace/comments, then ONE whitespace byte before raw samples
@@ -228,12 +226,11 @@ def pixel_features(w: int, h: int, pixels: list[int]) -> list[float]:
     n = len(pixels)
     if n == 0:
         return []
-    mean = sum(pixels) / n
-    var = sum((p - mean) ** 2 for p in pixels) / n
-    hist = [0] * 8
-    for p in pixels:
-        hist[p >> 5] += 1
-    return [round(mean, 4), round(var**0.5, 4)] + [round(c / n, 6) for c in hist]
+    p = np.frombuffer(bytes(pixels), np.uint8)  # 8-bit samples; out of range raises
+    mean = int(p.sum()) / n
+    std = float(np.sqrt(np.mean((p - mean) ** 2)))
+    hist = np.bincount(p >> 5, minlength=8).tolist()
+    return [round(mean, 4), round(std, 4)] + [round(c / n, 6) for c in hist]
 
 
 def decode_and_featurize(

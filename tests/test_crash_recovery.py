@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from etl_spark.datagen import BinlogSpec, generate_binlog
 from etl_spark.operators.merge import merge_batch
@@ -40,6 +41,32 @@ def test_crashed_write_is_invisible_and_collectable(spark, tmp_path):
     # committed data untouched
     assert_state_equal(table.read(include_hidden=True).toPandas(), expected)
     feed.unpersist()
+
+
+def test_failed_epoch_releases_cached_batch_and_stage(spark, tmp_path, monkeypatch):
+    """An epoch that fails after caching its deduped batch — here the CoW
+    target read raises, as on a missing data file — propagates the error,
+    leaves the session's cache as it found it and no stage directory
+    behind, and does not move HEAD: a streaming tail that keeps running
+    after failed epochs must not accumulate cached batches."""
+    feed = generate_binlog(spark, BinlogSpec(n_events=1000, n_keys=100, seed=53)).drop(
+        "lsn_bucket", "delivery_pos"
+    )
+    table = LakeTable.create_if_absent(spark, str(tmp_path / "t"), TARGET_SCHEMA)
+    merge_batch(table, feed, epoch=0)
+    head, stages = table.head_id(), sorted(os.listdir(table.data_dir))
+    jsc = spark.sparkContext._jsc
+    cached = jsc.getPersistentRDDs().size()
+
+    def missing_file(self, *args, **kwargs):
+        raise FileNotFoundError("data file vanished")
+
+    monkeypatch.setattr(LakeTable, "load_files", missing_file)
+    with pytest.raises(FileNotFoundError, match="vanished"):
+        merge_batch(table, feed, epoch=1, merge_mode="cow")
+    assert jsc.getPersistentRDDs().size() == cached
+    assert sorted(os.listdir(table.data_dir)) == stages
+    assert table.head_id() == head and not table.is_fenced(1)
 
 
 def test_gc_orphans_noop_on_clean_table(spark, tmp_path):

@@ -107,7 +107,7 @@ def test_auto_mode_picks_mor_for_microbatch_and_cow_for_bulk(spark, tmp_table_di
 
 def test_merge_commits_record_phase_seconds(spark, tmp_table_dir):
     """Every merge commit carries the wall seconds of its phases in its
-    summary (tools/bench_epoch.py reads them back from the table), in both
+    summary (bench.py reads them back from the table), in both
     modes: a Spark-written commit records plan, wbuild, write and stats; a
     microbatch MoR commit, resolved and written on the driver, records
     plan, resolve and write."""

@@ -24,3 +24,21 @@ def test_engine_code_has_no_bare_assert():
         if isinstance(node, ast.Assert)
     ]
     assert not found, f"assert statements in engine code (raise an exception instead): {found}"
+
+
+MERGE = ENGINE / "operators" / "merge.py"
+MAX_MERGE_FUNCTION_LINES = 120
+
+
+def test_merge_functions_stay_short():
+    """No function in the merge module spans more than 120 lines: an epoch
+    is split into plan, apply and commit stages, and this keeps any one of
+    them from growing back into the whole epoch."""
+    tree = ast.parse(MERGE.read_text(), filename=str(MERGE))
+    long_fns = [
+        f"{node.name}:{node.lineno} ({node.end_lineno - node.lineno + 1} lines)"
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.end_lineno - node.lineno + 1 > MAX_MERGE_FUNCTION_LINES
+    ]
+    assert not long_fns, f"functions over {MAX_MERGE_FUNCTION_LINES} lines in {MERGE.name}: {long_fns}"

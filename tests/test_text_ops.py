@@ -314,6 +314,65 @@ def test_decode_pixels_bmp_and_ppm_pure_python():
     assert abs(sum(feats[2:]) - 1.0) < 1e-9
 
 
+def _decode_bmp_reference(payload: bytes) -> tuple[int, int, list[int]]:
+    """The per-pixel BMP loop ``decode_pixels`` replaced, kept as the
+    reference for the vectorized kernel (header already validated)."""
+    pix_off = int.from_bytes(payload[10:14], "little")
+    w = int.from_bytes(payload[18:22], "little", signed=True)
+    h = int.from_bytes(payload[22:26], "little", signed=True)
+    nch = int.from_bytes(payload[28:30], "little") // 8
+    bottom_up, h = h > 0, abs(h)
+    row_stride = (w * nch + 3) & ~3
+    out: list[int] = []
+    for r in range(h - 1, -1, -1) if bottom_up else range(h):
+        row = payload[pix_off + r * row_stride : pix_off + r * row_stride + w * nch]
+        for c in range(w):
+            out += [row[c * nch + 2], row[c * nch + 1], row[c * nch]]
+    return (w, h, out)
+
+
+def _pixel_features_reference(pixels: list[int]) -> list[float]:
+    """The per-pixel feature loop ``pixel_features`` replaced."""
+    n = len(pixels)
+    mean = sum(pixels) / n
+    var = sum((p - mean) ** 2 for p in pixels) / n
+    hist = [0] * 8
+    for p in pixels:
+        hist[p >> 5] += 1
+    return [round(mean, 4), round(var**0.5, 4)] + [round(c / n, 6) for c in hist]
+
+
+def _random_bmp(rng, w: int, h: int, bpp: int, top_down: bool) -> bytes:
+    import struct
+
+    stride = (w * bpp // 8 + 3) & ~3
+    pix = bytes(rng.randrange(256) for _ in range(stride * h))  # padding bytes random too
+    info = struct.pack("<IiiHHIIiiII", 40, w, -h if top_down else h, 1, bpp, 0, len(pix), 2835, 2835, 0, 0)
+    return b"BM" + struct.pack("<IHHI", 54 + len(pix), 0, 0, 54) + info + pix
+
+
+@pytest.mark.parametrize("bpp", [24, 32])
+@pytest.mark.parametrize("top_down", [False, True], ids=["bottom_up", "top_down"])
+def test_pixel_kernels_match_reference_loops(bpp, top_down):
+    """The numpy kernels decode and featurize exactly like the per-pixel
+    loops they replaced, on seeded BMPs of padded and unpadded widths and on
+    P5/P6 payloads: the same pixels, histogram and mean, and the same std
+    after rounding."""
+    import random
+
+    rng = random.Random(bpp * 10 + top_down)
+    for w, h in [(1, 1), (3, 2), (5, 7), (8, 3), (17, 9), (64, 33)]:
+        payload = _random_bmp(rng, w, h, bpp, top_down)
+        expected = _decode_bmp_reference(payload)
+        assert MM.decode_pixels(payload) == expected
+        assert MM.pixel_features(w, h, expected[2]) == _pixel_features_reference(expected[2])
+        for magic, nch in ((b"P5", 1), (b"P6", 3)):
+            samples = bytes(rng.randrange(256) for _ in range(w * h * nch))
+            decoded = MM.decode_pixels(magic + b" %d %d 255\n" % (w, h) + samples)
+            assert decoded == (w, h, list(samples))
+            assert MM.pixel_features(w, h, decoded[2]) == _pixel_features_reference(list(samples))
+
+
 def test_parsers_roundtrip_hypothesis():
     """Property: encode -> parse is the identity over valid headers, and no
     random byte blob ever crashes a parser (they return None/None-tuples)."""
