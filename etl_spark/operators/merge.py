@@ -24,10 +24,11 @@ One epoch runs three stages, retried as a whole on a commit conflict:
    (table.py docstring). ``_apply_local`` resolves a merge-on-read
    microbatch over at most ``DRIVER_MAX_TOUCHED_ROWS`` touched rows with
    pyarrow and writes with ``LakeTable.write_stage_local`` (no second job).
-   ``_apply_spark`` joins the touched target with the batch (copy-on-write)
-   or semi-joins the key versions (a larger merge-on-read epoch) and writes
-   with ``LakeTable.write_stage``, which observes the per-file stats and
-   the lineage metrics in the write job itself. The per-file stats become
+   ``_apply_spark`` picks the same winners in Spark from the per-key max
+   version of the touched key/version columns, adds the touched rows no
+   change beats under copy-on-write, and writes with
+   ``LakeTable.write_stage``, which observes the per-file stats and the
+   lineage metrics in the write job itself. The per-file stats become
    the manifest entries the next merge plans against.
 3. **Commit** (``_commit``) — one atomic snapshot swap carrying fence
    records ``(checkpoint_epoch, partition_id)`` and per-partition lineage;
@@ -93,14 +94,10 @@ FAST_PATH_MAX_KEYS = 50_000
 # takes the Spark semi-join arm.
 DRIVER_MAX_TOUCHED_ROWS = 8_000_000
 
-# CoW resolve: a deduped batch of at most this many rows is broadcast into a
-# left-outer join against the touched target (plus a keys-only anti-join for
-# new keys); larger batches take the sort-merge full-outer join. A Spark MoR
-# resolve broadcasts its batch keys and per-key versions under the same
-# bound.
-# Measured on 400k-row deduped batches (~220 MB with token payloads): the
-# broadcast build/probe costs MORE than the sort-merge shuffle (8.4M-event
-# replay: 41 s vs 25-30 s at 8 cores), so the bound stays at microbatch scale.
+# The Spark resolve hints a broadcast of its batch-sized NARROW sides — the
+# batch keys, the per-key stored versions and the batch versions — when the
+# deduped batch holds at most this many rows; the payload-carrying batch and
+# target are never broadcast. The value is unmeasured for these narrow sides.
 MAX_BROADCAST_ROWS = 100_000
 
 # merge_mode="auto" picks MoR when the touched slice holds more than this
@@ -243,8 +240,9 @@ def merge_batch(
     (MoR when the touched slice is > ``MOR_REWRITE_RATIO`` x the deduped
     batch — the microbatch-against-big-table regime where CoW's write
     amplification dominates; CoW otherwise, so bulk batches keep the
-    one-version-per-key layout and reads stay mask-free). The resolve join
-    is picked from the deduped batch size (``MAX_BROADCAST_ROWS``).
+    one-version-per-key layout and reads stay mask-free). Both modes pick
+    the same winners; copy-on-write also rewrites the touched rows they do
+    not beat.
 
     ``use_salted_dedup``: dedup through the two-phase salted aggregate (the
     hot-key path) instead of the plain ``max_by`` aggregate; both produce
@@ -290,8 +288,8 @@ def merge_batch(
 # Plan fragments of the merge that do not depend on the batch — the keys
 # probe's extra columns, the resolve's join condition, LWW predicate, per-key version
 # aggregate and output projections, the write's lineage Observation —
-# are immutable Column trees: built once per (table schema, layout, merge
-# mode) and rebound to every batch. Rebuilding them every epoch cost ~1,000
+# are immutable Column trees: built once per table schema and layout and
+# rebound to every batch. Rebuilding them every epoch cost ~1,000
 # py4j round trips, most of a microbatch's driver time (Evolution of a
 # Compiling Query Engine, VLDB 2021: plan construction, not data, dominates
 # short queries). Only the batch-dependent parts — the touched-file list
@@ -330,64 +328,60 @@ def _layout_fragments(n_buckets: int) -> dict:
     return expr_cache_get(_LAYOUT_FRAGMENTS_CACHE, (n_buckets,), _build)
 
 
-def _resolve_fragments(schema: StructType, mode: str) -> dict:
-    """Resolve fragments of one merge mode over the table schema. ``mor``:
-    the per-key version argmax, the join condition, the LWW predicate and
-    the winners select. ``cow``: the join condition, the resolve select
-    (LWW predicate inlined) and the changes-only select for keys with no
-    target row."""
+def _resolve_fragments(schema: StructType) -> dict:
+    """Resolve fragments over the table schema: ONE winners rule for both
+    merge modes. A change ``c`` wins iff its key has no stored version or
+    its ``(commit_lsn, op_seq)`` beats the key's max stored version ``t``:
+    ``version_agg`` is that per-key max, ``join`` and ``change_wins`` pick
+    the winners and ``select`` projects them. Copy-on-write also rewrites
+    every touched row ``t`` that no change beats: joined (``join``) to the
+    batch versions ``c``, ``kept`` keeps it and ``kept_select`` projects it,
+    never applied. ``changes_only`` is the winners select of a batch that
+    touches no file."""
     payload_names = [f.name for f in schema.fields if f.name != "doc_id"]
 
     def _build() -> dict:
         c_doc, t_doc = F.col("c.doc_id"), F.col("t.doc_id")
         c_lsn, c_seq, c_op = F.col("c.commit_lsn"), F.col("c.op_seq"), F.col("c.op")
-        if mode == "mor":
-            # the target side is the per-key version argmax (doc_id, _v):
-            # its fields are read in place, with no unpacking projection
-            v_lsn, v_seq, v_del = (F.col(f"t._v.{h}") for h in (HIDDEN_LSN, HIDDEN_SEQ, HIDDEN_DELETED))
-            return {
-                "version_agg": F.max(F.struct(HIDDEN_LSN, HIDDEN_SEQ, HIDDEN_DELETED)).alias("_v"),
-                "join": c_doc == t_doc,
-                "change_wins": t_doc.isNull() | (c_lsn > v_lsn) | ((c_lsn == v_lsn) & (c_seq >= v_seq)),
-                "select": [
-                    c_doc.alias("doc_id"),
-                    *[F.col(f"c.{name}").alias(name) for name in payload_names],
-                    c_lsn.alias(HIDDEN_LSN),
-                    c_seq.alias(HIDDEN_SEQ),
-                    (c_op == "D").alias(HIDDEN_DELETED),
-                    F.lit(True).alias("_applied"),
-                    (c_op == "D").alias("_is_delete"),
-                    (~F.coalesce(v_del, F.lit(False))).alias("_was_live"),
-                    t_doc.isNotNull().alias("_existed"),
-                    c_lsn.alias("_chg_lsn"),
-                ],
-            }
-        t_lsn, t_seq, t_del = F.col(f"t.{HIDDEN_LSN}"), F.col(f"t.{HIDDEN_SEQ}"), F.col(f"t.{HIDDEN_DELETED}")
-        beats = (c_lsn > t_lsn) | ((c_lsn == t_lsn) & (c_seq >= t_seq))
-        change_wins = t_doc.isNull() | (c_lsn.isNotNull() & beats)
-        wins = c_doc.isNotNull() & change_wins
+
+        def beats(t_lsn, t_seq):
+            return (c_lsn > t_lsn) | ((c_lsn == t_lsn) & (c_seq >= t_seq))
+
+        # the winners' target side is the per-key version argmax (doc_id,
+        # _v): its fields are read in place, with no unpacking projection
+        v_lsn, v_seq, v_del = (F.col(f"t._v.{h}") for h in (HIDDEN_LSN, HIDDEN_SEQ, HIDDEN_DELETED))
+        t_lsn, t_seq = F.col(f"t.{HIDDEN_LSN}"), F.col(f"t.{HIDDEN_SEQ}")
         op = F.col("op")
         return {
-            "join": t_doc == c_doc,
+            "version_agg": F.max(F.struct(HIDDEN_LSN, HIDDEN_SEQ, HIDDEN_DELETED)).alias("_v"),
+            "join": c_doc == t_doc,
+            "change_wins": t_doc.isNull() | beats(v_lsn, v_seq),
             "select": [
-                F.coalesce(c_doc, t_doc).alias("doc_id"),
-                *[
-                    F.when(wins, F.col(f"c.{name}")).otherwise(F.col(f"t.{name}")).alias(name)
-                    for name in payload_names
-                ],
-                F.when(wins, c_lsn).otherwise(t_lsn).alias(HIDDEN_LSN),
-                F.when(wins, c_seq).otherwise(t_seq).alias(HIDDEN_SEQ),
-                F.when(wins, c_op == "D")
-                .otherwise(F.coalesce(F.col(HIDDEN_DELETED), F.lit(False)))
-                .alias(HIDDEN_DELETED),
-                wins.alias("_applied"),
+                c_doc.alias("doc_id"),
+                *[F.col(f"c.{name}").alias(name) for name in payload_names],
+                c_lsn.alias(HIDDEN_LSN),
+                c_seq.alias(HIDDEN_SEQ),
+                (c_op == "D").alias(HIDDEN_DELETED),
+                F.lit(True).alias("_applied"),
                 (c_op == "D").alias("_is_delete"),
-                (~F.coalesce(t_del, F.lit(False))).alias("_was_live"),
+                (~F.coalesce(v_del, F.lit(False))).alias("_was_live"),
                 t_doc.isNotNull().alias("_existed"),
                 c_lsn.alias("_chg_lsn"),
             ],
-            # change rows with no target counterpart (new keys / empty
-            # table): the change always applies
+            "kept": c_doc.isNull() | ~F.coalesce(beats(t_lsn, t_seq), F.lit(False)),
+            "kept_select": [
+                t_doc.alias("doc_id"),
+                *[F.col(f"t.{name}").alias(name) for name in payload_names],
+                t_lsn.alias(HIDDEN_LSN),
+                t_seq.alias(HIDDEN_SEQ),
+                F.coalesce(F.col(f"t.{HIDDEN_DELETED}"), F.lit(False)).alias(HIDDEN_DELETED),
+                # never applied, so the lineage Observation ignores the rest
+                F.lit(False).alias("_applied"),
+                F.lit(False).alias("_is_delete"),
+                F.lit(False).alias("_was_live"),
+                F.lit(True).alias("_existed"),
+                F.lit(None).cast("long").alias("_chg_lsn"),
+            ],
             "changes_only": [
                 F.col("doc_id"),
                 *[F.col(name) for name in payload_names],
@@ -402,7 +396,7 @@ def _resolve_fragments(schema: StructType, mode: str) -> dict:
             ],
         }
 
-    return expr_cache_get(_RESOLVE_FRAGMENTS_CACHE, (schema.json(), mode), _build)
+    return expr_cache_get(_RESOLVE_FRAGMENTS_CACHE, (schema.json(),), _build)
 
 
 @dataclass
@@ -713,46 +707,34 @@ def _apply_spark(table: LakeTable, plan: EpochPlan, stage: str, phases: dict) ->
 
 
 def _resolve_spark(table: LakeTable, plan: EpochPlan) -> DataFrame:
-    """LWW-resolve the batch against the touched slice of the table.
-    Touched files may predate a column rename/add/widen, so the CoW target
-    is read rename-aware (``table.load_files``, tombstones included); the
-    MoR resolve reads just the key and version columns."""
+    """LWW-resolve the batch against the touched slice of the table. The
+    winners take their payload from the CHANGE rows, so the target is read
+    only to decide who wins: an UNMASKED narrow read (``load_key_versions``)
+    semi-joined to the batch keys and reduced to the per-key max version —
+    by the LWW invariant a change only lands by beating the stored version,
+    so that max IS the current state, and the aggregate is batch-sized.
+    Merge-on-read writes the winners alone. Copy-on-write also rewrites the
+    touched rows no change beats, read rename-aware and masked
+    (``load_files``, tombstones included) and joined to the batch's narrow
+    versions. Only batch-sized narrow sides — keys, per-key versions and
+    batch versions — are broadcast, and only under ``MAX_BROADCAST_ROWS``."""
     dedup = plan.dedup
-    rf = _resolve_fragments(plan.schema, plan.mode)
-    c = dedup.alias("c")
-    small_batch = plan.n_changes <= MAX_BROADCAST_ROWS
-    if plan.mode == "mor":
-        # the winners file takes its payload from the CHANGE rows, so the
-        # target is needed only to decide who wins. UNMASKED narrow read +
-        # per-key version argmax, instead of the file-level mask join: by
-        # the LWW invariant a change only lands by beating the stored
-        # version, so the max (_commit_lsn, _op_seq) row per key IS the
-        # current state; the agg runs over the batch-keyed slice only
-        # (semi-join first), so it is batch-sized.
-        keys = dedup.select("doc_id")
-        narrow = table.load_key_versions(plan.touched).join(
-            F.broadcast(keys) if small_batch else keys, "doc_id", "left_semi"
-        )
-        tgtv = narrow.groupBy("doc_id").agg(rf["version_agg"])
-        t = F.broadcast(tgtv.alias("t")) if small_batch else tgtv.alias("t")
-        # every row the LWW predicate keeps is applied: the winners select
-        # is the write input as-is
-        return c.join(t, rf["join"], "left_outer").where(rf["change_wins"]).select(rf["select"])
+    rf = _resolve_fragments(plan.schema)
     if not plan.touched:
+        # an empty table or all-new keys: every change wins
         return dedup.select(rf["changes_only"])
-    target = table.load_files(plan.touched, plan.snap)
-    t = target.alias("t")
-    if not small_batch:
-        return t.join(c, rf["join"], "full_outer").select(rf["select"])
-    # The full-outer SortMergeJoin shuffles the touched target payload a
-    # second time (the range write already shuffles it once). A small
-    # deduped batch decomposes the same result into (a) target LEFT OUTER
-    # broadcast(changes) — target payload never crosses the wire for the
-    # join — and (b) a keys-only anti-join against a column-pruned scan of
-    # the touched files supplying brand-new keys.
-    resolved = t.join(F.broadcast(c), rf["join"], "left_outer").select(rf["select"])
-    new_rows = dedup.join(target.select("doc_id"), on="doc_id", how="left_anti")
-    return resolved.unionByName(new_rows.select(rf["changes_only"]))
+    hint = F.broadcast if plan.n_changes <= MAX_BROADCAST_ROWS else (lambda df: df)
+    narrow = table.load_key_versions(plan.touched).join(hint(dedup.select("doc_id")), "doc_id", "left_semi")
+    versions = hint(narrow.groupBy("doc_id").agg(rf["version_agg"])).alias("t")
+    # every row the LWW predicate keeps is applied: the winners select is
+    # the write input as-is
+    winners = dedup.alias("c").join(versions, rf["join"], "left_outer").where(rf["change_wins"]).select(rf["select"])
+    if plan.mode == "mor":
+        return winners
+    batch_versions = hint(dedup.select("doc_id", "commit_lsn", "op_seq")).alias("c")
+    target = table.load_files(plan.touched, plan.snap).alias("t")
+    kept = target.join(batch_versions, rf["join"], "left_outer").where(rf["kept"]).select(rf["kept_select"])
+    return winners.unionByName(kept)
 
 
 def _commit(

@@ -1990,16 +1990,18 @@ _DEFERRED = (
     # round-5 rotation (round-4 ADVICE): cdc_layout_migration and the new
     # staged twin take two window slots — the migration path is this
     # round's hot-path rewrite, so BOTH its oracles sit in the attested
-    # window. Freed by deferring two r4-attested entries whose operators
-    # stay covered by in-window siblings:
-    "cdc_snapshot_diff",  # r4-attested; cdc_time_travel (same snapshot reads) in-window
-    "events_pivot_type_counts",  # r4-attested; events family (tumbling/sliding/sessionize/funnel) in-window
+    # window. Freed by deferring r4-attested entries whose operators stay
+    # covered by in-window siblings:
+    "events_pivot_type_counts",  # r4-attested; events family (tumbling/sessionize/funnel) in-window
     # r4-attested; window machinery stays covered in-window by
     # win_top3_orders_per_cust; slot freed for cdc_stream_replay_debezium
     "win_lag_delta",
     # r4-attested; TPC-H joins stay covered in-window by q3/q10/rollup;
     # slot freed for the new text_repetition entry
     "tpch_q5_region_revenue",
+    # r4/r5-attested; events_tumbling_counts (same F.window aggregate)
+    # stays in-window; slot freed for cdc_snapshot_diff
+    "events_sliding_counts",
 )
 QUERIES = {
     **{k: v for k, v in QUERIES.items() if k not in _DEFERRED},

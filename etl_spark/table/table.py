@@ -629,7 +629,8 @@ class LakeTable:
         column names are mapped to the snapshot's names through the stable
         field ids, then all groups are projected to the versioned schema and
         unioned. With no renames in the history every group's mapping is the
-        identity and this degenerates to one mergeSchema read.
+        identity. An entry whose version no snapshot carries (a corrupt
+        manifest) raises ValueError.
 
         ``key_range=(lo, hi)`` is a caller CONTRACT: the caller promises to
         discard every returned row with doc_id outside [lo, hi] (read_range's
@@ -655,14 +656,12 @@ class LakeTable:
         parts = []
         for sv in sorted(groups):
             phys = self._physical_schema_at(sv)
-            if phys is not None:
-                # explicit schema: no inference/mergeSchema footer job, and
-                # the columns are known without asking the JVM
-                raw = self.spark.read.schema(phys).parquet(*sorted(groups[sv]))
-                columns = phys.fieldNames()
-            else:
-                raw = self.spark.read.option("mergeSchema", "true").parquet(*sorted(groups[sv]))
-                columns = raw.columns
+            if phys is None:  # writers tag existing versions: a corrupt manifest
+                raise ValueError(f"manifest entry {groups[sv][0]} has schema_version {sv}, which no snapshot carries")
+            # explicit schema: no inference/mergeSchema footer job, and the
+            # columns are known without asking the JVM
+            raw = self.spark.read.schema(phys).parquet(*sorted(groups[sv]))
+            columns = phys.fieldNames()
             writer_names = self._names_at_version(sv)
             if writer_names:
                 # ONE simultaneous select, not sequential withColumnRenamed:

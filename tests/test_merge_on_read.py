@@ -470,10 +470,10 @@ def _equivalence_steps(seed: int) -> list:
 _EQUIV_TYPES = {"value_cents": "long", "source": "string", "origin": "string", "score": "int"}
 
 
-def _equivalence_run(spark, root: str, layout: str, steps: list) -> dict:
-    """Apply ``steps`` to a fresh table; return every MergeResult, every
-    commit's entries (paths aside), lineage and fences, and the final rows
-    with hidden columns and tombstones."""
+def _equivalence_run(spark, root: str, layout: str, steps: list, mode: str = "mor") -> dict:
+    """Apply ``steps`` to a fresh table, merging under ``mode``; return
+    every MergeResult, every commit's entries (paths aside), lineage and
+    fences, and the final rows with hidden columns and tombstones."""
     from etl_spark.table.maintenance import migrate_layout_staged
 
     bucket4 = {"type": "bucket", "n_buckets": 4}
@@ -487,12 +487,13 @@ def _equivalence_run(spark, root: str, layout: str, steps: list) -> dict:
         _, cols, rows = step
         types = dict(_EQUIV_TYPES, score="bigint" if "origin" in cols else "int")
         ddl = ", ".join(["doc_id string, commit_lsn long, op_seq int, op string"] + [f"{c} {types[c]}" for c in cols])
-        results.append(merge_batch(table, spark.createDataFrame(rows, ddl), epoch=epoch, merge_mode="mor"))
+        results.append(merge_batch(table, spark.createDataFrame(rows, ddl), epoch=epoch, merge_mode=mode))
         epoch += 1
         if layout == "half_migrated" and epoch == 2:
             # two range files and a winners file; rewrite one into buckets
             migrate_layout_staged(table, bucket4, max_files_per_stage=1, max_stages=1)
-    if layout == "half_migrated":
+    if layout == "half_migrated" and mode == "mor":
+        # a copy-on-write epoch migrates the files it touches
         assert any(f.get("layout_stale") for f in table.files())
     commits = [
         (
@@ -532,6 +533,34 @@ def test_driver_mor_resolve_matches_spark_arm(spark, tmp_table_dir, monkeypatch,
     stale = driver["results"][7]
     assert (stale.rows_upserted, stale.rows_deleted, stale.files_added) == (0, 0, 0)
     assert [f["partition_id"] for f in driver["commits"][stale.snapshot_id][2]] == [-1]
+
+
+@pytest.mark.parametrize(
+    "layout,seed", [("range", 7), ("bucket", 8), ("half_migrated", 9)], ids=["range", "bucket", "half_migrated"]
+)
+def test_cow_and_mor_epochs_agree(spark, tmp_table_dir, layout, seed):
+    """Both merge modes pick their winners by one rule, and copy-on-write
+    only adds the touched rows no change beats: the same random epochs
+    (add/widen/rename steps; stale, tie and re-insert events) leave the
+    same rows, per-commit lineage and fence ids, and per-epoch counts."""
+    steps = _equivalence_steps(seed)
+    cow = _equivalence_run(spark, f"{tmp_table_dir}/cow", layout, steps, mode="cow")
+    mor = _equivalence_run(spark, f"{tmp_table_dir}/mor", layout, steps, mode="mor")
+    assert {r.mode for r in cow["results"]} == {"cow"} and "mor" in {r.mode for r in mor["results"]}
+    assert cow["rows"] == mor["rows"]
+
+    def lineage_and_fences(run):
+        return [
+            (lineage, [(f["checkpoint_epoch"], f["partition_id"]) for f in fences])
+            for _, lineage, fences, _ in run["commits"]
+        ]
+
+    assert lineage_and_fences(cow) == lineage_and_fences(mor)
+
+    def counts(run):
+        return [(r.rows_upserted, r.rows_deleted, r.applied) for r in run["results"]]
+
+    assert counts(cow) == counts(mor)
 
 
 @pytest.mark.parametrize("layout", [None, {"type": "bucket", "n_buckets": 4}], ids=["range", "bucket"])

@@ -296,6 +296,68 @@ def test_mor_resolve_target_scan_prunes_payload(spark, tmp_table_dir):
     assert "tokens" not in read_schema and "doc_id" in read_schema and HIDDEN_SEQ in read_schema
 
 
+def test_cow_resolve_plan_has_no_full_outer_join_or_payload_broadcast(spark, tmp_path, monkeypatch):
+    """A copy-on-write epoch resolves by the winners rule of merge-on-read —
+    the batch left-joined to the per-key stored versions — plus the touched
+    rows left-joined to the batch versions: no join is full outer, and a
+    broadcast hint (under MAX_BROADCAST_ROWS) covers only narrow sides, never
+    a payload column. Checked on the optimized plan of the DataFrame the
+    epoch hands to write_stage, with the bound at 0 and at its default."""
+    import pyspark.sql.functions as F
+
+    import etl_spark.operators.merge as merge
+    from etl_spark.schema import TARGET_SCHEMA
+    from etl_spark.table import LakeTable
+
+    payload = {f.name for f in TARGET_SCHEMA.fields} - {"doc_id"}
+    plans = []
+    write_stage = LakeTable.write_stage
+
+    def capture(self, df, *args, **kw):
+        plans.append(df._jdf.queryExecution().optimizedPlan())
+        return write_stage(self, df, *args, **kw)
+
+    def joins(node):
+        found = [node] if node.nodeName() == "Join" else []
+        kids = node.children()
+        for i in range(kids.size()):
+            found += joins(kids.apply(i))
+        return found
+
+    def feed(n, stride, lsn0):
+        return spark.range(n).select(
+            F.format_string("d%05d", F.col("id") * stride).alias("doc_id"),
+            (F.col("id") + lsn0).alias("commit_lsn"),
+            F.lit(0).alias("op_seq"),
+            F.lit("U").alias("op"),
+            F.sequence(F.lit(1), F.lit(4)).cast("array<int>").alias("tokens"),
+            F.lit(4).alias("n_tok"),
+            F.lit("s").alias("source"),
+        )
+
+    monkeypatch.setattr(LakeTable, "write_stage", capture)
+    for bound in (0, merge.MAX_BROADCAST_ROWS):
+        monkeypatch.setattr(merge, "MAX_BROADCAST_ROWS", bound)
+        table = LakeTable.create_if_absent(spark, str(tmp_path / f"bound{bound}"), TARGET_SCHEMA)
+        merge_batch = merge.merge_batch
+        merge_batch(table, feed(400, 1, 0), epoch=0)
+        plans.clear()
+        # updates of stored keys plus new keys past the stored range
+        r = merge_batch(table, feed(120, 5, 1_000), epoch=1, merge_mode="cow")
+        assert r.mode == "cow" and r.files_rewritten and len(plans) == 1
+        found = joins(plans[0])
+        assert found
+        hinted = []
+        for j in found:
+            assert j.joinType().toString() != "FullOuter", plans[0].toString()
+            for info, child in ((j.hint().leftHint(), j.left()), (j.hint().rightHint(), j.right())):
+                if info.isDefined() and "broadcast" in info.get().toString():
+                    cols = set(child.schema().fieldNames())
+                    assert not cols & payload, f"broadcast over payload columns {sorted(cols & payload)}"
+                    hinted.append(cols)
+        assert bool(hinted) == (bound > 0), hinted
+
+
 def test_fuzzy_dedup_pairs_carry_no_broadcast_hint(spark):
     """The per-doc shingle-set sizes grow with the corpus, so neither pair
     operator may force them into a broadcast: MinHash-LSH carries each

@@ -50,10 +50,10 @@ def test_final_state_invariant_to_epoch_partitioning(spark, tmp_path):
 
 
 def test_final_state_invariant_to_resolve_strategy(spark, tmp_path, monkeypatch):
-    """Broadcast-decomposed resolve (left-outer + keys-only anti) must equal
-    the full-outer SMJ resolve exactly, across multiple epochs. Every batch
-    here is under MAX_BROADCAST_ROWS, so the sort-merge arm is forced by
-    patching the bound to 0."""
+    """The resolve with its narrow sides hinted for broadcast must equal the
+    unhinted resolve exactly, across multiple epochs. Every batch here is
+    under MAX_BROADCAST_ROWS, so the unhinted plan is forced by patching the
+    bound to 0."""
     from etl_spark.operators import merge
 
     spec = BinlogSpec(n_events=3000, n_keys=250, seed=29, tombstone_frac=0.12)
@@ -61,7 +61,7 @@ def test_final_state_invariant_to_resolve_strategy(spark, tmp_path, monkeypatch)
     hi_pos = feed.agg(F.max("delivery_pos")).collect()[0][0]
     span = hi_pos // 3 + 1
     expected = replay_oracle(feed.drop("delivery_pos").toPandas())
-    for strategy, bound in (("smj", 0), ("broadcast", merge.MAX_BROADCAST_ROWS)):
+    for strategy, bound in (("unhinted", 0), ("hinted", merge.MAX_BROADCAST_ROWS)):
         monkeypatch.setattr(merge, "MAX_BROADCAST_ROWS", bound)
         table = LakeTable.create_if_absent(spark, str(tmp_path / strategy), TARGET_SCHEMA)
         for e in range(3):

@@ -79,6 +79,32 @@ def test_narrowing_rejected(spark, tmp_table_dir):
         table.update_schema(widen={"n_tok": "int"})
 
 
+def test_entry_with_unknown_schema_version_raises(spark, tmp_table_dir):
+    """Every writer tags its entries with a schema_version some snapshot
+    carries, so an entry naming another one comes from a corrupt manifest:
+    reading it raises ValueError naming the entry and its version instead
+    of guessing its columns."""
+    import json
+    import re
+
+    table = LakeTable.create_if_absent(spark, tmp_table_dir, TARGET_SCHEMA)
+    batch = spark.createDataFrame(
+        [(f"d{i}", i, 0, "U", [1, 2], 2, "s") for i in range(4)],
+        "doc_id string, commit_lsn long, op_seq int, op string, tokens array<int>, n_tok int, source string",
+    )
+    merge_batch(table, batch, epoch=0)
+    cpath = table._commit_path(table.head_id())
+    with open(cpath) as f:
+        rec = json.load(f)
+    rec["files"][0]["schema_version"] = 99
+    with open(cpath, "w") as f:
+        json.dump(rec, f)
+
+    t2 = LakeTable(spark, tmp_table_dir)  # fresh handle: no cached snapshot
+    with pytest.raises(ValueError, match=re.escape(f"{rec['files'][0]['path']} has schema_version 99")):
+        t2.read()
+
+
 def _mor_feed(rng, lsns, n_keys, cols):
     """One change event per lsn on a random key: ~10% deletes (null
     payload); keys repeat, so lsns drawn out of order across epochs make
@@ -102,8 +128,8 @@ def _mor_feed(rng, lsns, n_keys, cols):
 
 
 def test_mor_epochs_across_schemas_and_evolution_match_fold(spark, tmp_path):
-    """The merge builds its plan fragments once per (schema, layout, mode)
-    and reuses them across epochs and tables — a stale fragment would
+    """The merge builds its plan fragments once per (schema, layout) and
+    reuses them across epochs and tables — a stale fragment would
     resolve or write one schema's columns under another's. Two tables with
     different payload schemas take interleaved forced-MoR epochs in one
     session; one of them evolves mid-replay (add + widen, then a rename).
