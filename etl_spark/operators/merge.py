@@ -68,7 +68,6 @@ from etl_spark.table.table import (
     TableCommitError,
     bucket_col,
     current_buckets,
-    keeps_mask,
     layout_buckets,
 )
 
@@ -103,6 +102,15 @@ MAX_BROADCAST_ROWS = 100_000
 # merge_mode="auto" picks MoR when the touched slice holds more than this
 # many rows per deduped batch row: CoW would rewrite that many rows per change.
 MOR_REWRITE_RATIO = 8.0
+
+# An epoch's applied changes split by a stable key hash into this many
+# lineage partitions; each partition that applies a change gets one lineage
+# record and one fence.
+LINEAGE_PARTITIONS = 16
+
+# A merge whose commit loses a race to another writer replans against the
+# new head up to this many times before the conflict surfaces.
+MAX_COMMIT_RETRIES = 3
 
 
 # Session confs are process-global per SparkSession, and the engine supports
@@ -223,16 +231,14 @@ def merge_batch(
     table: LakeTable,
     changes: DataFrame,
     epoch: int,
-    lineage_partitions: int = 16,
     target_rows_per_file: int = 1_000_000,
     use_salted_dedup: bool = False,
-    max_commit_retries: int = 3,
     merge_mode: str = "auto",
 ) -> MergeResult:
     """Apply one change batch exactly-once. Returns a no-op result if the
     epoch is already fenced (idempotent replay); on a concurrent-writer
     commit conflict the attempt is discarded and the merge replans against
-    the new head (up to ``max_commit_retries`` times).
+    the new head (up to ``MAX_COMMIT_RETRIES`` times).
 
     ``merge_mode``: 'cow' (copy-on-write — rewrite every touched file),
     'mor' (merge-on-read — write ONE batch-sized winners file flagged as an
@@ -248,7 +254,7 @@ def merge_batch(
     hot-key path) instead of the plain ``max_by`` aggregate; both produce
     the identical LWW winner set (operators/dedup.py)."""
     last_err: TableCommitError | None = None
-    for _attempt in range(max_commit_retries + 1):
+    for _attempt in range(MAX_COMMIT_RETRIES + 1):
         # re-check the fence each attempt: the conflicting writer may have
         # been a replay of THIS epoch
         if table.is_fenced(epoch):
@@ -264,7 +270,6 @@ def merge_batch(
                     table,
                     changes,
                     epoch,
-                    lineage_partitions,
                     target_rows_per_file,
                     use_salted_dedup,
                     merge_mode,
@@ -415,14 +420,12 @@ class EpochPlan:
     mode: str  # 'empty', 'cow' or 'mor'
     local: bool  # resolve and write on the driver (_apply_local)
     n_files: int  # the apply write's file count
-    lineage_partitions: int
 
 
 def _plan(
     table: LakeTable,
     changes: DataFrame,
     epoch: int,
-    lineage_partitions: int,
     target_rows_per_file: int,
     use_salted_dedup: bool,
     merge_mode: str,
@@ -465,7 +468,7 @@ def _plan(
     # materializes the dedup cache the later jobs reuse.
     with _aqe_off(batch_spark):
         batch = (
-            dedup.select("*", _lineage_metrics(lineage_partitions)[0], *_layout_fragments(n_buckets)["probe"])
+            dedup.select("*", _lineage_metrics(LINEAGE_PARTITIONS)[0], *_layout_fragments(n_buckets)["probe"])
             .limit(FAST_PATH_MAX_KEYS + 1)
             .toArrow()
         )
@@ -523,7 +526,6 @@ def _plan(
         # and writes on the driver: the probe stays the epoch's only job
         local=use_mor and batch is not None and touched_rows <= DRIVER_MAX_TOUCHED_ROWS,
         n_files=n_files,
-        lineage_partitions=lineage_partitions,
     )
 
 
@@ -680,7 +682,7 @@ def _apply_spark(table: LakeTable, plan: EpochPlan, stage: str, phases: dict) ->
     persisted = plan.mode == "cow" and not plan.n_buckets and plan.n_files > 1
     if persisted:
         resolved = resolved.persist()
-    lp, lineage_metrics = _lineage_metrics(plan.lineage_partitions)
+    lp, lineage_metrics = _lineage_metrics(LINEAGE_PARTITIONS)
     _lap(phases, "wbuild", t0)
     # microbatches: AQE's stage-replan loop costs more than it could ever
     # save on batch-sized shuffles
@@ -702,7 +704,7 @@ def _apply_spark(table: LakeTable, plan: EpochPlan, stage: str, phases: dict) ->
             resolved.unpersist()
     m = m["m"].asDict()
     keys = ("lsn_min", "lsn_max", "ups", "del")
-    rows = ((p, *(m[f"{k}_{p}"] for k in keys)) for p in range(plan.lineage_partitions))
+    rows = ((p, *(m[f"{k}_{p}"] for k in keys)) for p in range(LINEAGE_PARTITIONS))
     return add_files, _lineage_records(plan.epoch, rows)
 
 
@@ -754,14 +756,10 @@ def _commit(
     cow = plan.mode == "cow"
     # the MoR winners file doubles as the equality-delete mask: readers
     # drop same-key rows from older files (table.py docstring). A CoW
-    # rewrite that REMOVES a winners file kills its mask, while the copies
-    # it masked may live in files this batch did NOT touch (the winners
-    # file spans every key its MoR epoch applied; this batch intersects
-    # part of it) and would resurrect as duplicate keys (interleaved
-    # mor-then-cow, tests/test_merge_on_read.py). So the output inherits
-    # the flag under the table layer's rule that every maintenance rewrite
-    # also applies (table.keeps_mask); compact_mor sheds the debt.
-    if add_files and (plan.mode == "mor" or keeps_mask(plan.touched, plan.snap["files"])):
+    # rewrite that REMOVES a winners file inherits its flag in
+    # LakeTable.commit, whose mask-inheritance rule covers every removal:
+    # the copies it masked may live in files this batch did not touch.
+    if plan.mode == "mor":
         for f in add_files:
             f["mor"] = True
     # another writer advancing HEAD after we planned raises

@@ -1993,15 +1993,15 @@ _DEFERRED = (
     # window. Freed by deferring r4-attested entries whose operators stay
     # covered by in-window siblings:
     "events_pivot_type_counts",  # r4-attested; events family (tumbling/sessionize/funnel) in-window
-    # r4-attested; window machinery stays covered in-window by
-    # win_top3_orders_per_cust; slot freed for cdc_stream_replay_debezium
-    "win_lag_delta",
     # r4-attested; TPC-H joins stay covered in-window by q3/q10/rollup;
     # slot freed for the new text_repetition entry
     "tpch_q5_region_revenue",
     # r4/r5-attested; events_tumbling_counts (same F.window aggregate)
     # stays in-window; slot freed for cdc_snapshot_diff
     "events_sliding_counts",
+    # r5-attested; ann_lsh_topk (the same hyperplane-LSH bucket self-join,
+    # one table) stays in-window; slot freed for win_lag_delta
+    "ann_lsh_multi_topk",
 )
 QUERIES = {
     **{k: v for k, v in QUERIES.items() if k not in _DEFERRED},

@@ -13,8 +13,9 @@ filter/join work.
   range-partitioned files of the target row count. Reads through the
   mask-applying loader, so the output is current state; the ``mor`` flag is
   kept iff a compacted ``mor`` file may share a key with a live file outside
-  the compaction (the output's keys must keep masking those older copies):
-  ``table.keeps_mask``, the rule the merge and every rewrite here share.
+  the compaction (the output's keys must keep masking those older copies).
+  ``LakeTable.commit`` applies that rule to every commit that removes
+  files, the merge's and every rewrite here alike.
 - ``rewrite_table``: full rewrite of every live file — the guaranteed
   mask-shedding point (output is one clean range-partitioned, one-version-
   per-key layout with no ``mor`` flags).
@@ -51,7 +52,6 @@ from etl_spark.table.table import (
     HIDDEN_DELETED,
     LakeTable,
     TableCommitError,
-    keeps_mask,
     layout_buckets,
     may_share_keys,
     validate_layout,
@@ -75,9 +75,9 @@ def _rewrite(
     the staged files are removed and TableCommitError surfaces; maintenance
     is re-runnable, so callers simply retry against the new head. Any other
     failure after staging also cleans its debris (gc_orphans covers only
-    hard crashes). The output carries the ``mor`` flag iff
-    ``table.keeps_mask`` says a masked copy may survive outside the
-    rewrite."""
+    hard crashes). The rewrite sets no ``mor`` flag itself:
+    ``LakeTable.commit`` flags the output iff a removed ``mor`` entry may
+    share a key with a live entry outside the rewrite."""
     snap = table.snapshot(expect_parent)
     # output files: ~target_rows_per_file rows each, sized from the inputs'
     # manifest row counts — an upper bound on the rows written (masked and
@@ -94,9 +94,6 @@ def _rewrite(
     committed = False
     try:
         add_files, _ = table.write_stage(df, stage, n_out, snap)
-        if keeps_mask(entries, snap["files"]):
-            for f in add_files:
-                f["mor"] = True
         sid = table.commit(
             add_files=add_files,
             remove_paths={f["path"] for f in entries},
@@ -209,7 +206,7 @@ def migrate_layout_staged(
     small table's whole migration is then a metadata-only begin commit plus
     one rewrite commit). Every stage reads through the masked loader, so MoR
     debt is applied; a stage sheds it when no live file outside the stage
-    may hold a masked copy (``table.keeps_mask``).
+    may hold a masked copy (the ``mor``-flag rule of ``LakeTable.commit``).
 
     Protocol (resumable by construction — progress lives in the manifest,
     no side state):
@@ -225,10 +222,10 @@ def migrate_layout_staged(
     2. **stage** commits: rewrite up to ``max_files_per_stage`` stale files
        through the masked loader into the new layout (the output keeps the
        mor flag iff a rewritten mor file may share a key with a live file
-       outside the stage, ``table.keeps_mask``, as for every rewrite). Each
-       stage is pinned to the snapshot it planned (``expect_parent``) and
-       retries on concurrent-writer conflicts; a crash between stages loses
-       at most one stage of work.
+       outside the stage, decided by ``LakeTable.commit`` as for every
+       rewrite). Each stage is pinned to the snapshot it planned
+       (``expect_parent``) and retries on concurrent-writer conflicts; a
+       crash between stages loses at most one stage of work.
     3. done when no ``layout_stale`` entry remains — there is no final
        flip: the descriptor flipped at begin, and conformance is derivable
        from the manifest (re-invoking resumes / no-ops).

@@ -19,12 +19,17 @@ Layout::
     <root>/metadata/commit-<n>.json             # one record per snapshot
     <root>/metadata/HEAD                        # atomic pointer to latest n
 
-Commit record: parent pointer, schema + schema_version, live file list with
-per-file stats (rows, min/max doc_id, bucket set on bucket tables — observed
-by ``LakeTable.write_stage`` in the job that writes the files, the one
-writer every merge and maintenance commit uses), fence records added this
-commit (``(checkpoint_epoch, partition_id)``), lineage records, summary
-counters.
+Commit record: parent pointer, schema + schema_version, the stable
+``field_ids`` and the ``layout`` descriptor, live file list with per-file
+stats (rows, min/max doc_id, bucket set on bucket tables — observed by
+``LakeTable.write_stage`` in the job that writes the files, the one writer
+every merge and maintenance commit uses), fence records added this commit
+(``(checkpoint_epoch, partition_id)``), lineage records, summary counters.
+These fields are mandatory, as are each file entry's ``schema_version``
+(set by the writer) and ``added_at`` (stamped by ``commit``): readers index
+them directly. ``commit`` also decides
+``mor``-flag inheritance: when it removes entries, the added files carry
+the flag iff ``keeps_mask`` says a masked copy may survive outside them.
 
 Atomicity & concurrency: the commit-file CREATE is the CAS — temp-write +
 fsync + ``os.link`` (create-exclusive), so exactly one writer claims each
@@ -178,9 +183,8 @@ def validate_layout(layout: dict) -> None:
 
 
 def layout_buckets(snap: dict) -> int:
-    """The bucket count of a snapshot's layout; 0 for the range layout
-    (pre-layout snapshots read as range)."""
-    layout = snap.get("layout") or {"type": "range"}
+    """The bucket count of a snapshot's layout; 0 for the range layout."""
+    layout = snap["layout"]
     return int(layout["n_buckets"]) if layout.get("type") == "bucket" else 0
 
 
@@ -351,10 +355,6 @@ class LakeTable:
         # driver-side serial fraction across a long replay (round-1 scaling
         # post-mortem)
         self._snap_cache: dict[int, dict] = {}
-        # path -> first snapshot id referencing it, for legacy file entries
-        # that predate the per-entry schema_version/added_at tags
-        # (see _first_snapshot_of)
-        self._first_snap_cache: dict[str, int] = {}
         # incremental fence ledger (see fences())
         self._fences_cache: set[tuple[int, int]] = set()
         self._fenced_epochs_cache: set[int] = set()
@@ -442,42 +442,8 @@ class LakeTable:
         return [self.snapshot(s) for s in range(self.head_id() + 1)]
 
     def field_ids(self, sid: int | None = None) -> dict[str, int]:
-        """name -> stable field id at a snapshot (legacy commits without the
-        registry fall back to positional ids — valid because renames did not
-        exist before the registry did)."""
-        snap = self.snapshot(sid)
-        fids = snap.get("field_ids")
-        if fids is None:
-            fids = {f["name"]: i for i, f in enumerate(snap["schema"]["fields"])}
-        return fids
-
-    def _first_snapshot_of(self, path: str) -> int:
-        """Earliest snapshot id referencing a path — the commit that added
-        the file. Recovers both missing per-entry tags on legacy (pre-tag)
-        entries: ``schema_version`` (what the writer called its columns —
-        without it a later rename would skip the field-id mapping and the
-        old-name column would silently read NULL) and ``added_at`` (the MoR
-        mask ordering). Returns 0 for an unreferenced path (a synthetic
-        caller-built entry): pre-tag code predates both renames and MoR."""
-        cached = self._first_snap_cache.get(path)
-        if cached is not None:
-            return cached
-        sid = 0
-        for s in self.snapshots():
-            if any(f["path"] == path for f in s["files"]):
-                sid = s["snapshot_id"]
-                break
-        self._first_snap_cache[path] = sid
-        return sid
-
-    def _untagged_version(self, path: str) -> int:
-        return self.snapshot(self._first_snapshot_of(path))["schema_version"]
-
-    def _entry_seq(self, f: dict) -> int:
-        """Commit order of a file entry: ``added_at`` (stamped by commit()),
-        falling back to the first snapshot referencing it."""
-        seq = f.get("added_at")
-        return seq if seq is not None else self._first_snapshot_of(f["path"])
+        """name -> stable field id at a snapshot."""
+        return self.snapshot(sid)["field_ids"]
 
     def _snapshot_at_version(self, version: int) -> dict | None:
         """Earliest snapshot whose live schema carries a given
@@ -540,8 +506,8 @@ class LakeTable:
         return self.snapshot(sid)["files"]
 
     def layout(self, sid: int | None = None) -> dict:
-        """Physical layout descriptor (pre-layout tables read as range)."""
-        return self.snapshot(sid).get("layout") or {"type": "range"}
+        """Physical layout descriptor."""
+        return self.snapshot(sid)["layout"]
 
     def stats(self, sid: int | None = None) -> dict:
         """Operator-facing snapshot stats from metadata only (no data scan):
@@ -647,12 +613,7 @@ class LakeTable:
         target_names = {fid: name for name, fid in self.field_ids(snap["snapshot_id"]).items()}
         groups: dict[int, list[str]] = {}
         for f in file_entries:
-            sv = f.get("schema_version")
-            if sv is None:
-                # legacy entry from a pre-tag commit: recover the version
-                # from commit history so renames still map its columns
-                sv = self._untagged_version(f["path"])
-            groups.setdefault(sv, []).append(f["path"])
+            groups.setdefault(f["schema_version"], []).append(f["path"])
         parts = []
         for sv in sorted(groups):
             phys = self._physical_schema_at(sv)
@@ -726,10 +687,10 @@ class LakeTable:
         if len(entries) <= MAX_LITERAL_SEQ_MAP:
             pairs: list = []
             for f in entries:
-                pairs += [F.lit(os.path.basename(f["path"])), F.lit(self._entry_seq(f))]
+                pairs += [F.lit(os.path.basename(f["path"])), F.lit(f["added_at"])]
             return df.withColumn(col, F.element_at(F.create_map(*pairs), fname))
         mapping = self.spark.createDataFrame(
-            [(os.path.basename(f["path"]), self._entry_seq(f)) for f in entries],
+            [(os.path.basename(f["path"]), f["added_at"]) for f in entries],
             "_bn string, _sq int",
         )
         return (
@@ -1070,7 +1031,10 @@ class LakeTable:
     ) -> int:
         """Atomic snapshot swap (reference K3 upgraded): new file list =
         (parent files - removed) + added; fences/lineage appended; optional
-        schema change rides the same commit. ``expect_parent`` is the
+        schema change rides the same commit. The added files carry the
+        ``mor`` flag when their writer set it, or when the removal would
+        otherwise drop a mask a live file outside it still needs
+        (``keeps_mask``). ``expect_parent`` is the
         optimistic-concurrency check: a writer passes the head it planned
         against and the commit REFUSES if another writer advanced it —
         callers (merge_batch) re-plan against the new head and retry."""
@@ -1080,10 +1044,13 @@ class LakeTable:
         psnap = self.snapshot(parent)
         remove_paths = remove_paths or set()
         sid = parent + 1
-        # stamp commit order on new entries (the MoR mask ordering; also the
-        # rename fallback for entries whose tags a legacy writer stripped)
+        # the output must keep masking a removed mor entry's older copies
+        # outside the removal. New entries get the commit order (the MoR
+        # mask ordering); re-added ones keep theirs.
+        removed = [f for f in psnap["files"] if f["path"] in remove_paths]
+        mor = {"mor": True} if keeps_mask(removed, psnap["files"]) else {}
         files = [f for f in psnap["files"] if f["path"] not in remove_paths] + [
-            {**f, "added_at": f.get("added_at", sid)} for f in add_files
+            {**f, **mor, "added_at": f.get("added_at", sid)} for f in add_files
         ]
         commit = {
             "snapshot_id": sid,
@@ -1091,7 +1058,7 @@ class LakeTable:
             "schema_version": psnap["schema_version"] + (1 if new_schema is not None else 0),
             "schema": json.loads(new_schema.json()) if new_schema is not None else psnap["schema"],
             "field_ids": new_field_ids if new_field_ids is not None else self.field_ids(parent),
-            "layout": new_layout if new_layout is not None else (psnap.get("layout") or {"type": "range"}),
+            "layout": new_layout if new_layout is not None else psnap["layout"],
             "files": files,
             "fences": fences or [],
             "lineage": lineage or [],

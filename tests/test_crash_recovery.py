@@ -103,3 +103,41 @@ def test_resume_after_simulated_crash_between_epochs(spark, tmp_path):
     expected = replay_oracle(feed.toPandas())
     assert_state_equal(table2.read(include_hidden=True).toPandas(), expected)
     feed.unpersist()
+
+
+# ------------------------------------------------ HEAD recovery monotonic
+
+
+def test_recover_head_never_moves_backwards(spark, tmp_table_dir, monkeypatch):
+    """Race from ADVICE r2: writer B recovered head=4 from a stale HEAD read
+    while writer A already committed 5 and wrote HEAD=5; B's delayed write
+    must NOT set HEAD back to 4."""
+    table = LakeTable.create_if_absent(spark, tmp_table_dir, TARGET_SCHEMA)
+    for sid in range(1, 6):
+        table.commit(add_files=[], summary={"n": sid})
+    assert table.head_id() == 5
+
+    # Simulate B's stale view: first head_id() read returns 3, and the scan
+    # cannot see commit-5 yet (A's commit lands "between" B's scan and write).
+    real_head_id = LakeTable.head_id
+    real_commit_path = LakeTable._commit_path
+    state = {"head_reads": 0, "hid_5": True}
+
+    def stale_head_id(self):
+        state["head_reads"] += 1
+        return 3 if state["head_reads"] == 1 else real_head_id(self)
+
+    def hidden_commit_path(self, sid):
+        p = real_commit_path(self, sid)
+        if sid == 5 and state["hid_5"]:
+            state["hid_5"] = False  # A's commit becomes visible after this probe
+            return p + ".not-yet-visible"
+        return p
+
+    monkeypatch.setattr(LakeTable, "head_id", stale_head_id)
+    monkeypatch.setattr(LakeTable, "_commit_path", hidden_commit_path)
+    got = table._recover_head()
+    monkeypatch.undo()
+    assert got == 5
+    with open(os.path.join(table.meta_dir, "HEAD")) as f:
+        assert f.read().strip() == "5"  # never rewritten to 4

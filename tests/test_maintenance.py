@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from etl_spark.datagen import BinlogSpec, generate_binlog
 from etl_spark.lineage import coverage, lineage_df
@@ -11,6 +12,20 @@ from etl_spark.oracle import assert_state_equal, replay_oracle
 from etl_spark.schema import TARGET_SCHEMA
 from etl_spark.table import LakeTable
 from etl_spark.table.maintenance import compact, expire_tombstones
+
+KV_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType(), False),
+        StructField("value_cents", LongType(), True),
+        StructField("source", StringType(), True),
+    ]
+)
+
+
+def _kv_batch(spark, rows):
+    return spark.createDataFrame(
+        rows, "doc_id string, commit_lsn long, op_seq int, op string, value_cents long, source string"
+    )
 
 
 def _replayed_table(spark, tmp_path, epochs=4, n_events=4000, seed=7):
@@ -157,3 +172,46 @@ def test_expire_tombstones_that_empty_every_touched_file(spark, tmp_path):
         os.path.join(d, fn) for d, _, fns in os.walk(table.data_dir) for fn in fns if fn.endswith(".parquet")
     }
     assert on_disk <= referenced, sorted(on_disk - referenced)
+
+
+# ------------------------------------ maintenance vs concurrent writers
+
+
+def test_compaction_refuses_after_concurrent_merge(spark, tmp_table_dir, monkeypatch):
+    """Compaction-vs-writer conflict (the hole Iceberg's rewrite validation
+    exists for): a MERGE that lands between a compaction's planning read
+    and its commit must make the compaction REFUSE — otherwise the rewrite
+    re-adds rows it copied from files the merge just replaced, silently
+    undoing the merge. The staged debris is cleaned and a retry succeeds."""
+    import pytest
+
+    from etl_spark.table.maintenance import gc_orphans
+    from etl_spark.table.table import TableCommitError
+
+    table = LakeTable.create_if_absent(spark, tmp_table_dir, KV_SCHEMA)
+    rows = [(f"k{i:03d}", i + 1, 0, "U", i, "s") for i in range(40)]
+    merge_batch(table, _kv_batch(spark, rows), epoch=0, target_rows_per_file=10)
+
+    orig_commit = LakeTable.commit
+    state = {"injected": False}
+
+    def racy_commit(self, *a, **kw):
+        if not state["injected"] and kw.get("summary", {}).get("maintenance") == "compact":
+            state["injected"] = True
+            other = LakeTable(spark, tmp_table_dir)
+            merge_batch(other, _kv_batch(spark, [("k001", 99999, 0, "U", -1, "w")]), epoch=1)
+        return orig_commit(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "commit", racy_commit)
+    with pytest.raises(TableCommitError):
+        compact(table, small_file_rows=1 << 60, target_rows_per_file=1000)
+    monkeypatch.undo()
+    assert state["injected"]
+
+    t2 = LakeTable(spark, tmp_table_dir)
+    got = {r["doc_id"]: r["value_cents"] for r in t2.read().collect()}
+    assert got["k001"] == -1 and len(got) == 40  # the merge survived intact
+    assert gc_orphans(t2) == []  # failed compaction cleaned its stage
+    # retry against the new head succeeds and preserves the merge
+    assert compact(t2, small_file_rows=1 << 60, target_rows_per_file=1000) is not None
+    assert {r["doc_id"]: r["value_cents"] for r in t2.read().collect()} == got

@@ -586,3 +586,78 @@ def test_driver_winners_write_splits_files_by_target_rows(spark, tmp_table_dir, 
         seen_buckets += f.get("buckets", [])
     assert len(seen_buckets) == len(set(seen_buckets))
     assert _state(table)["k00008"] == (-8, "u") and table.read().count() == 200
+
+
+def _run_every_writer(spark, root: str, layout: dict | None, monkeypatch) -> tuple:
+    """Run each manifest writer once on a fresh table: a CoW bulk merge, a
+    driver MoR epoch, a Spark MoR epoch, ``compact`` of the two winners
+    files, a CoW merge that removes the compacted winners file,
+    ``compact_mor``, ``expire_tombstones``, a two-stage
+    ``migrate_layout_staged`` to the other layout under MoR debt and a
+    rename through ``update_schema``. Returns the table, every merged event
+    as a pandas frame, and the merge results."""
+    import pandas as pd
+
+    import etl_spark.operators.merge as merge
+    from etl_spark.table.maintenance import compact_mor, migrate_layout_staged
+
+    bucket4 = {"type": "bucket", "n_buckets": 4}
+    table = LakeTable.create_if_absent(spark, root, SCHEMA, layout=layout)
+    bulk = _bulk(spark, 400)
+    events = [bulk.toPandas()]
+    results = {"bulk": merge_batch(table, bulk, epoch=0, target_rows_per_file=100)}
+
+    def merge_rows(name, epoch, rows, mode):
+        events.append(pd.DataFrame(rows, columns=events[0].columns))
+        results[name] = merge_batch(table, _batch(spark, rows), epoch=epoch, merge_mode=mode)
+
+    merge_rows("driver_mor", 1, [(f"k{i:05d}", 1_000 + i, 0, "U", -i, "d") for i in (10, 130, 250, 370)], "mor")
+    with monkeypatch.context() as mp:
+        mp.setattr(merge, "DRIVER_MAX_TOUCHED_ROWS", 0)
+        merge_rows(
+            "spark_mor",
+            2,
+            [("k00020", 2_000, 0, "D", None, None), ("k00140", 2_001, 0, "U", -140, "p"), ("k00010", 900, 0, "U", 0, "x")],
+            "mor",
+        )
+    assert compact(table, small_file_rows=50, target_rows_per_file=1_000) is not None
+    merge_rows("cow_removes_winners", 3, [("k00010", 3_000, 1, "U", 7, "c")], "cow")
+    assert compact_mor(table) is not None
+    assert expire_tombstones(table, low_watermark_lsn=10_000) is not None
+    merge_rows("mor_debt", 4, [("k00200", 4_000, 0, "U", 2, "m"), ("k00390", 4_001, 0, "D", None, None)], "mor")
+    stages = migrate_layout_staged(
+        table,
+        {"type": "range"} if layout else bucket4,
+        max_files_per_stage=-(-len(table.files()) // 2),
+        target_rows_per_file=1_000,
+    )
+    assert stages["done"] and len(stages["stages"]) == 2
+    table.update_schema(renames={"source": "origin"})
+    return table, pd.concat(events, ignore_index=True), results
+
+
+@pytest.mark.parametrize("layout", [None, {"type": "bucket", "n_buckets": 4}], ids=["range", "bucket(4)"])
+def test_every_writer_commits_tagged_manifest(spark, tmp_table_dir, monkeypatch, layout):
+    """Readers index the manifest tags directly, so every writer must leave
+    them: each entry of every snapshot carries an int ``schema_version`` and
+    ``added_at``, and each snapshot its ``layout`` and ``field_ids``. The
+    CoW merge that removes a winners file inherits the mor flag from the
+    commit, and the final rows match the fold of every merged event."""
+    from etl_spark.oracle import assert_state_equal, replay_oracle
+
+    table, events, results = _run_every_writer(spark, tmp_table_dir, layout, monkeypatch)
+    modes = {name: (r.mode, set(table.snapshot(r.snapshot_id)["summary"]["phase_s"])) for name, r in results.items()}
+    assert modes["driver_mor"] == ("mor", {"plan", "resolve", "write"})
+    assert modes["spark_mor"][0] == "mor" and "wbuild" in modes["spark_mor"][1]
+    assert modes["cow_removes_winners"][0] == "cow"
+    cow = table.snapshot(results["cow_removes_winners"].snapshot_id)
+    removed = {f["path"] for f in table.files(cow["parent_id"])} - {f["path"] for f in cow["files"]}
+    assert any(f.get("mor") for f in table.files(cow["parent_id"]) if f["path"] in removed)
+    added = [f for f in cow["files"] if f["added_at"] == cow["snapshot_id"]]
+    assert added and all(f.get("mor") for f in added)
+    for s in table.snapshots():
+        assert isinstance(s["layout"], dict) and isinstance(s["field_ids"], dict), s["snapshot_id"]
+        for f in s["files"]:
+            assert isinstance(f["schema_version"], int) and isinstance(f["added_at"], int), (s["snapshot_id"], f)
+    expected = replay_oracle(events, payload_cols=["value_cents", "source"]).rename(columns={"source": "origin"})
+    assert_state_equal(table.read(include_hidden=True).toPandas(), expected)

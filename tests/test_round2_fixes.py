@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from etl_spark.operators import merge as merge_mod
 from etl_spark.operators.merge import merge_batch
 from etl_spark.table import LakeTable
 from etl_spark.table.table import TableCommitError
@@ -69,8 +70,9 @@ def test_merge_conflict_retries_exhaust(spark, tmp_table_dir, monkeypatch):
         return orig_commit(self, *args, **kwargs)
 
     monkeypatch.setattr(LakeTable, "commit", always_racy)
+    monkeypatch.setattr(merge_mod, "MAX_COMMIT_RETRIES", 2)
     with pytest.raises(TableCommitError):
-        merge_batch(table, _batch(spark, [("a", 1, 0, "U", 1, "s")]), epoch=0, max_commit_retries=2)
+        merge_batch(table, _batch(spark, [("a", 1, 0, "U", 1, "s")]), epoch=0)
 
 
 def test_stale_expect_parent_refused(spark, tmp_table_dir):

@@ -1,11 +1,9 @@
 """Round-3 hardening: distributed vocab-id rank (last data-bearing
 single-partition window removed), manifest-from-Observation index-collision
-fallback, HEAD recovery monotonicity, untagged-file rename mapping, and the
-zero-length chunk contract."""
+fallback, and the zero-length chunk contract."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pyspark.sql.functions as F
@@ -161,71 +159,6 @@ def test_merge_empty_batch_fences_epoch(spark, tmp_table_dir):
     assert table.read().count() == 1
 
 
-# ------------------------------------------------ HEAD recovery monotonic
-
-
-def test_recover_head_never_moves_backwards(spark, tmp_table_dir, monkeypatch):
-    """Race from ADVICE r2: writer B recovered head=4 from a stale HEAD read
-    while writer A already committed 5 and wrote HEAD=5; B's delayed write
-    must NOT set HEAD back to 4."""
-    table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA)
-    for sid in range(1, 6):
-        table.commit(add_files=[], summary={"n": sid})
-    assert table.head_id() == 5
-
-    # Simulate B's stale view: first head_id() read returns 3, and the scan
-    # cannot see commit-5 yet (A's commit lands "between" B's scan and write).
-    real_head_id = LakeTable.head_id
-    real_commit_path = LakeTable._commit_path
-    state = {"head_reads": 0, "hid_5": True}
-
-    def stale_head_id(self):
-        state["head_reads"] += 1
-        return 3 if state["head_reads"] == 1 else real_head_id(self)
-
-    def hidden_commit_path(self, sid):
-        p = real_commit_path(self, sid)
-        if sid == 5 and state["hid_5"]:
-            state["hid_5"] = False  # A's commit becomes visible after this probe
-            return p + ".not-yet-visible"
-        return p
-
-    monkeypatch.setattr(LakeTable, "head_id", stale_head_id)
-    monkeypatch.setattr(LakeTable, "_commit_path", hidden_commit_path)
-    got = table._recover_head()
-    monkeypatch.undo()
-    assert got == 5
-    with open(os.path.join(table.meta_dir, "HEAD")) as f:
-        assert f.read().strip() == "5"  # never rewritten to 4
-
-
-# --------------------------------------- untagged-file rename resolution
-
-
-def test_rename_maps_untagged_legacy_file_entries(spark, tmp_table_dir):
-    """ADVICE r2: file entries committed by pre-round-2 code carry no
-    schema_version tag. After a column rename on such an upgraded table, the
-    old-name column must still resolve through its field id (version = the
-    snapshot the file first appeared in), not silently read NULL."""
-    table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA)
-    merge_batch(table, _batch(spark, [("a", 1, 0, "U", 777, "s")]), epoch=0)
-    # strip the tags in-place, as a pre-tag commit would have written them
-    head = table.head_id()
-    cpath = table._commit_path(head)
-    with open(cpath) as f:
-        rec = json.load(f)
-    for fent in rec["files"]:
-        fent.pop("schema_version", None)
-    os.remove(cpath)
-    with open(cpath, "w") as f:
-        json.dump(rec, f)
-
-    t2 = LakeTable(spark, tmp_table_dir)  # fresh handle: no stale snap cache
-    t2.rename_column("value_cents", "amount_cents")
-    row = t2.read().collect()[0]
-    assert row["amount_cents"] == 777
-
-
 # ------------------------------------------------------- k-means IVF
 
 
@@ -274,77 +207,3 @@ def test_chunk_zero_length_docs_emit_no_rows(spark):
     got_arrow = chunk_for_training_arrow(df, seq_len=8).collect()
     assert [r["doc_id"] for r in got] == ["one"]
     assert [r["doc_id"] for r in got_arrow] == ["one"]
-
-
-# ------------------------------------ maintenance vs concurrent writers
-
-
-def test_compaction_refuses_after_concurrent_merge(spark, tmp_table_dir, monkeypatch):
-    """Compaction-vs-writer conflict (the hole Iceberg's rewrite validation
-    exists for): a MERGE that lands between a compaction's planning read
-    and its commit must make the compaction REFUSE — otherwise the rewrite
-    re-adds rows it copied from files the merge just replaced, silently
-    undoing the merge. The staged debris is cleaned and a retry succeeds."""
-    import pytest
-
-    from etl_spark.table.maintenance import compact, gc_orphans
-    from etl_spark.table.table import TableCommitError
-
-    table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA)
-    rows = [(f"k{i:03d}", i + 1, 0, "U", i, "s") for i in range(40)]
-    merge_batch(table, _batch(spark, rows), epoch=0, target_rows_per_file=10)
-
-    orig_commit = LakeTable.commit
-    state = {"injected": False}
-
-    def racy_commit(self, *a, **kw):
-        if not state["injected"] and kw.get("summary", {}).get("maintenance") == "compact":
-            state["injected"] = True
-            other = LakeTable(spark, tmp_table_dir)
-            merge_batch(other, _batch(spark, [("k001", 99999, 0, "U", -1, "w")]), epoch=1)
-        return orig_commit(self, *a, **kw)
-
-    monkeypatch.setattr(LakeTable, "commit", racy_commit)
-    with pytest.raises(TableCommitError):
-        compact(table, small_file_rows=1 << 60, target_rows_per_file=1000)
-    monkeypatch.undo()
-    assert state["injected"]
-
-    t2 = LakeTable(spark, tmp_table_dir)
-    got = {r["doc_id"]: r["value_cents"] for r in t2.read().collect()}
-    assert got["k001"] == -1 and len(got) == 40  # the merge survived intact
-    assert gc_orphans(t2) == []  # failed compaction cleaned its stage
-    # retry against the new head succeeds and preserves the merge
-    assert compact(t2, small_file_rows=1 << 60, target_rows_per_file=1000) is not None
-    assert {r["doc_id"]: r["value_cents"] for r in t2.read().collect()} == got
-
-
-def test_racing_schema_evolutions_cannot_clobber(spark, tmp_table_dir, monkeypatch):
-    """Two evolves planned against the same base: the loser must REFUSE
-    (its new schema was computed without the winner's change), not silently
-    drop the winner's column."""
-    import pytest
-
-    from etl_spark.table.table import TableCommitError
-
-    table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA)
-    orig_commit = LakeTable.commit
-    state = {"injected": False}
-
-    def racy_commit(self, *a, **kw):
-        if not state["injected"] and kw.get("new_schema") is not None:
-            state["injected"] = True
-            LakeTable(spark, tmp_table_dir).update_schema(add_columns=[("winner_col", "bigint")])
-        return orig_commit(self, *a, **kw)
-
-    monkeypatch.setattr(LakeTable, "commit", racy_commit)
-    with pytest.raises(TableCommitError):
-        table.update_schema(add_columns=[("loser_col", "bigint")])
-    monkeypatch.undo()
-    t2 = LakeTable(spark, tmp_table_dir)
-    names = [f.name for f in t2.schema().fields]
-    assert "winner_col" in names and "loser_col" not in names
-    # retry against the new head lands both
-    t2.update_schema(add_columns=[("loser_col", "bigint")])
-    names = [f.name for f in t2.schema().fields]
-    assert "winner_col" in names and "loser_col" in names

@@ -137,7 +137,7 @@ def test_mor_backlog_100_epochs_read_cost_stays_bounded(spark, tmp_table_dir):
             (f"k{base + off:05d}", 100_000 + e, 0, "U", 7_000_000 + e * 10 + off, "m")
             for off in (0, 30, 60)
         ]
-        r = merge_batch(table, _batch(spark, rows), epoch=e + 1, merge_mode="mor", lineage_partitions=4)
+        r = merge_batch(table, _batch(spark, rows), epoch=e + 1, merge_mode="mor")
         assert r.mode == "mor", f"epoch {e + 1} fell back to {r.mode}"
 
     st = table.stats()

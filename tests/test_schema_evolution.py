@@ -195,3 +195,33 @@ def test_mor_epochs_across_schemas_and_evolution_match_fold(spark, tmp_path):
 
     expected = replay_oracle(pd.DataFrame(feeds["other"]), payload_cols=["value_cents", "source"])
     assert_state_equal(other.read(include_hidden=True).toPandas(), expected)
+
+
+# ------------------------------------ racing schema evolutions
+
+
+def test_racing_schema_evolutions_cannot_clobber(spark, tmp_table_dir, monkeypatch):
+    """Two evolves planned against the same base: the loser must REFUSE
+    (its new schema was computed without the winner's change), not silently
+    drop the winner's column."""
+    table = LakeTable.create_if_absent(spark, tmp_table_dir, TARGET_SCHEMA)
+    orig_commit = LakeTable.commit
+    state = {"injected": False}
+
+    def racy_commit(self, *a, **kw):
+        if not state["injected"] and kw.get("new_schema") is not None:
+            state["injected"] = True
+            LakeTable(spark, tmp_table_dir).update_schema(add_columns=[("winner_col", "bigint")])
+        return orig_commit(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "commit", racy_commit)
+    with pytest.raises(TableCommitError):
+        table.update_schema(add_columns=[("loser_col", "bigint")])
+    monkeypatch.undo()
+    t2 = LakeTable(spark, tmp_table_dir)
+    names = [f.name for f in t2.schema().fields]
+    assert "winner_col" in names and "loser_col" not in names
+    # retry against the new head lands both
+    t2.update_schema(add_columns=[("loser_col", "bigint")])
+    names = [f.name for f in t2.schema().fields]
+    assert "winner_col" in names and "loser_col" in names
