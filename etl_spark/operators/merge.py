@@ -12,8 +12,9 @@ One epoch runs three stages, retried as a whole on a commit conflict:
    ONE bounded job ships the deduped batch to the driver as Arrow under a
    LIMIT of ``FAST_PATH_MAX_KEYS + 1`` rows. A batch under the cap plans on
    the driver (one bisect per file entry against the sorted keys, or exact
-   bucket-set intersection); a bulk batch plans by a broadcast join of its
-   keys against the per-file stats. Only touched files are rewritten, the
+   bucket-set intersection); a bulk batch plans by the table's broadcast
+   join of its keys against the per-file stats
+   (``LakeTable.touched_files``). Only touched files are rewritten, the
    rest carried forward (Iceberg copy-on-write with manifest pruning); as
    writes are range-partitioned and sorted on doc_id, a batch touching k%
    of the keyspace rewrites ~k% of files. The plan then picks copy-on-write
@@ -56,7 +57,7 @@ from dataclasses import dataclass
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
 from etl_spark.operators.dedup import lww_dedup, lww_dedup_salted
@@ -303,34 +304,17 @@ def merge_batch(
 # the lineage-metric columns the write drops — so the write chain needs no
 # re-projection.
 _METRIC_COLS = ("_applied", "_is_delete", "_was_live", "_existed", "_chg_lsn")
-_LAYOUT_FRAGMENTS_CACHE: OrderedDict = OrderedDict()
+_PROBE_COLS_CACHE: OrderedDict = OrderedDict()
 _RESOLVE_FRAGMENTS_CACHE: OrderedDict = OrderedDict()
 
 
-def _layout_fragments(n_buckets: int) -> dict:
-    """Layout-dependent fragments (``n_buckets`` 0 = range layout): the
-    keys probe's layout columns, and the bulk-planning join's batch column,
-    hit predicate and file-stats schema."""
-
-    def _build() -> dict:
-        doc_id = F.col("doc_id")
-        frags = {}
-        if not n_buckets:
-            frags["probe"] = ()
-            frags["plan_key"] = doc_id
-            frags["plan_hit"] = (doc_id >= F.col("min_key")) & (doc_id <= F.col("max_key"))
-            frags["plan_schema"] = "path string, min_key string, max_key string"
-            return frags
-        bucket = bucket_col(n_buckets).alias("_bkt")
-        # bucket layout ships each key's bucket id: a JVM xxhash64 the
-        # driver cannot recompute
-        frags["probe"] = (bucket,)
-        frags["plan_key"] = bucket
-        frags["plan_hit"] = F.col("_bkt") == F.col("bucket")
-        frags["plan_schema"] = "path string, bucket int"
-        return frags
-
-    return expr_cache_get(_LAYOUT_FRAGMENTS_CACHE, (n_buckets,), _build)
+def _probe_cols(n_buckets: int) -> tuple:
+    """The keys probe's layout columns (``n_buckets`` 0 = range layout): on
+    a bucket table each key's bucket id, a JVM xxhash64 the driver cannot
+    recompute."""
+    if not n_buckets:
+        return ()
+    return expr_cache_get(_PROBE_COLS_CACHE, (n_buckets,), lambda: (bucket_col(n_buckets).alias("_bkt"),))
 
 
 def _resolve_fragments(schema: StructType) -> dict:
@@ -468,7 +452,7 @@ def _plan(
     # materializes the dedup cache the later jobs reuse.
     with _aqe_off(batch_spark):
         batch = (
-            dedup.select("*", _lineage_metrics(LINEAGE_PARTITIONS)[0], *_layout_fragments(n_buckets)["probe"])
+            dedup.select("*", _lineage_metrics(LINEAGE_PARTITIONS)[0], *_probe_cols(n_buckets))
             .limit(FAST_PATH_MAX_KEYS + 1)
             .toArrow()
         )
@@ -476,7 +460,7 @@ def _plan(
         touched, n_changes = _touched_local(files, batch, n_buckets), batch.num_rows
     else:
         batch = None
-        touched, n_changes = _touched_bulk(table.spark, dedup, files, n_buckets, epoch)
+        touched, n_changes = table.touched_files(dedup, snap)
     touched_rows = sum(f["rows"] for f in touched)
 
     # Merge-on-read decision: when a microbatch touches a slice far larger
@@ -551,54 +535,6 @@ def _touched_local(files: list[dict], batch: pa.Table, n_buckets: int) -> list[d
         return i < len(keys) and keys[i] <= f["max_key"]
 
     return [f for f in files if hit(f)]
-
-
-def _touched_bulk(spark, dedup: DataFrame, files: list[dict], n_buckets: int, epoch: int) -> tuple:
-    """Bulk planning: the batch keys join the joinable entries' stats — key
-    ranges, or exact (path, bucket) pairs of the entries with current tags
-    on a bucket table — broadcast. Every other entry is touched: one
-    without stats always, and on a bucket table a mid-migration stale one
-    too — a >FAST_PATH_MAX_KEYS batch of hash-scattered keys intersects a
-    wide-range file with near certainty, so a range join would almost never
-    prune one, and touching them progresses the migration (the CoW rewrite
-    emits them in the current layout). Returns the touched entries and the
-    deduped batch size."""
-    lf = _layout_fragments(n_buckets)
-    joinable = [f for f in files if (current_buckets(f) if n_buckets else f["min_key"] is not None)]
-    paths = {f["path"] for f in files} - {f["path"] for f in joinable}
-    if joinable:
-        stats_df = spark.createDataFrame(
-            [(f["path"], b) for f in joinable for b in f["buckets"]]
-            if n_buckets
-            else [(f["path"], f["min_key"], f["max_key"]) for f in joinable],
-            lf["plan_schema"],
-        )
-        # the batch-size signal rides the planning job as an Observation —
-        # no extra action (a dedup.count() here would recompute the whole
-        # dedup before the cache exists)
-        obs_plan = Observation(f"plan-epoch-{epoch}")
-        # LEFT outer, not inner: when a batch touches NO file (all-new
-        # keys) an inner join's output is empty and AQE re-plans the
-        # query as an empty relation, dropping the CollectMetrics
-        # accumulators. The null-path rows keep the output as large as
-        # the batch — never empty here, since a bulk batch holds more
-        # than FAST_PATH_MAX_KEYS keys — so the metrics always survive.
-        hits = (
-            dedup.observe(obs_plan, F.count(F.lit(1)).alias("n"))
-            .select(lf["plan_key"])
-            .join(F.broadcast(stats_df), lf["plan_hit"], "left_outer")
-            .select("path")
-            .distinct()
-            .collect()
-        )
-        paths |= {r["path"] for r in hits if r["path"] is not None}
-        n_changes = obs_plan.get["n"]
-    else:
-        # no joinable files: initial load, or stale / stats-less entries
-        # only (already all touched). One count sizes the write; it reads
-        # from the cache the probe job just materialized.
-        n_changes = dedup.count()
-    return [f for f in files if f["path"] in paths], n_changes
 
 
 def _apply_local(table: LakeTable, plan: EpochPlan, stage: str, phases: dict) -> tuple[list[dict], list[dict]]:

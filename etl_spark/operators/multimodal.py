@@ -295,14 +295,3 @@ def decode_and_featurize(
 
     return df.select(id_col, payload_col).mapInPandas(kernel, schema=out_schema)
 
-
-def frame_sample_plan(df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id", every_n: int = 10) -> DataFrame:
-    """Plan rows for video frame sampling: one output row per frame index to
-    decode, computed from metadata only (JVM-side; the decode itself is the
-    stubbed kernel above). Demonstrates the explode-then-decode layout that
-    keeps each frame an independent task at scale."""
-    n_frames = (F.length(F.col(payload_col)) / F.lit(256)).cast("int") + 1  # fake container: 256 B/frame
-    return df.select(
-        F.col(id_col),
-        F.explode(F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))).alias("frame_idx"),
-    )

@@ -677,6 +677,49 @@ class LakeTable:
         )
         return dataset.to_table(filter=pads.field("doc_id").isin(keys))
 
+    def touched_files(self, keys: DataFrame, snap: dict) -> tuple[list[dict], int]:
+        """The entries of ``snap`` that may hold a ``doc_id`` of ``keys``,
+        and the row count of ``keys``, in one action: the keys join the
+        joinable entries' stats — key ranges, or exact (path, bucket) pairs
+        of the entries with current tags on a bucket table — broadcast.
+        Every other entry is touched: one without stats always, and on a
+        bucket table a mid-migration stale one too — a large set of
+        hash-scattered keys intersects a wide-range file with near
+        certainty, so a range join would almost never prune one, and
+        touching it lets a CoW merge progress the migration. The row count
+        rides the join as an Observation, so it costs no extra action;
+        ``keys`` must not be empty, or AQE may fold the join away with it."""
+        files, n_buckets = snap["files"], layout_buckets(snap)
+        joinable = [f for f in files if (current_buckets(f) if n_buckets else f["min_key"] is not None)]
+        if n_buckets:
+            key, hit = bucket_col(n_buckets).alias("_bkt"), F.col("_bkt") == F.col("bucket")
+            stats = self.spark.createDataFrame(
+                [(f["path"], b) for f in joinable for b in f["buckets"]], "path string, bucket int"
+            )
+        else:
+            key = doc_id = F.col("doc_id")
+            hit = (doc_id >= F.col("min_key")) & (doc_id <= F.col("max_key"))
+            stats = self.spark.createDataFrame(
+                [(f["path"], f["min_key"], f["max_key"]) for f in joinable],
+                "path string, min_key string, max_key string",
+            )
+        obs = Observation()
+        # LEFT outer, not inner: when no key hits a file (all-new keys, or
+        # no joinable entry at all) an inner join's output is empty and AQE
+        # re-plans the query as an empty relation, dropping the
+        # CollectMetrics accumulators. The null-path rows keep the output
+        # as large as ``keys``, so the metrics survive.
+        hits = (
+            keys.observe(obs, F.count(F.lit(1)).alias("n"))
+            .select(key)
+            .join(F.broadcast(stats), hit, "left_outer")
+            .select("path")
+            .distinct()
+            .collect()
+        )
+        paths = {r["path"] for r in hits} | ({f["path"] for f in files} - {f["path"] for f in joinable})
+        return [f for f in files if f["path"] in paths], obs.get["n"]
+
     def _with_file_seq(self, df: DataFrame, entries: list[dict], col: str) -> DataFrame:
         """Tag each row with its file's commit order: basename(input_file) ->
         added_at. Below MAX_LITERAL_SEQ_MAP entries the mapping is a literal

@@ -202,11 +202,12 @@ def test_bucket_mor_then_cow_does_not_resurrect(spark, tmp_table_dir):
     assert len(got) == 2000
 
 
-def test_migrate_layout_round_trip(spark, tmp_table_dir):
+def test_migrate_layout_round_trip(spark, tmp_table_dir, monkeypatch):
     """range -> bucket -> range migration with no per-stage file cap: a
     begin commit plus ONE stage each way, state identical throughout, MoR
     debt applied+shed by the migration, and post-migration merges plan
     under the NEW layout."""
+    from etl_spark.table import maintenance
     from etl_spark.table.maintenance import migrate_layout_staged
 
     table = LakeTable.create_if_absent(spark, tmp_table_dir, TARGET_SCHEMA)
@@ -229,12 +230,12 @@ def test_migrate_layout_round_trip(spark, tmp_table_dir):
     before = {r["doc_id"]: list(r["tokens"]) for r in table.read().collect()}
     assert before["k00007"] == [77]
 
-    # small target_rows_per_file: bucket rewrites size output files by the
+    # small TARGET_ROWS_PER_FILE: bucket rewrites size output files by the
     # DATA (round-5 fix), so a multi-file layout must be requested here for
     # the point-merge pruning assertion below to have something to prune
-    rep = migrate_layout_staged(
-        table, {"type": "bucket", "n_buckets": 8}, max_files_per_stage=None, target_rows_per_file=500
-    )
+    with monkeypatch.context() as mp:
+        mp.setattr(maintenance, "TARGET_ROWS_PER_FILE", 500)
+        rep = migrate_layout_staged(table, {"type": "bucket", "n_buckets": 8}, max_files_per_stage=None)
     assert rep["begin"] is not None and len(rep["stages"]) == 1 and rep["done"]
     assert table.layout() == {"type": "bucket", "n_buckets": 8}
     assert all(f.get("buckets") for f in table.files())
@@ -337,7 +338,7 @@ def test_bucket_schema_evolution(spark, tmp_table_dir):
     assert got["d010"] == ("s", None)
 
 
-def test_bucket_stage_entries_match_a_file_scan(spark, tmp_table_dir):
+def test_bucket_stage_entries_match_a_file_scan(spark, tmp_table_dir, monkeypatch):
     """A bulk (> FAST_PATH_MAX_KEYS) forced-MoR merge and a compact_mor on a
     bucket table take their manifest entries from the write job's own
     stats. Those entries must equal a distributed scan of the very files
@@ -376,7 +377,10 @@ def test_bucket_stage_entries_match_a_file_scan(spark, tmp_table_dir):
     assert {b for f in winners for b in f["buckets"]} == set(range(BUCKET["n_buckets"]))
     assert_entries_match_scan(winners)
 
-    sid = compact_mor(table, target_rows_per_file=40_000)
+    from etl_spark.table import maintenance
+
+    monkeypatch.setattr(maintenance, "TARGET_ROWS_PER_FILE", 40_000)
+    sid = compact_mor(table)
     compacted = [f for f in table.files() if f.get("added_at") == sid]
     assert len(compacted) > 1 and not any(f.get("mor") for f in table.files())
     assert_entries_match_scan(compacted)

@@ -359,12 +359,12 @@ def test_stage_retries_after_concurrent_writer_conflict(spark, tmp_path):
     real_rewrite = maint._rewrite
     conflicts = {"n": 0}
 
-    def racing_rewrite(table_, df, **kw):
+    def racing_rewrite(table_, snap, entries, summary, keep=None):
         if conflicts["n"] == 0:
             conflicts["n"] += 1
             # concurrent writer lands AFTER this stage planned its snapshot
             merge_batch(table, batches[1], epoch=1, target_rows_per_file=150)
-        return real_rewrite(table_, df, **kw)
+        return real_rewrite(table_, snap, entries, summary, keep)
 
     maint._rewrite = racing_rewrite
     try:
@@ -420,9 +420,7 @@ def test_staged_bucket_migration_does_not_explode_file_count(spark, tmp_path):
     n_in = len(table.files())
     assert n_in >= 4
 
-    rep = migrate_layout_staged(
-        table, {"type": "bucket", "n_buckets": 64}, max_files_per_stage=2, target_rows_per_file=1_000_000
-    )
+    rep = migrate_layout_staged(table, {"type": "bucket", "n_buckets": 64}, max_files_per_stage=2)
     assert rep["done"]
     files = table.files()
     # each stage's rows fit one target file -> about one output per stage

@@ -174,6 +174,56 @@ def test_expire_tombstones_that_empty_every_touched_file(spark, tmp_path):
     assert on_disk <= referenced, sorted(on_disk - referenced)
 
 
+def test_expire_tombstones_closes_over_the_key_bucket(spark, tmp_table_dir):
+    """On a bucket table, expiring a merge-on-read tombstone rewrites the
+    winners file that holds it and only the files that hold the key's
+    bucket: every other file keeps its path, and the key stays dead."""
+    table = LakeTable.create_if_absent(
+        spark, tmp_table_dir, KV_SCHEMA, layout={"type": "bucket", "n_buckets": 4}
+    )
+    merge_batch(table, _kv_batch(spark, [(f"k{i:03d}", i + 1, 0, "U", i, "s") for i in range(200)]), epoch=0)
+    merge_batch(table, _kv_batch(spark, [("k042", 1_000, 0, "D", None, None)]), epoch=1, merge_mode="mor")
+    files = table.files()
+    (winners,) = [f for f in files if f.get("mor")]
+    (bucket,) = winners["buckets"]
+    closure = {f["path"] for f in files if bucket in f["buckets"]}
+    outside = {f["path"] for f in files} - closure
+    assert outside, "test needs files outside the key's bucket"
+    assert expire_tombstones(table, low_watermark_lsn=1_000) is not None
+    after = {f["path"] for f in table.files()}
+    assert outside <= after and not closure & after
+    assert table.read().where("doc_id = 'k042'").count() == 0
+    assert table.read().count() == 199
+    assert table.read(include_hidden=True, include_deleted=True).where("_deleted").count() == 0
+
+
+def test_diff_suppresses_expired_tombstones(spark, tmp_table_dir):
+    """dead -> physically-gone (expire_tombstones between the snapshots) is
+    not a state change; CDC consumers must not receive a duplicate delete.
+    A RE-deleted key (new delete event) still reports."""
+    table = LakeTable.create_if_absent(spark, tmp_table_dir, KV_SCHEMA)
+    merge_batch(
+        table,
+        _kv_batch(spark, [("a", 1, 0, "U", 1, "s"), ("b", 2, 0, "U", 2, "s"), ("c", 3, 0, "U", 3, "s")]),
+        epoch=0,
+    )
+    # delete 'a' -> tombstone row persisted
+    merge_batch(table, _kv_batch(spark, [("a", 4, 0, "D", None, None)]), epoch=1)
+    s_a = table.head_id()
+    # expire the tombstone (low watermark above its lsn), then touch 'b'
+    expire_tombstones(table, low_watermark_lsn=4)
+    merge_batch(table, _kv_batch(spark, [("b", 5, 0, "U", 22, "s")]), epoch=2)
+    s_b = table.head_id()
+    changes = {r["doc_id"]: r["change_op"] for r in table.diff(s_a, s_b).collect()}
+    # 'a' was already dead at s_a: its physical disappearance must NOT re-report 'D'
+    assert changes == {"b": "U"}
+    # but a re-delete by a NEW event still reports
+    merge_batch(table, _kv_batch(spark, [("c", 6, 0, "D", None, None)]), epoch=3)
+    s_c = table.head_id()
+    changes2 = {r["doc_id"]: r["change_op"] for r in table.diff(s_b, s_c).collect()}
+    assert changes2 == {"c": "D"}
+
+
 # ------------------------------------ maintenance vs concurrent writers
 
 
@@ -204,7 +254,7 @@ def test_compaction_refuses_after_concurrent_merge(spark, tmp_table_dir, monkeyp
 
     monkeypatch.setattr(LakeTable, "commit", racy_commit)
     with pytest.raises(TableCommitError):
-        compact(table, small_file_rows=1 << 60, target_rows_per_file=1000)
+        compact(table, small_file_rows=1 << 60)
     monkeypatch.undo()
     assert state["injected"]
 
@@ -213,5 +263,5 @@ def test_compaction_refuses_after_concurrent_merge(spark, tmp_table_dir, monkeyp
     assert got["k001"] == -1 and len(got) == 40  # the merge survived intact
     assert gc_orphans(t2) == []  # failed compaction cleaned its stage
     # retry against the new head succeeds and preserves the merge
-    assert compact(t2, small_file_rows=1 << 60, target_rows_per_file=1000) is not None
+    assert compact(t2, small_file_rows=1 << 60) is not None
     assert {r["doc_id"]: r["value_cents"] for r in t2.read().collect()} == got

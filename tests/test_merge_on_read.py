@@ -16,7 +16,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from etl_spark.operators.merge import merge_batch
 from etl_spark.table import LakeTable
-from etl_spark.table.maintenance import compact, expire_tombstones, rewrite_table
+from etl_spark.table.maintenance import compact, compact_mor, expire_tombstones
 from etl_spark.table.table import current_buckets, keeps_mask, may_share_keys
 
 SCHEMA = StructType(
@@ -155,12 +155,12 @@ def test_compact_does_not_unmask_victims(spark, tmp_table_dir):
         )
     before = _state(table)
     # compact only the small winners files (the bulk files are large)
-    sid = compact(table, small_file_rows=100, target_rows_per_file=1000)
+    sid = compact(table, small_file_rows=100)
     assert sid is not None
     assert any(f.get("mor") for f in table.files())  # flag retained
     assert _state(table) == before
-    # full rewrite sheds every mask
-    rewrite_table(table, target_rows_per_file=1000)
+    # the targeted MoR compaction sheds every mask
+    assert compact_mor(table) is not None
     assert not any(f.get("mor") for f in table.files())
     assert _state(table) == before
 
@@ -177,7 +177,7 @@ def test_compact_sheds_flag_when_no_outside_file_shares_a_key(spark, tmp_table_d
     assert before["a1"] == (11, "s")
     outside = {f["path"] for f in table.files() if f["rows"] >= 100}
     assert outside and all(f["min_key"] >= "k" for f in table.files() if f["path"] in outside)
-    sid = compact(table, small_file_rows=100, target_rows_per_file=1000)
+    sid = compact(table, small_file_rows=100)
     assert sid is not None
     assert outside <= {f["path"] for f in table.files()}  # the bulk files stayed outside
     assert not any(f.get("mor") for f in table.files())
@@ -251,7 +251,7 @@ def test_compact_small_old_file_under_newer_mor_versions(spark, tmp_table_dir):
     before = _state(table)
     assert before["a"] == (11, "s")
     # compacts the epoch-0 small files AND the mor winners file together
-    sid = compact(table, small_file_rows=100, target_rows_per_file=1000)
+    sid = compact(table, small_file_rows=100)
     assert sid is not None
     after = _state(table)
     assert after == before  # 'a' is still 11 — v1 did not resurrect
@@ -262,7 +262,7 @@ def test_compact_mor_sheds_all_masks_without_full_rewrite(spark, tmp_table_dir):
     """Targeted debt compaction: rewrites only the winners files + their
     range-overlapping victims, output carries no mor flag, state unchanged,
     and files outside the closure are untouched."""
-    from etl_spark.table.maintenance import compact_mor, maybe_compact_mor
+    from etl_spark.table.maintenance import maybe_compact_mor
 
     table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA)
     # multi-file layout needed so files exist outside the mor envelope
@@ -280,9 +280,9 @@ def test_compact_mor_sheds_all_masks_without_full_rewrite(spark, tmp_table_dir):
     }
     assert untouched_paths, "test needs files outside the mor key envelope"
     # below thresholds: policy no-ops
-    assert maybe_compact_mor(table, max_mor_files=16, max_mor_rows=10_000_000) is None
+    assert maybe_compact_mor(table, max_mor_files=16) is None
     # above: sheds every mask
-    sid = maybe_compact_mor(table, max_mor_files=2, target_rows_per_file=1000)
+    sid = maybe_compact_mor(table, max_mor_files=2)
     assert sid is not None
     assert not any(f.get("mor") for f in table.files())
     assert untouched_paths <= {f["path"] for f in table.files()}  # closure was targeted
@@ -300,7 +300,7 @@ def test_expire_tombstones_kills_victims_with_the_mask(spark, tmp_table_dir):
         table, _batch(spark, [("k00042", 99999, 0, "D", None, None)]), epoch=1, merge_mode="mor"
     )
     assert table.read().count() == 1999
-    sid = expire_tombstones(table, low_watermark_lsn=99999, target_rows_per_file=1000)
+    sid = expire_tombstones(table, low_watermark_lsn=99999)
     assert sid is not None
     assert table.read().count() == 1999  # k00042 gone for good
     assert table.read().where("doc_id = 'k00042'").count() == 0
@@ -364,8 +364,6 @@ def test_mask_seq_mapping_join_fallback(spark, tmp_table_dir, monkeypatch):
 
 
 def test_table_stats_track_mor_debt(spark, tmp_table_dir):
-    from etl_spark.table.maintenance import compact_mor
-
     table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA)
     merge_batch(table, _bulk(spark, 1000), epoch=0)
     s0 = table.stats()
@@ -375,7 +373,7 @@ def test_table_stats_track_mor_debt(spark, tmp_table_dir):
     assert s1["mor_files"] == 1 and s1["mor_mask_rows"] == 1
     assert s1["rows"] == 1001  # physical rows include the superseded copy
     assert table.read().count() == 1000
-    compact_mor(table, target_rows_per_file=1000)
+    compact_mor(table)
     s2 = table.stats()
     assert s2["mor_files"] == 0 and s2["rows"] == 1000
 
@@ -599,7 +597,7 @@ def _run_every_writer(spark, root: str, layout: dict | None, monkeypatch) -> tup
     import pandas as pd
 
     import etl_spark.operators.merge as merge
-    from etl_spark.table.maintenance import compact_mor, migrate_layout_staged
+    from etl_spark.table.maintenance import migrate_layout_staged
 
     bucket4 = {"type": "bucket", "n_buckets": 4}
     table = LakeTable.create_if_absent(spark, root, SCHEMA, layout=layout)
@@ -620,7 +618,7 @@ def _run_every_writer(spark, root: str, layout: dict | None, monkeypatch) -> tup
             [("k00020", 2_000, 0, "D", None, None), ("k00140", 2_001, 0, "U", -140, "p"), ("k00010", 900, 0, "U", 0, "x")],
             "mor",
         )
-    assert compact(table, small_file_rows=50, target_rows_per_file=1_000) is not None
+    assert compact(table, small_file_rows=50) is not None
     merge_rows("cow_removes_winners", 3, [("k00010", 3_000, 1, "U", 7, "c")], "cow")
     assert compact_mor(table) is not None
     assert expire_tombstones(table, low_watermark_lsn=10_000) is not None
@@ -629,7 +627,6 @@ def _run_every_writer(spark, root: str, layout: dict | None, monkeypatch) -> tup
         table,
         {"type": "range"} if layout else bucket4,
         max_files_per_stage=-(-len(table.files()) // 2),
-        target_rows_per_file=1_000,
     )
     assert stages["done"] and len(stages["stages"]) == 2
     table.update_schema(renames={"source": "origin"})
@@ -661,3 +658,45 @@ def test_every_writer_commits_tagged_manifest(spark, tmp_table_dir, monkeypatch,
             assert isinstance(f["schema_version"], int) and isinstance(f["added_at"], int), (s["snapshot_id"], f)
     expected = replay_oracle(events, payload_cols=["value_cents", "source"]).rename(columns={"source": "origin"})
     assert_state_equal(table.read(include_hidden=True).toPandas(), expected)
+
+
+def test_files_from_observation_bails_on_index_collision(tmp_path):
+    """A write task can emit MULTIPLE files for one partition index (e.g.
+    spark.sql.files.maxRecordsPerFile in the user's session produces
+    part-00000-...-c000 and -c001). The index->file bijection is then
+    broken; the builder must return None (fall back to the distributed
+    stats scan) instead of silently committing only one of the files."""
+    import os
+
+    from etl_spark.table.table import _files_from_stats
+
+    stage = str(tmp_path)
+    for fn in (
+        "part-00000-aaaa-c000.snappy.parquet",
+        "part-00000-aaaa-c001.snappy.parquet",
+        "part-00001-aaaa-c000.snappy.parquet",
+    ):
+        open(os.path.join(stage, fn), "w").close()
+    metrics = {
+        "fcnt_0": 10, "fmin_0": "a", "fmax_0": "b",
+        "fcnt_1": 5, "fmin_1": "c", "fmax_1": "d",
+    }
+    assert _files_from_stats(metrics, stage, 2, schema_version=0, bucketed=False) is None
+    # and nothing was deleted while bailing out
+    assert len(os.listdir(stage)) == 3
+
+
+def test_merge_correct_under_max_records_per_file(spark, tmp_table_dir):
+    """End-to-end: with maxRecordsPerFile forcing multi-file partitions, the
+    merge must still commit EVERY row (via the fallback stats scan)."""
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "7")
+    try:
+        table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA)
+        rows = [(f"k{i:03d}", i + 1, 0, "U", i * 10, "s") for i in range(100)]
+        r = merge_batch(table, _batch(spark, rows), epoch=0)
+        assert r.applied and r.rows_upserted == 100
+        assert table.read().count() == 100
+        # manifest row counts must reconcile with the data
+        assert sum(f["rows"] for f in table.files()) == 100
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")

@@ -61,6 +61,77 @@ def test_merge_planning_broadcasts_file_stats(spark, tmp_path):
     assert table.head_id() == 2
 
 
+def _kv_table(spark, root):
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from etl_spark.table import LakeTable
+
+    schema = StructType(
+        [
+            StructField("doc_id", StringType(), False),
+            StructField("value_cents", LongType(), True),
+            StructField("source", StringType(), True),
+        ]
+    )
+    return LakeTable.create_if_absent(spark, root, schema)
+
+
+def _kv_batch(spark, rows):
+    return spark.createDataFrame(
+        rows, "doc_id string, commit_lsn long, op_seq int, op string, value_cents long, source string"
+    )
+
+
+def test_merge_batch_touching_no_files(spark, tmp_table_dir, monkeypatch):
+    """A bulk batch of ALL-NEW keys outside every file's range: the
+    planning join (``LakeTable.touched_files``) has zero hits, and under AQE
+    an inner-join formulation loses the CollectMetrics accumulators (the
+    observed round-2 latent crash). The left-outer planning join must
+    survive and merge correctly — also against an empty stats side, the
+    first load of a fresh table."""
+    import pyspark.sql.functions as F
+
+    from etl_spark.operators import merge
+
+    # a lower probe cap sends the 3,000-key batch through the planning join
+    monkeypatch.setattr(merge, "FAST_PATH_MAX_KEYS", 1_000)
+    table = _kv_table(spark, tmp_table_dir)
+    merge.merge_batch(table, _kv_batch(spark, [("a", 1, 0, "U", 1, "s"), ("b", 2, 0, "U", 2, "s")]), epoch=0)
+    bulk = spark.range(3000).select(
+        F.format_string("k%05d", F.col("id")).alias("doc_id"),
+        (F.col("id") + 10).alias("commit_lsn"),
+        F.lit(0).alias("op_seq"),
+        F.lit("U").alias("op"),
+        F.col("id").alias("value_cents"),
+        F.lit("s").alias("source"),
+    )
+    r = merge.merge_batch(table, bulk, epoch=1)
+    assert r.applied and r.rows_upserted == 3000 and r.files_rewritten == 0
+    assert table.read().count() == 3002
+    fresh = _kv_table(spark, f"{tmp_table_dir}/fresh")
+    r = merge.merge_batch(fresh, bulk, epoch=0)
+    assert r.applied and r.mode == "cow" and r.rows_upserted == 3000
+    assert fresh.read().count() == 3000
+
+
+def test_merge_empty_batch_fences_epoch(spark, tmp_table_dir):
+    """An empty microbatch (a quiet streaming tail interval) must still
+    fence its epoch — resume stays monotone — without writing files."""
+    from etl_spark.operators.merge import merge_batch
+
+    table = _kv_table(spark, tmp_table_dir)
+    merge_batch(table, _kv_batch(spark, [("a", 1, 0, "U", 1, "s")]), epoch=0)
+    files_before = {f["path"] for f in table.files()}
+    r = merge_batch(table, _kv_batch(spark, []), epoch=1)
+    assert r.applied and r.mode == "empty" and r.rows_upserted == 0
+    assert table.is_fenced(1)
+    assert {f["path"] for f in table.files()} == files_before
+    # idempotent re-apply of the fenced empty epoch no-ops
+    r2 = merge_batch(table, _kv_batch(spark, []), epoch=1)
+    assert not r2.applied
+    assert table.read().count() == 1
+
+
 @pytest.mark.parametrize(
     "qname",
     [

@@ -1,7 +1,6 @@
-"""Round-2 hardening: commit-conflict retry, CDC-diff tombstone-expiry
-suppression, distributed pack_sequences, Catalyst chunker parity,
-connected-components convergence guard, and the batch-proportional merge
-file-count estimate."""
+"""Round-2 hardening: commit-conflict retry, distributed pack_sequences,
+Catalyst chunker parity, connected-components convergence guard, and the
+batch-proportional merge file-count estimate."""
 
 from __future__ import annotations
 
@@ -81,38 +80,6 @@ def test_stale_expect_parent_refused(spark, tmp_table_dir):
     table.commit(add_files=[], summary={})
     with pytest.raises(TableCommitError):
         table.commit(add_files=[], expect_parent=head)
-
-
-# ------------------------------------------- diff after tombstone expiry
-
-
-def test_diff_suppresses_expired_tombstones(spark, tmp_table_dir):
-    """dead -> physically-gone (expire_tombstones between the snapshots) is
-    not a state change; CDC consumers must not receive a duplicate delete.
-    A RE-deleted key (new delete event) still reports."""
-    from etl_spark.table.maintenance import expire_tombstones
-
-    table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA)
-    merge_batch(
-        table,
-        _batch(spark, [("a", 1, 0, "U", 1, "s"), ("b", 2, 0, "U", 2, "s"), ("c", 3, 0, "U", 3, "s")]),
-        epoch=0,
-    )
-    # delete 'a' -> tombstone row persisted
-    merge_batch(table, _batch(spark, [("a", 4, 0, "D", None, None)]), epoch=1)
-    s_a = table.head_id()
-    # expire the tombstone (low watermark above its lsn), then touch 'b'
-    expire_tombstones(table, low_watermark_lsn=4)
-    merge_batch(table, _batch(spark, [("b", 5, 0, "U", 22, "s")]), epoch=2)
-    s_b = table.head_id()
-    changes = {r["doc_id"]: r["change_op"] for r in table.diff(s_a, s_b).collect()}
-    # 'a' was already dead at s_a: its physical disappearance must NOT re-report 'D'
-    assert changes == {"b": "U"}
-    # but a re-delete by a NEW event still reports
-    merge_batch(table, _batch(spark, [("c", 6, 0, "D", None, None)]), epoch=3)
-    s_c = table.head_id()
-    changes2 = {r["doc_id"]: r["change_op"] for r in table.diff(s_b, s_c).collect()}
-    assert changes2 == {"c": "D"}
 
 
 # -------------------------------------------------- distributed pack/chunk

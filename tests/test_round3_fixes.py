@@ -1,31 +1,11 @@
 """Round-3 hardening: distributed vocab-id rank (last data-bearing
-single-partition window removed), manifest-from-Observation index-collision
-fallback, and the zero-length chunk contract."""
+single-partition window removed), k-means IVF training, and the zero-length
+chunk contract."""
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 import pytest
-from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-from etl_spark.operators.merge import merge_batch
-from etl_spark.table import LakeTable
-
-SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("value_cents", LongType(), True),
-        StructField("source", StringType(), True),
-    ]
-)
-
-
-def _batch(spark, rows):
-    return spark.createDataFrame(
-        rows, "doc_id string, commit_lsn long, op_seq int, op string, value_cents long, source string"
-    )
 
 
 # ---------------------------------------------- distributed vocab-id rank
@@ -75,88 +55,6 @@ def test_encode_queries_have_no_data_bearing_single_partition_window(spark, sf_d
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "windowspecdefinition(w" not in plan
     assert "windowspecdefinition(_part" in plan
-
-
-# --------------------------------------- manifest index-collision fallback
-
-
-def test_files_from_observation_bails_on_index_collision(tmp_path):
-    """A write task can emit MULTIPLE files for one partition index (e.g.
-    spark.sql.files.maxRecordsPerFile in the user's session produces
-    part-00000-...-c000 and -c001). The index->file bijection is then
-    broken; the builder must return None (fall back to the distributed
-    stats scan) instead of silently committing only one of the files."""
-    from etl_spark.table.table import _files_from_stats
-
-    stage = str(tmp_path)
-    for fn in (
-        "part-00000-aaaa-c000.snappy.parquet",
-        "part-00000-aaaa-c001.snappy.parquet",
-        "part-00001-aaaa-c000.snappy.parquet",
-    ):
-        open(os.path.join(stage, fn), "w").close()
-    metrics = {
-        "fcnt_0": 10, "fmin_0": "a", "fmax_0": "b",
-        "fcnt_1": 5, "fmin_1": "c", "fmax_1": "d",
-    }
-    assert _files_from_stats(metrics, stage, 2, schema_version=0, bucketed=False) is None
-    # and nothing was deleted while bailing out
-    assert len(os.listdir(stage)) == 3
-
-
-def test_merge_correct_under_max_records_per_file(spark, tmp_table_dir):
-    """End-to-end: with maxRecordsPerFile forcing multi-file partitions, the
-    merge must still commit EVERY row (via the fallback stats scan)."""
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "7")
-    try:
-        table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA)
-        rows = [(f"k{i:03d}", i + 1, 0, "U", i * 10, "s") for i in range(100)]
-        r = merge_batch(table, _batch(spark, rows), epoch=0)
-        assert r.applied and r.rows_upserted == 100
-        assert table.read().count() == 100
-        # manifest row counts must reconcile with the data
-        assert sum(f["rows"] for f in table.files()) == 100
-    finally:
-        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-
-
-# ---------------------------------------------- planning-join edge cases
-
-
-def test_merge_batch_touching_no_files(spark, tmp_table_dir):
-    """A batch of ALL-NEW keys outside every file's range: the planning
-    join has zero hits, and under AQE an inner-join formulation loses the
-    CollectMetrics accumulators (the observed round-2 latent crash). The
-    left-outer planning join must survive and merge correctly."""
-    table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA)
-    merge_batch(table, _batch(spark, [("a", 1, 0, "U", 1, "s"), ("b", 2, 0, "U", 2, "s")]), epoch=0)
-    bulk = spark.range(3000).select(
-        F.format_string("k%05d", F.col("id")).alias("doc_id"),
-        (F.col("id") + 10).alias("commit_lsn"),
-        F.lit(0).alias("op_seq"),
-        F.lit("U").alias("op"),
-        F.col("id").alias("value_cents"),
-        F.lit("s").alias("source"),
-    )
-    r = merge_batch(table, bulk, epoch=1)
-    assert r.applied and r.rows_upserted == 3000 and r.files_rewritten == 0
-    assert table.read().count() == 3002
-
-
-def test_merge_empty_batch_fences_epoch(spark, tmp_table_dir):
-    """An empty microbatch (a quiet streaming tail interval) must still
-    fence its epoch — resume stays monotone — without writing files."""
-    table = LakeTable.create_if_absent(spark, tmp_table_dir, SCHEMA)
-    merge_batch(table, _batch(spark, [("a", 1, 0, "U", 1, "s")]), epoch=0)
-    files_before = {f["path"] for f in table.files()}
-    r = merge_batch(table, _batch(spark, []), epoch=1)
-    assert r.applied and r.mode == "empty" and r.rows_upserted == 0
-    assert table.is_fenced(1)
-    assert {f["path"] for f in table.files()} == files_before
-    # idempotent re-apply of the fenced empty epoch no-ops
-    r2 = merge_batch(table, _batch(spark, []), epoch=1)
-    assert not r2.applied
-    assert table.read().count() == 1
 
 
 # ------------------------------------------------------- k-means IVF

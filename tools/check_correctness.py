@@ -81,7 +81,8 @@ def main() -> int:
     import __spark_entry__ as entry
     from etl_spark.session import build_session
 
-    spark = build_session(app_name="check-correctness")
+    # progress bars would land on the same stdout lines as the verdicts
+    spark = build_session(app_name="check-correctness", extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
