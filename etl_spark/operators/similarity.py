@@ -68,16 +68,18 @@ def brute_force_topk(
     """Exact top-k cosine neighbors per vector: (vec_id, neighbor_id, rank,
     cos_micro). Ties broken by neighbor id (total order => deterministic).
 
-    Plan: broadcast one side of the n x n join (the prepped table is small
-    relative to the product), then a per-query top-k window. At 10^8+ vectors
-    use lsh_topk; this operator is the recall oracle.
+    Plan: an unhinted n x n join — the planner broadcasts a side that
+    measures small and falls back to a cartesian product otherwise (the
+    side grows with the corpus, so it is never forced) — then a per-query
+    top-k window. At 10^8+ vectors use lsh_topk; this operator is the
+    recall oracle.
     """
     from pyspark.sql import Window
 
     a = _prepped(embeddings, id_col, vec_col).alias("a")
     b = _prepped(embeddings, id_col, vec_col).alias("b")
     pairs = (
-        a.join(F.broadcast(b), F.col("a.vid") != F.col("b.vid"))
+        a.join(b, F.col("a.vid") != F.col("b.vid"))
         .select(
             F.col("a.vid").alias("vec_id"),
             F.col("b.vid").alias("neighbor_id"),
@@ -330,7 +332,7 @@ def embedding_near_dup_pairs(
     a = _prepped(embeddings, id_col, vec_col).alias("a")
     b = _prepped(embeddings, id_col, vec_col).alias("b")
     return (
-        a.join(F.broadcast(b), F.col("a.vid") < F.col("b.vid"))
+        a.join(b, F.col("a.vid") < F.col("b.vid"))
         .select(
             F.col("a.vid").alias("id_a"),
             F.col("b.vid").alias("id_b"),

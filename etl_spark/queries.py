@@ -1549,7 +1549,8 @@ def q_tpch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3: selective dimension filter -> join -> agg -> top-k. The
-    filtered customer side is broadcast (no shuffle of lineitem by custkey)."""
+    filtered customer side grows with the scale factor, so it carries no
+    broadcast hint: AQE picks the join from measured sizes."""
     c = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
@@ -1557,8 +1558,7 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         100 - F.round(F.col("l_discount") * 100).cast("long")
     )
     return (
-        F.broadcast(c)
-        .join(o, F.col("c_custkey") == F.col("o_custkey"))
+        c.join(o, F.col("c_custkey") == F.col("o_custkey"))
         .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("l_orderkey", "o_orderdate")
         .agg(F.sum(rev).alias("revenue_c4"))
@@ -1586,9 +1586,10 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-style star join: small dims broadcast down to the lineitem
-    probe; region pinned to the lexicographically first region name so the
-    query is sf-independent."""
+    """TPC-H Q5-style star join: one region's suppliers join the lineitem
+    probe, unhinted (the supplier side grows with the scale factor); region
+    pinned to the lexicographically first region name so the query is
+    sf-independent."""
     r = _t(spark, sf_dir, "region")
     first_region = r.agg(F.min("r_name")).collect()[0][0]
     n = _t(spark, sf_dir, "nation")
@@ -1604,7 +1605,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s_suppkey", "n_name")
     )
     return (
-        li.join(F.broadcast(dims), F.col("l_suppkey") == F.col("s_suppkey"))
+        li.join(dims, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("n_name")
         .agg(F.sum(rev).alias("revenue_c4"))
     )
@@ -1728,7 +1729,8 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10-style: returned-item revenue per customer, top 20. The
-    customer dimension broadcasts; lineitem is filtered at the scan."""
+    customer dimension grows with the scale factor, so AQE picks its join
+    unhinted; lineitem is filtered at the scan."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
@@ -1737,7 +1739,7 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("c_custkey", "c_name")
         .agg(F.sum(rev).alias("revenue_c4"))
         .orderBy(F.desc("revenue_c4"), F.asc("c_custkey"))

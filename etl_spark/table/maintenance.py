@@ -11,16 +11,20 @@ scheduling overhead; tombstones and masked duplicates inflate every read's
 filter/join work.
 
 Every rewrite commits through ONE path, ``_rewrite(table, snap, entries,
-summary, keep=None)``: it reads the picked entries of ``snap`` through the
-mask-applying loader (so the output is current state), keeps the rows
-``keep`` passes, writes them through the table's stage writer
-(``LakeTable.write_stage``, the one the merge uses — the manifest entries
-ride the write job's own stats, and the output is sized from the input
+summary, expire_at_or_below=None)``: it reads the picked entries of
+``snap`` masked by the full snapshot's ``mor`` files (so the output is
+current state), drops the tombstones at or below the watermark, writes one
+stage and commits pinned to ``snap``. The output is sized from the input
 entries' manifest row counts, so a rewrite runs no count and no re-scan of
-what it wrote) and commits pinned to ``snap``. ``LakeTable.commit`` keeps
-the ``mor`` flag on the output iff a rewritten ``mor`` entry may share a key
-with a live entry outside the rewrite. The maintenance functions only pick
-the entries:
+what it wrote. The read and write take one of two arms: a range-table
+rewrite small enough for one output file runs on the driver
+(``LakeTable.read_files_local`` + ``LakeTable.write_stage_local``, the
+pyarrow pair the merge's driver arm writes with — no Spark job); every
+other rewrite reads through ``LakeTable.load_files`` and writes through
+``LakeTable.write_stage``, whose manifest entries ride the write job's own
+stats. ``LakeTable.commit`` keeps the ``mor`` flag on the output iff a
+rewritten ``mor`` entry may share a key with a live entry outside the
+rewrite. The maintenance functions only pick the entries:
 
 - ``compact``: the live files below a size threshold.
 - ``compact_mor`` (``maybe_compact_mor``: its backlog policy): the winners
@@ -30,7 +34,7 @@ the entries:
 - ``expire_tombstones``: the files holding tombstone rows whose
   ``_commit_lsn`` is at or below the feed's global low-watermark — i.e. no
   in-flight event can still lose to them, so cross-batch LWW no longer needs
-  them; ``keep`` drops those rows. Under MoR the rewrite set is CLOSED over
+  them; the rewrite drops those rows. Under MoR the rewrite set is CLOSED over
   the expired keys' older copies (planned by ``LakeTable.touched_files``,
   the merge's key->file join, bucket-exact on bucket tables): dropping a mor
   tombstone also removes its mask, so every file that could hold a masked
@@ -47,9 +51,10 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
-from pyspark.sql import Column
 
 from etl_spark.schema import HIDDEN_LSN
 from etl_spark.table.table import (
@@ -68,22 +73,45 @@ TARGET_ROWS_PER_FILE = 1_000_000
 MAX_MOR_ROWS = 10_000_000
 
 
-def _rewrite(table: LakeTable, snap: dict, entries: list[dict], summary: dict, keep: Column | None = None) -> int:
-    """Rewrite the file ``entries`` of ``snap`` — the rows ``keep`` passes,
-    read through the masked loader — and commit pinned to ``snap``: a MERGE
-    landing between the planning read and this commit would otherwise have
-    its output silently undone, as the rewrite re-adds rows it copied from
-    files the merge just replaced (the classic compaction-vs-writer conflict
-    Iceberg validates against). On conflict the staged files are removed
-    and TableCommitError surfaces; maintenance is re-runnable, so callers
-    simply retry against the new head. Any other failure after staging also
-    cleans its debris (gc_orphans covers only hard crashes). The rewrite
-    sets no ``mor`` flag itself: ``LakeTable.commit`` flags the output iff a
-    removed ``mor`` entry may share a key with a live entry outside the
-    rewrite. Returns the new snapshot id."""
-    df = table.load_files(entries, snap)
-    if keep is not None:
-        df = df.where(keep)
+def _expired(low_watermark_lsn: int, arrow: bool = False):
+    """The tombstone-expiry rule — a tombstone row at or below the
+    watermark, ``coalesce(_deleted, false) AND _commit_lsn <= w`` — as a
+    Spark Column, or with ``arrow`` as a pyarrow Expression: one definition
+    for both rewrite arms and ``expire_tombstones``' flagged-row scan."""
+    if arrow:
+        deleted, lsn = pc.coalesce(pc.field(HIDDEN_DELETED), pc.scalar(False)), pc.field(HIDDEN_LSN)
+    else:
+        deleted, lsn = F.coalesce(F.col(HIDDEN_DELETED), F.lit(False)), F.col(HIDDEN_LSN)
+    return deleted & (lsn <= low_watermark_lsn)
+
+
+def _rewrite(
+    table: LakeTable, snap: dict, entries: list[dict], summary: dict, expire_at_or_below: int | None = None
+) -> int:
+    """Rewrite the file ``entries`` of ``snap`` — their current rows, less
+    the tombstones at or below ``expire_at_or_below`` (``_expired``) — and
+    commit pinned to ``snap``: a MERGE landing between the planning read
+    and this commit would otherwise have its output silently undone, as the
+    rewrite re-adds rows it copied from files the merge just replaced (the
+    classic compaction-vs-writer conflict Iceberg validates against). On
+    conflict the staged files are removed and TableCommitError surfaces;
+    maintenance is re-runnable, so callers simply retry against the new
+    head. Any other failure after staging also cleans its debris
+    (gc_orphans covers only hard crashes). The rewrite sets no ``mor`` flag
+    itself: ``LakeTable.commit`` flags the output iff a removed ``mor``
+    entry may share a key with a live entry outside the rewrite.
+
+    Two arms, one contract. A range-table rewrite whose entries hold fewer
+    than ``TARGET_ROWS_PER_FILE`` manifest rows — one output file — runs on
+    the driver: ``LakeTable.read_files_local`` then
+    ``LakeTable.write_stage_local``, no Spark job. Every other rewrite reads
+    through ``LakeTable.load_files`` and writes through
+    ``LakeTable.write_stage``: a bucket table needs each row's JVM xxhash64
+    bucket id, and a multi-file output a parallel write. The commit summary
+    records ``arm``, ``rows_in``/``rows_out``, ``files_out``, ``bytes_out``
+    and the ``read``/``write`` seconds (on the Spark arm the scan runs
+    inside the write job, so ``read`` is only its plan). Returns the new
+    snapshot id."""
     # output files: ~TARGET_ROWS_PER_FILE rows each, sized from the inputs'
     # manifest row counts — an upper bound on the rows written (masked and
     # expired rows drop out), known without running a job. Capped at the
@@ -92,17 +120,42 @@ def _rewrite(table: LakeTable, snap: dict, entries: list[dict], summary: dict, k
     # inside one file (files carry bucket SETS, so membership pruning stays
     # exact) while a small rewrite — one staged-migration stage, a two-file
     # compaction — emits a few files instead of n_buckets near-empty ones.
-    cap = layout_buckets(snap) or table.spark.sparkContext.defaultParallelism
-    n_rows = sum(f["rows"] for f in entries)
-    n_out = max(1, min(cap, (n_rows // TARGET_ROWS_PER_FILE) + 1))
+    n_buckets = layout_buckets(snap)
+    cap = n_buckets or table.spark.sparkContext.defaultParallelism
+    rows_in = sum(f["rows"] for f in entries)
+    n_out = max(1, min(cap, (rows_in // TARGET_ROWS_PER_FILE) + 1))
+    # the driver arm's bound is the one-file bound itself, not n_out == 1:
+    # a cap of 1 must not pull an arbitrarily large rewrite onto the driver
+    local = not n_buckets and rows_in < TARGET_ROWS_PER_FILE
     stage = table.stage_dir(snap["snapshot_id"] + 1)
     committed = False
     try:
-        add_files, _ = table.write_stage(df, stage, n_out, snap)
+        t0 = time.perf_counter()
+        if local:
+            tbl = table.read_files_local(entries, snap)
+            if expire_at_or_below is not None:
+                tbl = tbl.filter(~_expired(expire_at_or_below, arrow=True))
+            t1 = time.perf_counter()
+            add_files = table.write_stage_local(tbl, stage, 1, snap)
+        else:
+            df = table.load_files(entries, snap)
+            if expire_at_or_below is not None:
+                df = df.where(~_expired(expire_at_or_below))
+            t1 = time.perf_counter()
+            add_files, _ = table.write_stage(df, stage, n_out, snap)
+        t2 = time.perf_counter()
         sid = table.commit(
             add_files=add_files,
             remove_paths={f["path"] for f in entries},
-            summary=summary,
+            summary={
+                **summary,
+                "arm": "local" if local else "spark",
+                "rows_in": rows_in,
+                "rows_out": sum(f["rows"] for f in add_files),
+                "files_out": len(add_files),
+                "bytes_out": sum(os.path.getsize(f["path"]) for f in add_files),
+                "phase_s": {"read": round(t1 - t0, 4), "write": round(t2 - t1, 4)},
+            },
             expect_parent=snap["snapshot_id"],
         )
         committed = True
@@ -297,9 +350,8 @@ def expire_tombstones(table: LakeTable, low_watermark_lsn: int) -> int | None:
     files = snap["files"]
     if not files:
         return None
-    expirable = F.coalesce(F.col(HIDDEN_DELETED), F.lit(False)) & (F.col(HIDDEN_LSN) <= low_watermark_lsn)
-    flagged = table.load_key_versions(files).where(expirable).select(F.input_file_name().alias("_file"), "doc_id")
-    flagged = flagged.persist()
+    flagged = table.load_key_versions(files).where(_expired(low_watermark_lsn))
+    flagged = flagged.select(F.input_file_name().alias("_file"), "doc_id").persist()
     try:
         uris = {r["_file"] for r in flagged.select("_file").distinct().collect()}
         # input_file_name returns URIs; commit-log paths are plain
@@ -313,4 +365,4 @@ def expire_tombstones(table: LakeTable, low_watermark_lsn: int) -> int | None:
         return None
     entries = [f for f in files if f["path"] in touched]
     summary = {"maintenance": "expire_tombstones", "low_watermark": low_watermark_lsn}
-    return _rewrite(table, snap, entries, summary, keep=~expirable)
+    return _rewrite(table, snap, entries, summary, expire_at_or_below=low_watermark_lsn)

@@ -22,8 +22,9 @@ Layout::
 Commit record: parent pointer, schema + schema_version, the stable
 ``field_ids`` and the ``layout`` descriptor, live file list with per-file
 stats (rows, min/max doc_id, bucket set on bucket tables — observed by
-``LakeTable.write_stage`` in the job that writes the files, the one writer
-every merge and maintenance commit uses), fence records added this commit
+``LakeTable.write_stage`` in the job that writes the files, or taken by
+``write_stage_local`` from the rows it writes on the driver; every merge and
+maintenance commit writes through one of the two), fence records added this commit
 (``(checkpoint_epoch, partition_id)``), lineage records, summary counters.
 These fields are mandatory, as are each file entry's ``schema_version``
 (set by the writer) and ``added_at`` (stamped by ``commit``): readers index
@@ -340,6 +341,35 @@ def _collect_file_stats(spark: SparkSession, stage: str, schema_version: int, n_
     return add_files
 
 
+def _dictionary_columns(schema: pa.Schema) -> list[str]:
+    """The leaf column paths of ``schema`` that ``write_stage_local``
+    dictionary-encodes: all but ``doc_id`` and ``_commit_lsn``. A key is
+    unique within a file and a commit lsn nearly so, so a dictionary of
+    them only adds its page: the Spark writer (parquet-mr) drops such a
+    dictionary after the first page, while pyarrow keeps it up to 1 MB."""
+
+    def leaves(path: str, t: pa.DataType) -> list[str]:
+        if pa.types.is_list(t):
+            return leaves(f"{path}.list.{t.value_field.name}", t.value_type)
+        if pa.types.is_struct(t):
+            return [p for f in t for p in leaves(f"{path}.{f.name}", f.type)]
+        if pa.types.is_map(t):
+            return leaves(f"{path}.key_value.key", t.key_type) + leaves(f"{path}.key_value.value", t.item_type)
+        return [path]
+
+    return [p for f in schema if f.name not in ("doc_id", HIDDEN_LSN) for p in leaves(f.name, f.type)]
+
+
+def _file_seq(files: pa.ChunkedArray, entries: list[dict]) -> pa.ChunkedArray:
+    """Each row's file commit order: the ``added_at`` of the entry whose
+    path is the row's ``__filename`` (``_with_file_seq`` on the driver)."""
+    paths = pa.array([f["path"] for f in entries])
+    seq = pc.take(pa.array([f["added_at"] for f in entries]), pc.index_in(files, paths))
+    if seq.null_count:
+        raise ValueError("a scanned file matches no manifest entry path")
+    return seq
+
+
 class LakeTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -650,6 +680,72 @@ class LakeTable:
             out = out.unionByName(p)
         return self._apply_mor_masks(out, file_entries, snap, key_range)
 
+    def read_files_local(self, file_entries: list[dict], snap: dict) -> pa.Table:
+        """``load_files`` on the driver: the rows of ``file_entries`` in
+        ``snap``'s physical schema (hidden columns and tombstone rows
+        included), read with pyarrow. Each ``schema_version`` group is read
+        with its ``_physical_schema_at`` schema, its written names mapped to
+        ``snap``'s through the field ids, and projected as ``_project`` does
+        (a column a file lacks reads null, narrower types cast up). A row is
+        dropped when a ``mor`` file of the FULL snapshot with a later
+        ``added_at`` holds its key, as in ``_apply_mor_masks``: a per-key max
+        over ``file_entries`` alone would miss the newer copies a CoW or
+        small-file subset does not hold."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        target = to_arrow_schema(self._physical_schema_at(snap["schema_version"]))
+        target_names = {fid: name for name, fid in snap["field_ids"].items()}
+        mask = self._mor_mask_local(file_entries, snap)
+        groups: dict[int, list[dict]] = {}
+        for f in file_entries:
+            groups.setdefault(f["schema_version"], []).append(f)
+        parts = [target.empty_table()]
+        for sv in sorted(groups):
+            phys = self._physical_schema_at(sv)
+            if phys is None:  # writers tag existing versions: a corrupt manifest
+                path = groups[sv][0]["path"]
+                raise ValueError(f"manifest entry {path} has schema_version {sv}, which no snapshot carries")
+            paths = sorted(f["path"] for f in groups[sv])
+            raw = pads.dataset(paths, schema=to_arrow_schema(phys), format="parquet").to_table(
+                columns=[*phys.fieldNames(), "__filename"]
+            )
+            name_to_fid = {n: fid for fid, n in self._names_at_version(sv).items()}
+            written = {target_names.get(name_to_fid.get(c), c): raw.column(c) for c in phys.fieldNames()}
+            tbl = pa.Table.from_arrays(
+                [written[f.name].cast(f.type) if f.name in written else pa.nulls(raw.num_rows, f.type) for f in target],
+                schema=target,
+            )
+            if mask is not None:
+                fseq = _file_seq(raw.column("__filename"), groups[sv])
+                mseq = pc.take(mask.column("_mseq"), pc.index_in(tbl.column("doc_id"), mask.column("doc_id")))
+                tbl = tbl.filter(pc.or_kleene(pc.is_null(mseq), pc.greater_equal(fseq, mseq)))
+            parts.append(tbl)
+        return pa.concat_tables(parts)
+
+    def _mor_mask_local(self, file_entries: list[dict], snap: dict) -> pa.Table | None:
+        """``(doc_id, _mseq)``: the newest ``added_at`` of each key held by a
+        ``mor`` file of ``snap`` within the loaded entries' key envelope
+        (``_apply_mor_masks``' envelope pruning), or None when no such file
+        exists."""
+        mor = [f for f in snap["files"] if f.get("mor")]
+        cond = None
+        if file_entries and all(f["min_key"] is not None for f in file_entries):
+            lo = min(f["min_key"] for f in file_entries)
+            hi = max(f["max_key"] for f in file_entries)
+            mor = [f for f in mor if f["min_key"] is None or (f["max_key"] >= lo and f["min_key"] <= hi)]
+            cond = (pads.field("doc_id") >= lo) & (pads.field("doc_id") <= hi)
+        if not mor:
+            return None
+        keys = pads.dataset(
+            sorted(f["path"] for f in mor), schema=pa.schema([("doc_id", pa.string())]), format="parquet"
+        ).to_table(columns=["doc_id", "__filename"], filter=cond)
+        mask = (
+            pa.table({"doc_id": keys.column("doc_id"), "_mseq": _file_seq(keys.column("__filename"), mor)})
+            .group_by("doc_id")
+            .aggregate([("_mseq", "max")])
+        )
+        return pa.table({"doc_id": mask.column("doc_id").combine_chunks(), "_mseq": mask.column("_mseq_max")})
+
     def load_key_versions(self, file_entries: list[dict]) -> DataFrame:
         """``(doc_id, _commit_lsn, _op_seq, _deleted)`` of every physical
         row in the given files, UNMASKED: a key may appear once per stored
@@ -793,7 +889,7 @@ class LakeTable:
         # loads a file spanning ~keyspace/n_files keys), so pruning winners
         # by the PROBE keeps the mask O(probe-overlapping winners), not
         # O(file-envelope-overlapping) — the 100-epoch-backlog bound
-        # (tests/test_round4_fixes.py)
+        # (tests/test_merge_on_read.py)
         if key_range is not None:
             klo, khi = key_range
             if klo is not None and (lo is None or klo > lo):
@@ -994,7 +1090,8 @@ class LakeTable:
     def write_stage_local(self, tbl: pa.Table, stage: str, n_out: int, snap: dict) -> list[dict]:
         """``write_stage`` for rows already on the driver: write ``tbl`` into
         ``stage`` with pyarrow as at most ``n_out`` doc_id-sorted snappy
-        files and return their manifest entries, under the same file
+        files (``_dictionary_columns`` says which columns get a dictionary)
+        and return their manifest entries, under the same file
         contract — ``_physical_schema_at`` column names and types, the
         snapshot's schema_version, and per-file rows, min/max doc_id and, on
         bucket tables, the sorted bucket set. The bucket ids come from
@@ -1008,6 +1105,7 @@ class LakeTable:
 
         version = snap["schema_version"]
         schema = to_arrow_schema(self._physical_schema_at(version))
+        dictionary = _dictionary_columns(schema)
         n_buckets = layout_buckets(snap)
         tbl = tbl.sort_by("doc_id")
         if n_buckets:
@@ -1023,7 +1121,13 @@ class LakeTable:
                 continue
             os.makedirs(stage, exist_ok=True)
             path = os.path.abspath(os.path.join(stage, f"part-{i:05d}-{tag}-c000.snappy.parquet"))
-            pq.write_table(part.select(schema.names).cast(schema), path, compression="snappy", store_schema=False)
+            pq.write_table(
+                part.select(schema.names).cast(schema),
+                path,
+                compression="snappy",
+                use_dictionary=dictionary,
+                store_schema=False,
+            )
             doc = part.column("doc_id")
             entry = {
                 "path": path,

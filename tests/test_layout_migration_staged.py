@@ -359,12 +359,12 @@ def test_stage_retries_after_concurrent_writer_conflict(spark, tmp_path):
     real_rewrite = maint._rewrite
     conflicts = {"n": 0}
 
-    def racing_rewrite(table_, snap, entries, summary, keep=None):
+    def racing_rewrite(table_, snap, entries, summary, expire_at_or_below=None):
         if conflicts["n"] == 0:
             conflicts["n"] += 1
             # concurrent writer lands AFTER this stage planned its snapshot
             merge_batch(table, batches[1], epoch=1, target_rows_per_file=150)
-        return real_rewrite(table_, snap, entries, summary, keep)
+        return real_rewrite(table_, snap, entries, summary, expire_at_or_below)
 
     maint._rewrite = racing_rewrite
     try:

@@ -15,8 +15,6 @@ import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
 
-COMPACT_MOR_JOBS = 4
-
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -299,19 +297,29 @@ def test_stream_tail_mor_epochs_run_exactly_one_job(spark, tmp_table_dir, monkey
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
-@pytest.mark.parametrize("layout", [None, {"type": "bucket", "n_buckets": 8}], ids=["range", "bucket"])
-def test_compact_mor_job_count(spark, tmp_table_dir, layout):
+@pytest.mark.parametrize(
+    "layout,target_rows,arm,jobs",
+    [
+        (None, None, "local", 0),
+        ({"type": "bucket", "n_buckets": 8}, None, "spark", 4),
+        (None, 10_000, "spark", 5),
+    ],
+    ids=["range", "bucket", "range_above_bound"],
+)
+def test_compact_mor_job_count(spark, tmp_table_dir, monkeypatch, layout, target_rows, arm, jobs):
     """compact_mor sizes its output from the input entries' manifest row
-    counts and takes the new manifest entries from the write job's own
-    stats: no count job, no re-scan of the files it wrote. On a seeded
-    table with three MoR winners files it runs COMPACT_MOR_JOBS jobs, on
-    either layout (the count-and-rescan rewrite ran 11)."""
+    counts. On a range table whose closure fits one output file it reads,
+    masks and writes on the driver: no Spark job. A bucket table (the JVM
+    bucket hash) or a closure above ``TARGET_ROWS_PER_FILE`` rows takes the
+    Spark arm, whose manifest entries ride the write job's own stats: no
+    count job, no re-scan of the files it wrote (the count-and-rescan
+    rewrite ran 11). Above the bound the range write spans two files, so
+    its range exchange adds one boundary-sampling job."""
     import pyspark.sql.functions as F
 
     from etl_spark.operators.merge import merge_batch
     from etl_spark.schema import TARGET_SCHEMA
-    from etl_spark.table import LakeTable
-    from etl_spark.table.maintenance import compact_mor
+    from etl_spark.table import LakeTable, maintenance
 
     def feed(n, stride, lsn0):
         return spark.range(n).select(
@@ -329,15 +337,18 @@ def test_compact_mor_job_count(spark, tmp_table_dir, layout):
     for e in range(1, 4):
         assert merge_batch(table, feed(200, 80, 100_000 * e), epoch=e, merge_mode="mor").mode == "mor"
     assert len([f for f in table.files() if f.get("mor")]) == 3
+    if target_rows is not None:
+        monkeypatch.setattr(maintenance, "TARGET_ROWS_PER_FILE", target_rows)
 
     # count job ids above the last one seen: the tracker evicts its oldest
     # jobs past spark.ui.retainedJobs, so list lengths are not comparable
     tracker = spark.sparkContext._jsc.sc().statusTracker()
     last = max(tracker.getJobIdsForGroup(None), default=-1)
-    assert compact_mor(table) is not None
+    sid = maintenance.compact_mor(table)
     n_jobs = sum(1 for j in tracker.getJobIdsForGroup(None) if j > last)
+    assert sid is not None and table.snapshot(sid)["summary"]["arm"] == arm
     assert not any(f.get("mor") for f in table.files())
-    assert n_jobs == COMPACT_MOR_JOBS, f"compact_mor launched {n_jobs} jobs, expected {COMPACT_MOR_JOBS}"
+    assert n_jobs == jobs, f"compact_mor launched {n_jobs} jobs, expected {jobs}"
 
 
 def test_mor_resolve_target_scan_prunes_payload(spark, tmp_table_dir):

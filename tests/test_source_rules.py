@@ -53,3 +53,54 @@ def test_maintenance_functions_stay_short():
     migration runs its begin and stage commits in one retry loop."""
     long_fns = _long_functions(ENGINE / "table" / "maintenance.py")
     assert not long_fns, f"functions over {MAX_FUNCTION_LINES} lines in maintenance.py: {long_fns}"
+
+
+# Every broadcast hint in the engine, by (module, enclosing function), with
+# the bound that keeps its side small. A side that grows with the corpus
+# carries no hint: AQE picks the join from measured sizes.
+ALLOWED_BROADCAST_SITES = {
+    # the resolve's batch-sized narrow sides, under MAX_BROADCAST_ROWS
+    ("operators/merge.py", "_resolve_spark"),
+    # the centroid set: n_cells rows
+    ("operators/similarity.py", "_assign_cells"),
+    # per-range-partition offsets: one row per partition
+    ("functions/tokens.py", "distributed_sorted_rank"),
+    ("functions/tokens.py", "pack_sequences"),
+    # the manifest's per-file stats and commit orders: one row per file
+    ("table/table.py", "touched_files"),
+    ("table/table.py", "_with_file_seq"),
+    # the MoR mask, under MASK_BROADCAST_MAX_ROWS
+    ("table/table.py", "_apply_mor_masks"),
+}
+
+
+def _broadcast_sites(path: pathlib.Path) -> set[tuple[str, str]]:
+    """(module, enclosing function) of every ``F.broadcast`` reference and
+    every ``.hint(...)`` call in one module."""
+    rel = str(path.relative_to(ENGINE))
+    sites = set()
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        broadcast = (
+            isinstance(node, ast.Attribute) and node.attr == "broadcast" and getattr(node.value, "id", None) == "F"
+        )
+        hint = isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and node.func.attr == "hint"
+        if broadcast or hint:
+            sites.add((rel, fn))
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(ast.parse(path.read_text(), filename=str(path)), "<module>")
+    return sites
+
+
+def test_broadcast_hints_only_at_listed_sites():
+    """No broadcast hint outside ``ALLOWED_BROADCAST_SITES``, and every
+    listed site still hints (a removed hint leaves the list)."""
+    found = set().union(*(_broadcast_sites(p) for p in sorted(ENGINE.rglob("*.py"))))
+    assert found == ALLOWED_BROADCAST_SITES, (
+        f"unlisted hints: {sorted(found - ALLOWED_BROADCAST_SITES)}; "
+        f"listed sites without one: {sorted(ALLOWED_BROADCAST_SITES - found)}"
+    )
