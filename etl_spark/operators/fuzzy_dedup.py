@@ -30,6 +30,7 @@ hashes so a*h+b never overflows int64 in any engine.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 from etl_spark.functions.text import fingerprint, md5_int, shingles
@@ -149,7 +150,6 @@ def minhash_lsh_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     bands: int = 4,
-    cache_shingles: bool = True,
 ) -> DataFrame:
     """MinHash + LSH near-dup pairs, verified with exact Jaccard.
 
@@ -163,17 +163,12 @@ def minhash_lsh_pairs(
     Each doc's shingle-set size comes out of the signature aggregate and
     rides the band rows into the candidates, so no per-doc size table is
     joined back. The distinct (id, shingle) set feeds the signatures and
-    both verify joins; ``cache_shingles`` persists it (MEMORY_AND_DISK)
-    so the tokenize+explode+distinct shuffle runs once, not per consumer —
-    measured 1.6x on the sf0.1 corpus. Disable when the shingle set exceeds
-    cluster cache capacity (it then recomputes from the scan, still one
-    shuffle each)."""
+    both verify joins; it is persisted (MEMORY_AND_DISK, so a set larger
+    than the cache spills to disk instead of failing) so the
+    tokenize+explode+distinct shuffle runs once, not per consumer —
+    measured 1.6x on the sf0.1 corpus."""
     r = MINHASH_K // bands
-    sh = doc_shingles(docs, text_col, id_col, n)
-    if cache_shingles:
-        from pyspark import StorageLevel
-
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    sh = doc_shingles(docs, text_col, id_col, n).persist(StorageLevel.MEMORY_AND_DISK)
     sig = _signatures_from_shingles(sh, id_col)
     band_rows = []
     for j in range(bands):

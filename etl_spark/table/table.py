@@ -50,9 +50,12 @@ nothing. Because that file contains exactly the applied keys, its own
 ``doc_id`` column doubles as the equality-delete set (Iceberg MoR where the
 delete file IS the data file's key column): a row in a file committed at
 snapshot ``s`` is superseded iff its key appears in a ``mor``-flagged file
-with ``added_at > s``. ``load_files`` applies this mask with one
-column-pruned scan of the mor files' keys + a (broadcast when small) left
-join; copy-on-write commits remove every file their keys touch, so
+with ``added_at > s``. ``LakeTable._read_plan`` decides, once for both
+read executors, which ``mor`` files can mask the loaded rows (bucket set,
+key envelope, a caller's key range); ``load_files`` applies that mask with
+one column-pruned scan of their keys + a (broadcast when small) left join,
+``read_files_local`` with the same scan in pyarrow and an ``index_in``
+lookup. Copy-on-write commits remove every file their keys touch, so
 CoW-only tables skip the mask entirely. Compaction is the rewrite point
 that re-materializes masked state and sheds the flag where possible.
 
@@ -67,6 +70,7 @@ global low-watermark.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -108,12 +112,11 @@ MASK_BROADCAST_MAX_ROWS = 500_000
 # (see _with_file_seq)
 MAX_LITERAL_SEQ_MAP = 2_048
 
-# Read-side plan fragments (bounded, gateway-scoped LRUs): the rename
-# projection per (written name -> current name) mapping and the versioned-
-# schema projection per (schema, input columns). Shared by every handle —
-# a streaming tail opens a fresh LakeTable per run — and rebuilt only when
-# the schema or a file group's written layout changes.
-_RENAME_COLS_CACHE: OrderedDict = OrderedDict()
+# Read-side plan fragment (a bounded, gateway-scoped LRU): the select of a
+# file group to the target columns, per (target schema, written source
+# names). Shared by every handle — a streaming tail opens a fresh LakeTable
+# per run — and rebuilt only when the schema or a group's written layout
+# changes.
 _PROJECT_COLS_CACHE: OrderedDict = OrderedDict()
 
 
@@ -254,6 +257,16 @@ def _stage_stats(n_out: int, n_buckets: int) -> tuple:
     return expr_cache_get(_STAGE_STATS_CACHE, (n_out, n_buckets), _build)
 
 
+def _entry(path: str, rows: int, min_key, max_key, schema_version: int, buckets=None) -> dict:
+    """One written file's manifest entry: its path, row count, min/max
+    doc_id and schema_version, plus on bucket tables (``buckets`` not
+    None) the sorted set of bucket ids it holds."""
+    entry = {"path": path, "rows": rows, "min_key": min_key, "max_key": max_key, "schema_version": schema_version}
+    if buckets is not None:
+        entry["buckets"] = sorted(set(buckets))
+    return entry
+
+
 def _files_from_stats(
     stats: dict | None, stage: str, n_out: int, schema_version: int, bucketed: bool
 ) -> list[dict] | None:
@@ -282,16 +295,16 @@ def _files_from_stats(
         fn = by_index.pop(i, None)
         if fn is None:
             return None  # rows observed but no file
-        entry = {
-            "path": os.path.abspath(os.path.join(stage, fn)),
-            "rows": stats[f"fcnt_{i}"],
-            "min_key": stats[f"fmin_{i}"],
-            "max_key": stats[f"fmax_{i}"],
-            "schema_version": schema_version,
-        }
-        if bucketed:
-            entry["buckets"] = sorted(stats[f"fbkt_{i}"])
-        add_files.append(entry)
+        add_files.append(
+            _entry(
+                os.path.abspath(os.path.join(stage, fn)),
+                stats[f"fcnt_{i}"],
+                stats[f"fmin_{i}"],
+                stats[f"fmax_{i}"],
+                schema_version,
+                stats[f"fbkt_{i}"] if bucketed else None,
+            )
+        )
     for fn in by_index.values():
         # a partition the stats saw empty: Spark writes no file for it,
         # except the one schema-only file of an all-empty write, which is
@@ -318,21 +331,22 @@ def _collect_file_stats(spark: SparkSession, stage: str, schema_version: int, n_
         F.max("doc_id").alias("max_key"),
     ]
     if n_buckets:
-        aggs.append(F.sort_array(F.collect_set(bucket_col(n_buckets))).alias("buckets"))
+        aggs.append(F.collect_set(bucket_col(n_buckets)).alias("buckets"))
     rows = spark.read.parquet(stage).groupBy(F.input_file_name().alias("uri")).agg(*aggs).collect()
-    add_files = []
-    for r in rows:
-        entry = {
-            "path": urllib.parse.unquote(urllib.parse.urlparse(r["uri"]).path),
-            "rows": r["rows"],
-            "min_key": r["min_key"],
-            "max_key": r["max_key"],
-            "schema_version": schema_version,
-        }
-        if n_buckets:
-            entry["buckets"] = list(r["buckets"])
-        add_files.append(entry)
-    add_files.sort(key=lambda d: d["path"])
+    add_files = sorted(
+        (
+            _entry(
+                urllib.parse.unquote(urllib.parse.urlparse(r["uri"]).path),
+                r["rows"],
+                r["min_key"],
+                r["max_key"],
+                schema_version,
+                r["buckets"] if n_buckets else None,
+            )
+            for r in rows
+        ),
+        key=lambda d: d["path"],
+    )
     tracked = {f["path"] for f in add_files}
     for fn in os.listdir(stage):
         full = os.path.abspath(os.path.join(stage, fn))
@@ -591,25 +605,72 @@ class LakeTable:
 
     # ---------------------------------------------------------------- reads
 
-    def _project(self, df: DataFrame, schema: StructType, columns: list[str]) -> DataFrame:
-        """Pin a raw file read (whose columns are ``columns``) to the
-        versioned schema + hidden columns: missing (later-added) columns ->
-        null, narrower written types cast up (widen reconciliation)."""
+    def _read_plan(
+        self,
+        file_entries: list[dict],
+        snap: dict,
+        key_range: tuple[str | None, str | None] | None = None,
+    ) -> tuple[StructType, list[tuple[list[dict], StructType, list[str | None]]], tuple | None]:
+        """How to read ``file_entries`` reconciled to ``snap``, for both
+        executors (``load_files`` on Spark, ``read_files_local`` with
+        pyarrow). Returns three things:
 
-        def _build():
-            proj = []
-            for f in schema.fields:
-                if f.name in columns:
-                    proj.append(F.col(f.name).cast(relax_nullability(f.dataType)).alias(f.name))
-                else:
-                    proj.append(F.lit(None).cast(relax_nullability(f.dataType)).alias(f.name))
-            for h, t in ((HIDDEN_LSN, "long"), (HIDDEN_SEQ, "int"), (HIDDEN_DELETED, "boolean")):
-                proj.append((F.col(h) if h in columns else F.lit(None)).cast(t).alias(h))
-            return proj
+        - the target: ``snap``'s physical schema (``_physical_schema_at``);
+        - per ``schema_version`` the entries were written under: the entries
+          sorted by path, the physical schema they were written with, and
+          for each target column the written name it reads from — renames
+          resolve through the stable field ids (the Iceberg field-ID read) —
+          or None for a column added later, which reads null. Narrower
+          written types cast up to the target's. An entry whose version no
+          snapshot carries (a corrupt manifest) raises ValueError;
+        - the MoR mask (module docstring "Merge-on-read") as ``(mor, lo,
+          hi)``, or None when no mask applies: the ``mor`` entries of the
+          FULL snapshot, not the loaded subset, so a non-range-closed subset
+          (compaction's small files) still sees the newer copies outside it.
+          They are pruned by bucket set (a loaded row's winner can only live
+          in a file sharing a loaded bucket, when every loaded entry carries
+          current tags and the winners file does too), then to the loaded
+          entries' key envelope ``[lo, hi]`` (unknown when a loaded entry has
+          no stats), which the mask scan is cut to as well.
 
-        return df.select(
-            expr_cache_get(_PROJECT_COLS_CACHE, (schema.json(), tuple(columns)), _build)
-        )
+        ``key_range=(lo, hi)`` is a caller CONTRACT: the caller promises to
+        discard every returned row with doc_id outside [lo, hi] (read_range's
+        residual predicate), so it tightens the envelope: a point read masks
+        against the winners files overlapping the probe, not those
+        overlapping the range-wide files it loads (the 100-epoch-backlog
+        bound, tests/test_merge_on_read.py)."""
+        target = self._physical_schema_at(snap["schema_version"])
+        if not file_entries:
+            return target, [], None
+        target_names = {fid: name for name, fid in snap["field_ids"].items()}
+        by_version: dict[int, list[dict]] = {}
+        for f in file_entries:
+            by_version.setdefault(f["schema_version"], []).append(f)
+        groups = []
+        for sv in sorted(by_version):
+            phys = self._physical_schema_at(sv)
+            if phys is None:  # writers tag existing versions: a corrupt manifest
+                path = by_version[sv][0]["path"]
+                raise ValueError(f"manifest entry {path} has schema_version {sv}, which no snapshot carries")
+            name_to_fid = {n: fid for fid, n in self._names_at_version(sv).items()}
+            sources = {target_names.get(name_to_fid.get(c), c): c for c in phys.fieldNames()}
+            entries = sorted(by_version[sv], key=lambda f: f["path"])
+            groups.append((entries, phys, [sources.get(n) for n in target.fieldNames()]))
+        mor = [f for f in snap["files"] if f.get("mor")]
+        if all(current_buckets(f) for f in file_entries):
+            loaded = set().union(*(f["buckets"] for f in file_entries))
+            mor = [f for f in mor if not current_buckets(f) or not loaded.isdisjoint(f["buckets"])]
+        lo = hi = None
+        if all(f["min_key"] is not None for f in file_entries):
+            lo, hi = min(f["min_key"] for f in file_entries), max(f["max_key"] for f in file_entries)
+        klo, khi = key_range or (None, None)
+        if klo is not None:
+            lo = klo if lo is None else max(lo, klo)
+        if khi is not None:
+            hi = khi if hi is None else min(hi, khi)
+        if lo is not None and hi is not None:
+            mor = [f for f in mor if f["min_key"] is None or (f["max_key"] >= lo and f["min_key"] <= hi)]
+        return target, groups, ((mor, lo, hi) if mor else None)
 
     def load_files(
         self,
@@ -618,124 +679,63 @@ class LakeTable:
         key_range: tuple[str | None, str | None] | None = None,
     ) -> DataFrame:
         """Read a set of file entries reconciled to ``snap``'s schema,
-        including hidden columns and tombstone rows (callers filter).
-
-        Rename-aware (the Iceberg field-ID read): files are grouped by the
-        ``schema_version`` they were written under; each group's write-time
-        column names are mapped to the snapshot's names through the stable
-        field ids, then all groups are projected to the versioned schema and
-        unioned. With no renames in the history every group's mapping is the
-        identity. An entry whose version no snapshot carries (a corrupt
-        manifest) raises ValueError.
-
-        ``key_range=(lo, hi)`` is a caller CONTRACT: the caller promises to
-        discard every returned row with doc_id outside [lo, hi] (read_range's
-        residual predicate). Under that promise the MoR mask is pruned to
-        winners files overlapping the range — unmasked out-of-range rows
-        can never surface."""
-        schema = StructType.fromJson(snap["schema"])
-        if not file_entries:
-            df = self.spark.createDataFrame([], StructType(list(schema.fields)))
-            df = df.withColumn(HIDDEN_LSN, F.lit(None).cast("long"))
-            df = df.withColumn(HIDDEN_SEQ, F.lit(None).cast("int"))
-            df = df.withColumn(HIDDEN_DELETED, F.lit(None).cast("boolean"))
-            return self._project(df, schema, df.columns)
-        target_names = {fid: name for name, fid in self.field_ids(snap["snapshot_id"]).items()}
-        groups: dict[int, list[str]] = {}
-        for f in file_entries:
-            groups.setdefault(f["schema_version"], []).append(f["path"])
+        including hidden columns and tombstone rows (callers filter), as
+        ``_read_plan`` lays it out: one explicit-schema scan per
+        schema_version group (no inference or mergeSchema footer job), ONE
+        select of each to the target columns, their union, then the MoR mask
+        (``_apply_mor_masks``). ``key_range`` is ``_read_plan``'s caller
+        contract."""
+        target, groups, mask = self._read_plan(file_entries, snap, key_range)
+        if not groups:
+            return self.spark.createDataFrame([], target)
         parts = []
-        for sv in sorted(groups):
-            phys = self._physical_schema_at(sv)
-            if phys is None:  # writers tag existing versions: a corrupt manifest
-                raise ValueError(f"manifest entry {groups[sv][0]} has schema_version {sv}, which no snapshot carries")
-            # explicit schema: no inference/mergeSchema footer job, and the
-            # columns are known without asking the JVM
-            raw = self.spark.read.schema(phys).parquet(*sorted(groups[sv]))
-            columns = phys.fieldNames()
-            writer_names = self._names_at_version(sv)
-            if writer_names:
-                # ONE simultaneous select, not sequential withColumnRenamed:
-                # a rename chain may reuse a name another field held at
-                # write time (value->source after source->origin), and
-                # in-place renames would collide/duplicate mid-sequence.
-                # Skipped when every written name is already current.
-                name_to_fid = {n: fid for fid, n in writer_names.items()}
-                renames = tuple(
-                    (cname, target_names.get(name_to_fid[cname], cname) if cname in name_to_fid else cname)
-                    for cname in columns
-                )
-                if any(cname != tgt for cname, tgt in renames):
-                    raw = raw.select(
-                        expr_cache_get(
-                            _RENAME_COLS_CACHE,
-                            renames,
-                            lambda: [F.col(f"`{cname}`").alias(tgt) for cname, tgt in renames],
-                        )
-                    )
-                    columns = [tgt for _, tgt in renames]
-            parts.append(self._project(raw, schema, columns))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return self._apply_mor_masks(out, file_entries, snap, key_range)
+        for entries, phys, sources in groups:
+            cols = expr_cache_get(
+                _PROJECT_COLS_CACHE,
+                (target.json(), tuple(sources)),
+                lambda: [
+                    (F.col(f"`{src}`") if src else F.lit(None)).cast(f.dataType).alias(f.name)
+                    for f, src in zip(target.fields, sources)
+                ],
+            )
+            parts.append(self.spark.read.schema(phys).parquet(*(f["path"] for f in entries)).select(cols))
+        out = functools.reduce(DataFrame.unionByName, parts)
+        return out if mask is None else self._apply_mor_masks(out, file_entries, *mask)
 
     def read_files_local(self, file_entries: list[dict], snap: dict) -> pa.Table:
-        """``load_files`` on the driver: the rows of ``file_entries`` in
-        ``snap``'s physical schema (hidden columns and tombstone rows
-        included), read with pyarrow. Each ``schema_version`` group is read
-        with its ``_physical_schema_at`` schema, its written names mapped to
-        ``snap``'s through the field ids, and projected as ``_project`` does
-        (a column a file lacks reads null, narrower types cast up). A row is
-        dropped when a ``mor`` file of the FULL snapshot with a later
-        ``added_at`` holds its key, as in ``_apply_mor_masks``: a per-key max
-        over ``file_entries`` alone would miss the newer copies a CoW or
-        small-file subset does not hold."""
+        """``load_files`` on the driver, from the same ``_read_plan``: the
+        rows of ``file_entries`` in ``snap``'s physical schema (hidden
+        columns and tombstone rows included), read with pyarrow and masked
+        by ``_mor_mask_local``."""
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        target = to_arrow_schema(self._physical_schema_at(snap["schema_version"]))
-        target_names = {fid: name for name, fid in snap["field_ids"].items()}
-        mask = self._mor_mask_local(file_entries, snap)
-        groups: dict[int, list[dict]] = {}
-        for f in file_entries:
-            groups.setdefault(f["schema_version"], []).append(f)
+        plan_target, groups, mask = self._read_plan(file_entries, snap)
+        target = to_arrow_schema(plan_target)
+        newest = self._mor_mask_local(*mask) if mask is not None else None
         parts = [target.empty_table()]
-        for sv in sorted(groups):
-            phys = self._physical_schema_at(sv)
-            if phys is None:  # writers tag existing versions: a corrupt manifest
-                path = groups[sv][0]["path"]
-                raise ValueError(f"manifest entry {path} has schema_version {sv}, which no snapshot carries")
-            paths = sorted(f["path"] for f in groups[sv])
-            raw = pads.dataset(paths, schema=to_arrow_schema(phys), format="parquet").to_table(
-                columns=[*phys.fieldNames(), "__filename"]
+        for entries, phys, sources in groups:
+            raw = pads.dataset([f["path"] for f in entries], schema=to_arrow_schema(phys), format="parquet").to_table(
+                columns=[*filter(None, sources), "__filename"]
             )
-            name_to_fid = {n: fid for fid, n in self._names_at_version(sv).items()}
-            written = {target_names.get(name_to_fid.get(c), c): raw.column(c) for c in phys.fieldNames()}
             tbl = pa.Table.from_arrays(
-                [written[f.name].cast(f.type) if f.name in written else pa.nulls(raw.num_rows, f.type) for f in target],
+                [raw.column(s).cast(f.type) if s else pa.nulls(raw.num_rows, f.type) for f, s in zip(target, sources)],
                 schema=target,
             )
-            if mask is not None:
-                fseq = _file_seq(raw.column("__filename"), groups[sv])
-                mseq = pc.take(mask.column("_mseq"), pc.index_in(tbl.column("doc_id"), mask.column("doc_id")))
+            if newest is not None:
+                fseq = _file_seq(raw.column("__filename"), entries)
+                mseq = pc.take(newest.column("_mseq"), pc.index_in(tbl.column("doc_id"), newest.column("doc_id")))
                 tbl = tbl.filter(pc.or_kleene(pc.is_null(mseq), pc.greater_equal(fseq, mseq)))
             parts.append(tbl)
         return pa.concat_tables(parts)
 
-    def _mor_mask_local(self, file_entries: list[dict], snap: dict) -> pa.Table | None:
-        """``(doc_id, _mseq)``: the newest ``added_at`` of each key held by a
-        ``mor`` file of ``snap`` within the loaded entries' key envelope
-        (``_apply_mor_masks``' envelope pruning), or None when no such file
-        exists."""
-        mor = [f for f in snap["files"] if f.get("mor")]
-        cond = None
-        if file_entries and all(f["min_key"] is not None for f in file_entries):
-            lo = min(f["min_key"] for f in file_entries)
-            hi = max(f["max_key"] for f in file_entries)
-            mor = [f for f in mor if f["min_key"] is None or (f["max_key"] >= lo and f["min_key"] <= hi)]
-            cond = (pads.field("doc_id") >= lo) & (pads.field("doc_id") <= hi)
-        if not mor:
-            return None
+    def _mor_mask_local(self, mor: list[dict], lo: str | None, hi: str | None) -> pa.Table:
+        """``(doc_id, _mseq)``: the newest ``added_at`` of each key in
+        ``[lo, hi]`` held by the mask files ``mor`` of ``_read_plan``."""
+        doc_id, cond = pads.field("doc_id"), pads.scalar(True)
+        if lo is not None:
+            cond &= doc_id >= lo
+        if hi is not None:
+            cond &= doc_id <= hi
         keys = pads.dataset(
             sorted(f["path"] for f in mor), schema=pa.schema([("doc_id", pa.string())]), format="parquet"
         ).to_table(columns=["doc_id", "__filename"], filter=cond)
@@ -840,75 +840,16 @@ class LakeTable:
         )
 
     def _apply_mor_masks(
-        self,
-        out: DataFrame,
-        file_entries: list[dict],
-        snap: dict,
-        key_range: tuple[str | None, str | None] | None = None,
+        self, out: DataFrame, file_entries: list[dict], mor: list[dict], lo: str | None, hi: str | None
     ) -> DataFrame:
-        """Drop rows superseded by a newer mor-flagged file's keys (module
-        docstring "Merge-on-read"). The mask is ONE column-pruned scan of
-        the mor files' doc_id columns (max added_at per key), broadcast when
-        small; rows keep iff their file's commit order >= the key's newest
-        mor commit. Mask keys always come from the FULL snapshot, not the
-        loaded subset — a caller loading a non-range-closed subset (e.g.
-        compaction's small-file set) must still see newer versions that live
-        in files outside it. No-op (zero extra plan nodes) on CoW-only
-        snapshots, since copy-on-write removes every file its keys touch."""
-        mor = [f for f in snap["files"] if f.get("mor")]
-        if not mor:
-            return out
-        # bucket layout: a loaded row's superseding winner can only live in
-        # a file sharing one of the loaded buckets — exact set pruning. A
-        # loaded file without current tags (current_buckets) disables bucket
-        # pruning entirely, and a winners file without them is never pruned
-        # by bucket
-        loaded_buckets: set[int] = set()
-        if all(current_buckets(f) for f in file_entries):
-            for f in file_entries:
-                loaded_buckets.update(f["buckets"])
-        if loaded_buckets:
-            mor = [
-                f
-                for f in mor
-                if not current_buckets(f) or not loaded_buckets.isdisjoint(f["buckets"])
-            ]
-            if not mor:
-                return out
-        # prune the mask to the loaded subset's key envelope: every loaded
-        # row's key lies within [lo, hi] (file stats), so mask keys outside
-        # it cannot match — a point/range read masks against O(overlapping)
-        # winners files, not all of them. Skipped when any loaded file
-        # lacks stats (envelope unknown).
-        lo = hi = None
-        if file_entries and all(f["min_key"] is not None for f in file_entries):
-            lo = min(f["min_key"] for f in file_entries)
-            hi = max(f["max_key"] for f in file_entries)
-        # a caller-supplied residual key range (read_range's probe) tightens
-        # the envelope further: data files are range-wide (a point probe
-        # loads a file spanning ~keyspace/n_files keys), so pruning winners
-        # by the PROBE keeps the mask O(probe-overlapping winners), not
-        # O(file-envelope-overlapping) — the 100-epoch-backlog bound
-        # (tests/test_merge_on_read.py)
-        if key_range is not None:
-            klo, khi = key_range
-            if klo is not None and (lo is None or klo > lo):
-                lo = klo
-            if khi is not None and (hi is None or khi < hi):
-                hi = khi
-        if lo is not None and hi is not None:
-            mor = [
-                f
-                for f in mor
-                if f["min_key"] is None or (f["max_key"] >= lo and f["min_key"] <= hi)
-            ]
-            if not mor:
-                return out
+        """Drop the rows of ``out`` (read from ``file_entries``) that a newer
+        mask file of ``_read_plan`` supersedes. The mask is ONE column-pruned
+        scan of the ``mor`` files' doc_id within ``[lo, hi]``, reduced to the
+        max added_at per key and broadcast up to ``MASK_BROADCAST_MAX_ROWS``
+        rows; a row stays iff its file's commit order >= its key's newest
+        mask commit."""
         out = self._with_file_seq(out, file_entries, "_fseq")
-        mask_rows = self.spark.read.schema("doc_id string").parquet(
-            *sorted(f["path"] for f in mor)
-        )
-        # residual predicate pushed into the winners-file scan
+        mask_rows = self.spark.read.schema("doc_id string").parquet(*sorted(f["path"] for f in mor))
         if lo is not None:
             mask_rows = mask_rows.where(F.col("doc_id") >= lo)
         if hi is not None:
@@ -1129,16 +1070,8 @@ class LakeTable:
                 store_schema=False,
             )
             doc = part.column("doc_id")
-            entry = {
-                "path": path,
-                "rows": part.num_rows,
-                "min_key": doc[0].as_py(),
-                "max_key": doc[-1].as_py(),
-                "schema_version": version,
-            }
-            if n_buckets:
-                entry["buckets"] = sorted(set(part.column("_bkt").to_pylist()))
-            add_files.append(entry)
+            buckets = part.column("_bkt").to_pylist() if n_buckets else None
+            add_files.append(_entry(path, part.num_rows, doc[0].as_py(), doc[-1].as_py(), version, buckets))
         return add_files
 
     def _recover_head(self) -> int:

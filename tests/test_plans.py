@@ -451,6 +451,6 @@ def test_fuzzy_dedup_pairs_carry_no_broadcast_hint(spark):
         [(1, "the quick brown fox jumps"), (2, "the quick brown fox leaps"), (3, "lorem ipsum dolor sit")],
         "doc_id long, text string",
     )
-    for df in (FD.minhash_lsh_pairs(docs, cache_shingles=False), FD.ngram_jaccard_pairs(docs)):
+    for df in (FD.minhash_lsh_pairs(docs), FD.ngram_jaccard_pairs(docs)):
         analyzed = df._jdf.queryExecution().analyzed().toString()
         assert "ResolvedHint" not in analyzed and "broadcast" not in analyzed.lower()

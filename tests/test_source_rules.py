@@ -11,6 +11,8 @@ from __future__ import annotations
 import ast
 import pathlib
 
+import pytest
+
 ENGINE = pathlib.Path(__file__).resolve().parent.parent / "etl_spark"
 EXEMPT = {ENGINE / "oracle.py"}
 
@@ -39,20 +41,19 @@ def _long_functions(path: pathlib.Path) -> list[str]:
     ]
 
 
-def test_merge_functions_stay_short():
-    """No function in the merge module spans more than 120 lines: an epoch
-    is split into plan, apply and commit stages, and this keeps any one of
-    them from growing back into the whole epoch."""
-    long_fns = _long_functions(ENGINE / "operators" / "merge.py")
-    assert not long_fns, f"functions over {MAX_FUNCTION_LINES} lines in merge.py: {long_fns}"
-
-
-def test_maintenance_functions_stay_short():
-    """No function in the maintenance module spans more than 120 lines:
-    every rewrite commits through one ``_rewrite``, and a staged layout
-    migration runs its begin and stage commits in one retry loop."""
-    long_fns = _long_functions(ENGINE / "table" / "maintenance.py")
-    assert not long_fns, f"functions over {MAX_FUNCTION_LINES} lines in maintenance.py: {long_fns}"
+@pytest.mark.parametrize(
+    "module",
+    ["operators/merge.py", "table/maintenance.py", "table/table.py"],
+    ids=["merge", "maintenance", "table"],
+)
+def test_functions_stay_short(module):
+    """No function in the merge, maintenance or table module spans more than
+    120 lines: an epoch is split into plan, apply and commit stages, every
+    rewrite commits through one ``_rewrite``, and both read executors follow
+    one ``LakeTable._read_plan``; this keeps any one function from growing
+    back into the whole flow."""
+    long_fns = _long_functions(ENGINE / module)
+    assert not long_fns, f"functions over {MAX_FUNCTION_LINES} lines in {module}: {long_fns}"
 
 
 # Every broadcast hint in the engine, by (module, enclosing function), with

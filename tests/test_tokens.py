@@ -108,3 +108,66 @@ def test_engine_plans_are_vectorized(spark, tmp_table_dir):
     assert_vectorized_plan(feed)
     assert_vectorized_plan(lww_dedup(feed))
     assert_vectorized_plan(lww_dedup_salted(feed))
+
+
+# ---------------------------------------------- distributed vocab-id rank
+
+
+def test_distributed_sorted_rank_matches_global_window(spark):
+    from pyspark.sql import Window
+
+    from etl_spark.functions.tokens import distributed_sorted_rank
+
+    words = spark.range(2000).select(
+        F.format_string("w%04d", F.pmod(F.xxhash64("id"), F.lit(313))).alias("w")
+    )
+    got = {r["w"]: r["tid"] for r in distributed_sorted_rank(words, "w", "tid").collect()}
+    ref = (
+        words.select("w")
+        .distinct()
+        .withColumn("tid", (F.row_number().over(Window.orderBy("w")) - 1).cast("int"))
+    )
+    want = {r["w"]: r["tid"] for r in ref.collect()}
+    assert got == want and len(got) > 100
+    assert sorted(got.values()) == list(range(len(got)))  # dense 0-based ids
+
+
+def test_distributed_sorted_rank_plan_has_no_global_window(spark):
+    """The rank over the distinct values must be partitioned by the range
+    partition — never an unpartitioned window over the full distinct set
+    (vocabularies over web text are unbounded). The only single-partition
+    window is the offsets one over the <= parallelism per-partition counts."""
+    from etl_spark.functions.tokens import distributed_sorted_rank
+
+    words = spark.range(100).select(F.format_string("w%03d", F.col("id")).alias("w"))
+    plan = distributed_sorted_rank(words, "w", "tid")._jdf.queryExecution().executedPlan().toString()
+    assert "windowspecdefinition(w" not in plan  # old global ORDER BY w window
+    assert "windowspecdefinition(_part" in plan
+
+
+@pytest.mark.parametrize("qname", ["tok_vocab_encode", "corpus_pipeline"])
+def test_encode_queries_have_no_data_bearing_single_partition_window(spark, sf_dir, qname):
+    """The vocab-id assignment was the last data-bearing SinglePartition
+    exchange reachable from the registry. The encode plans may only sort
+    whole relations inside windows partitioned by the range-partition id."""
+    from etl_spark.queries import QUERIES
+
+    df = QUERIES[qname][0](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "windowspecdefinition(w" not in plan
+    assert "windowspecdefinition(_part" in plan
+
+
+# ------------------------------------------------ zero-length chunk docs
+
+
+def test_chunk_zero_length_docs_emit_no_rows(spark):
+    from etl_spark.functions.tokens import chunk_for_training, chunk_for_training_arrow
+
+    df = spark.createDataFrame(
+        [("empty", []), ("one", [42])], "doc_id string, tokens array<int>"
+    )
+    got = chunk_for_training(df, seq_len=8).collect()
+    got_arrow = chunk_for_training_arrow(df, seq_len=8).collect()
+    assert [r["doc_id"] for r in got] == ["one"]
+    assert [r["doc_id"] for r in got_arrow] == ["one"]
